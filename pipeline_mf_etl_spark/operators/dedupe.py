@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pipeline_mf_etl_spark.pin import free_checkpoint
+
 # Large prime < 2^31 used to fold 60-bit md5 prefixes into a stable range.
 _FOLD_PRIME = 2147483647
 
@@ -454,23 +456,6 @@ def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the cached blocks behind a localCheckpoint'ed frame.
-
-    ``DataFrame.unpersist()`` only talks to the SQL cache manager and
-    never reaches the RDD blocks a local checkpoint stores, so an
-    iterative algorithm that checkpoints per round leaks one block set
-    per round for the session lifetime. This frees them through the
-    LogicalRDD's underlying RDD. Best-effort by design: if the internal
-    accessor shape ever changes, leaking (the old behavior) beats
-    crashing the query. The frame must be SUPERSEDED — it is
-    unreadable afterwards."""
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:  # pragma: no cover - internals drifted; accept leak
-        pass
-
-
 def connected_components(
     edges: DataFrame,
     a_col: str = "a",
@@ -561,7 +546,7 @@ def connected_components(
         # answers the convergence question.
         row = labels.agg(F.max("_changed")).collect()[0]
         if pending_free is not None and not reliable:
-            _free_local_checkpoint(pending_free)
+            free_checkpoint(pending_free)
             pending_free = None
         changed = bool(row[0]) if row[0] is not None else False
         if not changed:
@@ -593,8 +578,8 @@ def connected_components(
         labels_ckpt = labels
     if not reliable:
         if pending_free is not None:
-            _free_local_checkpoint(pending_free)
-        _free_local_checkpoint(sym_loops)
+            free_checkpoint(pending_free)
+        free_checkpoint(sym_loops)
     if not converged:
         # returning partial labels would silently assign WRONG components
         # to the far ends of long chains — fail loudly instead.

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pipeline_mf_etl_spark.pin import free_checkpoint, pin
+
 PR_DAMPING = 0.85
 PR_ITERS = 5
 
@@ -185,7 +187,7 @@ def total_order_rank(
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    # Materialize the INPUT before the range exchange (r15): a
+    # Materialize the INPUT before the range exchange: a
     # RangePartitioning exchange first runs a separate sampling job
     # over its child, so an expensive upstream plan (g1: the whole
     # 5-round PageRank recursion) would be computed TWICE — once for
@@ -199,9 +201,7 @@ def total_order_rank(
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint()
     )
-    from pipeline_mf_etl_spark.operators.dedupe import _free_local_checkpoint
-
-    _free_local_checkpoint(src)
+    free_checkpoint(src)
     counts = part.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     offsets, acc = [], 0
     for row in sorted(counts, key=lambda r: r["_pid"]):
@@ -215,12 +215,6 @@ def total_order_rank(
         .withColumn(rank_name, F.col("_off") + F.col("_rn"))
         .drop("_pid", "_rn", "_off")
     )
-
-
-# One-slot eviction cache for triangle_stats' persisted degree and
-# oriented-edge frames (lazy caller — evict before persisting, same
-# discipline as queries/dedup._LAZY_SHINGLE_CACHE).
-_LAZY_TRIANGLE_CACHE: list[DataFrame] = []
 
 
 def triangle_stats(pairs: DataFrame) -> DataFrame:
@@ -238,21 +232,18 @@ def triangle_stats(pairs: DataFrame) -> DataFrame:
     the corpus cannot blow up the join. Equi-joins only; one-row
     output (n_nodes, n_edges, n_wedges, n_triangles, clustering_coeff).
     """
-    # persist deg and oriented (r14): deg feeds both endpoint joins and
-    # the wedge/node aggregate (3 references), oriented feeds both wedge
-    # legs and the closing join (3 references) — without the persists
-    # each reference re-instantiates its whole upstream subtree, 18
-    # scans of the pair set per run instead of 4. At corpus scale the
-    # pair set is d2's full output, so the persists trade bounded
-    # executor memory (node-grain degrees + edge-grain oriented edges)
-    # for two fewer full recomputations of the degree joins.
-    while _LAZY_TRIANGLE_CACHE:
-        _LAZY_TRIANGLE_CACHE.pop().unpersist()
+    # pin deg and oriented: deg feeds both endpoint joins and the
+    # wedge/node aggregate (3 references), oriented feeds both wedge
+    # legs and the closing join (3 references) — without the pins each
+    # reference re-instantiates its whole upstream subtree, 18 scans of
+    # the pair set per run instead of 4. At corpus scale the pair set is
+    # d2's full output, so the pins trade bounded executor memory
+    # (node-grain degrees + edge-grain oriented edges) for two fewer
+    # full recomputations of the degree joins.
     und = pairs.select(F.col("a").alias("node")).unionAll(
         pairs.select(F.col("b").alias("node"))
     )
-    deg = und.groupBy("node").agg(F.count("*").alias("deg")).persist()
-    _LAZY_TRIANGLE_CACHE.append(deg)
+    deg = pin("triangle_deg", und.groupBy("node").agg(F.count("*").alias("deg")))
     e = (
         pairs.join(
             deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")), "a"
@@ -263,12 +254,14 @@ def triangle_stats(pairs: DataFrame) -> DataFrame:
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    oriented = e.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias("deg_v"),
-    ).persist()
-    _LAZY_TRIANGLE_CACHE.append(oriented)
+    oriented = pin(
+        "triangle_oriented",
+        e.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(a_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias("deg_v"),
+        ),
+    )
     x = oriented.select("u", F.col("v").alias("p"), F.col("deg_v").alias("deg_p"))
     y = oriented.select("u", F.col("v").alias("q"), F.col("deg_v").alias("deg_q"))
     wedges = x.join(y, "u").filter(

@@ -32,23 +32,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.operators.dedupe import tokens
+from pipeline_mf_etl_spark.pin import pin
 
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-# The most recent QUERY-TERM postings persist handed to a LAZY caller
-# (r1 / r2) — those callers return an unexecuted plan, so they can
-# never unpersist it themselves. Each new invocation evicts the
-# previous entry (same one-slot discipline as operators/dedupe's
-# shingle cache). The cache is PER-INVOCATION: every call to bm25_topk
-# rebuilds the frame from its inputs; the persist only dedupes the
-# pruned-postings subtree WITHIN one invocation's plan (it feeds the
-# candidate branch and the document-frequency branch). r15: the
-# pinned frame is the QUERY-TERM postings only — bounded by the docs
-# that contain a query term, never the full corpus postings the r14
-# version pinned.
-_LAZY_POSTINGS_CACHE: list[DataFrame] = []
-
 
 def build_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Inverted-index postings: one row per (doc, term) with the term
@@ -82,7 +69,7 @@ def bm25_topk(
     the ordering is reproducible across engines and accumulation
     orders (same convention as the ANN family).
 
-    Plan shape (r15 rewrite — guide §2.3/§2.4 taken to completion):
+    Plan shape (guide §2.3/§2.4 taken to completion):
     NOTHING corpus-sized ever crosses an exchange or pins memory.
 
     - Doc length is a per-row function of the token array
@@ -104,8 +91,6 @@ def bm25_topk(
     full-postings shuffle AND a full-postings cache pin. The persisted
     frame is the PRUNED postings (bounded by query-term hits), shared
     by the candidate and document-frequency branches."""
-    while _LAZY_POSTINGS_CACHE:
-        _LAZY_POSTINGS_CACHE.pop().unpersist()
     tokd = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
 
     # corpus scalars in ONE map-side aggregation (pass 1):
@@ -134,13 +119,12 @@ def bm25_topk(
         F.coalesce(F.size("_toks"), F.lit(0)).alias("dl"),
         F.explode("_toks").alias("term"),
     )
-    tfq = (
+    tfq = pin(
+        "bm25_postings",
         tok.join(F.broadcast(qdistinct), "term")
         .groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"), F.max("dl").alias("dl"))
-        .persist()
+        .agg(F.count("*").alias("tf"), F.max("dl").alias("dl")),
     )
-    _LAZY_POSTINGS_CACHE.append(tfq)
 
     # df per query term from the pruned postings — identical to the
     # full-corpus df for those terms (tfq has one row per (doc, term),

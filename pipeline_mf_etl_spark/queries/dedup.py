@@ -24,6 +24,7 @@ from pipeline_mf_etl_spark.operators.dedupe import (
     tokens,
 )
 from pipeline_mf_etl_spark.config import load_settings
+from pipeline_mf_etl_spark.pin import pin, release
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import fan_out, load_table
 
@@ -154,14 +155,6 @@ def d2_chain(src: str = "documents") -> str:
 _D2_CHAIN = d2_chain()
 
 
-# The most recent shingle persist handed to a LAZY caller (d2 /
-# o11) — those callers return an unexecuted plan, so they can never
-# unpersist it themselves. Each new invocation evicts the previous
-# entry, bounding pinned executor memory to ONE corpus explode per
-# session instead of one per query run.
-_LAZY_SHINGLE_CACHE: list[DataFrame] = []
-
-
 def _lsh_max_bucket_config() -> int | None:
     """Batch LSH duplicate-flood guard, mirroring the streaming path's
     ``lsh_max_bucket`` (streaming/transforms.py capped_bucket_index):
@@ -185,11 +178,8 @@ def _lsh_max_bucket_config() -> int | None:
 
 
 def _verified_pairs(
-    docs: DataFrame,
-    return_shingles: bool = False,
-    max_bucket: int | None = None,
-    allow_env_cap: bool = False,
-):
+    docs: DataFrame, max_bucket: int | None = None, allow_env_cap: bool = False
+) -> DataFrame:
     """Verified near-dup pairs (a, b, jaccard >= 0.5) — the Spark twin
     of the ``verified`` CTE in ``_D2_CHAIN``, shared by d2 (pair
     emission) and d6 (group formation + canonical selection).
@@ -197,7 +187,7 @@ def _verified_pairs(
     see ``_lsh_max_bucket_config``) bounds per-bucket LSH membership
     against duplicate floods; None = exact.
 
-    Plan shape (r15 rewrite — guide §2.4 "remove shuffles outright"):
+    Plan shape (guide §2.4 "remove shuffles outright"):
     shingles stay per-doc ARRAYS instead of exploded rows, so MinHash
     signatures and set sizes are per-row MAP work
     (minhash_signatures_from_arrays — no signature groupBy exchange,
@@ -212,31 +202,23 @@ def _verified_pairs(
     distinct set, same integer Jaccard arithmetic.
 
     The (doc_id, sharr, sz) base frame feeds two consumers (signature
-    branch + both verify endpoints) — persist it so the tokenize +
-    shingle build runs once per invocation. ``return_shingles=True``
-    hands the persisted frame to the caller, so an EAGER consumer that
-    materializes the pairs (d6's connected components) can unpersist
-    it instead of leaving it pinned for the session."""
+    branch + both verify endpoints) — it is pinned in the "shingles"
+    slot so the tokenize + shingle build runs once per invocation. A
+    caller that materializes the pairs releases the slot."""
     from pipeline_mf_etl_spark.operators.dedupe import (
         jaccard_on_array_pairs,
         minhash_signatures_from_arrays,
         shingle_array_frame,
     )
 
-    # Evict BEFORE persisting the new frame: Spark's cache manager keys
-    # entries by ANALYZED PLAN, not object identity, so unpersisting an
-    # old parked frame after the new persist would evict the new cache
-    # too whenever both were built over the same corpus (same plan).
-    while _LAZY_SHINGLE_CACHE:
-        _LAZY_SHINGLE_CACHE.pop().unpersist()
     if max_bucket is None and allow_env_cap:
         # ONLY the unregistered probe entry point (d2_minhash_lsh_capped)
         # consults the env knob: d2, d5 (groups), d6 (canonical docs)
         # and o11 (leakage matrix) are certified on the EXACT pair set
         # and must not silently diverge because a SCALE-probe env var
-        # was left set in the shell (r9 ADVICE hazard).
+        # was left set in the shell.
         max_bucket = _lsh_max_bucket_config()
-    base = shingle_array_frame(docs, "doc_id", "text", n=3).persist()
+    base = pin("shingles", shingle_array_frame(docs, "doc_id", "text", n=3))
     # shingle-less docs (sz = 0) never enter the chain — the filter runs
     # on the CACHED sz column, not on the shingle expression (where
     # predicate pushdown would double-evaluate the n-gram build; see
@@ -245,15 +227,9 @@ def _verified_pairs(
         base.filter(F.col("sz") > 0), "doc_id", k=16
     )
     cand = lsh_candidate_pairs(sig, "doc_id", k=16, bands=4, max_bucket=max_bucket)
-    verified = jaccard_on_array_pairs(cand, base, "doc_id").filter(
+    return jaccard_on_array_pairs(cand, base, "doc_id").filter(
         F.col("jaccard") >= 0.5
     )
-    if return_shingles:
-        return verified, base
-    # Lazy path: the caller never sees base, so park it in the one-slot
-    # eviction cache (see _LAZY_SHINGLE_CACHE above).
-    _LAZY_SHINGLE_CACHE.append(base)
-    return verified
 
 
 @query(
@@ -270,7 +246,7 @@ def d2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered query never reads the SPARK_GRAFT_LSH_MAX_BUCKET knob, so
     a scale-probe env var left set in a shell cannot silently shrink its
     pair set. The capped regime lives in ``d2_minhash_lsh_capped``."""
-    # fan_out (r14): tokenize/shingle map work vs the driver's
+    # fan_out: tokenize/shingle map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return _verified_pairs(docs).select(
@@ -286,7 +262,7 @@ def d2_minhash_lsh_capped(
     cap (explicit ``max_bucket`` arg, else the SPARK_GRAFT_LSH_MAX_BUCKET
     env knob). scripts/scale_probe.py routes its flood leg here so the
     registered d2 stays env-immune."""
-    # fan_out (r14): tokenize/shingle map work vs the driver's
+    # fan_out: tokenize/shingle map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return _verified_pairs(docs, max_bucket=max_bucket, allow_env_cap=True).select(
@@ -350,17 +326,13 @@ def d3_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d4_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard near-dup pairs (threshold 0.8), inverted-index join."""
-    # fan_out (r14): tokenize/shingle map work vs the driver's
+    # fan_out: tokenize/shingle map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # persist the shingle explode (r14): all_pairs_jaccard references it
-    # four times (self-join both sides + two size joins), so without the
-    # persist the corpus tokenize+explode is instantiated once per
-    # reference. One-slot eviction discipline shared with d2/o11.
-    while _LAZY_SHINGLE_CACHE:
-        _LAZY_SHINGLE_CACHE.pop().unpersist()
-    sh = exploded_shingles(docs, "doc_id", "text", n=3).persist()
-    _LAZY_SHINGLE_CACHE.append(sh)
+    # pin the shingle explode: all_pairs_jaccard references it four
+    # times (self-join both sides + two size joins), so without the pin
+    # the corpus tokenize+explode is instantiated once per reference
+    sh = pin("shingles", exploded_shingles(docs, "doc_id", "text", n=3))
     return (
         all_pairs_jaccard(sh, "doc_id")
         .filter(F.col("jaccard") >= 0.8)
@@ -514,12 +486,13 @@ def verified_pairs_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "d2_pairs"
     if have_export(sf_dir, name):
         return read_export(spark, sf_dir, name)
-    # fan_out (r14): tokenize/shingle map work vs the driver's
+    # fan_out: tokenize/shingle map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    verified, sh = _verified_pairs(docs, return_shingles=True)
-    out = export_frame(verified.select("a", "b", "jaccard"), spark, sf_dir, name)
-    sh.unpersist()
+    out = export_frame(
+        _verified_pairs(docs).select("a", "b", "jaccard"), spark, sf_dir, name
+    )
+    release("shingles")
     return out
 
 
@@ -549,18 +522,15 @@ def ranked_neardup_clusters(docs: DataFrame, pairs: DataFrame | None = None) -> 
     from pipeline_mf_etl_spark.operators.dedupe import connected_components, tokens
     from pipeline_mf_etl_spark.operators.text import rounded_quality
 
-    if pairs is None:
-        verified, sh = _verified_pairs(docs, return_shingles=True)
-    else:
-        verified, sh = pairs, None
+    verified = _verified_pairs(docs) if pairs is None else pairs
     cc = connected_components(verified.select("a", "b"), reliable=_RELIABLE).select(
         F.col("node").alias("doc_id"), F.col("component").alias("group_id")
     )
-    # CC's localCheckpoints materialized the pair graph — the shingle
-    # cache has no further reader, so free it rather than pinning a
-    # full-corpus explode in executor memory for the session
-    if sh is not None:
-        sh.unpersist()
+    # CC's localCheckpoints materialized the pair graph — the shingles
+    # have no further reader, so free them rather than pinning a
+    # full-corpus frame in executor memory for the session
+    if pairs is None:
+        release("shingles")
     clustered = cc.join(docs.select("doc_id", "text"), "doc_id")
     t = clustered.select(
         "doc_id", "group_id", "text", tokens(F.col("text")).alias("toks")
@@ -611,18 +581,9 @@ _D8_DF = 2
 # The engine's duplicated-gram flag below is a min/max window —
 # min(doc_id) != max(doc_id) ⇔ >= 2 DISTINCT docs — which is equivalent
 # to the oracle's COUNT(DISTINCT doc_id) >= _D8_DF ONLY while the
-# document-frequency threshold is exactly 2 (r14 ADVICE: changing the
-# constant would silently diverge engine and oracle until parity ran).
+# document-frequency threshold is exactly 2 (changing the constant
+# would silently diverge engine and oracle until parity ran).
 assert _D8_DF == 2, "d8's min!=max window rewrite assumes _D8_DF == 2"
-
-# One-slot eviction cache for d8's span frame (same discipline as
-# _LAZY_SHINGLE_CACHE): the spans feed the duplicated-gram count, the
-# flag join probe side and (via flagged) the coverage/count branches,
-# so without a persist the corpus tokenize + 8-gram build is
-# instantiated three times per plan (plus a fourth tokenize for the
-# per-doc length branch). d8 returns a LAZY plan, so the persist is
-# parked here and evicted by the next invocation (guide §5 caching).
-_LAZY_SPAN_CACHE: list[DataFrame] = []
 
 
 @query(
@@ -666,7 +627,7 @@ def d8_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-token spans occurring in >= 2 distinct documents, and the token
     coverage of their unioned windows.
 
-    Plan shape (r14 rewrite): span generation is the shifted-zip n-gram
+    Plan shape: span generation is the shifted-zip n-gram
     build (no per-index slicing) + one posexplode over a persisted
     token frame; the duplicated-span flag is ONE window over gram
     (min(doc_id) != max(doc_id) ⇔ >= 2 distinct docs — the heavy gram
@@ -678,17 +639,14 @@ def d8_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic, no cartesian anywhere."""
     from pipeline_mf_etl_spark.operators.dedupe import _ngram_join, tokens
 
-    # fan_out (r14): tokenize/shingle map work vs the driver's
+    # fan_out: tokenize/shingle map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # persist the token frame: it feeds the span/window branch AND the
+    # pin the token frame: it feeds the span/window branch AND the
     # per-doc length branch — one corpus tokenize instead of two (the
     # pinned frame is doc-grain token arrays, the same cost class as
-    # d2's persisted shingle explode; one-slot eviction cache above)
-    while _LAZY_SPAN_CACHE:
-        _LAZY_SPAN_CACHE.pop().unpersist()
-    tok = docs.select("doc_id", tokens(F.col("text")).alias("toks")).persist()
-    _LAZY_SPAN_CACHE.append(tok)
+    # d2's pinned shingle arrays)
+    tok = pin("d8_tokens", docs.select("doc_id", tokens(F.col("text")).alias("toks")))
     sp = tok.select(
         "doc_id",
         F.posexplode(_ngram_join(F.col("toks"), _D8_N, distinct=False)).alias(
@@ -696,7 +654,7 @@ def d8_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).select("doc_id", (F.col("pos0") + 1).alias("i"), "gram")
     # duplicated-gram flag as ONE window over gram instead of
-    # groupBy(gram) + equi-join back (r14, guide §2.4 "share one
+    # groupBy(gram) + equi-join back (guide §2.4 "share one
     # exchange"): df >= 2 DISTINCT docs  ⇔  min(doc_id) != max(doc_id)
     # within the gram partition, so the heavy gram strings cross one
     # exchange (the window sort) instead of two (agg + join probe).
@@ -707,7 +665,7 @@ def d8_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_mn") != F.col("_mx"))
         .select("doc_id", "i")
     )
-    # coverage + span count in ONE aggregation (r14): from the exploded
+    # coverage + span count in ONE aggregation: from the exploded
     # (doc_id, i, p) window positions, n_dup = COUNT(DISTINCT i) (i is
     # unique per doc in sp by construction, so this equals the flagged-
     # span count) and n_cov = COUNT(DISTINCT p) — replacing the previous
@@ -870,53 +828,45 @@ def d11_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ones the symmetric Jaccard-0.5 gate would have missed (D11).
     The oracle is candidate-free (all pairs sharing a shingle), so a
     hash match certifies the prefix filter dropped no qualifying pair."""
-    # fan_out (r14): tokenize/shingle map work vs the driver's
+    # fan_out: tokenize/shingle map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # one-slot shingle cache discipline (see _LAZY_SHINGLE_CACHE): evict
-    # the previous lazy holder BEFORE persisting, never after
-    while _LAZY_SHINGLE_CACHE:
-        _LAZY_SHINGLE_CACHE.pop().unpersist()
-    sh = exploded_shingles(docs, "doc_id", "text", n=3).persist()
-    try:
-        # compute per-doc sizes ONCE and share them with the candidate
-        # generator (it needs the same aggregate for its prefix bound —
-        # passing it in removes a redundant corpus-wide shuffle)
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-        cand = containment_candidate_pairs(
-            sh, "doc_id", tau_num=_D11_TAU_NUM, tau_den=_D11_TAU_DEN,
-            sizes=sizes.select("doc_id", F.col("sz").alias("_sz")),
+    # pin the shingle explode: the size aggregate, the candidate
+    # generator and both intersection joins read it
+    sh = pin("shingles", exploded_shingles(docs, "doc_id", "text", n=3))
+    # compute per-doc sizes ONCE and share them with the candidate
+    # generator (it needs the same aggregate for its prefix bound —
+    # passing it in removes a redundant corpus-wide shuffle)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    cand = containment_candidate_pairs(
+        sh, "doc_id", tau_num=_D11_TAU_NUM, tau_den=_D11_TAU_DEN,
+        sizes=sizes.select("doc_id", F.col("sz").alias("_sz")),
+    )
+    inter = (
+        cand.join(sh.select(F.col("doc_id").alias("a"), "shingle"), "a")
+        .join(sh.select(F.col("doc_id").alias("b"), "shingle"), ["b", "shingle"])
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_inter"))
+    )
+    cont = (
+        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sz_a")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("sz_b")), "b")
+        .select(
+            "a",
+            "b",
+            _r(F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))).alias("jaccard"),
+            _r(F.col("n_inter") / F.col("sz_a")).alias("c_a_in_b"),
+            _r(F.col("n_inter") / F.col("sz_b")).alias("c_b_in_a"),
+            # threshold on EXACT integers, not the 6-dp rounded value
+            # (ROUND can pull 0.7999995 up to the boundary, outside
+            # the prefix filter's recall guarantee)
+            (
+                (F.col("n_inter") * _D11_TAU_DEN >= _D11_TAU_NUM * F.col("sz_a"))
+                | (F.col("n_inter") * _D11_TAU_DEN >= _D11_TAU_NUM * F.col("sz_b"))
+            ).alias("qualifies"),
         )
-        inter = (
-            cand.join(sh.select(F.col("doc_id").alias("a"), "shingle"), "a")
-            .join(sh.select(F.col("doc_id").alias("b"), "shingle"), ["b", "shingle"])
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("n_inter"))
-        )
-        cont = (
-            inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sz_a")), "a")
-            .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("sz_b")), "b")
-            .select(
-                "a",
-                "b",
-                _r(F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))).alias("jaccard"),
-                _r(F.col("n_inter") / F.col("sz_a")).alias("c_a_in_b"),
-                _r(F.col("n_inter") / F.col("sz_b")).alias("c_b_in_a"),
-                # threshold on EXACT integers, not the 6-dp rounded value
-                # (ROUND can pull 0.7999995 up to the boundary, outside
-                # the prefix filter's recall guarantee)
-                (
-                    (F.col("n_inter") * _D11_TAU_DEN >= _D11_TAU_NUM * F.col("sz_a"))
-                    | (F.col("n_inter") * _D11_TAU_DEN >= _D11_TAU_NUM * F.col("sz_b"))
-                ).alias("qualifies"),
-            )
-        )
-        out = cont.filter(F.col("qualifies")).select(
-            "a", "b", "jaccard", "c_a_in_b", "c_b_in_a",
-            (F.col("jaccard") < 0.5).alias("jaccard_missed"))
-        # the plan is lazy; park the shingle cache exactly like d2 does
-        _LAZY_SHINGLE_CACHE.append(sh)
-        return out
-    except Exception:
-        sh.unpersist()
-        raise
+    )
+    return cont.filter(F.col("qualifies")).select(
+        "a", "b", "jaccard", "c_a_in_b", "c_b_in_a",
+        (F.col("jaccard") < 0.5).alias("jaccard_missed"),
+    )

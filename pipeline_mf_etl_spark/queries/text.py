@@ -19,6 +19,7 @@ from pipeline_mf_etl_spark.operators.text import (
     stopword_share,
     token_count,
 )
+from pipeline_mf_etl_spark.pin import pin
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import fan_out, load_table
 
@@ -387,14 +388,11 @@ def t7_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _T8_THR = 0.05
 
-# t8's gram explode is persisted in queries/dedup._LAZY_SHINGLE_CACHE —
-# the SAME one-slot list d2/d4/d11 use — because its frame is the same
-# ANALYZED PLAN as their shingle explode (exploded_shingles over
-# fan_out(documents), n=3) and Spark's cache manager keys entries by
-# analyzed plan, not object identity: with two separate lists, evicting
-# one silently unpersisted the other's parked entry whenever the
-# queries alternated (r14 ADVICE). One shared list means one persisted
-# corpus explode session-wide, evicted exactly once per new holder.
+# t8 pins its gram explode in the "shingles" slot shared with d2, d4,
+# d11 and o11: the frame is exploded_shingles over fan_out(documents),
+# n=3 — the same analyzed plan as d4/d11's shingle explode — so a
+# separate slot would evict the other's entry whenever the queries
+# alternate. One slot means one pinned corpus explode per session.
 
 
 T8_SQL = f"""
@@ -426,19 +424,13 @@ def t8_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct 3-gram overlap with the benchmark set exceeds the
     threshold (decontamination step of a training-data pipeline)."""
     from pipeline_mf_etl_spark.operators.dedupe import exploded_shingles
-    from pipeline_mf_etl_spark.queries.dedup import _LAZY_SHINGLE_CACHE
 
-    # fan_out (r14): tokenize/explode map work vs the driver's
+    # fan_out: tokenize/explode map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # persist the gram explode: one corpus tokenize+explode instead of
-    # two (benchmark branch + scored branch). Parked in the SHARED
-    # one-slot shingle cache — same analyzed plan as d2/d4/d11's
-    # shingle explode (see the aliasing note above).
-    while _LAZY_SHINGLE_CACHE:
-        _LAZY_SHINGLE_CACHE.pop().unpersist()
-    grams = exploded_shingles(docs, "doc_id", "text", n=3).persist()
-    _LAZY_SHINGLE_CACHE.append(grams)
+    # pin the gram explode: one corpus tokenize+explode instead of two
+    # (benchmark branch + scored branch)
+    grams = pin("shingles", exploded_shingles(docs, "doc_id", "text", n=3))
     bench = F.broadcast(
         grams.filter(F.col("doc_id") % 97 == 0)
         .select(F.col("shingle").alias("gram"))
@@ -518,13 +510,13 @@ def t9_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     so scoring is a map-only join + one groupBy(doc_id). Nothing driver-
     side, nothing quadratic; the vocab cap keeps the broadcast constant
     as the corpus grows. The count table feeds two branches (vocab,
-    total) and is persisted so the model groupBy runs once — it is the
+    total) and is pinned so the model groupBy runs once — it is the
     SMALL frame (distinct trigrams), so the pinned cache is bounded;
-    the full trigram explode is deliberately NOT cached (a lazy builder
-    has no unpersist point, and pinning a corpus-sized explode per
-    invocation would dwarf the one extra scan it saves).
+    the full trigram explode is deliberately NOT pinned (a
+    corpus-sized explode held for the session would dwarf the one
+    extra scan it saves).
 
-    MEASURED DECISION (r5): an attempted rework that collected the vocab
+    MEASURED DECISION: an attempted rework that collected the vocab
     driver-side and scored the per-doc trigram ARRAY in a mapInPandas
     stage ("no join, no groupBy(doc_id)") was 5.5x SLOWER at 1x sf0.1
     (21.6s vs 3.9s) with no growth-ratio gain (0.84 vs 0.80): shipping
@@ -534,7 +526,7 @@ def t9_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracks corpus bytes, near-zero fixed overhead to amortize), not a
     shuffle defect — scoring stays JVM-side.
 
-    fan_out (r10): the trigram explode is the heaviest scan-side map in
+    fan_out: the trigram explode is the heaviest scan-side map in
     the text family, and the driver's single-row-group test file pinned
     it to one core — measured 2.9x faster with the small-input fan-out
     (a no-op at production split counts)."""
@@ -548,7 +540,7 @@ def t9_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(sequence(1, length(norm) - 2), i -> substring(norm, i, 3))")
         ).alias("tri"),
     )
-    cnt = tri.groupBy("tri").agg(F.count("*").alias("c")).persist()
+    cnt = pin("t9_counts", tri.groupBy("tri").agg(F.count("*").alias("c")))
     gl = cnt.agg(F.sum("c").alias("total"))
     vocab = (
         cnt.crossJoin(F.broadcast(gl))
@@ -583,12 +575,6 @@ def t9_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # comparing, so an interpolation ulp cannot flip a bucket.
 # ---------------------------------------------------------------------------
 _T13_Q = (0.3333333333333333, 0.6666666666666666)
-
-# One-slot eviction cache for t13's persisted t9-score frame (lazy
-# caller — see queries/dedup._LAZY_SHINGLE_CACHE for the discipline;
-# this frame's plan aliases nothing, so a private list is safe).
-_T13_SCORE_CACHE: list[DataFrame] = []
-
 
 @query(
     "t13_perplexity_buckets",
@@ -633,17 +619,13 @@ def t13_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row frame) and a map-only bucket assignment — the distributed
     shape of CCNet's perplexity bucketing. Higher mean log-prob =
     lower perplexity = head."""
-    # persist the t9 score frame (doc-grain, two columns — tiny): it
-    # feeds BOTH the tercile aggregate and the bucket projection, and
-    # without the persist each reference re-instantiates t9's whole
-    # trigram plan (two corpus-sized character explodes per copy).
-    # One-slot eviction cache, same discipline as _T12_WC_CACHE.
-    while _T13_SCORE_CACHE:
-        _T13_SCORE_CACHE.pop().unpersist()
-    scores = (
-        t9_trigram_lm(spark, sf_dir).select("doc_id", "mean_logprob").persist()
+    # pin the t9 score frame (doc-grain, two columns — tiny): it feeds
+    # BOTH the tercile aggregate and the bucket projection, and without
+    # the pin each reference re-instantiates t9's whole trigram plan
+    # (two corpus-sized character explodes per copy)
+    scores = pin(
+        "t13_scores", t9_trigram_lm(spark, sf_dir).select("doc_id", "mean_logprob")
     )
-    _T13_SCORE_CACHE.append(scores)
     thr = scores.agg(
         F.expr(
             f"percentile(mean_logprob, array({_T13_Q[0]!r}D, {_T13_Q[1]!r}D))"
@@ -919,13 +901,6 @@ def _t12_oracle() -> str:
     """
 
 
-# The most recent word-count persist handed to t12's LAZY result plan —
-# the returned frame references it, so the query can never unpersist it
-# itself. Each new invocation evicts the previous entry (same one-slot
-# pattern as queries/dedup._LAZY_SHINGLE_CACHE).
-_T12_WC_CACHE: list[DataFrame] = []
-
-
 @query("t12_bpe_tokenize", eager=True, oracle=_t12_oracle())
 def t12_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc BPE token stats under a tokenizer TRAINED on this corpus
@@ -933,15 +908,11 @@ def t12_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges. EAGER: the distributed word count + driver merge loop run
     at build time and the merge list persists for the oracle replay.
 
-    Plan shape (r14 — guide §1.2 "remove redundant passes"): the
-    exploded (doc_id, word) frame is PERSISTED and feeds the trainer's
-    word-count reduce AND the per-doc stats join; the word-count frame
-    is persisted on top of it and doubles as the encoder's distinct
-    vocabulary (its groupBy(word) already IS the corpus-wide
-    distinct). The corpus is now tokenized ONCE per run, down from
-    three times at round start (trainer reduce, per-doc stats, and a
-    ``words.distinct()`` vocabulary branch with its own all-word
-    exchange)."""
+    Plan shape: the exploded (doc_id, word) frame is PINNED and feeds
+    the trainer's word-count reduce AND the per-doc stats join; the
+    word-count frame is pinned on top of it and doubles as the
+    encoder's distinct vocabulary (its groupBy(word) already IS the
+    corpus-wide distinct), so the corpus is tokenized ONCE per run."""
     from pipeline_mf_etl_spark.operators.bpe import (
         merges_frame,
         train_bpe,
@@ -950,25 +921,18 @@ def t12_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_mf_etl_spark.operators.dedupe import tokens as _tok
     from pipeline_mf_etl_spark.queries.export import export_frame
 
-    while _T12_WC_CACHE:
-        _T12_WC_CACHE.pop().unpersist()
-    # fan_out (r14): tokenize/explode map work vs the driver's
+    # fan_out: tokenize/explode map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # ONE corpus tokenize (r14, second pass removed): the exploded
-    # (doc_id, word) frame is persisted and feeds BOTH the trainer's
-    # word-count reduce (materialized at build by the train collect)
-    # and the per-doc stats join at exec — previously the trainer and
-    # the encoder each ran their own tokenize+explode. The pinned frame
-    # is the corpus word explode, the same cost class as d2's persisted
-    # shingle cache; wc stays persisted too (tiny — distinct words) so
-    # the trainer collect and the encoder vocabulary share one reduce.
-    words = docs.select(
-        "doc_id", F.explode(_tok(F.col("text"))).alias("word")
-    ).persist()
-    _T12_WC_CACHE.append(words)
-    wc = words.groupBy("word").agg(F.count("*").alias("n")).persist()
-    _T12_WC_CACHE.append(wc)
+    # pin the word explode: it feeds BOTH the trainer's word-count
+    # reduce (materialized at build by the train collect) and the
+    # per-doc stats join at exec. wc is pinned too (tiny — distinct
+    # words) so the trainer collect and the encoder vocabulary share
+    # one reduce.
+    words = pin(
+        "t12_words", docs.select("doc_id", F.explode(_tok(F.col("text"))).alias("word"))
+    )
+    wc = pin("t12_wc", words.groupBy("word").agg(F.count("*").alias("n")))
     merges = train_bpe(docs, counts=wc)
     export_frame(merges_frame(spark, merges), spark, sf_dir, "t12_merges")
 

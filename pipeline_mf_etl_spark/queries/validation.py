@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.functions.core import safe_div
 from pipeline_mf_etl_spark.operators.windows import series_window
+from pipeline_mf_etl_spark.pin import pin
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
@@ -266,12 +267,6 @@ _M17_EPOCH = "2024-01-01"
 _M17_WIN_DAYS = 10
 
 
-# One-slot eviction cache for m17's persisted per-window transition
-# counts (lazy caller — same discipline as queries/dedup's shingle
-# cache: evict before persisting the new frame).
-_M17_LOC_CACHE: list[DataFrame] = []
-
-
 @query(
     "m17_frobenius_stability",
     oracle=f"""
@@ -324,20 +319,15 @@ def m17_frobenius_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("from_state").isNotNull())
     )
-    # persist the per-window transition counts (r14): loc feeds the
-    # local probabilities, the global matrix fold AND the per-window
-    # totals — three references, each of which would otherwise re-run
-    # the full event scan + lag window. The pinned frame is
-    # (win × state × state) rows, tiny by construction. One-slot
-    # eviction cache (lazy caller — _M17_LOC_CACHE above).
-    while _M17_LOC_CACHE:
-        _M17_LOC_CACHE.pop().unpersist()
-    loc = (
-        tr.groupBy("win", "from_state", "to_state")
-        .agg(F.count("*").alias("cnt"))
-        .persist()
+    # pin the per-window transition counts: loc feeds the local
+    # probabilities, the global matrix fold AND the per-window totals —
+    # three references, each of which would otherwise re-run the full
+    # event scan + lag window. The pinned frame is (win × state × state)
+    # rows, tiny by construction.
+    loc = pin(
+        "m17_loc",
+        tr.groupBy("win", "from_state", "to_state").agg(F.count("*").alias("cnt")),
     )
-    _M17_LOC_CACHE.append(loc)
     wf = Window.partitionBy("win", "from_state")
     locp = loc.select(
         "win", "from_state", "to_state", (F.col("cnt") / F.sum("cnt").over(wf)).alias("p")

@@ -26,6 +26,7 @@ from pipeline_mf_etl_spark.operators.windows import (
     run_group,
     series_window,
 )
+from pipeline_mf_etl_spark.pin import pin
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
@@ -830,11 +831,6 @@ def w21_scd2_intervals_segmented(
 # window, no per-user state machine.
 # ---------------------------------------------------------------------------
 
-# One-slot eviction cache for w22's persisted per-user stage frames
-# (lazy caller — same discipline as queries/dedup._LAZY_SHINGLE_CACHE).
-_W22_STAGE_CACHE: list[DataFrame] = []
-
-
 @query(
     "w22_funnel_steps",
     oracle="""
@@ -882,31 +878,27 @@ def w22_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     t, ts = F.col("event_type"), F.col("ts")
-    # persist the per-user stage frames (r14): views feeds the click
-    # gate AND the final assembly, clicks feeds the purchase gate AND
-    # the final assembly — without the persists each reference
-    # re-instantiates its whole upstream subtree, costing SIX events
-    # scans per run instead of three (one per stage filter). The pinned
-    # frames are one-row-per-user aggregates, tiny by construction.
-    # One-slot eviction cache (lazy caller — _W22_STAGE_CACHE above).
-    while _W22_STAGE_CACHE:
-        _W22_STAGE_CACHE.pop().unpersist()
+    # pin the per-user stage frames: views feeds the click gate AND the
+    # final assembly, clicks feeds the purchase gate AND the final
+    # assembly — without the pins each reference re-instantiates its
+    # whole upstream subtree, costing SIX events scans per run instead
+    # of three (one per stage filter). The pinned frames are
+    # one-row-per-user aggregates, tiny by construction.
     # base covers EVERY user with any event (conditional MIN, not a
     # filtered subset) — the oracle's v CTE keeps view-less users with
     # a NULL view_ts and reached_stage 0
-    views = ev.groupBy("user_id").agg(
-        F.min(F.when(t == "view", ts)).alias("view_ts")
-    ).persist()
-    _W22_STAGE_CACHE.append(views)
-    clicks = (
+    views = pin(
+        "w22_views",
+        ev.groupBy("user_id").agg(F.min(F.when(t == "view", ts)).alias("view_ts")),
+    )
+    clicks = pin(
+        "w22_clicks",
         ev.filter(t == "click")
         .join(views, "user_id")
         .filter(ts >= F.col("view_ts"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("click_ts"))
-        .persist()
+        .agg(F.min("ts").alias("click_ts")),
     )
-    _W22_STAGE_CACHE.append(clicks)
     purchases = (
         ev.filter(t == "purchase")
         .join(clicks, "user_id")

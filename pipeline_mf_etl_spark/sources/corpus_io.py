@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.pin import pin
+
 #: The documents-table contract (TESTDATA.md): explicit so a 100 TB read
 #: never pays an inference pass and type drift fails loudly at analysis
 #: time instead of producing nullable-string soup.
@@ -51,14 +53,6 @@ DOCUMENTS_SCHEMA = StructType(
 )
 
 _CORRUPT = "_corrupt_record"
-
-# The most recent cached parse handed out by read_jsonl_corpus. The two
-# return legs share one cached frame (the SPARK-21610 corrupt-column
-# split requires it), but the caller gets DataFrames, not the cache
-# handle — so each new invocation evicts the previous entry, bounding
-# pinned executor memory to ONE corpus parse per session instead of one
-# per read (same pattern as queries/dedup._LAZY_SHINGLE_CACHE).
-_LAZY_PARSE_CACHE: list[DataFrame] = []
 
 
 def write_jsonl_corpus(
@@ -105,15 +99,9 @@ def read_jsonl_corpus(
             df = df.withColumn(_CORRUPT, F.lit(None).cast("string"))
     # Spark requires caching/materialization barriers around referencing
     # only the corrupt column (SPARK-21610: a plan selecting JUST
-    # _corrupt_record is disallowed) — keeping both legs off one cached
-    # frame also means the input is parsed once, not twice. Evict the
-    # previous read's cache BEFORE persisting (cache-manager entries key
-    # on the analyzed plan, so evicting after would drop a re-read of
-    # the same path too).
-    while _LAZY_PARSE_CACHE:
-        _LAZY_PARSE_CACHE.pop().unpersist()
-    df = df.cache()
-    _LAZY_PARSE_CACHE.append(df)
+    # _corrupt_record is disallowed) — keeping both legs off one pinned
+    # frame also means the input is parsed once, not twice.
+    df = pin("jsonl_parse", df)
     rejects = df.filter(F.col(_CORRUPT).isNotNull()).select(
         F.col(_CORRUPT).alias("raw_line"),
         F.lit("BAD_JSON").alias("reason"),

@@ -55,13 +55,31 @@ def test_window_stack_single_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_minhash_reuses_cached_shingles(spark):
-    """The exploded shingle set feeds signatures, sizes, and exact
-    verification; it must come from cache (InMemoryTableScan), not be
-    re-derived per consumer (4x corpus scans at 100 TB)."""
-    plan = _plan(spark, "d2_minhash_lsh")
-    assert plan.count("InMemoryTableScan") >= 3, plan
-    assert "Cartesian" not in plan, plan
+@pytest.mark.parametrize(
+    "name",
+    [
+        "d2_minhash_lsh",
+        "d4_ngram_jaccard",
+        "d8_substring_dedup",
+        "d11_containment",
+        "t8_contamination",
+        "t9_trigram_lm",
+        "t13_perplexity_buckets",
+        "w22_funnel_steps",
+        "m17_frobenius_stability",
+        "r1_bm25_topk",
+    ],
+)
+def test_minhash_reuses_cached_shingles(spark, name):
+    """Every lazy builder that pins a multi-consumer frame must read it
+    from cache (InMemoryTableScan), not re-derive it per consumer. For
+    d2 the shingle arrays feed signatures, sizes and exact verification
+    (4x corpus scans at 100 TB without the pin)."""
+    plan = _plan(spark, name)
+    assert "InMemoryTableScan" in plan, plan
+    if name == "d2_minhash_lsh":
+        assert plan.count("InMemoryTableScan") >= 3, plan
+        assert "Cartesian" not in plan, plan
 
 
 def test_grouped_agg_partial_before_shuffle(spark):

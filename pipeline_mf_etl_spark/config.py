@@ -119,7 +119,8 @@ class StreamingSettings:
     unbounded join fan-out mid-ingest, where no d1-first batch ordering
     protects it. Deterministic: the ``lsh_max_bucket`` smallest doc ids
     per bucket are kept, so the cap is oracle-expressible. ``None``
-    disables the cap (exact candidate set)."""
+    disables the cap (exact candidate set); a value below 1 is
+    rejected when the admission plan is built."""
 
     lsh_max_bucket: int | None = 64
 

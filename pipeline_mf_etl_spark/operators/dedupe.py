@@ -5,18 +5,22 @@ and any other engine) rather than engine-specific hash functions, so
 every stage stays oracle-comparable:
 
 - exact dedupe: md5 of normalized text, keep min doc id per group
-- token n-gram shingles: posexplode-free sequence/slice construction
-- MinHash: k seeded hash slots h_i(s) = md5_int64("i:" || s), signature =
-  per-doc min per slot; banded LSH buckets from signature slices; bucket
-  equi-join for candidate pairs; exact Jaccard verification on the
-  candidates only (never all-pairs at scale)
+- shingles: ONE representation, the per-doc distinct word n-gram array
+  ``(id, sharr, sz)`` of ``shingle_array_frame``; operators that need
+  (id, shingle) rows explode it, and set sizes come from ``sz``
+- MinHash: k affine slots over one md5 fold per shingle, signature =
+  per-slot min, computed per row from the array
+  (``minhash_signatures_from_arrays``); banded LSH buckets
+  (``lsh_band_buckets``), an optional per-bucket membership cap
+  (``cap_band_buckets``), a bucket equi-join for candidate pairs, and
+  exact Jaccard on the candidates only (never all-pairs at scale)
 - SimHash: per-token 32-bit hash, bit-vote aggregation, hamming distance
 
-Scale notes: the shingle explode is linear in corpus token count and
-shuffles on (doc, shingle) only for the signature groupBy; candidate
-generation joins on (band, band_hash) — the classic sub-quadratic LSH
-plan. Exact-Jaccard verification joins exploded shingle sets only for
-candidate pairs.
+Scale notes: the MinHash chain crosses no corpus-wide exchange before
+the (band, band_hash) self-join — signatures and set sizes are per-row
+array work, and exact verification is one array_intersect per
+candidate pair. The same shingle → signature → band steps run per row
+on a stream (``minhash_band_buckets_rowwise``).
 """
 
 from __future__ import annotations
@@ -97,23 +101,6 @@ def _ngram_join(toks: Column, n: int, distinct: bool = True) -> Column:
     return F.array_distinct(out) if distinct else out
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Array of word n-gram shingles (distinct)."""
-    return _ngram_join(tokens(col), n)
-
-
-def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle) rows, one per distinct n-gram per doc.
-
-    Tokenization runs in its own projection stage: inlining ``tokens()``
-    into the shingle expression would duplicate the regex pipeline at
-    every reference — including inside the per-shingle slice lambda —
-    turning tokenization O(tokens) into O(tokens·shingles) per doc
-    (measured 15× slower at sf0.1)."""
-    t = df.select(id_col, tokens(F.col(text_col)).alias("__toks"))
-    return t.select(id_col, F.explode(_ngram_join(F.col("__toks"), n)).alias("shingle"))
-
-
 # xxhash-style odd multipliers for the affine slot family (mod prime).
 _MIX_A = 2654435761
 _MIX_B = 2246822519
@@ -124,71 +111,50 @@ def minhash_slot_params(i: int) -> tuple[int, int]:
     return (_MIX_A * (i + 1)) % _FOLD_PRIME, (_MIX_B * (i + 1)) % _FOLD_PRIME
 
 
-def minhash_signatures(
-    sh: DataFrame, id_col: str, k: int = 16
-) -> DataFrame:
-    """Per-doc MinHash signature: k min-hash slots over the shingle set.
-
-    One md5 per shingle, then k affine mixes ``(a_i·h + b_i) mod P`` —
-    the classic universal-hash family. Hashing each shingle k times with
-    a seeded md5 costs k string hashes per row (measured ~4x slower);
-    the base hash is materialized as a column first so it is computed
-    once, not inlined into every slot expression."""
-    hashed = sh.select(
-        id_col, F.pmod(md5_int64(F.col("shingle")), F.lit(_FOLD_PRIME)).alias("h")
-    )
-    aggs = []
-    for i in range(k):
-        a, b = minhash_slot_params(i)
-        aggs.append(
-            F.min(F.pmod(F.col("h") * F.lit(a) + F.lit(b), F.lit(_FOLD_PRIME))).alias(f"mh_{i}")
-        )
-    return hashed.groupBy(id_col).agg(*aggs)
-
-
 def shingle_array_frame(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, sharr, sz): the distinct shingle ARRAY per doc plus its
-    size — docs with no shingles (fewer than n tokens) are dropped,
-    matching ``exploded_shingles``' explode semantics exactly.
+    """(id, sharr, sz): the distinct word n-gram ARRAY per doc plus its
+    size — the one shingle representation every shingle-set operator
+    reads (MinHash signatures, exact pair Jaccard, containment
+    candidates, t8's gram overlap). Operators that need (id, shingle)
+    rows ``explode("sharr")``; set sizes come from ``sz``, never from a
+    groupBy(id) count. Queries that pin it share the ``"shingles"``
+    slot, because the analysed plan is the same for all of them.
 
-    The r15 d2 shape: keeping shingles as per-row arrays makes MinHash
-    signatures and set sizes MAP work (``minhash_signatures_from_arrays``
-    / the ``sz`` column) and exact verification one ``array_intersect``
-    per candidate pair (``jaccard_on_array_pairs``) — removing the
-    signature groupBy exchange, the sizes groupBy exchange, and the
-    two-sided exploded-shingle verify join from the chain. The total
-    hash work (one md5 fold per distinct shingle) is unchanged.
+    Tokenization runs in its own projection: the n-gram expression
+    references the token array once per shifted copy, and inlining
+    ``tokens()`` would re-run the regex pipeline at each reference.
 
-    Shingle-less docs are KEPT (sz = 0) — filtering here would let
-    predicate pushdown substitute the shingle expression into the
-    filter below the projection and evaluate the whole n-gram build
-    TWICE per row (measured 2x the persist cost at sf0.1). Callers
-    that need only shingled docs filter on the cached ``sz`` column
-    (one cheap scan of the persisted frame), which ``exploded_shingles``'
-    explode semantics made implicit."""
+    Shingle-less docs (fewer than n tokens) are KEPT with sz = 0 —
+    filtering here would let predicate pushdown substitute the shingle
+    expression into the filter below the projection and evaluate the
+    whole n-gram build TWICE per row (measured 2x the persist cost at
+    sf0.1). Callers of a pinned frame filter on the cached ``sz``
+    column; ``explode`` drops those docs by itself."""
     t = df.select(id_col, tokens(F.col(text_col)).alias("__toks"))
     arr = t.select(id_col, _ngram_join(F.col("__toks"), n).alias("sharr"))
     return arr.withColumn("sz", F.size("sharr"))
 
 
 def minhash_signatures_from_arrays(
-    base: DataFrame, id_col: str, k: int = 16, arr_col: str = "sharr"
+    base: DataFrame, id_col: str, k: int = 16
 ) -> DataFrame:
-    """Per-doc MinHash signature computed MAP-SIDE from the shingle
-    array — bit-identical values to ``minhash_signatures`` over the
-    exploded rows (same md5 fold, same affine slot family, min over
-    the same distinct set), with no corpus-wide exchange: the
-    explode + groupBy(id) becomes per-row array algebra.
+    """Per-doc MinHash signature (id, mh_0 .. mh_{k-1}) computed MAP-SIDE
+    from the ``sharr`` shingle array: one md5 fold per distinct
+    shingle, then k affine mixes ``(a_i·h + b_i) mod P`` and a min per
+    slot — the ``sig`` CTE of ``queries/dedup.py:d2_chain`` value for
+    value. This is the only function that evaluates the slot family.
+    It is per-row array algebra, so it needs no exchange and is legal
+    on a stream. An empty array yields NULL slots, so callers drop
+    shingle-less docs first.
 
     The folded base-hash array is materialized as its OWN column in
     its own projection so the k min-reductions share one evaluation —
     higher-order functions are CodegenFallback, and inlining the fold
-    into every slot lambda would re-hash each shingle k times
-    (the d5/e3 lesson, operators/similarity.py)."""
+    into every slot lambda would re-hash each shingle k times."""
     hs = F.transform(
-        F.col(arr_col), lambda s: F.pmod(md5_int64(s), F.lit(_FOLD_PRIME))
+        F.col("sharr"), lambda s: F.pmod(md5_int64(s), F.lit(_FOLD_PRIME))
     )
     based = base.select(id_col, hs.alias("__hs"))
 
@@ -207,16 +173,128 @@ def minhash_signatures_from_arrays(
     return based.select(F.col(id_col), *sig_cols)
 
 
-def jaccard_on_array_pairs(
+def lsh_band_buckets(
+    sig: DataFrame, id_col: str, k: int = 16, bands: int = 4
+) -> DataFrame:
+    """(id, band, band_hash) rows of a MinHash signature frame: band b
+    is the md5 of slots [b·r, (b+1)·r) joined by commas, r = k / bands
+    — the ``bands`` CTE of ``d2_chain``. One projection builds every
+    band hash into an array and posexplodes it; a union of per-band
+    frames would rescan the signature input once per band. Map-only,
+    so it is legal on a stream."""
+    if k % bands != 0:
+        raise ValueError(
+            f"k={k} must be divisible by bands={bands}: integer division "
+            "would silently drop trailing minhash slots and weaken LSH recall"
+        )
+    r = k // bands
+    band_hashes = F.array(
+        *[
+            F.md5(
+                F.concat_ws(
+                    ",", *[F.col(f"mh_{i}").cast("string") for i in range(b * r, (b + 1) * r)]
+                )
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select(F.col(id_col), F.posexplode(band_hashes).alias("band", "band_hash"))
+
+
+def minhash_band_buckets_rowwise(
+    df: DataFrame, id_col: str, text_col: str, k: int = 16, bands: int = 4
+) -> DataFrame:
+    """(id, band, band_hash) LSH bucket rows straight from text: the
+    batch chain's shingle array → signature → band steps composed with
+    no aggregation, so the plan is legal on a streaming DataFrame (st7's
+    stream-static lookup, the growing-LSH ingest). Docs with no
+    shingles emit no rows. Equality with the oracle's ``bands`` CTE is
+    asserted by tests/test_operators.py::test_rowwise_buckets_match_grouped."""
+    base = shingle_array_frame(df, id_col, text_col, n=3)
+    sig = minhash_signatures_from_arrays(base.filter(F.col("sz") > 0), id_col, k)
+    return lsh_band_buckets(sig, id_col, k, bands)
+
+
+def cap_band_buckets(
+    buckets: DataFrame, id_col: str, max_bucket: int | None
+) -> DataFrame:
+    """Keep the ``max_bucket`` smallest ids of each (band, band_hash)
+    bucket; None keeps every member. This is the duplicate-flood guard
+    of every LSH join — the batch pair self-join and both streaming
+    admission lookups: a near-exact duplicate cluster puts O(cluster)
+    docs in one bucket, and each join against it fans out O(cluster)
+    rows per probe (O(cluster²) pairs for the self-join, the 64× rise
+    SCALE.md measured). Capped, the fan-out per bucket is bounded by
+    ``max_bucket`` whatever the cluster size.
+
+    The window partitions by (band, band_hash), so the largest task is
+    one bucket's membership, never the corpus. Keeping the smallest ids
+    is deterministic: every join side sees the same truncated
+    membership, replays recompute it identically, and the oracles state
+    the same cap as a ROW_NUMBER sub-select
+    (``queries/dedup.py:capped_bands_cte``). Recall trade: a capped-out
+    doc stays reachable through its other bands, and the batch
+    waterfall runs exact dedupe first, so exact clusters never reach
+    LSH. A cap below 1 would empty every bucket and silently turn
+    near-dup detection off, so it is rejected."""
+    if max_bucket is None:
+        return buckets
+    if max_bucket < 1:
+        raise ValueError(
+            f"max_bucket={max_bucket}: a cap below 1 empties every LSH bucket "
+            "and silently disables near-dup detection — use >= 1, or None "
+            "for uncapped buckets"
+        )
+    w = Window.partitionBy("band", "band_hash").orderBy(F.col(id_col).asc())
+    return (
+        buckets.withColumn("_bn", F.row_number().over(w))
+        .filter(F.col("_bn") <= max_bucket)
+        .drop("_bn")
+    )
+
+
+def lsh_candidate_pairs(
+    sig: DataFrame, id_col: str, k: int = 16, bands: int = 4,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Banded LSH candidate pairs (a < b): docs sharing any
+    (band, band_hash) bucket. ``max_bucket`` caps bucket membership
+    before the self-join (``cap_band_buckets``), bounding pair output
+    per bucket at C(max_bucket, 2); None = the exact candidate set (the
+    certified-oracle behavior). A cap below 2 is rejected: a self-join
+    over one-member buckets emits no pairs at all."""
+    if max_bucket is not None and max_bucket < 2:
+        raise ValueError(
+            f"max_bucket={max_bucket}: a cap below 2 can emit no pairs at "
+            "all — use >= 2, or None for the exact candidate set"
+        )
+    buckets = cap_band_buckets(
+        lsh_band_buckets(sig, id_col, k, bands), id_col, max_bucket
+    )
+    left = buckets.select(F.col(id_col).alias("a"), "band", "band_hash")
+    right = buckets.select(F.col(id_col).alias("b"), "band", "band_hash")
+    return (
+        left.join(right, ["band", "band_hash"])
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .distinct()
+    )
+
+
+def pair_jaccard() -> Column:
+    """|A∩B| / |A∪B| from the integer columns n_inter, sz_a, sz_b."""
+    return F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
+
+
+def array_pair_overlap(
     pairs: DataFrame, base: DataFrame, id_col: str
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs from the per-doc
-    shingle ARRAYS: two equi-joins attach each endpoint's array + size,
-    then ``size(array_intersect(...))`` computes the intersection in a
-    map stage — same integers as the exploded-join form
-    (``jaccard_on_pairs``: arrays are distinct per doc, so the
-    intersection size is the shared-shingle count), without the
-    (b, shingle) wide join and the groupBy(a, b) exchange."""
+    """(a, b, n_inter, sz_a, sz_b) for the given (a, b) pairs over the
+    ``shingle_array_frame`` base: two equi-joins attach each endpoint's
+    array and size, and ``size(array_intersect(...))`` is the
+    shared-shingle count (each array is a distinct set) — a map stage
+    per pair, with no (doc, shingle) join and no groupBy(a, b)
+    exchange."""
     a_side = base.select(
         F.col(id_col).alias("a"), F.col("sharr").alias("_sha"), F.col("sz").alias("sz_a")
     )
@@ -233,107 +311,6 @@ def jaccard_on_array_pairs(
             "sz_a",
             "sz_b",
         )
-        .select(
-            "a",
-            "b",
-            (
-                F.col("n_inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-    )
-
-
-def lsh_candidate_pairs(
-    sig: DataFrame, id_col: str, k: int = 16, bands: int = 4,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Banded LSH: hash each band of the signature; docs sharing any band
-    bucket become candidate pairs (a < b).
-
-    One projection builds all band hashes as an array and explodes it —
-    a union of per-band frames would rescan (and at 100 TB recompute)
-    the whole signature input once per band.
-
-    ``max_bucket`` (optional) guards against adversarial duplicate
-    density: a corpus dominated by ONE giant duplicate cluster puts
-    O(cluster) docs in the same band bucket, and the self-join then
-    emits O(cluster²) candidate pairs (the measured 64× rise in
-    SCALE.md). The cap keeps only the ``max_bucket`` smallest doc ids
-    per (band, bucket) — pair output per bucket is bounded by
-    C(max_bucket, 2) regardless of cluster size. Recall trade: capped-
-    out docs can still be caught by their OTHER bands, and the
-    production ordering (d7) runs d1 exact-dedupe first so exact
-    clusters never reach LSH; the cap is the belt-and-braces for
-    near-exact floods. Default None = exact candidate set (the
-    certified-oracle behavior).
-    """
-    if k % bands != 0:
-        raise ValueError(
-            f"k={k} must be divisible by bands={bands}: integer division "
-            "would silently drop trailing minhash slots and weaken LSH recall"
-        )
-    rows_per_band = k // bands
-    band_hashes = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh_{i}").cast("string")
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = sig.select(
-        F.col(id_col), F.posexplode(band_hashes).alias("band", "band_hash")
-    )
-    if max_bucket is not None:
-        # rank WITHIN each bucket (partitioned window — max task = one
-        # bucket's membership rows, never the corpus) and keep the
-        # smallest ids; deterministic, so both sides of the self-join
-        # see the same truncated membership.
-        wb = Window.partitionBy("band", "band_hash").orderBy(F.col(id_col).asc())
-        buckets = (
-            buckets.withColumn("_bn", F.row_number().over(wb))
-            .filter(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-    left = buckets.select(F.col(id_col).alias("a"), "band", "band_hash")
-    right = buckets.select(F.col(id_col).alias("b"), "band", "band_hash")
-    return (
-        left.join(right, ["band", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
-def jaccard_on_pairs(pairs: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs only."""
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    # second join is equi on BOTH (doc, shingle) so it stays a hash join
-    # sized by the true intersection, never |pairs|×|shingles-per-doc|².
-    inter = (
-        pairs.join(sh.select(F.col(id_col).alias("a"), "shingle"), "a")
-        .join(sh.select(F.col(id_col).alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b")), "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.col("n_inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
     )
 
 
@@ -342,20 +319,20 @@ def containment_candidate_pairs(
     id_col: str,
     tau_num: int = 4,
     tau_den: int = 5,
-    sizes: DataFrame | None = None,
 ) -> DataFrame:
     """Recall-COMPLETE candidate pairs for directed set containment
-    ``c(A→B) = |A∩B|/|A| >= tau`` with ``tau = tau_num/tau_den``
-    (integer arithmetic throughout — ``floor(float_tau * |A|)`` can
-    round the prefix length down by one and silently void the recall
-    guarantee, e.g. 0.8*5 = 4.000000000000001).
+    ``c(A→B) = |A∩B|/|A| >= tau`` with ``tau = tau_num/tau_den`` over
+    the ``shingle_array_frame`` (id, sharr, sz) frame (integer
+    arithmetic throughout — ``floor(float_tau * |A|)`` can round the
+    prefix length down by one and silently void the recall guarantee,
+    e.g. 0.8*5 = 4.000000000000001).
 
     One-sided PREFIX FILTERING (the AllPairs/PPJoin idiom in its
-    containment form — the r7 verdict's task 4): order each doc's
-    distinct shingles by GLOBAL RARITY (document frequency asc, shingle
-    asc as the tiebreak), keep the first ``p = |A| - ceil(tau·|A|) + 1``
-    as the doc's PROBE prefix, and equi-join probes against the FULL
-    shingle inverted index. Guarantee: if ``c(A→B) >= tau`` then
+    containment form): order each doc's distinct shingles by GLOBAL
+    RARITY (document frequency asc, shingle asc as the tiebreak), keep
+    the first ``p = |A| - ceil(tau·|A|) + 1`` as the doc's PROBE
+    prefix, and equi-join probes against the FULL shingle inverted
+    index. Guarantee: if ``c(A→B) >= tau`` then
     ``|A∩B| >= ceil(tau·|A|)`` (intersection sizes are integers), so A
     has at most ``|A| - ceil(tau·|A|) < p`` shingles outside B — at
     least one probe shingle of A must land in B's index row and the
@@ -373,23 +350,21 @@ def containment_candidate_pairs(
     all-pairs cross."""
     if not (0 < tau_num <= tau_den):
         raise ValueError(f"tau must be in (0, 1]: got {tau_num}/{tau_den}")
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-    if sizes is None:  # caller may share its own (id, _sz) aggregate
-        sizes = sh.groupBy(id_col).agg(F.count("*").alias("_sz"))
+    ex = sh.select(id_col, "sz", F.explode("sharr").alias("shingle"))
+    dfreq = ex.groupBy("shingle").agg(F.count("*").alias("_df"))
     w = Window.partitionBy(id_col).orderBy(F.col("_df").asc(), F.col("shingle").asc())
     prefix = (
-        sh.join(dfreq, "shingle")
+        ex.join(dfreq, "shingle")
         .withColumn("_rk", F.row_number().over(w))
-        .join(sizes, id_col)
         .filter(
             F.col("_rk")
-            <= F.col("_sz")
-            - F.expr(f"(_sz * {tau_num} + {tau_den - 1}) DIV {tau_den}")
+            <= F.col("sz")
+            - F.expr(f"(sz * {tau_num} + {tau_den - 1}) DIV {tau_den}")
             + F.lit(1)
         )
     )
     probe = prefix.select(F.col(id_col).alias("a"), "shingle")
-    index = sh.select(F.col(id_col).alias("b"), "shingle")
+    index = ex.select(F.col(id_col).alias("b"), "shingle")
     return (
         probe.join(index, "shingle")
         .filter(F.col("a") != F.col("b"))
@@ -401,32 +376,28 @@ def containment_candidate_pairs(
 
 
 def all_pairs_jaccard(sh: DataFrame, id_col: str) -> DataFrame:
-    """Exact Jaccard for every pair sharing at least one shingle.
+    """Exact Jaccard for every pair sharing at least one shingle, over
+    the ``shingle_array_frame`` (id, sharr, sz) frame.
 
-    The shingle self-join is the candidate generator here (inverted-index
-    join): linear in Σ docs-per-shingle², which is fine when shingles are
-    discriminative; for web-scale corpora prefer the MinHash/LSH path.
+    The exploded shingle self-join is the candidate generator here
+    (inverted-index join): linear in Σ docs-per-shingle², which is fine
+    when shingles are discriminative; for web-scale corpora prefer the
+    MinHash/LSH path. Set sizes ride along from ``sz`` through the
+    intersection count (they are constant per pair), so no size
+    aggregate or size join is needed.
     """
+    ex = sh.select(id_col, "sz", F.explode("sharr").alias("shingle"))
     inter = (
-        sh.select(F.col(id_col).alias("a"), "shingle")
-        .join(sh.select(F.col(id_col).alias("b"), "shingle"), "shingle")
+        ex.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a"), "shingle")
+        .join(
+            ex.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b"), "shingle"),
+            "shingle",
+        )
         .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
+        .groupBy("a", "b", "sz_a", "sz_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b")), "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.col("n_inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-    )
+    return inter.select("a", "b", pair_jaccard().alias("jaccard"))
 
 
 def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -493,12 +464,11 @@ def connected_components(
     # checkpoints are LAZY (eager=False): materialization folds into the
     # round's convergence action, so a round costs ONE job.
     #
-    # r15 round shape (two changes, guide §1.2 "remove passes"):
+    # Round shape — one join + one aggregation per round:
     # - SELF-LOOPS: sym carries a (src, src) row per directed edge, so
-    #   "min over self ∪ neighbors" is ONE join + ONE aggregation per
-    #   round — the min is over the same set whether the own label
-    #   arrives via a second labels join (the r14 shape) or via the
-    #   self rows (duplicates cannot change a min). The own label for
+    #   "min over self ∪ neighbors" needs no second labels join: the
+    #   own label arrives via the self rows (duplicates cannot change
+    #   a min). The own label for
     #   the convergence flag is recovered inside the SAME aggregation
     #   (min over the dst == src rows).
     # - FUSED SEED: initial labels are the node ids, so round 1's
@@ -590,53 +560,3 @@ def connected_components(
         )
     return labels.select("node", "component")
 
-
-def minhash_band_buckets_rowwise(
-    df: DataFrame, id_col: str, text_col: str, k: int = 16, bands: int = 4
-) -> DataFrame:
-    """(id, band, band_hash) LSH bucket rows computed ENTIRELY per-row
-    with array higher-order functions — no per-doc aggregation, so the
-    same expression is legal on a streaming DataFrame (stream-static
-    LSH lookup of new docs against a static corpus index), where the
-    groupBy-based ``minhash_signatures`` path cannot run in append mode.
-
-    Arithmetic is bit-identical to ``minhash_signatures`` +
-    ``lsh_candidate_pairs``: one md5 per shingle, k affine mixes
-    ``(a_i·h + b_i) mod P``, band hash = md5 of the comma-joined slot
-    minima — equivalence is asserted by
-    tests/test_operators.py::test_rowwise_buckets_match_grouped.
-
-    Docs with no shingles (under 3 tokens) emit no rows, same as the
-    exploded path. Tokens and base hashes are materialized in their own
-    projection stages (see ``exploded_shingles`` for why inlining the
-    regex pipeline into per-shingle lambdas is O(tokens·shingles))."""
-    if k % bands != 0:
-        raise ValueError(
-            f"k={k} must be divisible by bands={bands}: integer division "
-            "would silently drop trailing minhash slots and weaken LSH recall"
-        )
-    rows_per_band = k // bands
-    t = df.select("*", tokens(F.col(text_col)).alias("__toks"))
-    h = F.transform(
-        _ngram_join(F.col("__toks"), 3),
-        lambda s: F.pmod(md5_int64(s), F.lit(_FOLD_PRIME)),
-    )
-    hashed = t.select("*", h.alias("__h")).filter(F.size("__h") > 0).drop("__toks")
-    def _mix(a: int, b: int):
-        # closure factory: F.transform infers lambda arity via signature
-        # inspection, so default-arg capture would read as a 3-arg lambda
-        return lambda x: F.pmod(x * F.lit(a) + F.lit(b), F.lit(_FOLD_PRIME))
-
-    mins = [
-        F.array_min(F.transform(F.col("__h"), _mix(a, b))).cast("string")
-        for a, b in (minhash_slot_params(i) for i in range(k))
-    ]
-    band_hashes = F.array(
-        *[
-            F.md5(F.concat_ws(",", *mins[b * rows_per_band : (b + 1) * rows_per_band]))
-            for b in range(bands)
-        ]
-    )
-    return hashed.select(
-        id_col, F.posexplode(band_hashes).alias("band", "band_hash")
-    )

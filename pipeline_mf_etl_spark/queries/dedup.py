@@ -9,19 +9,18 @@ Spark's ``conv(substr(md5(x),1,15),16,10)``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.operators.dedupe import (
     all_pairs_jaccard,
+    array_pair_overlap,
     containment_candidate_pairs,
-    exploded_shingles,
     lsh_candidate_pairs,
-    normalize_text,
+    minhash_signatures_from_arrays,
+    pair_jaccard,
+    shingle_array_frame,
     simhash32,
-    tokens,
 )
 from pipeline_mf_etl_spark.config import load_settings
 from pipeline_mf_etl_spark.pin import pin, release
@@ -92,8 +91,8 @@ def d1_exact_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedupe: md5 over sorted distinct token set, keep min doc_id."""
     from pipeline_mf_etl_spark.operators.dedupe import exact_fingerprint
 
-    # fan_out (r14): tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     fp = docs.select("doc_id", exact_fingerprint(F.col("text")).alias("fingerprint"))
     return (
@@ -155,69 +154,44 @@ def d2_chain(src: str = "documents") -> str:
 _D2_CHAIN = d2_chain()
 
 
-def _lsh_max_bucket_config() -> int | None:
-    """Batch LSH duplicate-flood guard, mirroring the streaming path's
-    ``lsh_max_bucket`` (streaming/transforms.py capped_bucket_index):
-    ``SPARK_GRAFT_LSH_MAX_BUCKET=N`` keeps only the N smallest doc ids
-    per (band, bucket), bounding pair fan-out per bucket to C(N, 2) no
-    matter how large a near-exact duplicate cluster is — the crawled-
-    corpus boilerplate-mirror regime the SCALE.md flood probe measures.
-    Default OFF (exact candidate set — the certified-oracle behavior;
-    the deterministic cap is oracle-expressible the same way st11's is,
-    but exactness stays the contract for the registered query)."""
-    raw = os.environ.get("SPARK_GRAFT_LSH_MAX_BUCKET", "").strip()
-    if not raw:
-        return None
-    cap = int(raw)
-    if cap < 2:
-        raise ValueError(
-            f"SPARK_GRAFT_LSH_MAX_BUCKET={cap}: a cap below 2 can emit no "
-            "pairs at all — use >= 2 or unset for the exact candidate set"
-        )
-    return cap
+def capped_bands_cte(cap: int | None) -> tuple[str, str]:
+    """(relation, cte) for the ``bands`` CTE of ``d2_chain`` capped to
+    the ``cap`` smallest doc_ids per (band, band_hash) — the SQL twin of
+    ``operators/dedupe.py:cap_band_buckets``, and the one place the
+    oracles state the cap. ``cte`` is appended after the chain's last
+    CTE; ``cap=None`` returns the uncapped ``bands`` and no CTE."""
+    if cap is None:
+        return "bands", ""
+    return "capped", f""",
+    capped AS (
+        SELECT doc_id, band, band_hash FROM (
+            SELECT doc_id, band, band_hash,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY band, band_hash ORDER BY doc_id) AS rn
+            FROM bands
+        ) WHERE rn <= {cap}
+    )"""
 
 
-def _verified_pairs(
-    docs: DataFrame, max_bucket: int | None = None, allow_env_cap: bool = False
-) -> DataFrame:
+def _verified_pairs(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """Verified near-dup pairs (a, b, jaccard >= 0.5) — the Spark twin
     of the ``verified`` CTE in ``_D2_CHAIN``, shared by d2 (pair
     emission) and d6 (group formation + canonical selection).
-    ``max_bucket`` (or the SPARK_GRAFT_LSH_MAX_BUCKET env default —
-    see ``_lsh_max_bucket_config``) bounds per-bucket LSH membership
-    against duplicate floods; None = exact.
+    ``max_bucket`` bounds per-bucket LSH membership against duplicate
+    floods (``cap_band_buckets``); None = the exact candidate set.
 
-    Plan shape (guide §2.4 "remove shuffles outright"):
-    shingles stay per-doc ARRAYS instead of exploded rows, so MinHash
-    signatures and set sizes are per-row MAP work
-    (minhash_signatures_from_arrays — no signature groupBy exchange,
-    no sizes groupBy exchange) and exact verification is one
-    array_intersect per candidate pair (jaccard_on_array_pairs — no
-    (doc, shingle) verify joins, no groupBy(a, b) exchange). The md5
-    work (one fold per distinct shingle) is unchanged; the chain's
-    corpus-wide exchanges drop from four (sig agg + sizes agg + two
-    exploded verify joins) to zero — only candidate-sized frames cross
-    exchanges after the band-bucket self-join. Values are
-    bit-identical: same fold, same affine family, min over the same
-    distinct set, same integer Jaccard arithmetic.
+    Plan shape: shingles stay per-doc ARRAYS, so MinHash signatures and
+    set sizes are per-row map work and exact verification is one
+    array_intersect per candidate pair — no corpus-wide exchange
+    before the band-bucket self-join; only candidate-sized frames cross
+    exchanges after it. Values equal the oracle's: same md5 fold, same
+    affine family, min over the same distinct set, same integer
+    Jaccard arithmetic.
 
     The (doc_id, sharr, sz) base frame feeds two consumers (signature
     branch + both verify endpoints) — it is pinned in the "shingles"
     slot so the tokenize + shingle build runs once per invocation. A
     caller that materializes the pairs releases the slot."""
-    from pipeline_mf_etl_spark.operators.dedupe import (
-        jaccard_on_array_pairs,
-        minhash_signatures_from_arrays,
-        shingle_array_frame,
-    )
-
-    if max_bucket is None and allow_env_cap:
-        # ONLY the unregistered probe entry point (d2_minhash_lsh_capped)
-        # consults the env knob: d2, d5 (groups), d6 (canonical docs)
-        # and o11 (leakage matrix) are certified on the EXACT pair set
-        # and must not silently diverge because a SCALE-probe env var
-        # was left set in the shell.
-        max_bucket = _lsh_max_bucket_config()
     base = pin("shingles", shingle_array_frame(docs, "doc_id", "text", n=3))
     # shingle-less docs (sz = 0) never enter the chain — the filter runs
     # on the CACHED sz column, not on the shingle expression (where
@@ -227,8 +201,10 @@ def _verified_pairs(
         base.filter(F.col("sz") > 0), "doc_id", k=16
     )
     cand = lsh_candidate_pairs(sig, "doc_id", k=16, bands=4, max_bucket=max_bucket)
-    return jaccard_on_array_pairs(cand, base, "doc_id").filter(
-        F.col("jaccard") >= 0.5
+    return (
+        array_pair_overlap(cand, base, "doc_id")
+        .select("a", "b", pair_jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
@@ -242,12 +218,10 @@ def _verified_pairs(
 def d2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures → banded LSH buckets → verified near-dup pairs.
 
-    Always EXACT candidates (the certified-oracle behavior): the
-    registered query never reads the SPARK_GRAFT_LSH_MAX_BUCKET knob, so
-    a scale-probe env var left set in a shell cannot silently shrink its
-    pair set. The capped regime lives in ``d2_minhash_lsh_capped``."""
-    # fan_out: tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    Always EXACT candidates (the certified-oracle behavior); the capped
+    regime lives in the unregistered ``d2_minhash_lsh_capped``."""
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return _verified_pairs(docs).select(
         "a", "b", _r(F.col("jaccard")).alias("jaccard")
@@ -255,17 +229,17 @@ def d2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def d2_minhash_lsh_capped(
-    spark: SparkSession, sf_dir: str, max_bucket: int | None = None
+    spark: SparkSession, sf_dir: str, max_bucket: int = 64
 ) -> DataFrame:
     """UNREGISTERED probe entry point for the duplicate-flood regime:
     same plan as ``d2_minhash_lsh`` with the deterministic per-bucket
-    cap (explicit ``max_bucket`` arg, else the SPARK_GRAFT_LSH_MAX_BUCKET
-    env knob). scripts/scale_probe.py routes its flood leg here so the
-    registered d2 stays env-immune."""
-    # fan_out: tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    cap. The default of 64 is the flood cap SCALE.md measured;
+    scripts/scale_probe.py routes its flood leg here, and the
+    registered d2 stays exact."""
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return _verified_pairs(docs, max_bucket=max_bucket, allow_env_cap=True).select(
+    return _verified_pairs(docs, max_bucket=max_bucket).select(
         "a", "b", _r(F.col("jaccard")).alias("jaccard")
     )
 
@@ -295,8 +269,8 @@ def d2_minhash_lsh_capped(
 )
 def d3_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document via declarative bit-vote aggregation."""
-    # fan_out (r14): tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return simhash32(docs, "doc_id", "text").select(
         "doc_id", F.col("simhash").cast("long").alias("simhash")
@@ -326,13 +300,13 @@ def d3_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d4_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard near-dup pairs (threshold 0.8), inverted-index join."""
-    # fan_out: tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # pin the shingle explode: all_pairs_jaccard references it four
-    # times (self-join both sides + two size joins), so without the pin
-    # the corpus tokenize+explode is instantiated once per reference
-    sh = pin("shingles", exploded_shingles(docs, "doc_id", "text", n=3))
+    # pin the shingle arrays: both sides of all_pairs_jaccard's self-join
+    # read them, so without the pin the corpus tokenize + n-gram build
+    # runs once per side
+    sh = pin("shingles", shingle_array_frame(docs, "doc_id", "text", n=3))
     return (
         all_pairs_jaccard(sh, "doc_id")
         .filter(F.col("jaccard") >= 0.8)
@@ -388,8 +362,8 @@ def d5_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_mf_etl_spark.sources.readers import fan_out
     from pyspark.sql import Window
 
-    # fan_out (r14): parallelize the LSH bit-signature scan on the
-    # driver's single-row-group embeddings file (no-op at scale)
+    # fan_out: parallelize the LSH bit-signature scan on an
+    # embeddings file stored as one row group (no-op at scale)
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     pairs = embedding_near_dup_pairs(v, 0.4, dim=64).select("a", "b")
@@ -470,7 +444,7 @@ def _d6_oracle() -> str:
 def verified_pairs_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d2's verified near-dup pairs (a, b, jaccard) as a per-process
     parquet export, computed AT MOST ONCE per (process, sf): the MinHash
-    chain (shingle explode → signatures → band join → exact verify) is
+    chain (shingle arrays → signatures → band join → exact verify) is
     the most expensive subplan in the dedup family, and several
     consumers (d6's connected components, repeated probe runs) need the
     SAME raw-corpus pair set — without the export every invocation
@@ -486,8 +460,8 @@ def verified_pairs_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "d2_pairs"
     if have_export(sf_dir, name):
         return read_export(spark, sf_dir, name)
-    # fan_out: tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     out = export_frame(
         _verified_pairs(docs).select("a", "b", "jaccard"), spark, sf_dir, name
@@ -553,8 +527,8 @@ def d6_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     row of ``ranked_neardup_clusters`` per group (see that helper for
     semantics and scale shape). EAGER: connected components iterates
     join+count rounds at build time."""
-    # fan_out (r14): tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     ranked = ranked_neardup_clusters(docs, pairs=verified_pairs_export(spark, sf_dir))
     return ranked.filter(F.col("rk") == 1).select(
@@ -639,8 +613,8 @@ def d8_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic, no cartesian anywhere."""
     from pipeline_mf_etl_spark.operators.dedupe import _ngram_join, tokens
 
-    # fan_out: tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     # pin the token frame: it feeds the span/window branch AND the
     # per-doc length branch — one corpus tokenize instead of two (the
@@ -773,11 +747,10 @@ def d9_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wholesale inside a long one has c(A→B) = |A∩B|/|A| ≈ 1 while the
 # Jaccard |A∩B|/|A∪B| stays far below any dedup threshold (the classic
 # Broder containment-vs-resemblance distinction). Candidates come from
-# RARE-PREFIX FILTERING (operators/dedupe.containment_candidate_pairs
-# — the r7 verdict's task 4), which is recall-COMPLETE for the 0.8
-# threshold: unlike the pre-r8 reuse of d2's symmetric-Jaccard LSH
-# bands, a tiny-doc-inside-huge-doc pair (containment 1, Jaccard ~0)
-# is GUARANTEED to collide, because every doc probes the full shingle
+# RARE-PREFIX FILTERING (operators/dedupe.containment_candidate_pairs),
+# which is recall-COMPLETE for the 0.8 threshold: unlike d2's
+# symmetric-Jaccard LSH bands, a tiny-doc-inside-huge-doc pair
+# (containment 1, Jaccard ~0) is GUARANTEED to collide, because every doc probes the full shingle
 # inverted index with more of its rarest shingles than it can possibly
 # have outside any tau-containing superset. Exact shingle
 # intersections on the candidates then yield both directed
@@ -828,33 +801,21 @@ def d11_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ones the symmetric Jaccard-0.5 gate would have missed (D11).
     The oracle is candidate-free (all pairs sharing a shingle), so a
     hash match certifies the prefix filter dropped no qualifying pair."""
-    # fan_out: tokenize/shingle map work vs the driver's
-    # single-row-group documents file (no-op at production splits)
+    # fan_out: tokenize/shingle map work vs a documents file stored
+    # as one row group (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # pin the shingle explode: the size aggregate, the candidate
-    # generator and both intersection joins read it
-    sh = pin("shingles", exploded_shingles(docs, "doc_id", "text", n=3))
-    # compute per-doc sizes ONCE and share them with the candidate
-    # generator (it needs the same aggregate for its prefix bound —
-    # passing it in removes a redundant corpus-wide shuffle)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    # pin the shingle arrays: the candidate generator and both
+    # intersection endpoints read them
+    sh = pin("shingles", shingle_array_frame(docs, "doc_id", "text", n=3))
     cand = containment_candidate_pairs(
-        sh, "doc_id", tau_num=_D11_TAU_NUM, tau_den=_D11_TAU_DEN,
-        sizes=sizes.select("doc_id", F.col("sz").alias("_sz")),
-    )
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("a"), "shingle"), "a")
-        .join(sh.select(F.col("doc_id").alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_inter"))
+        sh, "doc_id", tau_num=_D11_TAU_NUM, tau_den=_D11_TAU_DEN
     )
     cont = (
-        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("sz_b")), "b")
+        array_pair_overlap(cand, sh, "doc_id")
         .select(
             "a",
             "b",
-            _r(F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))).alias("jaccard"),
+            _r(pair_jaccard()).alias("jaccard"),
             _r(F.col("n_inter") / F.col("sz_a")).alias("c_a_in_b"),
             _r(F.col("n_inter") / F.col("sz_b")).alias("c_b_in_a"),
             # threshold on EXACT integers, not the 6-dp rounded value

@@ -209,29 +209,16 @@ def st6_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _st7_oracle() -> str:
     from pipeline_mf_etl_spark.config import load_settings
-    from pipeline_mf_etl_spark.queries.dedup import _D2_CHAIN
+    from pipeline_mf_etl_spark.queries.dedup import _D2_CHAIN, capped_bands_cte
 
     # only the bands CTE of the shared chain is referenced — the
     # candidate pair definition is d2's, restated as DIRECTED pairs
     # (each incoming doc lists its corpus matches). The index side is
     # capped to the streaming.lsh_max_bucket smallest doc_ids per
     # bucket — the SAME deterministic duplicate-flood guard the
-    # production admission path applies, expressed as a ROW_NUMBER
-    # sub-select so the certification covers the cap semantics too.
-    cap = load_settings().streaming.lsh_max_bucket
-    idx = "bands"
-    capped_cte = ""
-    if cap is not None:
-        idx = "capped"
-        capped_cte = f""",
-    capped AS (
-        SELECT doc_id, band, band_hash FROM (
-            SELECT doc_id, band, band_hash,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY band, band_hash ORDER BY doc_id) AS rn
-            FROM bands
-        ) WHERE rn <= {cap}
-    )"""
+    # production admission path applies, so the certification covers
+    # the cap semantics too.
+    idx, capped_cte = capped_bands_cte(load_settings().streaming.lsh_max_bucket)
     return f"""
     WITH {_D2_CHAIN}{capped_cte}
     SELECT DISTINCT l.doc_id AS doc_id, r.doc_id AS matched_doc_id
@@ -254,8 +241,8 @@ def st7_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies either way. Batch entry runs the corpus against its own
     index; tests/test_streaming.py drives the identical transform
     through readStream(availableNow) and asserts the same pair set.
-    The rowwise banding is asserted bit-identical to the d2 groupBy
-    path in tests/test_operators.py."""
+    The rowwise banding is asserted bit-identical to the oracle's
+    ``bands`` CTE in tests/test_operators.py."""
     from pipeline_mf_etl_spark.config import load_settings
     from pipeline_mf_etl_spark.operators.dedupe import minhash_band_buckets_rowwise
     from pipeline_mf_etl_spark.streaming import neardup_candidates_against_index
@@ -392,22 +379,9 @@ def st10_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _st11_oracle() -> str:
     from pipeline_mf_etl_spark.config import load_settings
-    from pipeline_mf_etl_spark.queries.dedup import _D2_CHAIN
+    from pipeline_mf_etl_spark.queries.dedup import _D2_CHAIN, capped_bands_cte
 
-    cap = load_settings().streaming.lsh_max_bucket
-    peer = "bands"
-    capped_cte = ""
-    if cap is not None:
-        peer = "capped"
-        capped_cte = f""",
-    capped AS (
-        SELECT doc_id, band, band_hash FROM (
-            SELECT doc_id, band, band_hash,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY band, band_hash ORDER BY doc_id) AS rn
-            FROM bands
-        ) WHERE rn <= {cap}
-    )"""
+    peer, capped_cte = capped_bands_cte(load_settings().streaming.lsh_max_bucket)
     return f"""
     WITH {_D2_CHAIN}{capped_cte},
     rejected AS (

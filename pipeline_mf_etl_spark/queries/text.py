@@ -388,11 +388,11 @@ def t7_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _T8_THR = 0.05
 
-# t8 pins its gram explode in the "shingles" slot shared with d2, d4,
-# d11 and o11: the frame is exploded_shingles over fan_out(documents),
-# n=3 — the same analyzed plan as d4/d11's shingle explode — so a
-# separate slot would evict the other's entry whenever the queries
-# alternate. One slot means one pinned corpus explode per session.
+# t8 pins its grams in the "shingles" slot shared with d2, d4, d11 and
+# o11: the frame is shingle_array_frame over fan_out(documents), n=3 —
+# the same analysed plan as theirs — so a separate slot would evict
+# the other's entry whenever the queries alternate. One slot means one
+# pinned corpus shingle frame per session.
 
 
 T8_SQL = f"""
@@ -423,23 +423,23 @@ def t8_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination scan: flag training documents whose
     distinct 3-gram overlap with the benchmark set exceeds the
     threshold (decontamination step of a training-data pipeline)."""
-    from pipeline_mf_etl_spark.operators.dedupe import exploded_shingles
+    from pipeline_mf_etl_spark.operators.dedupe import shingle_array_frame
 
     # fan_out: tokenize/explode map work vs the driver's
     # single-row-group documents file (no-op at production splits)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # pin the gram explode: one corpus tokenize+explode instead of two
-    # (benchmark branch + scored branch)
-    grams = pin("shingles", exploded_shingles(docs, "doc_id", "text", n=3))
+    # pin the gram arrays: one corpus tokenize + n-gram build instead of
+    # two (benchmark branch + scored branch)
+    sh = pin("shingles", shingle_array_frame(docs, "doc_id", "text", n=3))
+    grams = sh.select("doc_id", F.explode("sharr").alias("gram"))
     bench = F.broadcast(
         grams.filter(F.col("doc_id") % 97 == 0)
-        .select(F.col("shingle").alias("gram"))
+        .select("gram")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     scored = (
         grams.filter(F.col("doc_id") % 97 != 0)
-        .select("doc_id", F.col("shingle").alias("gram"))
         .join(bench, "gram", "left")
         .groupBy("doc_id")
         .agg(

@@ -15,7 +15,7 @@ semantic oracle for the stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -284,27 +284,6 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reader.option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
 
 
-def capped_bucket_index(index: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Bound per-(band, bucket) membership of a STATIC LSH band index to
-    the ``max_bucket`` smallest doc_ids (deterministic, so the cap is
-    oracle-expressible). This is the streaming-admission guard: an
-    adversarial near-exact duplicate flood puts O(flood) docs in one
-    bucket, and every later incoming doc's equi-join then fans out
-    O(flood) rows PER BAND against that bucket — unbounded mid-ingest,
-    with no d1-first batch ordering to absorb it. The window partitions
-    by (band, band_hash): the largest task is one bucket's membership,
-    never the corpus. Recall trade as ``lsh_candidate_pairs.max_bucket``:
-    capped-out docs remain reachable through their other bands."""
-    if max_bucket is None:
-        return index
-    wb = Window.partitionBy("band", "band_hash").orderBy(F.col("doc_id").asc())
-    return (
-        index.withColumn("_bn", F.row_number().over(wb))
-        .filter(F.col("_bn") <= max_bucket)
-        .drop("_bn")
-    )
-
-
 def neardup_candidates_against_index(
     docs: DataFrame, index: DataFrame, max_bucket: int | None = None
 ) -> DataFrame:
@@ -328,16 +307,19 @@ def neardup_candidates_against_index(
     every task at 100 TB scale.
 
     ``max_bucket`` bounds per-bucket index membership consulted by the
-    join (see :func:`capped_bucket_index`) — the duplicate-flood guard
-    for the online path. The cap applies to the STATIC side only (a
-    window on the stream side would be illegal in append mode anyway);
-    it is deterministic and therefore certifiable by the same SQL
-    oracle with a ROW_NUMBER sub-select.
+    join (``cap_band_buckets``) — the duplicate-flood guard for the
+    online path; None = uncapped, below 1 raises. The cap applies to
+    the STATIC side only (a window on the stream side would be illegal
+    in append mode anyway); it is deterministic and therefore
+    certifiable by the same SQL oracle with a ROW_NUMBER sub-select.
     """
-    from pipeline_mf_etl_spark.operators.dedupe import minhash_band_buckets_rowwise
+    from pipeline_mf_etl_spark.operators.dedupe import (
+        cap_band_buckets,
+        minhash_band_buckets_rowwise,
+    )
 
     b = minhash_band_buckets_rowwise(docs, "doc_id", "text")
-    idx = capped_bucket_index(index, max_bucket).select(
+    idx = cap_band_buckets(index, "doc_id", max_bucket).select(
         F.col("doc_id").alias("matched_doc_id"), "band", "band_hash"
     )
     return (
@@ -463,7 +445,9 @@ def ingest_with_growing_lsh_index(
     equi-joins, bounding join fan-out at C(cap, 2) per bucket even
     when an adversarial near-exact flood lands mid-ingest (this path
     has no d1-first ordering to absorb one). Deterministic, so
-    replays recompute identically.
+    replays recompute identically. A cap below 1 raises
+    (``cap_band_buckets``) and fails the query instead of admitting
+    every duplicate.
 
     Layout/schema note for EXTERNAL consumers: ``admitted_dir`` and
     ``index_dir`` are ``batch_id=<N>`` partitioned directories —
@@ -476,7 +460,10 @@ def ingest_with_growing_lsh_index(
     import re
 
     from pipeline_mf_etl_spark.config import load_settings
-    from pipeline_mf_etl_spark.operators.dedupe import minhash_band_buckets_rowwise
+    from pipeline_mf_etl_spark.operators.dedupe import (
+        cap_band_buckets,
+        minhash_band_buckets_rowwise,
+    )
 
     if max_bucket is None:
         max_bucket = load_settings().streaming.lsh_max_bucket
@@ -507,10 +494,11 @@ def ingest_with_growing_lsh_index(
                     if m and int(m.group(1)) < batch_id and _committed(p):
                         idx_parts.append(p)
             if idx_parts:
-                idx = capped_bucket_index(
+                idx = cap_band_buckets(
                     sp.read.parquet(*idx_parts).select(
                         "doc_id", "band", "band_hash"
                     ),
+                    "doc_id",
                     max_bucket,
                 ).withColumnRenamed("doc_id", "matched_doc_id")
                 index_hits = (
@@ -526,8 +514,8 @@ def ingest_with_growing_lsh_index(
             # unless the bucket's first `cap` ids are all larger — i.e.
             # rejection decisions change only for docs ranked past the
             # cap, the accepted recall trade)
-            peer = capped_bucket_index(
-                bands.select("doc_id", "band", "band_hash"), max_bucket
+            peer = cap_band_buckets(
+                bands.select("doc_id", "band", "band_hash"), "doc_id", max_bucket
             ).select(F.col("doc_id").alias("peer_id"), "band", "band_hash")
             batch_hits = (
                 bands.join(peer, ["band", "band_hash"])

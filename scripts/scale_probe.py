@@ -296,8 +296,8 @@ def main() -> None:
             else:
                 # unregistered measured-contrast variants (e.g. the w22
                 # window twin probed against the skew-immune default, or
-                # d2_minhash_lsh_capped — the flood-cap probe entry
-                # point that keeps the registered d2 env-immune)
+                # d2_minhash_lsh_capped — d2 with the per-bucket flood
+                # cap, 64 by default, while the registered d2 stays exact)
                 from pipeline_mf_etl_spark.queries import dedup as _d
                 from pipeline_mf_etl_spark.queries import windows as _w
 

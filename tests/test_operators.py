@@ -7,6 +7,9 @@ independent references (pandas ``merge_asof``, plain groupBy).
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -323,45 +326,85 @@ def test_ewm_smooth_many_matches_single(spark):
     assert bad.count() == 0
 
 
-def test_rowwise_buckets_match_grouped(spark):
-    """minhash_band_buckets_rowwise must emit bit-identical
-    (doc_id, band, band_hash) rows to the exploded-shingle groupBy path
-    (minhash_signatures + the band construction of lsh_candidate_pairs)
-    — the rowwise form exists ONLY so the same arithmetic runs on a
-    stream; any divergence would silently split the LSH bucket space."""
-    from pyspark.sql import functions as F
-
-    from pipeline_mf_etl_spark.operators.dedupe import (
-        exploded_shingles,
-        minhash_band_buckets_rowwise,
-        minhash_signatures,
-    )
+def test_rowwise_buckets_match_grouped(spark, duck):
+    """minhash_band_buckets_rowwise (the per-row form the streaming
+    paths run) must emit exactly the (doc_id, band, band_hash) rows of
+    the oracle's grouped ``bands`` CTE in d2_chain — the full uncapped
+    set. Any divergence would silently split the batch and streaming
+    LSH bucket spaces."""
+    from pipeline_mf_etl_spark.operators.dedupe import minhash_band_buckets_rowwise
+    from pipeline_mf_etl_spark.queries.dedup import _D2_CHAIN
     from pipeline_mf_etl_spark.sources.readers import load_table
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_ORACLE
 
-    docs = load_table(spark, SF_SMOKE, "documents")
-    sig = minhash_signatures(exploded_shingles(docs, "doc_id", "text", n=3), "doc_id")
-    band_hashes = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",", *[F.col(f"mh_{i}").cast("string") for i in range(b * 4, (b + 1) * 4)]
-                )
-            )
-            for b in range(4)
-        ]
-    )
-    grouped = set(
-        map(
-            tuple,
-            sig.select("doc_id", F.posexplode(band_hashes).alias("band", "band_hash")).collect(),
-        )
-    )
+    docs = load_table(spark, SF_ORACLE, "documents")
     rowwise = set(
         map(tuple, minhash_band_buckets_rowwise(docs, "doc_id", "text").collect())
     )
-    assert grouped == rowwise
+    grouped = set(
+        duck.execute(
+            f"WITH {_D2_CHAIN} SELECT doc_id, band, band_hash FROM bands"
+        ).fetchall()
+    )
+    assert rowwise == grouped
     assert len(rowwise) > 0
+
+
+def _nodes_by_top_level_def(tree):
+    """(name of the enclosing top-level def, or "<module>", node) for
+    every node of a module."""
+    out = []
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            name = owner
+            if owner == "<module>" and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                name = child.name
+            out.append((name, child))
+            visit(child, name)
+
+    visit(tree, "<module>")
+    return out
+
+
+def test_one_minhash_path_and_one_bucket_cap():
+    """Drift guard: the MinHash slot family is evaluated in exactly one
+    function, and the per-bucket LSH cap — a window partitioned by
+    (band, band_hash) — is built in exactly one Spark function and
+    stated in exactly one SQL fragment."""
+    import pipeline_mf_etl_spark
+
+    root = Path(pipeline_mf_etl_spark.__file__).parent
+    slot_calls, cap_windows, cap_sql = set(), set(), set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for owner, node in _nodes_by_top_level_def(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                fname = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if fname == "minhash_slot_params":
+                    slot_calls.add((rel, owner))
+                if fname == "partitionBy":
+                    keys = {
+                        c.value
+                        for a in node.args
+                        for c in ast.walk(a)
+                        if isinstance(c, ast.Constant)
+                    }
+                    if {"band", "band_hash"} <= keys:
+                        cap_windows.add((rel, owner))
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "PARTITION BY band, band_hash" in node.value
+            ):
+                cap_sql.add((rel, owner))
+    assert slot_calls == {("operators/dedupe.py", "minhash_signatures_from_arrays")}
+    assert cap_windows == {("operators/dedupe.py", "cap_band_buckets")}
+    assert cap_sql == {("queries/dedup.py", "capped_bands_cte")}
 
 
 def test_pq_adc_recall_vs_exact(spark):
@@ -558,18 +601,20 @@ def test_lsh_bucket_cap_bounds_giant_cluster(spark):
     members; the max_bucket cap must bound candidate output at
     C(cap, 2) per bucket instead of C(cluster, 2) — the SCALE.md
     adversarial-density mitigation."""
+    import pytest
+
     from pipeline_mf_etl_spark.operators.dedupe import (
-        exploded_shingles,
         lsh_candidate_pairs,
-        minhash_signatures,
+        minhash_signatures_from_arrays,
+        shingle_array_frame,
     )
 
     text = "the same boilerplate sentence repeated across the entire cluster"
     docs = spark.createDataFrame(
         [(i, text) for i in range(100)], "doc_id long, text string"
     )
-    sig = minhash_signatures(
-        exploded_shingles(docs, "doc_id", "text", n=3), "doc_id"
+    sig = minhash_signatures_from_arrays(
+        shingle_array_frame(docs, "doc_id", "text", n=3), "doc_id"
     )
     uncapped = lsh_candidate_pairs(sig, "doc_id").count()
     assert uncapped == 100 * 99 // 2  # quadratic blow-up, the failure mode
@@ -579,6 +624,9 @@ def test_lsh_bucket_cap_bounds_giant_cluster(spark):
     # smallest ids in each, so output is exactly C(10,2) distinct pairs
     assert len(rows) == 10 * 9 // 2
     assert all(r["a"] < 10 and r["b"] < 10 for r in rows)
+    # a self-join over one-member buckets emits nothing: rejected
+    with pytest.raises(ValueError, match="cap below 2"):
+        lsh_candidate_pairs(sig, "doc_id", max_bucket=1)
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
@@ -653,7 +701,7 @@ def test_zorder_buckets_have_locality_on_both_dimensions(spark):
 
 
 def test_containment_prefix_catches_what_lsh_misses(spark):
-    """The d11 size-skew recall hole (r7 verdict task 4): a tiny doc
+    """The d11 size-skew recall hole: a tiny doc
     quoted wholesale inside a huge one has containment 1.0 but Jaccard
     ~|A|/|B|, so symmetric MinHash LSH (band collision prob ~ J^rows)
     structurally misses it. Plant such a pair, assert the OLD candidate
@@ -666,9 +714,9 @@ def test_containment_prefix_catches_what_lsh_misses(spark):
 
     from pipeline_mf_etl_spark.operators.dedupe import (
         containment_candidate_pairs,
-        exploded_shingles,
         lsh_candidate_pairs,
-        minhash_signatures,
+        minhash_signatures_from_arrays,
+        shingle_array_frame,
     )
 
     rng = __import__("numpy").random.default_rng(23)
@@ -680,21 +728,22 @@ def test_containment_prefix_catches_what_lsh_misses(spark):
     for d in range(2, 30):
         docs.append((d, " ".join(words[int(i)] for i in rng.integers(0, 400, 60))))
     sdf = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    sh = exploded_shingles(sdf, "doc_id", "text", n=3).persist()
+    sh = shingle_array_frame(sdf, "doc_id", "text", n=3).persist()
+    rows = sh.select("doc_id", F.explode("sharr").alias("shingle"))
     try:
         # the planted pair qualifies: containment(tiny->huge) == 1.0
-        sizes = {r["doc_id"]: r["c"] for r in sh.groupBy("doc_id").agg(F.count("*").alias("c")).collect()}
+        sizes = {r["doc_id"]: r["sz"] for r in sh.collect()}
         inter01 = (
-            sh.filter(F.col("doc_id") == 0)
+            rows.filter(F.col("doc_id") == 0)
             .select("shingle")
-            .join(sh.filter(F.col("doc_id") == 1).select("shingle"), "shingle")
+            .join(rows.filter(F.col("doc_id") == 1).select("shingle"), "shingle")
             .count()
         )
         assert inter01 == sizes[0], "fixture broke: tiny not fully contained"
         jacc = inter01 / (sizes[0] + sizes[1] - inter01)
         assert jacc < 0.2, f"fixture broke: pair not size-skewed (J={jacc:.2f})"
 
-        sig = minhash_signatures(sh, "doc_id", k=16)
+        sig = minhash_signatures_from_arrays(sh, "doc_id", k=16)
         lsh = {(r["a"], r["b"]) for r in lsh_candidate_pairs(sig, "doc_id", k=16, bands=4).collect()}
         assert (0, 1) not in lsh, (
             "fixture no longer demonstrates the hole: LSH found the pair"
@@ -708,8 +757,8 @@ def test_containment_prefix_catches_what_lsh_misses(spark):
 
         # recall completeness: every pair with max containment >= 0.8
         # (brute force over all pairs) must be in the candidate set
-        a = sh.select(F.col("doc_id").alias("a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("b"), "shingle")
+        a = rows.select(F.col("doc_id").alias("a"), "shingle")
+        b = rows.select(F.col("doc_id").alias("b"), "shingle")
         inter = (
             a.join(b, "shingle")
             .filter(F.col("a") < F.col("b"))
@@ -901,55 +950,42 @@ def test_hdbscan_noise_and_degenerate_inputs():
         hdbscan_labels(U, min_cluster_size=1)
 
 
-def test_d2_env_bucket_cap_bounds_flood(spark, tmp_path, monkeypatch):
+def test_d2_capped_bounds_flood(spark, tmp_path):
     """The deterministic bucket cap lives in the UNREGISTERED probe
-    entry point d2_minhash_lsh_capped (explicit arg or env knob): a
-    near-exact duplicate flood emits C(cap,2) verified pairs instead of
-    C(flood,2), capped output is a subset of exact output — and the
-    REGISTERED d2 query ignores the env var entirely (r9 ADVICE: a
-    probe env var left set must not diverge d2 from its exact oracle)."""
+    entry point d2_minhash_lsh_capped: a near-exact duplicate flood
+    emits C(cap,2) verified pairs instead of C(flood,2), capped output
+    is a subset of exact output and keeps the smallest doc ids, the
+    default cap is 64, and the registered d2 stays exact."""
     import pandas as pd
+    import pytest
 
     from pipeline_mf_etl_spark.queries import all_queries
     from pipeline_mf_etl_spark.queries.dedup import d2_minhash_lsh_capped
 
     text = "one boilerplate mirror sentence repeated across every page of the crawl"
-    n, cap = 40, 6
+    n, cap = 70, 6
     pd.DataFrame({"doc_id": range(n), "text": [text] * n}).to_parquet(
         f"{tmp_path}/documents.parquet"
     )
     d2 = all_queries()["d2_minhash_lsh"].spark
 
-    monkeypatch.delenv("SPARK_GRAFT_LSH_MAX_BUCKET", raising=False)
-    exact = {(r["a"], r["b"]) for r in d2(spark, str(tmp_path)).collect()}
+    def pairs(df):
+        return {(r["a"], r["b"]) for r in df.collect()}
+
+    exact = pairs(d2(spark, str(tmp_path)))
     assert len(exact) == n * (n - 1) // 2  # the flood the cap exists for
 
-    # explicit arg on the probe entry point
-    capped = {
-        (r["a"], r["b"])
-        for r in d2_minhash_lsh_capped(spark, str(tmp_path), max_bucket=cap).collect()
-    }
-    assert len(capped) == cap * (cap - 1) // 2
+    capped = pairs(d2_minhash_lsh_capped(spark, str(tmp_path), max_bucket=cap))
     assert capped <= exact  # never invents pairs
     # deterministic: the cap keeps the smallest doc ids
     assert capped == {(a, b) for a in range(cap) for b in range(a + 1, cap)}
 
-    # env knob reaches ONLY the probe entry point...
-    monkeypatch.setenv("SPARK_GRAFT_LSH_MAX_BUCKET", str(cap))
-    env_capped = {
-        (r["a"], r["b"])
-        for r in d2_minhash_lsh_capped(spark, str(tmp_path)).collect()
-    }
-    assert env_capped == capped
-    # ...while the registered d2 stays exact with the env var set
-    still_exact = {(r["a"], r["b"]) for r in d2(spark, str(tmp_path)).collect()}
-    assert still_exact == exact
-
-    monkeypatch.setenv("SPARK_GRAFT_LSH_MAX_BUCKET", "1")
-    import pytest
+    # the default cap is 64, below the 70-doc flood
+    default = pairs(d2_minhash_lsh_capped(spark, str(tmp_path)))
+    assert default == {(a, b) for a in range(64) for b in range(a + 1, 64)}
 
     with pytest.raises(ValueError, match="cap below 2"):
-        d2_minhash_lsh_capped(spark, str(tmp_path))
+        d2_minhash_lsh_capped(spark, str(tmp_path), max_bucket=1)
 
 
 def test_w21_segmented_equals_window_form(spark, tmp_path):

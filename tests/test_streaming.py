@@ -592,6 +592,25 @@ def test_continuous_rollup_materializes_incrementally(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
+_FLOOD_TEXT = (
+    "identical boilerplate sentence repeated across the entire flood "
+    "of near exact duplicate submissions hitting the ingest gate"
+)
+
+
+def _flooded_index_and_probe(spark, n_flood):
+    """A static LSH index holding ``n_flood`` copies of one text, and
+    one more copy to look up against it."""
+    from pipeline_mf_etl_spark.operators.dedupe import minhash_band_buckets_rowwise
+
+    flood = spark.createDataFrame(
+        [(i, _FLOOD_TEXT) for i in range(n_flood)], "doc_id int, text string"
+    )
+    index = minhash_band_buckets_rowwise(flood, "doc_id", "text")
+    probe = spark.createDataFrame([(10_000, _FLOOD_TEXT)], "doc_id int, text string")
+    return index, probe
+
+
 def test_lsh_admission_flood_is_bounded_by_bucket_cap(spark, tmp_path):
     """Adversarial near-exact duplicate flood against the streaming
     admission paths: with streaming.lsh_max_bucket the static-index
@@ -602,27 +621,16 @@ def test_lsh_admission_flood_is_bounded_by_bucket_cap(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from pipeline_mf_etl_spark.operators.dedupe import (
-        minhash_band_buckets_rowwise,
-    )
     from pipeline_mf_etl_spark.streaming import (
         ingest_with_growing_lsh_index,
         neardup_candidates_against_index,
         read_jsonl_corpus_stream,
     )
 
-    flood_text = (
-        "identical boilerplate sentence repeated across the entire flood "
-        "of near exact duplicate submissions hitting the ingest gate"
-    )
     n_flood, cap = 200, 4
 
     # --- static lookup (st7's path): one incoming doc vs a flooded index
-    flood = spark.createDataFrame(
-        [(i, flood_text) for i in range(n_flood)], "doc_id int, text string"
-    )
-    index = minhash_band_buckets_rowwise(flood, "doc_id", "text")
-    probe = spark.createDataFrame([(10_000, flood_text)], "doc_id int, text string")
+    index, probe = _flooded_index_and_probe(spark, n_flood)
     uncapped = neardup_candidates_against_index(probe, index).count()
     capped = neardup_candidates_against_index(probe, index, max_bucket=cap).count()
     bands = 4
@@ -646,10 +654,10 @@ def test_lsh_admission_flood_is_bounded_by_bucket_cap(spark, tmp_path):
                 json.dumps(
                     {
                         "doc_id": i,
-                        "text": flood_text,
+                        "text": _FLOOD_TEXT,
                         "lang": "en",
                         "source": "s",
-                        "n_chars": len(flood_text),
+                        "n_chars": len(_FLOOD_TEXT),
                     }
                 )
                 + "\n"
@@ -675,6 +683,18 @@ def test_lsh_admission_flood_is_bounded_by_bucket_cap(spark, tmp_path):
         r["doc_id"] for r in spark.read.parquet(str(tmp_path / "index")).collect()
     }
     assert idx_ids == {0}  # rejected docs never pollute the grown index
+
+
+@pytest.mark.parametrize("cap", [0, -1])
+def test_lsh_admission_rejects_nonpositive_bucket_cap(spark, cap):
+    """A cap below 1 would empty every bucket of the index, so the
+    lookup would report no near-dups and admission would let every
+    duplicate through without an error; it must raise instead."""
+    from pipeline_mf_etl_spark.streaming import neardup_candidates_against_index
+
+    index, probe = _flooded_index_and_probe(spark, 200)
+    with pytest.raises(ValueError, match="cap below 1"):
+        neardup_candidates_against_index(probe, index, max_bucket=cap)
 
 
 def test_tws_running_stats_matches_batch_or_gates_loudly(spark):

@@ -42,6 +42,8 @@ import hashlib
 
 import numpy as np
 
+from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+
 # ---------------------------------------------------------------------------
 # CRCs (FLAC frame integrity): CRC-8 poly 0x07, CRC-16 poly 0x8005
 # ---------------------------------------------------------------------------
@@ -78,184 +80,91 @@ def crc16(data: bytes) -> int:
 
 
 # ---------------------------------------------------------------------------
-# bit I/O (MSB-first, as FLAC packs)
+# signed fields and bulk NumPy decode (FLAC packs MSB-first: bitio.Msb*)
 # ---------------------------------------------------------------------------
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self._out = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if value < 0 or value >> nbits:
-            raise ValueError(f"value {value} does not fit in {nbits} bits")
-        self._acc = (self._acc << nbits) | value
-        self._nbits += nbits
-        while self._nbits >= 8:
-            self._nbits -= 8
-            self._out.append((self._acc >> self._nbits) & 0xFF)
-        self._acc &= (1 << self._nbits) - 1
-
-    def write_signed(self, value: int, nbits: int) -> None:
-        self.write(value & ((1 << nbits) - 1), nbits)
-
-    def write_unary(self, q: int) -> None:
-        # FLAC unary: q zero bits terminated by a one bit
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self._nbits:
-            self.write(0, 8 - self._nbits)
-
-    def write_bits_array(self, bits: np.ndarray) -> None:
-        """Append a 0/1 uint8 bit vector in bulk — the write path of the
-        NumPy rice/raw encoders (r15). Byte-identical to writing each
-        bit through :meth:`write`: any pending sub-byte accumulator is
-        flushed into the vector first, whole bytes go through one
-        ``np.packbits``, and the sub-byte tail goes back into the
-        accumulator."""
-        if self._nbits:
-            head = np.empty(self._nbits, dtype=np.uint8)
-            acc = self._acc
-            for i in range(self._nbits):  # <= 7 iterations
-                head[self._nbits - 1 - i] = acc & 1
-                acc >>= 1
-            bits = np.concatenate([head, bits])
-            self._acc = 0
-            self._nbits = 0
-        nfull = (len(bits) >> 3) << 3
-        if nfull:
-            self._out += np.packbits(bits[:nfull]).tobytes()
-        acc = 0
-        for b in bits[nfull:].tolist():  # <= 7 iterations
-            acc = (acc << 1) | int(b)
-        self._nbits = len(bits) - nfull
-        self._acc = acc
-
-    def getvalue(self) -> bytes:
-        if self._nbits:
-            raise ValueError("bit writer not byte-aligned")
-        return bytes(self._out)
+def _read_signed(br: MsbReader, nbits: int) -> int:
+    v = br.read(nbits)
+    return v - (1 << nbits) if v & (1 << (nbits - 1)) else v
 
 
-class _BitReader:
-    def __init__(self, data: bytes, pos_bytes: int = 0, shared: dict | None = None) -> None:
-        self._data = data
-        self._bitpos = pos_bytes * 8
-        # per-stream cache for the NumPy bulk-decode path: parse_flac
-        # makes one reader per frame over the SAME payload, so the
-        # unpacked bit array is shared across them
-        self._shared = shared if shared is not None else {}
+def _write_signed(bw: MsbWriter, value: int, nbits: int) -> None:
+    bw.write(value & ((1 << nbits) - 1), nbits)
 
-    def _bit_array(self):
-        cache = self._shared
-        if "bits" not in cache:
-            bits = np.unpackbits(np.frombuffer(self._data, dtype=np.uint8))
-            cache["bits"] = bits
-            cache["ones"] = np.flatnonzero(bits)
-        return cache["bits"], cache["ones"]
 
-    def read_rice_block(self, n: int, param: int) -> np.ndarray:
-        """Bulk-decode ``n`` rice codes with shared parameter ``param``:
-        NumPy cumulative bit arithmetic instead of per-bit Python — the
-        unary terminators are walked over the precomputed 1-bit
-        positions (one list lookup per sample), quotients and remainder
-        fields then gather vectorized. Returns the ZIGZAGGED values."""
-        bits, ones = self._bit_array()
-        pos = self._bitpos
-        k0 = int(np.searchsorted(ones, pos))
-        # worst case each code consumes one terminator + param set bits
-        sub = ones[k0 : k0 + n * (param + 1) + 1]
-        # next-terminator jump per 1-bit: positions t+1..t+param after a
-        # terminator t are remainder DATA bits; the following terminator
-        # is the first 1 at or after t+param+1
-        nxt = np.searchsorted(sub, sub + (param + 1)).tolist()
-        ks = [0] * n
-        k = 0
-        m = len(sub)
-        for i in range(n):
-            if k >= m:
-                raise ValueError("FLAC bitstream exhausted")
-            ks[i] = k
-            k = nxt[k]
-        tpos = sub[ks]
-        starts = np.empty(n, dtype=np.int64)
-        starts[0] = pos
-        if n > 1:
-            starts[1:] = tpos[:-1] + 1 + param
-        q = tpos - starts
-        if (q < 0).any():
-            raise ValueError("corrupt rice stream (negative quotient)")
-        if (q > 1 << 20).any():
-            raise ValueError("runaway unary code (corrupt rice stream)")
-        if param:
-            idx = tpos[:, None] + 1 + np.arange(param)
-            if int(idx[-1, -1]) >= len(bits):
-                raise ValueError("FLAC bitstream exhausted")
-            weights = 1 << np.arange(param - 1, -1, -1, dtype=np.int64)
-            lows = (bits[idx].astype(np.int64) * weights).sum(axis=1)
-            u = (q << param) | lows
-        else:
-            u = q
-        self._bitpos = int(tpos[-1]) + 1 + param
-        return u
+def _bit_array(br: MsbReader, cache: dict):
+    """The stream's unpacked bits and the positions of its 1 bits.
+    parse_flac makes one reader per frame over the SAME payload, so
+    ``cache`` (one dict per stream) shares them across frames."""
+    if "bits" not in cache:
+        bits = np.unpackbits(np.frombuffer(br.data, dtype=np.uint8))
+        cache["bits"] = bits
+        cache["ones"] = np.flatnonzero(bits)
+    return cache["bits"], cache["ones"]
 
-    def read_signed_block(self, n: int, raw_bits: int) -> np.ndarray:
-        """Bulk-read ``n`` two's-complement fields of ``raw_bits`` bits
-        (the rice escape partitions)."""
-        bits, _ = self._bit_array()
-        pos = self._bitpos
-        end = pos + n * raw_bits
-        if end > len(bits):
+
+def _read_rice_block(br: MsbReader, cache: dict, n: int, param: int) -> np.ndarray:
+    """Bulk-decode ``n`` rice codes with shared parameter ``param``:
+    NumPy cumulative bit arithmetic instead of per-bit Python — the
+    unary terminators are walked over the precomputed 1-bit positions
+    (one list lookup per sample), quotients and remainder fields then
+    gather vectorized, and the reader's cursor jumps past the span.
+    Returns the ZIGZAGGED values."""
+    bits, ones = _bit_array(br, cache)
+    pos = br.pos
+    k0 = int(np.searchsorted(ones, pos))
+    # worst case each code consumes one terminator + param set bits
+    sub = ones[k0 : k0 + n * (param + 1) + 1]
+    # next-terminator jump per 1-bit: positions t+1..t+param after a
+    # terminator t are remainder DATA bits; the following terminator
+    # is the first 1 at or after t+param+1
+    nxt = np.searchsorted(sub, sub + (param + 1)).tolist()
+    ks = [0] * n
+    k = 0
+    m = len(sub)
+    for i in range(n):
+        if k >= m:
             raise ValueError("FLAC bitstream exhausted")
-        m = bits[pos:end].reshape(n, raw_bits).astype(np.int64)
-        weights = 1 << np.arange(raw_bits - 1, -1, -1, dtype=np.int64)
-        v = (m * weights).sum(axis=1)
-        v = np.where(m[:, 0] == 1, v - (1 << raw_bits), v)
-        self._bitpos = end
-        return v
-
-    def read(self, nbits: int) -> int:
-        end = self._bitpos + nbits
-        if end > len(self._data) * 8:
+        ks[i] = k
+        k = nxt[k]
+    tpos = sub[ks]
+    starts = np.empty(n, dtype=np.int64)
+    starts[0] = pos
+    if n > 1:
+        starts[1:] = tpos[:-1] + 1 + param
+    q = tpos - starts
+    if (q < 0).any():
+        raise ValueError("corrupt rice stream (negative quotient)")
+    if (q > 1 << 20).any():
+        raise ValueError("runaway unary code (corrupt rice stream)")
+    if param:
+        idx = tpos[:, None] + 1 + np.arange(param)
+        if int(idx[-1, -1]) >= len(bits):
             raise ValueError("FLAC bitstream exhausted")
-        out = 0
-        pos = self._bitpos
-        while nbits:
-            byte = self._data[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = min(avail, nbits)
-            out = (out << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
-            pos += take
-            nbits -= take
-        self._bitpos = pos
-        return out
+        weights = 1 << np.arange(param - 1, -1, -1, dtype=np.int64)
+        lows = (bits[idx].astype(np.int64) * weights).sum(axis=1)
+        u = (q << param) | lows
+    else:
+        u = q
+    br.pos = int(tpos[-1]) + 1 + param
+    return u
 
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        return v - (1 << nbits) if v & (1 << (nbits - 1)) else v
 
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("runaway unary code (corrupt rice stream)")
-        return q
-
-    def align(self) -> None:
-        self._bitpos = (self._bitpos + 7) & ~7
-
-    @property
-    def byte_pos(self) -> int:
-        if self._bitpos & 7:
-            raise ValueError("bit reader not byte-aligned")
-        return self._bitpos >> 3
+def _read_signed_block(br: MsbReader, cache: dict, n: int, raw_bits: int) -> np.ndarray:
+    """Bulk-read ``n`` two's-complement fields of ``raw_bits`` bits
+    (the rice escape partitions)."""
+    bits, _ = _bit_array(br, cache)
+    pos = br.pos
+    end = pos + n * raw_bits
+    if end > len(bits):
+        raise ValueError("FLAC bitstream exhausted")
+    m = bits[pos:end].reshape(n, raw_bits).astype(np.int64)
+    weights = 1 << np.arange(raw_bits - 1, -1, -1, dtype=np.int64)
+    v = (m * weights).sum(axis=1)
+    v = np.where(m[:, 0] == 1, v - (1 << raw_bits), v)
+    br.pos = end
+    return v
 
 
 # ---------------------------------------------------------------------------
@@ -276,7 +185,7 @@ def _utf8_encode_number(n: int) -> bytes:
     raise ValueError(f"frame number {n} exceeds 36 bits")
 
 
-def _utf8_decode_number(br: _BitReader) -> int:
+def _utf8_decode_number(br: MsbReader) -> int:
     first = br.read(8)
     if first < 0x80:
         return first
@@ -437,12 +346,12 @@ def _best_rice_param(u: np.ndarray) -> int:
 
 
 def _rice_bits(u: np.ndarray, param: int) -> np.ndarray:
-    """The rice codes for zigzagged values ``u`` as ONE 0/1 bit vector
-    (r15 encode vectorization): per code, ``q = u >> param`` zero bits,
-    a one terminator, then the ``param`` low bits MSB-first — exactly
-    the bits the per-sample ``write_unary`` + ``write`` loop emitted,
-    built with cumulative-sum indexing instead of 2-3 Python bit-writer
-    calls per sample (the mm25 encode entropy loop)."""
+    """The rice codes for zigzagged values ``u`` as ONE 0/1 bit vector:
+    per code, ``q = u >> param`` zero bits, a one terminator, then the
+    ``param`` low bits MSB-first — exactly the bits a per-sample
+    ``write(1, q + 1)`` + ``write(low, param)`` loop emits, built with
+    cumulative-sum indexing instead of 2 Python bit-writer calls per
+    sample (the mm25 encode entropy loop)."""
     u = u.astype(np.int64)
     q = u >> param
     lens = q + 1 + param
@@ -461,14 +370,14 @@ def _rice_bits(u: np.ndarray, param: int) -> np.ndarray:
 
 def _signed_bits(vals: np.ndarray, nbits: int) -> np.ndarray:
     """``nbits``-wide two's-complement fields as one 0/1 bit vector —
-    the bulk form of the per-sample ``write_signed`` loop (verbatim
+    the bulk form of the per-sample ``_write_signed`` loop (verbatim
     subframes and rice escape partitions)."""
     masked = vals.astype(np.int64) & ((1 << nbits) - 1)
     shifts = nbits - 1 - np.arange(nbits)
     return ((masked[:, None] >> shifts[None, :]) & 1).astype(np.uint8).ravel()
 
 
-def _write_residual(bw: _BitWriter, residual: np.ndarray, order: int, block: int,
+def _write_residual(bw: MsbWriter, residual: np.ndarray, order: int, block: int,
                     partition_order: int) -> None:
     bw.write(0, 2)  # coding method 0: 4-bit rice
     bw.write(partition_order, 4)
@@ -496,7 +405,7 @@ def _write_residual(bw: _BitWriter, residual: np.ndarray, order: int, block: int
         bw.write_bits_array(_rice_bits(u, param))
 
 
-def _read_residual(br: _BitReader, order: int, block: int) -> np.ndarray:
+def _read_residual(br: MsbReader, cache: dict, order: int, block: int) -> np.ndarray:
     method = br.read(2)
     if method != 0:
         raise ValueError(f"unsupported residual coding method {method}")
@@ -513,20 +422,20 @@ def _read_residual(br: _BitReader, order: int, block: int) -> np.ndarray:
         param = br.read(4)
         if param == _RICE_ESCAPE:
             # read the 5-bit raw_bits field even for n == 0 so the
-            # bitstream stays aligned (ADVICE r12: libFLAC accepts a
-            # zero-sample first partition; skipping the field here
-            # would silently desync if the order guard above relaxes)
+            # bitstream stays aligned: libFLAC accepts a zero-sample
+            # first partition, and skipping the field here would
+            # silently desync if the order guard above relaxes
             raw_bits = br.read(5)
             if n == 0:
                 continue
             if raw_bits == 0:
                 parts.append(np.zeros(n, dtype=np.int64))
             else:
-                parts.append(br.read_signed_block(n, raw_bits))
+                parts.append(_read_signed_block(br, cache, n, raw_bits))
             continue
         if n == 0:
             continue
-        u = br.read_rice_block(n, param)
+        u = _read_rice_block(br, cache, n, param)
         parts.append((u >> 1) ^ -(u & 1))  # un-zigzag
     if not parts:
         return np.empty(0, dtype=np.int64)
@@ -538,7 +447,7 @@ def _read_residual(br: _BitReader, order: int, block: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _write_subframe(bw: _BitWriter, x: np.ndarray, bits: int,
+def _write_subframe(bw: MsbWriter, x: np.ndarray, bits: int,
                     partition_order: int) -> None:
     block = len(x)
     x64 = x.astype(np.int64)
@@ -546,7 +455,7 @@ def _write_subframe(bw: _BitWriter, x: np.ndarray, bits: int,
         bw.write(0, 1)
         bw.write(0b000000, 6)  # CONSTANT
         bw.write(0, 1)
-        bw.write_signed(int(x64[0]), bits)
+        _write_signed(bw, int(x64[0]), bits)
         return
     # pick the fixed order with the smallest |residual| mass (the
     # standard order-selection heuristic); order capped by block length
@@ -596,11 +505,11 @@ def _write_subframe(bw: _BitWriter, x: np.ndarray, bits: int,
         bw.write(0b100000 | (lorder - 1), 6)  # LPC
         bw.write(0, 1)  # no wasted bits
         for v in x64[:lorder]:
-            bw.write_signed(int(v), bits)
+            _write_signed(bw, int(v), bits)
         bw.write(_LPC_PRECISION - 1, 4)
         bw.write(shift, 5)  # non-negative: same bits as 2's-complement
         for c in qcoef:
-            bw.write_signed(int(c), _LPC_PRECISION)
+            _write_signed(bw, int(c), _LPC_PRECISION)
         po = partition_order
         while po and (block % (1 << po) or (block >> po) <= lorder):
             po -= 1
@@ -610,14 +519,14 @@ def _write_subframe(bw: _BitWriter, x: np.ndarray, bits: int,
     bw.write(0b001000 | best_order, 6)  # FIXED
     bw.write(0, 1)  # no wasted bits
     for v in x64[:best_order]:
-        bw.write_signed(int(v), bits)
+        _write_signed(bw, int(v), bits)
     po = partition_order
     while po and (block % (1 << po) or (block >> po) <= best_order):
         po -= 1
     _write_residual(bw, best_res, best_order, block, po)
 
 
-def _read_subframe(br: _BitReader, block: int, bits: int) -> np.ndarray:
+def _read_subframe(br: MsbReader, cache: dict, block: int, bits: int) -> np.ndarray:
     if br.read(1):
         raise ValueError("subframe header padding bit set (corrupt stream)")
     stype = br.read(6)
@@ -626,38 +535,38 @@ def _read_subframe(br: _BitReader, block: int, bits: int) -> np.ndarray:
             "wasted-bits subframes not implemented in this engine"
         )
     if stype == 0b000000:  # CONSTANT
-        return np.full(block, br.read_signed(bits), dtype=np.int64)
+        return np.full(block, _read_signed(br, bits), dtype=np.int64)
     if stype == 0b000001:  # VERBATIM
-        return np.array([br.read_signed(bits) for _ in range(block)], dtype=np.int64)
+        return np.array([_read_signed(br, bits) for _ in range(block)], dtype=np.int64)
     if 0b001000 <= stype <= 0b001100:  # FIXED order 0-4
         order = stype & 0x7
         if order > block:
             raise ValueError(f"FIXED order {order} exceeds block {block}")
         warmup = np.array(
-            [br.read_signed(bits) for _ in range(order)], dtype=np.int64
+            [_read_signed(br, bits) for _ in range(order)], dtype=np.int64
         )
-        residual = _read_residual(br, order, block)
+        residual = _read_residual(br, cache, order, block)
         return _fixed_restore(residual, warmup, order)
     if stype & 0b100000:  # LPC order 1-32
         order = (stype & 0x1F) + 1
         if order > block:
             raise ValueError(f"LPC order {order} exceeds block {block}")
         warmup = np.array(
-            [br.read_signed(bits) for _ in range(order)], dtype=np.int64
+            [_read_signed(br, bits) for _ in range(order)], dtype=np.int64
         )
         prec_code = br.read(4)
         if prec_code == 0b1111:
             raise ValueError("invalid LPC coefficient precision code 0b1111")
         precision = prec_code + 1
-        shift = br.read_signed(5)
+        shift = _read_signed(br, 5)
         if shift < 0:
             raise ValueError(
                 f"negative LPC quantization shift {shift} (prohibited)"
             )
         qcoef = np.array(
-            [br.read_signed(precision) for _ in range(order)], dtype=np.int64
+            [_read_signed(br, precision) for _ in range(order)], dtype=np.int64
         )
-        residual = _read_residual(br, order, block)
+        residual = _read_residual(br, cache, order, block)
         return _lpc_restore(residual, warmup, qcoef, shift)
     raise ValueError(f"reserved subframe type 0b{stype:06b}")
 
@@ -751,7 +660,7 @@ def encode_flac(
     ).digest()  # interleaved little-endian, per spec
 
     # STREAMINFO
-    si = _BitWriter()
+    si = MsbWriter()
     si.write(block_size, 16)  # min block
     si.write(block_size, 16)  # max block (fixed-blocksize strategy)
     si.write(0, 24)  # min frame size unknown
@@ -769,7 +678,7 @@ def encode_flac(
 
     for frame_no, start in enumerate(range(0, total, block_size)):
         block = min(block_size, total - start)
-        bw = _BitWriter()
+        bw = MsbWriter()
         bw.write(0b11111111111110, 14)
         bw.write(0, 1)  # reserved
         bw.write(0, 1)  # fixed-blocksize strategy
@@ -800,10 +709,7 @@ def encode_flac(
         for b in header_tail:
             bw.write(b, 8)
         bw.write(block - 1, 16)
-        header_bytes = bw._out  # byte-aligned here by construction
-        if bw._nbits:
-            raise AssertionError("frame header must be byte-aligned")
-        bw.write(crc8(bytes(header_bytes)), 8)
+        bw.write(crc8(bw.getvalue()), 8)  # the header is whole bytes
         for x, bits in subs:
             _write_subframe(bw, x, bits, partition_order)
         bw.align()
@@ -847,7 +753,7 @@ def parse_flac(payload: bytes) -> dict:
             break
     if streaminfo is None:
         raise ValueError("FLAC stream missing STREAMINFO")
-    si = _BitReader(streaminfo)
+    si = MsbReader(streaminfo)
     min_block, max_block = si.read(16), si.read(16)
     si.read(24), si.read(24)  # frame-size bounds (informational)
     sample_rate = si.read(20)
@@ -867,7 +773,7 @@ def parse_flac(payload: bytes) -> dict:
     n_frames = 0
     bit_cache: dict = {}  # unpacked-bit array shared across frame readers
     while decoded < total:
-        br = _BitReader(payload, pos, shared=bit_cache)
+        br = MsbReader(payload, pos * 8)
         sync = br.read(14)
         if sync != 0b11111111111110:
             raise ValueError(f"lost frame sync at byte {pos} (read {sync:#016b})")
@@ -905,8 +811,8 @@ def parse_flac(payload: bytes) -> dict:
             raise ValueError(
                 f"sample-size code {ss_code:#05b} not implemented (16-bit only)"
             )
-        header_len = br.byte_pos - pos
-        if crc8(payload[pos : pos + header_len]) != br.read(8):
+        header_end = br.pos >> 3  # the header is whole bytes
+        if crc8(payload[pos:header_end]) != br.read(8):
             raise ValueError(f"frame {frame_no} header CRC-8 mismatch")
         if assign == _ASSIGN_INDEPENDENT_MONO:
             if n_channels != 1:
@@ -928,13 +834,13 @@ def parse_flac(payload: bytes) -> dict:
             raise ValueError(f"reserved channel assignment {assign:#06b}")
         if n_channels == 2 and len(sub_bits) != 2:
             raise ValueError("stereo stream carries a non-2-channel frame")
-        raw = [_read_subframe(br, block, b) for b in sub_bits]
+        raw = [_read_subframe(br, bit_cache, block, b) for b in sub_bits]
         br.align()
-        frame_len = br.byte_pos - pos
-        footer = int.from_bytes(payload[br.byte_pos : br.byte_pos + 2], "big")
-        if crc16(payload[pos : pos + frame_len]) != footer:
+        frame_end = br.pos >> 3
+        footer = int.from_bytes(payload[frame_end : frame_end + 2], "big")
+        if crc16(payload[pos:frame_end]) != footer:
             raise ValueError(f"frame {frame_no} CRC-16 mismatch")
-        pos = br.byte_pos + 2
+        pos = frame_end + 2
         if n_channels == 2:
             raw = _recorrelate(raw, assign)
         for c, x in enumerate(raw):

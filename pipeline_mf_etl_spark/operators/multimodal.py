@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+
 N_HIST_BINS = 16
 
 FEATURE_SCHEMA = StructType(
@@ -2259,17 +2261,17 @@ def decode_png_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# JPEG — dependency-free BASELINE-SEQUENTIAL codec (the format a real
-# multimodal corpus is actually made of; the r7 verdict's remaining
-# compressed-decode leg). Grayscale JFIF: SOI, APP0, DQT, SOF0, DHT,
-# SOS + entropy-coded data (byte-stuffed), EOI. The ENCODER runs the
-# real forward pipeline (level shift, 8x8 float DCT, quantize, zigzag,
+# JPEG — dependency-free codec (the format a real multimodal corpus is
+# actually made of). JFIF: SOI, APP0, DQT, SOF0/SOF2, DHT, DRI, SOS +
+# entropy-coded data (byte-stuffed), EOI. The ENCODERS run the real
+# forward pipeline (level shift, 8x8 float DCT, quantize, zigzag,
 # DC-difference + AC run-length canonical-Huffman entropy coding); the
 # DECODER is fully general for the declared subset: marker walk,
 # DQT/DHT table parse, canonical-Huffman bit decode with 0xFF00
 # unstuffing, dequantize, de-zigzag, IDCT, level shift, clamp, crop.
-# Unsupported variants (progressive SOF2, multi-component, restart
-# intervals, 16-bit quant tables) fail LOUDLY — never guessed at.
+# Entropy bits are MSB-first (bitio.MsbWriter / bitio.MsbReader).
+# Unsupported variants (extended/arithmetic SOFs, 16-bit quant tables)
+# fail LOUDLY — never guessed at.
 #
 # Exactness contract used by the mm13 oracle: a block whose 64 pixels
 # are all v has DCT == (8*(v-128), 0, ..., 0); with the synthesis
@@ -2351,28 +2353,14 @@ _JPEG_DC_CODES = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALUES)
 _JPEG_AC_CODES = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALUES)
 
 
-class _JpegBitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing inside entropy data
-                self.out.append(0x00)
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1s per T.81
-        return bytes(self.out)
+def _jpeg_scan_bytes(w: MsbWriter) -> bytes:
+    """Finish one entropy-coded scan: pad the tail byte with 1s per
+    T.81, then byte-stuff every 0xFF. Stuffing depends only on the
+    output bytes, so it is one replace over the finished scan (these
+    scans carry no RST markers, which must stay unstuffed)."""
+    pad = -w.pos & 7
+    w.write((1 << pad) - 1, pad)
+    return w.getvalue().replace(b"\xff", b"\xff\x00")
 
 
 def _jpeg_category(v: int) -> int:
@@ -2469,13 +2457,14 @@ def encode_jpeg_gray(
         np.frombuffer(gray, dtype=np.uint8).reshape(height, width), q
     )
     dcs, last_all = _jpeg_dc_last(zz_all)
-    # the bit-writer is INLINED (no _JpegBitWriter) on purpose: the
+    # the bit-writer is INLINED (no bitio.MsbWriter) on purpose: the
     # per-write method call measured as ~40% of the whole encode, and
     # the block-constant synthesis family emits 2-3 writes per block —
-    # semantics are exactly _JpegBitWriter.write/flush above, kept as
-    # the readable reference implementation. Bits accumulate per block
-    # and drain to bytes (with 0xFF00 stuffing) once per block / once
-    # per AC coefficient, so acc stays a small int.
+    # semantics are exactly MsbWriter.write plus _jpeg_scan_bytes'
+    # 1-padding and stuffing (bitio.py is the reference
+    # implementation). Bits accumulate per block and drain to bytes
+    # (with 0xFF00 stuffing) once per block / once per AC coefficient,
+    # so acc stays a small int.
     out = bytearray()
     append = out.append
     acc = nbits = 0
@@ -2603,50 +2592,20 @@ def _jpeg_decode_lut(
     return out
 
 
-class _JpegBitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG entropy stream exhausted mid-symbol")
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        self.nbits -= n
-        v = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def read_symbol(self, lut: tuple[list[int], list[int]]) -> int:
-        # top up to 16 buffered bits (or stream end), peek the window
-        # (right-padded with 1s — the T.81 pad value, so a final symbol
-        # flush against padding still resolves), one LUT probe, consume
-        data, sym_t, len_t = self.data, lut[0], lut[1]
-        while self.nbits < 16 and self.pos < len(data):
-            self.acc = (self.acc << 8) | data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        if self.nbits >= 16:
-            window = (self.acc >> (self.nbits - 16)) & 0xFFFF
-        else:
-            pad = 16 - self.nbits
-            window = ((self.acc << pad) | ((1 << pad) - 1)) & 0xFFFF
-        sym = sym_t[window]
-        length = len_t[window]
-        if sym < 0 or length > self.nbits:
-            raise ValueError(
-                "invalid JPEG Huffman code (no symbol within 16 bits)"
-                if sym < 0
-                else "JPEG entropy stream exhausted mid-symbol"
-            )
-        self.nbits -= length
-        self.acc &= (1 << self.nbits) - 1
-        return sym
+def _jpeg_read_symbol(reader: MsbReader, lut: tuple[list[int], list[int]]) -> int:
+    """One Huffman symbol: peek a 16-bit window, one LUT probe, consume
+    the code. Past the end of the stream the window is padded with 1s
+    (the T.81 pad value), so a final symbol flush against padding still
+    resolves; consuming more bits than the stream has raises."""
+    window = reader.peek(16)
+    short = reader.pos + 16 - reader.nbits
+    if short > 0:
+        window |= (1 << short) - 1
+    sym = lut[0][window]
+    if sym < 0:
+        raise ValueError("invalid JPEG Huffman code (no symbol within 16 bits)")
+    reader.skip(lut[1][window])
+    return sym
 
 
 def _jpeg_extend(bits: int, s: int) -> int:
@@ -2668,22 +2627,15 @@ _JPEG_PROG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPEG_PROG_AC_VALUES),
 _JPEG_PROG_AC_CODES = _jpeg_canonical_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALUES)
 
 
-class _ProgBitWriter(_JpegBitWriter):
-    """Adds the buffered-EOBRUN flush the progressive AC encoder needs."""
-
-    def __init__(self) -> None:
-        super().__init__()
-        self.eobrun = 0
-
-    def flush_eobrun(self, ac_codes) -> None:
-        if not self.eobrun:
-            return
-        nbits = self.eobrun.bit_length() - 1
+def _jpeg_flush_eobrun(w: MsbWriter, eobrun: int, ac_codes) -> int:
+    """Emit a buffered EOBRUN, if any, as its EOBn symbol plus the n low
+    bits of the run length (T.81 G.1.2.2); returns the emptied run."""
+    if eobrun:
+        nbits = eobrun.bit_length() - 1
         code, length = ac_codes[(nbits << 4) | 0x0]
-        self.write(code, length)
-        if nbits:
-            self.write(self.eobrun - (1 << nbits), nbits)
-        self.eobrun = 0
+        w.write(code, length)
+        w.write(eobrun - (1 << nbits), nbits)
+    return 0
 
 
 def encode_jpeg_progressive_gray(
@@ -2724,7 +2676,7 @@ def encode_jpeg_progressive_gray(
     dc_codes, ac_codes = _JPEG_DC_CODES, _JPEG_PROG_AC_CODES
 
     def dc_first(al: int) -> bytes:
-        w = _JpegBitWriter()
+        w = MsbWriter()
         prev = 0
         for bi in range(n_blocks):
             v = int(zz[bi, 0]) >> al  # DC point transform: ARITHMETIC shift
@@ -2735,7 +2687,7 @@ def encode_jpeg_progressive_gray(
             w.write(code, length)
             if s:
                 w.write((diff if diff >= 0 else diff + (1 << s) - 1), s)
-        return w.flush()
+        return _jpeg_scan_bytes(w)
 
     def dc_refine(al: int) -> bytes:
         # the refinement bit is the TWO'S-COMPLEMENT bit (v >> al) & 1
@@ -2743,13 +2695,14 @@ def encode_jpeg_progressive_gray(
         # convention — for negative DC at al > 0 the sign-magnitude bit
         # would differ (identical at al == 0, the shipped script, but
         # the invariant must not depend on the script)
-        w = _JpegBitWriter()
+        w = MsbWriter()
         for bi in range(n_blocks):
             w.write((int(zz[bi, 0]) >> al) & 1, 1)
-        return w.flush()
+        return _jpeg_scan_bytes(w)
 
     def ac_first(ss: int, se: int, al: int) -> bytes:
-        w = _ProgBitWriter()
+        w = MsbWriter()
+        eobrun = 0  # blocks whose band is all zero, not yet emitted
         # vectorized all-zero-band skip: a block with no magnitude in
         # the band at this precision is exactly one eobrun increment —
         # never pay the 63-step Python loop for it (measured as the
@@ -2757,9 +2710,9 @@ def encode_jpeg_progressive_gray(
         band_any = ((np.abs(zz[:, ss : se + 1]) >> al) != 0).any(axis=1)
         for bi in range(n_blocks):
             if not band_any[bi]:
-                w.eobrun += 1
-                if w.eobrun == 0x7FFF:
-                    w.flush_eobrun(ac_codes)
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
                 continue
             run = 0
             wrote = False
@@ -2769,7 +2722,7 @@ def encode_jpeg_progressive_gray(
                 if m == 0:
                     run += 1
                     continue
-                w.flush_eobrun(ac_codes)
+                eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
                 while run >= 16:
                     code, length = ac_codes[0xF0]
                     w.write(code, length)
@@ -2782,11 +2735,11 @@ def encode_jpeg_progressive_gray(
                 wrote = True
             if run > 0 or not wrote:
                 # block ends in (or is entirely) zeros at this precision
-                w.eobrun += 1
-                if w.eobrun == 0x7FFF:
-                    w.flush_eobrun(ac_codes)
-        w.flush_eobrun(ac_codes)
-        return w.flush()
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
+        _jpeg_flush_eobrun(w, eobrun, ac_codes)
+        return _jpeg_scan_bytes(w)
 
     def ac_refine(ss: int, se: int, ah: int, al: int) -> bytes:
         """G.1.2.3: newly-significant coefficients (|v|>>Al == 1 with
@@ -2794,12 +2747,14 @@ def encode_jpeg_progressive_gray(
         contribute one correction bit each, buffered and flushed after
         the next emitted symbol (ZRL / run-1 / EOBn) so the decoder
         reads them during that symbol's positional advance."""
-        w = _ProgBitWriter()
+        w = MsbWriter()
+        eobrun = 0
         pending: list[int] = []  # corrections riding the pending EOBRUN
 
         def flush_eob() -> None:
-            if w.eobrun:
-                w.flush_eobrun(ac_codes)
+            nonlocal eobrun
+            if eobrun:
+                eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
                 for b in pending:
                     w.write(b, 1)
                 pending.clear()
@@ -2810,8 +2765,8 @@ def encode_jpeg_progressive_gray(
         band_any = ((np.abs(zz[:, ss : se + 1]) >> al) != 0).any(axis=1)
         for bi in range(n_blocks):
             if not band_any[bi]:
-                w.eobrun += 1
-                if w.eobrun == 0x7FFF:
+                eobrun += 1
+                if eobrun == 0x7FFF:
                     flush_eob()
                 continue
             vals = [int(zz[bi, k]) for k in range(ss, se + 1)]
@@ -2849,12 +2804,12 @@ def encode_jpeg_progressive_gray(
                 bebits.clear()
                 run = 0
             if run > 0 or bebits:
-                w.eobrun += 1
+                eobrun += 1
                 pending.extend(bebits)
-                if w.eobrun == 0x7FFF:
+                if eobrun == 0x7FFF:
                     flush_eob()
         flush_eob()
-        return w.flush()
+        return _jpeg_scan_bytes(w)
 
     dht_dc = bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALUES)
     dht_ac = (
@@ -3291,7 +3246,7 @@ def _jpeg_prog_dc_scan(
 ):
     ss_al, ah = scan["al"], scan["ah"]
     dri = scan["dri"]
-    reader = _JpegBitReader(segments[0])
+    reader = MsbReader(segments[0])
     seg_i = 0
     prev = {ci: 0 for ci in sc}
     if interleaved:
@@ -3300,7 +3255,7 @@ def _jpeg_prog_dc_scan(
             for C in range(mcols):
                 if dri and unit and unit % dri == 0:
                     seg_i += 1
-                    reader = _JpegBitReader(segments[seg_i])
+                    reader = MsbReader(segments[seg_i])
                     prev = {ci: 0 for ci in sc}
                 unit += 1
                 for ci in sc:
@@ -3320,7 +3275,7 @@ def _jpeg_prog_dc_scan(
         for bi in range(n_units):
             if dri and bi and bi % dri == 0:
                 seg_i += 1
-                reader = _JpegBitReader(segments[seg_i])
+                reader = MsbReader(segments[seg_i])
                 prev = {ci: 0}
             padded = (bi // tbw) * grid_w[ci] + (bi % tbw)
             _jpeg_prog_dc_block(
@@ -3333,7 +3288,7 @@ def _jpeg_prog_dc_block(coef, block_idx, reader, dc_lut, prev, ci, ah, al):
         # first pass: Huffman DC difference at precision Al; the
         # predictor chains the POINT-TRANSFORMED values (T.81 G.1.2.1,
         # arithmetic shift on the encode side)
-        s = reader.read_symbol(dc_lut)
+        s = _jpeg_read_symbol(reader, dc_lut)
         diff = _jpeg_extend(reader.read(s), s) if s else 0
         prev[ci] += diff
         coef[block_idx, 0] = prev[ci] << al
@@ -3351,14 +3306,14 @@ def _jpeg_prog_ac_scan(
     ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
     dri = scan["dri"]
     tbw, tbh, n_units = _jpeg_comp_true_blocks(comps[ci], width, height, hmax, vmax)
-    reader = _JpegBitReader(segments[0])
+    reader = MsbReader(segments[0])
     seg_i = 0
     eobrun = 0
     coef = coefs[ci]
     for bi in range(n_units):
         if dri and bi and bi % dri == 0:
             seg_i += 1
-            reader = _JpegBitReader(segments[seg_i])
+            reader = MsbReader(segments[seg_i])
             eobrun = 0
         block = coef[(bi // tbw) * grid_w[ci] + (bi % tbw)]
         if ah == 0:
@@ -3378,7 +3333,7 @@ def _jpeg_prog_ac_first_block(block, reader, ac_lut, ss, se, al, eobrun):
         return eobrun - 1
     k = ss
     while k <= se:
-        sym = reader.read_symbol(ac_lut)
+        sym = _jpeg_read_symbol(reader, ac_lut)
         r, s = sym >> 4, sym & 0x0F
         if s:
             k += r
@@ -3407,7 +3362,7 @@ def _jpeg_prog_ac_refine_block(block, reader, ac_lut, ss, se, al, eobrun):
     k = ss
     if eobrun == 0:
         while k <= se:
-            sym = reader.read_symbol(ac_lut)
+            sym = _jpeg_read_symbol(reader, ac_lut)
             r, s = sym >> 4, sym & 0x0F
             if s == 0:
                 if r != 15:
@@ -3456,7 +3411,7 @@ def parse_jpeg(payload: bytes) -> dict:
     0xFF00 unstuffing, per-component dequantize + de-zigzag + IDCT +
     level shift + clamp, chroma upsampling by pixel replication, crop
     to the SOF geometry. Restart intervals (DRI + RSTn) are fully
-    supported since r9: the entropy stream splits at restart markers,
+    supported: the entropy stream splits at restart markers,
     each segment decodes byte-aligned with zeroed DC predictors, and
     the RST cycle/segment count are validated. Returns ``{"width",
     "height", "components", "planes"}`` where planes are
@@ -3519,6 +3474,8 @@ def parse_jpeg(payload: bytes) -> dict:
                 bits = list(seg[off + 1 : off + 17])
                 n = sum(bits)
                 values = list(seg[off + 17 : off + 17 + n])
+                if len(bits) != 16 or len(values) != n:
+                    raise ValueError("truncated JPEG DHT table")
                 table: dict[tuple[int, int], int] = {}
                 code, k = 0, 0
                 for length in range(1, 17):
@@ -3666,11 +3623,11 @@ def parse_jpeg(payload: bytes) -> dict:
     # entropy decode is inherently sequential (DC differences chain
     # block to block WITHIN each component; components interleave per
     # MCU); the DCT math below is vectorized across blocks. The symbol
-    # loop is INLINED (no _JpegBitReader) on purpose: per-symbol method
-    # calls measured as ~60% of the whole decode — the semantics are
-    # exactly read_symbol/read/_jpeg_extend above, kept as the readable
-    # reference implementation (and used by the coefficient-level
-    # tests). Block coefficients scatter into PLANE-RASTER order
+    # loop is INLINED (no bitio.MsbReader) on purpose: per-symbol
+    # method calls measured as ~60% of the whole decode — the semantics
+    # are exactly _jpeg_read_symbol/MsbReader.read/_jpeg_extend (bitio.py
+    # is the reference implementation; the progressive decoder uses
+    # them). Block coefficients scatter into PLANE-RASTER order
     # directly via the (R*v + r, C*h + c) index, so plane assembly
     # needs no MCU-order permutation afterwards.
     sym_dc_a = [t[0] for t in dc_tabs]
@@ -3808,7 +3765,7 @@ def parse_jpeg(payload: bytes) -> dict:
 
 
 def parse_jpeg_gray(payload: bytes) -> dict:
-    """Single-component strict view of ``parse_jpeg`` (the pre-r9 gray
+    """Single-component strict view of ``parse_jpeg`` (the grayscale
     contract): returns ``{"width", "height", "pixels"}`` with pixels as
     a flat uint8 vector, refusing color streams loudly."""
     v = parse_jpeg(payload)
@@ -4389,19 +4346,19 @@ def encode_mp4_avc1(
     ``sync_samples`` emits the stss box (1-based)."""
     sps_rbsp = encode_h264_sps(**sps_args)
     sps_nal = b"\x67" + _h264_escape(sps_rbsp)
-    p = _H264BitWriter()
-    p.ue(0)
-    p.ue(0)
-    p.u(0, 2)
-    p.ue(0)
-    p.ue(0)
-    p.ue(0)
-    p.u(0, 3)
-    p.se(0)
-    p.se(0)
-    p.se(0)
-    p.u(0, 3)
-    pps_nal = b"\x68" + _h264_escape(p.rbsp_trailing())
+    p = MsbWriter()
+    _write_ue(p, 0)
+    _write_ue(p, 0)
+    p.write(0, 2)
+    _write_ue(p, 0)
+    _write_ue(p, 0)
+    _write_ue(p, 0)
+    p.write(0, 3)
+    _write_se(p, 0)
+    _write_se(p, 0)
+    _write_se(p, 0)
+    p.write(0, 3)
+    pps_nal = b"\x68" + _h264_escape(_rbsp_trailing(p))
     avcc = (
         bytes(
             [
@@ -5254,71 +5211,37 @@ H264_SLICE_BYTES = 32  # synthesis: one slice NAL per 32 document bytes
 _H264_SLICE_MARKER = b"\x00\x00\x01"
 
 
-class _H264BitWriter:
-    """MSB-first bit writer with unsigned/signed exp-Golomb (ue/se)."""
-
-    def __init__(self) -> None:
-        self._bits: list[int] = []
-
-    def u(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self._bits.append((value >> i) & 1)
-
-    def ue(self, value: int) -> None:
-        if value < 0:
-            raise ValueError(f"ue(v) needs a non-negative value, got {value}")
-        code = value + 1
-        n = code.bit_length()
-        self.u(0, n - 1)
-        self.u(code, n)
-
-    def se(self, value: int) -> None:
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def rbsp_trailing(self) -> bytes:
-        self._bits.append(1)  # rbsp_stop_one_bit
-        while len(self._bits) % 8:
-            self._bits.append(0)
-        out = bytearray()
-        for i in range(0, len(self._bits), 8):
-            b = 0
-            for bit in self._bits[i : i + 8]:
-                b = (b << 1) | bit
-            out.append(b)
-        return bytes(out)
+def _write_ue(w: MsbWriter, value: int) -> None:
+    """Unsigned exp-Golomb ue(v): value+1 in 2n-1 bits, i.e. n-1 zero
+    bits followed by the n significant bits of value+1."""
+    if value < 0:
+        raise ValueError(f"ue(v) needs a non-negative value, got {value}")
+    code = value + 1
+    w.write(code, 2 * code.bit_length() - 1)
 
 
-class _H264BitReader:
-    """MSB-first bit reader with ue/se decode; fails loudly on overrun."""
+def _write_se(w: MsbWriter, value: int) -> None:
+    _write_ue(w, 2 * value - 1 if value > 0 else -2 * value)
 
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0
 
-    def bit(self) -> int:
-        byte, off = divmod(self._pos, 8)
-        if byte >= len(self._data):
-            raise ValueError("H.264 RBSP exhausted mid-field")
-        self._pos += 1
-        return (self._data[byte] >> (7 - off)) & 1
+def _rbsp_trailing(w: MsbWriter) -> bytes:
+    w.write(1, 1)  # rbsp_stop_one_bit
+    w.align()  # rbsp_alignment_zero_bits
+    return w.getvalue()
 
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
 
-    def ue(self) -> int:
-        zeros = 0
-        while self.bit() == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("exp-Golomb prefix over 31 zeros (corrupt)")
-        return ((1 << zeros) | self.u(zeros)) - 1
+def _read_ue(r: MsbReader) -> int:
+    zeros = 0
+    while r.read(1) == 0:
+        zeros += 1
+        if zeros > 31:
+            raise ValueError("exp-Golomb prefix over 31 zeros (corrupt)")
+    return ((1 << zeros) | r.read(zeros)) - 1
 
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
+
+def _read_se(r: MsbReader) -> int:
+    k = _read_ue(r)
+    return (k + 1) // 2 if k % 2 else -(k // 2)
 
 
 def _h264_escape(rbsp: bytes) -> bytes:
@@ -5381,30 +5304,30 @@ def encode_h264_sps(
             f"high-profile SPS (profile_idc {profile_idc}) carries "
             "chroma/scaling fields this encoder does not emit"
         )
-    w = _H264BitWriter()
-    w.u(profile_idc, 8)
-    w.u(0, 8)  # constraint_set flags + reserved
-    w.u(level_idc, 8)
-    w.ue(0)  # seq_parameter_set_id
-    w.ue(4)  # log2_max_frame_num_minus4
-    w.ue(0)  # pic_order_cnt_type
-    w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.ue(1)  # max_num_ref_frames
-    w.u(0, 1)  # gaps_in_frame_num_value_allowed_flag
-    w.ue(width_mbs - 1)  # pic_width_in_mbs_minus1
-    w.ue(height_mbs - 1)  # pic_height_in_map_units_minus1
-    w.u(1, 1)  # frame_mbs_only_flag
-    w.u(1, 1)  # direct_8x8_inference_flag
+    w = MsbWriter()
+    w.write(profile_idc, 8)
+    w.write(0, 8)  # constraint_set flags + reserved
+    w.write(level_idc, 8)
+    _write_ue(w, 0)  # seq_parameter_set_id
+    _write_ue(w, 4)  # log2_max_frame_num_minus4
+    _write_ue(w, 0)  # pic_order_cnt_type
+    _write_ue(w, 4)  # log2_max_pic_order_cnt_lsb_minus4
+    _write_ue(w, 1)  # max_num_ref_frames
+    w.write(0, 1)  # gaps_in_frame_num_value_allowed_flag
+    _write_ue(w, width_mbs - 1)  # pic_width_in_mbs_minus1
+    _write_ue(w, height_mbs - 1)  # pic_height_in_map_units_minus1
+    w.write(1, 1)  # frame_mbs_only_flag
+    w.write(1, 1)  # direct_8x8_inference_flag
     if crop_right or crop_bottom:
-        w.u(1, 1)  # frame_cropping_flag
-        w.ue(0)
-        w.ue(crop_right)
-        w.ue(0)
-        w.ue(crop_bottom)
+        w.write(1, 1)  # frame_cropping_flag
+        _write_ue(w, 0)
+        _write_ue(w, crop_right)
+        _write_ue(w, 0)
+        _write_ue(w, crop_bottom)
     else:
-        w.u(0, 1)
-    w.u(0, 1)  # vui_parameters_present_flag
-    return w.rbsp_trailing()
+        w.write(0, 1)
+    w.write(0, 1)  # vui_parameters_present_flag
+    return _rbsp_trailing(w)
 
 
 def parse_h264_sps(rbsp: bytes) -> dict:
@@ -5413,39 +5336,39 @@ def parse_h264_sps(rbsp: bytes) -> dict:
     POC/ref fields walked so the geometry fields land at the right bit
     offsets. Fails loudly on high-profile chroma fields and on
     truncated streams — never guesses."""
-    r = _H264BitReader(rbsp)
-    profile_idc = r.u(8)
-    r.u(8)  # constraint flags
-    level_idc = r.u(8)
-    r.ue()  # seq_parameter_set_id
+    r = MsbReader(rbsp)
+    profile_idc = r.read(8)
+    r.read(8)  # constraint flags
+    level_idc = r.read(8)
+    _read_ue(r)  # seq_parameter_set_id
     if profile_idc in (100, 110, 122, 244, 44, 83, 86, 118, 128):
         raise NotImplementedError(
             f"high-profile SPS (profile_idc {profile_idc}: chroma format / "
             "scaling matrices) not supported by this probe"
         )
-    r.ue()  # log2_max_frame_num_minus4
-    poc_type = r.ue()
+    _read_ue(r)  # log2_max_frame_num_minus4
+    poc_type = _read_ue(r)
     if poc_type == 0:
-        r.ue()  # log2_max_pic_order_cnt_lsb_minus4
+        _read_ue(r)  # log2_max_pic_order_cnt_lsb_minus4
     elif poc_type == 1:
-        r.u(1)
-        r.se()
-        r.se()
-        for _ in range(r.ue()):
-            r.se()
+        r.read(1)
+        _read_se(r)
+        _read_se(r)
+        for _ in range(_read_ue(r)):
+            _read_se(r)
     elif poc_type != 2:
         raise ValueError(f"impossible pic_order_cnt_type {poc_type}")
-    r.ue()  # max_num_ref_frames
-    r.u(1)  # gaps_in_frame_num_value_allowed_flag
-    width_mbs = r.ue() + 1
-    height_map_units = r.ue() + 1
-    frame_mbs_only = r.u(1)
+    _read_ue(r)  # max_num_ref_frames
+    r.read(1)  # gaps_in_frame_num_value_allowed_flag
+    width_mbs = _read_ue(r) + 1
+    height_map_units = _read_ue(r) + 1
+    frame_mbs_only = r.read(1)
     if not frame_mbs_only:
-        r.u(1)  # mb_adaptive_frame_field_flag
-    r.u(1)  # direct_8x8_inference_flag
+        r.read(1)  # mb_adaptive_frame_field_flag
+    r.read(1)  # direct_8x8_inference_flag
     crop = (0, 0, 0, 0)
-    if r.u(1):  # frame_cropping_flag
-        crop = (r.ue(), r.ue(), r.ue(), r.ue())
+    if r.read(1):  # frame_cropping_flag
+        crop = (_read_ue(r), _read_ue(r), _read_ue(r), _read_ue(r))
     # CropUnitX = 2 (4:2:0); CropUnitY = 2 * (2 - frame_mbs_only_flag)
     crop_y_unit = 2 * (2 - frame_mbs_only)
     height_mbs = height_map_units * (2 - frame_mbs_only)
@@ -5481,21 +5404,21 @@ def encode_h264_annexb(
             profile_idc, level_idc, width_mbs, height_mbs, crop_right, crop_bottom
         )
     )
-    p = _H264BitWriter()
-    p.ue(0)  # pic_parameter_set_id
-    p.ue(0)  # seq_parameter_set_id
-    p.u(0, 1)  # entropy_coding_mode_flag (CAVLC)
-    p.u(0, 1)  # bottom_field_pic_order_in_frame_present_flag
-    p.ue(0)  # num_slice_groups_minus1
-    p.ue(0)  # num_ref_idx_l0_default_active_minus1
-    p.ue(0)  # num_ref_idx_l1_default_active_minus1
-    p.u(0, 1)  # weighted_pred_flag
-    p.u(0, 2)  # weighted_bipred_idc
-    p.se(0)  # pic_init_qp_minus26
-    p.se(0)  # pic_init_qs_minus26
-    p.se(0)  # chroma_qp_index_offset
-    p.u(0, 3)  # deblocking/constrained-intra/redundant-pic flags
-    pps = _h264_escape(p.rbsp_trailing())
+    p = MsbWriter()
+    _write_ue(p, 0)  # pic_parameter_set_id
+    _write_ue(p, 0)  # seq_parameter_set_id
+    p.write(0, 1)  # entropy_coding_mode_flag (CAVLC)
+    p.write(0, 1)  # bottom_field_pic_order_in_frame_present_flag
+    _write_ue(p, 0)  # num_slice_groups_minus1
+    _write_ue(p, 0)  # num_ref_idx_l0_default_active_minus1
+    _write_ue(p, 0)  # num_ref_idx_l1_default_active_minus1
+    p.write(0, 1)  # weighted_pred_flag
+    p.write(0, 2)  # weighted_bipred_idc
+    _write_se(p, 0)  # pic_init_qp_minus26
+    _write_se(p, 0)  # pic_init_qs_minus26
+    _write_se(p, 0)  # chroma_qp_index_offset
+    p.write(0, 3)  # deblocking/constrained-intra/redundant-pic flags
+    pps = _h264_escape(_rbsp_trailing(p))
     out = bytearray()
     out += b"\x00\x00\x00\x01\x67" + sps  # SPS: nal_ref_idc 3, type 7
     out += b"\x00\x00\x00\x01\x68" + pps  # PPS: type 8
@@ -5930,55 +5853,55 @@ def encode_hevc_sps(
     RBSP: profile_tier_level with the 43 reserved bits, 4:2:0 chroma,
     geometry in luma samples, conformance window in chroma units.
     Returns the UNescaped RBSP."""
-    w = _H264BitWriter()
-    w.u(0, 4)  # sps_video_parameter_set_id
-    w.u(0, 3)  # sps_max_sub_layers_minus1
-    w.u(1, 1)  # sps_temporal_id_nesting_flag
+    w = MsbWriter()
+    w.write(0, 4)  # sps_video_parameter_set_id
+    w.write(0, 3)  # sps_max_sub_layers_minus1
+    w.write(1, 1)  # sps_temporal_id_nesting_flag
     # profile_tier_level(1, 0)
-    w.u(0, 2)  # general_profile_space
-    w.u(tier, 1)  # general_tier_flag
-    w.u(profile_idc, 5)  # general_profile_idc
-    w.u(1 << (31 - profile_idc), 32)  # compatibility flags (own bit set)
-    w.u(0b1000, 4)  # progressive=1, interlaced/non-packed/frame-only=0
-    w.u(0, 43)  # general_reserved_zero_43bits
-    w.u(0, 1)  # general_inbld_flag (reserved)
-    w.u(level_idc, 8)  # general_level_idc
-    w.ue(0)  # sps_seq_parameter_set_id
-    w.ue(1)  # chroma_format_idc (4:2:0)
-    w.ue(pic_width)  # pic_width_in_luma_samples
-    w.ue(pic_height)  # pic_height_in_luma_samples
+    w.write(0, 2)  # general_profile_space
+    w.write(tier, 1)  # general_tier_flag
+    w.write(profile_idc, 5)  # general_profile_idc
+    w.write(1 << (31 - profile_idc), 32)  # compatibility flags (own bit set)
+    w.write(0b1000, 4)  # progressive=1, interlaced/non-packed/frame-only=0
+    w.write(0, 43)  # general_reserved_zero_43bits
+    w.write(0, 1)  # general_inbld_flag (reserved)
+    w.write(level_idc, 8)  # general_level_idc
+    _write_ue(w, 0)  # sps_seq_parameter_set_id
+    _write_ue(w, 1)  # chroma_format_idc (4:2:0)
+    _write_ue(w, pic_width)  # pic_width_in_luma_samples
+    _write_ue(w, pic_height)  # pic_height_in_luma_samples
     if conf_right or conf_bottom:
-        w.u(1, 1)  # conformance_window_flag
-        w.ue(0)
-        w.ue(conf_right)
-        w.ue(0)
-        w.ue(conf_bottom)
+        w.write(1, 1)  # conformance_window_flag
+        _write_ue(w, 0)
+        _write_ue(w, conf_right)
+        _write_ue(w, 0)
+        _write_ue(w, conf_bottom)
     else:
-        w.u(0, 1)
-    w.ue(0)  # bit_depth_luma_minus8
-    w.ue(0)  # bit_depth_chroma_minus8
-    w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.u(0, 1)  # sps_sub_layer_ordering_info_present_flag
-    w.ue(1)  # sps_max_dec_pic_buffering_minus1
-    w.ue(0)  # sps_max_num_reorder_pics
-    w.ue(0)  # sps_max_latency_increase_plus1
-    w.ue(0)  # log2_min_luma_coding_block_size_minus3
-    w.ue(2)  # log2_diff_max_min_luma_coding_block_size
-    w.ue(0)  # log2_min_luma_transform_block_size_minus2
-    w.ue(3)  # log2_diff_max_min_luma_transform_block_size
-    w.ue(0)  # max_transform_hierarchy_depth_inter
-    w.ue(0)  # max_transform_hierarchy_depth_intra
-    w.u(0, 1)  # scaling_list_enabled_flag
-    w.u(0, 1)  # amp_enabled_flag
-    w.u(0, 1)  # sample_adaptive_offset_enabled_flag
-    w.u(0, 1)  # pcm_enabled_flag
-    w.ue(0)  # num_short_term_ref_pic_sets
-    w.u(0, 1)  # long_term_ref_pics_present_flag
-    w.u(0, 1)  # sps_temporal_mvp_enabled_flag
-    w.u(0, 1)  # strong_intra_smoothing_enabled_flag
-    w.u(0, 1)  # vui_parameters_present_flag
-    w.u(0, 1)  # sps_extension_present_flag
-    return w.rbsp_trailing()
+        w.write(0, 1)
+    _write_ue(w, 0)  # bit_depth_luma_minus8
+    _write_ue(w, 0)  # bit_depth_chroma_minus8
+    _write_ue(w, 4)  # log2_max_pic_order_cnt_lsb_minus4
+    w.write(0, 1)  # sps_sub_layer_ordering_info_present_flag
+    _write_ue(w, 1)  # sps_max_dec_pic_buffering_minus1
+    _write_ue(w, 0)  # sps_max_num_reorder_pics
+    _write_ue(w, 0)  # sps_max_latency_increase_plus1
+    _write_ue(w, 0)  # log2_min_luma_coding_block_size_minus3
+    _write_ue(w, 2)  # log2_diff_max_min_luma_coding_block_size
+    _write_ue(w, 0)  # log2_min_luma_transform_block_size_minus2
+    _write_ue(w, 3)  # log2_diff_max_min_luma_transform_block_size
+    _write_ue(w, 0)  # max_transform_hierarchy_depth_inter
+    _write_ue(w, 0)  # max_transform_hierarchy_depth_intra
+    w.write(0, 1)  # scaling_list_enabled_flag
+    w.write(0, 1)  # amp_enabled_flag
+    w.write(0, 1)  # sample_adaptive_offset_enabled_flag
+    w.write(0, 1)  # pcm_enabled_flag
+    _write_ue(w, 0)  # num_short_term_ref_pic_sets
+    w.write(0, 1)  # long_term_ref_pics_present_flag
+    w.write(0, 1)  # sps_temporal_mvp_enabled_flag
+    w.write(0, 1)  # strong_intra_smoothing_enabled_flag
+    w.write(0, 1)  # vui_parameters_present_flag
+    w.write(0, 1)  # sps_extension_present_flag
+    return _rbsp_trailing(w)
 
 
 def parse_hevc_sps(rbsp: bytes) -> dict:
@@ -5988,41 +5911,41 @@ def parse_hevc_sps(rbsp: bytes) -> dict:
     offsets, SubWidthC/SubHeightC = 2 for 4:2:0). Fails loudly on
     multi-layer streams, profile space != 0, or chroma formats whose
     window units this probe does not model — never guesses."""
-    r = _H264BitReader(rbsp)
-    r.u(4)  # sps_video_parameter_set_id
-    max_sub_layers = r.u(3)
+    r = MsbReader(rbsp)
+    r.read(4)  # sps_video_parameter_set_id
+    max_sub_layers = r.read(3)
     if max_sub_layers:
         raise NotImplementedError(
             f"{max_sub_layers + 1}-sub-layer HEVC SPS (per-layer "
             "profile_tier_level) not supported by this probe"
         )
-    r.u(1)  # temporal_id_nesting
-    profile_space = r.u(2)
+    r.read(1)  # temporal_id_nesting
+    profile_space = r.read(2)
     if profile_space:
         raise ValueError(f"general_profile_space {profile_space} (must be 0)")
-    tier = r.u(1)
-    profile_idc = r.u(5)
-    r.u(32)  # compatibility flags
-    r.u(4)  # progressive/interlaced/non-packed/frame-only
-    if r.u(43):
+    tier = r.read(1)
+    profile_idc = r.read(5)
+    r.read(32)  # compatibility flags
+    r.read(4)  # progressive/interlaced/non-packed/frame-only
+    if r.read(43):
         raise ValueError("general_reserved_zero_43bits set (corrupt PTL)")
-    r.u(1)  # inbld/reserved
-    level_idc = r.u(8)
-    r.ue()  # sps_seq_parameter_set_id
-    chroma = r.ue()
+    r.read(1)  # inbld/reserved
+    level_idc = r.read(8)
+    _read_ue(r)  # sps_seq_parameter_set_id
+    chroma = _read_ue(r)
     if chroma == 3:
-        r.u(1)  # separate_colour_plane_flag
+        r.read(1)  # separate_colour_plane_flag
     if chroma not in (1, 2, 3):
         raise NotImplementedError(
             f"chroma_format_idc {chroma} (monochrome) window units not modeled"
         )
     sub_w = 2 if chroma in (1, 2) else 1
     sub_h = 2 if chroma == 1 else 1
-    pic_w = r.ue()
-    pic_h = r.ue()
+    pic_w = _read_ue(r)
+    pic_h = _read_ue(r)
     crop = (0, 0, 0, 0)
-    if r.u(1):  # conformance_window_flag
-        crop = (r.ue(), r.ue(), r.ue(), r.ue())
+    if r.read(1):  # conformance_window_flag
+        crop = (_read_ue(r), _read_ue(r), _read_ue(r), _read_ue(r))
     width = pic_w - sub_w * (crop[0] + crop[1])
     height = pic_h - sub_h * (crop[2] + crop[3])
     if width <= 0 or height <= 0:
@@ -6061,18 +5984,18 @@ def encode_mp4_hevc(
     sps_rbsp = encode_hevc_sps(**sps_args)
     sps_nal = _hevc_nal(HEVC_NAL_SPS, _h264_escape(sps_rbsp))
     # minimal PPS: ids + a run of zero flags/ue's per §7.3.2.3
-    p = _H264BitWriter()
-    p.ue(0)  # pps_pic_parameter_set_id
-    p.ue(0)  # pps_seq_parameter_set_id
-    p.u(0, 7)  # dependent/output/extra-bits/sign-hiding/cabac-present...
-    p.ue(0)  # num_ref_idx_l0_default_active_minus1
-    p.ue(0)  # num_ref_idx_l1_default_active_minus1
-    p.se(0)  # init_qp_minus26
-    p.u(0, 3)
-    p.se(0)  # pps_cb_qp_offset
-    p.se(0)  # pps_cr_qp_offset
-    p.u(0, 8)  # remaining single-bit flags through the extension flag
-    pps_nal = _hevc_nal(HEVC_NAL_PPS, _h264_escape(p.rbsp_trailing()))
+    p = MsbWriter()
+    _write_ue(p, 0)  # pps_pic_parameter_set_id
+    _write_ue(p, 0)  # pps_seq_parameter_set_id
+    p.write(0, 7)  # dependent/output/extra-bits/sign-hiding/cabac-present...
+    _write_ue(p, 0)  # num_ref_idx_l0_default_active_minus1
+    _write_ue(p, 0)  # num_ref_idx_l1_default_active_minus1
+    _write_se(p, 0)  # init_qp_minus26
+    p.write(0, 3)
+    _write_se(p, 0)  # pps_cb_qp_offset
+    _write_se(p, 0)  # pps_cr_qp_offset
+    p.write(0, 8)  # remaining single-bit flags through the extension flag
+    pps_nal = _hevc_nal(HEVC_NAL_PPS, _h264_escape(_rbsp_trailing(p)))
     v = parse_hevc_sps(sps_rbsp)
     ptl = (
         bytes([(v["tier"] << 5) | v["profile_idc"]])  # space 0 + tier + profile

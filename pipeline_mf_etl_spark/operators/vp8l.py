@@ -28,70 +28,23 @@ from __future__ import annotations
 
 import numpy as np
 
+from pipeline_mf_etl_spark.bitio import LsbReader, LsbWriter
+
 
 # ---------------------------------------------------------------------------
-# LSB-first bit IO (VP8L packs bits little-endian within bytes)
+# Prefix-code emission (VP8L packs bits LSB-first: bitio.LsbWriter)
 # ---------------------------------------------------------------------------
 
 
-class BitWriter:
-    def __init__(self) -> None:
-        self._bits = 0
-        self._n = 0
-        self._out = bytearray()
-
-    def write(self, value: int, nbits: int) -> None:
-        if value < 0 or (nbits < 32 and value >> nbits):
-            raise ValueError(f"value {value} does not fit in {nbits} bits")
-        self._bits |= value << self._n
-        self._n += nbits
-        while self._n >= 8:
-            self._out.append(self._bits & 0xFF)
-            self._bits >>= 8
-            self._n -= 8
-
-    def write_code(self, code: int, nbits: int) -> None:
-        """Emit a prefix code: VP8L reads codes bit-by-bit building
-        code = (code << 1) | next_bit, so the MSB of the code goes into
-        the stream FIRST (bit-reversed relative to plain write())."""
-        for i in range(nbits - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def getvalue(self) -> bytes:
-        out = bytes(self._out)
-        if self._n:
-            out += bytes([self._bits & 0xFF])
-        return out
-
-
-class BitReader:
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0  # bit position
-        self._nbits = len(data) * 8
-
-    def read(self, nbits: int) -> int:
-        p = self._pos
-        end = p + nbits
-        if end > self._nbits:
-            raise ValueError("VP8L bitstream exhausted")
-        # LSB-first: one small little-endian slice instead of a per-bit loop
-        chunk = int.from_bytes(self._data[p >> 3 : (end + 7) >> 3], "little")
-        self._pos = end
-        return (chunk >> (p & 7)) & ((1 << nbits) - 1)
-
-    def peek(self, nbits: int) -> int:
-        """Next ``nbits`` LSB-first without consuming; bits past the end
-        of the stream read as 0 (callers must skip() only real bits)."""
-        p = self._pos
-        end = min(p + nbits, self._nbits)
-        chunk = int.from_bytes(self._data[p >> 3 : (end + 7) >> 3], "little")
-        return (chunk >> (p & 7)) & ((1 << nbits) - 1)
-
-    def skip(self, nbits: int) -> None:
-        if self._pos + nbits > self._nbits:
-            raise ValueError("VP8L bitstream exhausted")
-        self._pos += nbits
+def write_code(bw: LsbWriter, code: int, nbits: int) -> None:
+    """Emit a prefix code: VP8L reads codes bit-by-bit building
+    code = (code << 1) | next_bit, so the MSB of the code goes into
+    the stream FIRST — one LSB-first write of the bit-reversed code."""
+    rev = 0
+    for _ in range(nbits):
+        rev = (rev << 1) | (code & 1)
+        code >>= 1
+    bw.write(rev, nbits)
 
 
 # ---------------------------------------------------------------------------
@@ -157,7 +110,7 @@ class PrefixDecoder:
                     fast[rev | (k << ln)] = (sym, ln)
             self.fast = fast
 
-    def read(self, br: BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
         if self.single is not None:
             return self.single
         if self.fast is not None:
@@ -192,7 +145,7 @@ def balanced_lengths(symbols: list[int]) -> dict[int, int]:
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
 
-def _write_prefix_code(bw: BitWriter, hist: dict[int, int], alphabet: int) -> None:
+def _write_prefix_code(bw: LsbWriter, hist: dict[int, int], alphabet: int) -> None:
     """Serialize one prefix code. <=2 used symbols that fit in a byte
     take the SIMPLE path; everything else the normal code-length-code
     path with a balanced complete code."""
@@ -267,12 +220,12 @@ def _write_prefix_code(bw: BitWriter, hist: dict[int, int], alphabet: int) -> No
     cl_codes = canonical_codes(cl_lengths)
     for sym, extra, ebits in ops:
         code, nb = cl_codes[sym]
-        bw.write_code(code, nb)
+        write_code(bw, code, nb)
         if ebits:
             bw.write(extra, ebits)
 
 
-def _read_prefix_code(br: BitReader, alphabet: int) -> PrefixDecoder:
+def _read_prefix_code(br: LsbReader, alphabet: int) -> PrefixDecoder:
     if br.read(1):  # simple
         n_sym = br.read(1) + 1
         first_8 = br.read(1)
@@ -334,7 +287,7 @@ def _prefix_encode(v: int) -> tuple[int, int, int]:
     return 2 * eb + 2, x - (2 << eb), eb
 
 
-def _prefix_decode(sym: int, br: BitReader) -> int:
+def _prefix_decode(sym: int, br: LsbReader) -> int:
     if sym < 4:
         return sym + 1
     eb = (sym - 2) >> 1
@@ -397,7 +350,7 @@ def _build_ops(pixels: list[int], w: int, h: int, cache_bits: int):
 
 
 def _write_entropy_image(
-    bw: BitWriter,
+    bw: LsbWriter,
     pixels: list[int],
     w: int,
     h: int,
@@ -456,7 +409,7 @@ def _write_entropy_image(
 
     def put(i, s):
         code, nb = codes[i][s]
-        bw.write_code(code, nb)
+        write_code(bw, code, nb)
 
     for op in ops:
         if op[0] == "lit":
@@ -479,7 +432,7 @@ def _write_entropy_image(
 
 
 def _read_entropy_image(
-    br: BitReader, w: int, h: int, level0: bool = False
+    br: LsbReader, w: int, h: int, level0: bool = False
 ) -> tuple[list[int], int]:
     """Decode one entropy-coded image; returns (pixels, cache_bits)."""
     cache_bits = br.read(4) if br.read(1) else 0
@@ -733,7 +686,7 @@ def decode_vp8l(data: bytes) -> dict:
     actually read from the stream, and the ARGB pixel list."""
     if not data or data[0] != 0x2F:
         raise ValueError("VP8L missing 0x2F signature byte")
-    br = BitReader(data)
+    br = LsbReader(data)
     br.read(8)
     w = br.read(14) + 1
     h = br.read(14) + 1
@@ -898,7 +851,7 @@ def encode_webp_lossless(doc_id: int, text: str) -> bytes | None:
     cache_bits = 0 if doc_id % 2 == 0 else 6
     huff = doc_id % 3 == 0
 
-    bw = BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)

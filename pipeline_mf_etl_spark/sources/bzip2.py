@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+
 _BLOCK_MAGIC = 0x314159265359  # pi
 _FOOTER_MAGIC = 0x177245385090  # sqrt(pi)
 _MAX_HUF_LEN = 20
@@ -65,81 +67,6 @@ def bz2_crc32(data: bytes) -> int:
 
 
 # ---------------------------------------------------------------------------
-# MSB-first bit IO (bzip2 is big-endian bit order, unlike zstd/LZ4) —
-# O(1) byte accumulators per the r12 zstd lesson (SCALE.md): never keep
-# the whole stream in one big int.
-# ---------------------------------------------------------------------------
-
-
-class _BitReader:
-    __slots__ = ("data", "byte_pos", "acc", "nbits")
-
-    def __init__(self, data: bytes, byte_pos: int = 0):
-        self.data = data
-        self.byte_pos = byte_pos
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.byte_pos >= len(self.data):
-                raise ValueError("bzip2 payload truncated mid-bitstream")
-            self.acc = (self.acc << 8) | self.data[self.byte_pos]
-            self.byte_pos += 1
-            self.nbits += 8
-        self.nbits -= n
-        val = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return val
-
-    def peek(self, n: int) -> int:
-        """Next ``n`` bits without consuming; ZERO-padded past the end
-        of the payload (the peek-table fast path may look further than
-        the stream has — `skip` still refuses to consume phantom
-        bits)."""
-        while self.nbits < n and self.byte_pos < len(self.data):
-            self.acc = (self.acc << 8) | self.data[self.byte_pos]
-            self.byte_pos += 1
-            self.nbits += 8
-        if self.nbits >= n:
-            return (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        return (self.acc << (n - self.nbits)) & ((1 << n) - 1)
-
-    def skip(self, n: int) -> None:
-        if n > self.nbits:
-            raise ValueError("bzip2 payload truncated mid-bitstream")
-        self.nbits -= n
-        self.acc &= (1 << self.nbits) - 1
-
-    def bit_pos(self) -> int:
-        return self.byte_pos * 8 - self.nbits
-
-
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, val: int, n: int) -> None:
-        self.acc = (self.acc << n) | (val & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-            self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.out.append((self.acc << (8 - self.nbits)) & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.out)
-
-
-# ---------------------------------------------------------------------------
 # canonical Huffman (bzip2 flavor: codes assigned in (length, symbol)
 # order; decode via the limit/base/perm walk)
 # ---------------------------------------------------------------------------
@@ -147,6 +74,10 @@ class _BitWriter:
 
 def _huff_decode_table(lens: list[int]):
     min_len, max_len = min(lens), max(lens)
+    # Kraft: an over-subscribed length set has no prefix code (codes
+    # would overflow their lengths and index past the peek table)
+    if sum(1 << (max_len - ln) for ln in lens) > 1 << max_len:
+        raise ValueError("bzip2 Huffman code lengths are over-subscribed")
     perm: list[int] = []
     count = [0] * (max_len + 1)
     for length in range(min_len, max_len + 1):
@@ -167,7 +98,7 @@ def _huff_decode_table(lens: list[int]):
     return min_len, max_len, limit, base, perm, _huff_peek_table(lens)
 
 
-def _huff_read_symbol(br: _BitReader, tbl) -> int:
+def _huff_read_symbol(br: MsbReader, tbl) -> int:
     min_len, max_len, limit, base, perm, _peek = tbl
     length = min_len
     v = br.read(min_len)
@@ -186,9 +117,8 @@ _PEEK_BITS = 11  # 2048-entry (symbol, length) LUT per table
 def _huff_peek_table(lens: list[int]) -> list[int]:
     """(symbol << 5) | length packed LUT over every _PEEK_BITS-bit
     prefix; 0 marks codes longer than the peek width (walk fallback).
-    Built once per Huffman table — the VP8L peek-table lesson (r12):
-    one list index replaces the per-bit limit/base walk on the hot
-    path."""
+    Built once per Huffman table: one list index replaces the per-bit
+    limit/base walk on the hot path."""
     codes = _huff_codes(lens)
     lut = [0] * (1 << _PEEK_BITS)
     for sym, (code, length) in enumerate(zip(codes, lens)):
@@ -245,6 +175,15 @@ def _huff_codes(lens: list[int]) -> list[int]:
                 vec += 1
         vec <<= 1
     return codes
+
+
+def _local_bits(data: bytes, pos: int) -> tuple[int, int, int]:
+    """(next byte index, accumulator, bit count) of a local MSB-first
+    bit buffer positioned at bit ``pos`` of ``data``."""
+    byte, off = pos >> 3, pos & 7
+    if off:
+        return byte + 1, data[byte] & (0xFF >> off), 8 - off
+    return byte, 0, 0
 
 
 # ---------------------------------------------------------------------------
@@ -401,13 +340,13 @@ def _mtf_rle2_encode(bwt: bytes, used: list[int]) -> list[int]:
 # ---------------------------------------------------------------------------
 
 
-def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
+def _decode_block(br: MsbReader, level: int) -> tuple[bytes, int]:
     # libbzip2's nblockMAX: the PRE-BWT block (the MTF/RLE2-decoded BWT
     # string) is capped at level*100_000 bytes. The RLE1-decoded output
     # may legally be up to ~51x larger (4-byte run + count byte -> 255
     # bytes), so the cap must be enforced HERE, not on the block's
-    # final output (ADVICE r13: the old post-RLE1 check rejected valid
-    # repetitive streams like bz2.compress(b"\x00" * 2_000_000, 1)).
+    # final output: a post-RLE1 cap rejects valid repetitive streams
+    # like bz2.compress(b"\x00" * 2_000_000, 1).
     block_cap = level * 100_000
     stored_crc = br.read(32)
     if br.read(1):
@@ -468,13 +407,13 @@ def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
     lut = None
     tbl = None
     # the hot loop keeps the bit buffer in LOCALS (peek-table index +
-    # in-place consume) — per-symbol method calls were the decode
-    # bottleneck (same lesson as VP8L's peek table, r12)
+    # in-place consume): per-symbol reader method calls were the decode
+    # bottleneck. Its semantics are exactly MsbReader.peek/skip
+    # (bitio.py is the reference implementation); the reader's bit
+    # cursor is synced in and out through ``br.pos``.
     data = br.data
     n_data = len(data)
-    pos = br.byte_pos
-    acc = br.acc
-    nbits = br.nbits
+    pos, acc, nbits = _local_bits(data, br.pos)
     while True:
         if count == 0:
             if sel_idx >= len(selectors):
@@ -501,16 +440,16 @@ def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
             acc &= (1 << nbits) - 1
             s = pk >> 5
         else:  # code longer than the peek width: limit/base walk
-            br.byte_pos, br.acc, br.nbits = pos, acc, nbits
+            br.pos = pos * 8 - nbits
             s = _huff_read_symbol(br, tbl)
-            pos, acc, nbits = br.byte_pos, br.acc, br.nbits
+            pos, acc, nbits = _local_bits(data, br.pos)
         if s <= 1:  # RUNA / RUNB
             run += inc * (s + 1)
             inc <<= 1
             # bound the bijective-base-2 accumulator BEFORE any
             # materialization: ~34 RUNA symbols in a crafted stream
             # would otherwise request a petabyte-scale allocation
-            # (ADVICE r13: decompression bomb)
+            # (a decompression bomb)
             if run + len(bwt) > block_cap:
                 raise ValueError(
                     "bzip2 zero-run overflows the block size cap"
@@ -523,7 +462,7 @@ def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
         if len(bwt) >= block_cap and s != eob:
             raise ValueError("bzip2 block exceeds its declared level")
         if s == eob:
-            br.byte_pos, br.acc, br.nbits = pos, acc, nbits
+            br.pos = pos * 8 - nbits
             break
         b = mtf[s - 1]
         del mtf[s - 1]
@@ -552,10 +491,12 @@ def decode_bzip2_at(payload: bytes, offset: int) -> dict:
     the byte offset just past the stream's footer padding."""
     if payload[offset : offset + 3] != b"BZh":
         raise ValueError(f"bad bzip2 stream magic at offset {offset}")
+    if offset + 4 > len(payload):
+        raise ValueError(f"bzip2 stream at offset {offset} has no level digit")
     level = payload[offset + 3] - 0x30
     if not 1 <= level <= 9:
         raise ValueError(f"bad bzip2 level digit at offset {offset}")
-    br = _BitReader(payload, offset + 4)
+    br = MsbReader(payload, (offset + 4) * 8)
     content = bytearray()
     stream_crc = 0
     n_blocks = 0
@@ -578,7 +519,7 @@ def decode_bzip2_at(payload: bytes, offset: int) -> dict:
             break
         else:
             raise ValueError(f"bad bzip2 block magic {magic:#014x}")
-    end = (br.bit_pos() + 7) // 8  # footer pads to the byte boundary
+    end = (br.pos + 7) // 8  # footer pads to the byte boundary
     return {
         "content": bytes(content),
         "level": level,
@@ -621,7 +562,7 @@ def decode_bzip2_stream(payload: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _encode_block(bw: _BitWriter, chunk: bytes) -> int:
+def _encode_block(bw: MsbWriter, chunk: bytes) -> int:
     """Encode one block from RAW bytes (RLE1 applied here, per block —
     runs never span blocks); returns the block CRC (of the raw bytes,
     as the decoder recomputes it)."""
@@ -673,21 +614,19 @@ def _encode_block(bw: _BitWriter, chunk: bytes) -> int:
                 bw.write(0b11, 2)
                 cur -= 1
             bw.write(0, 1)
-    # symbol emission with the bit buffer in locals (per-symbol method
-    # calls dominated the encode profile, mirroring the decode fix)
-    acc = bw.acc
-    nbits = bw.nbits
-    out = bw.out
+    # symbol emission: codes pack into a local int that goes to the
+    # writer ~56 bits at a time — a write call per symbol dominated the
+    # encode profile
+    acc = nacc = 0
+    write = bw.write
     for s in syms:
         ln = lens[s]
         acc = (acc << ln) | codes[s]
-        nbits += ln
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-            acc &= (1 << nbits) - 1
-    bw.acc = acc
-    bw.nbits = nbits
+        nacc += ln
+        if nacc >= 56:
+            write(acc, nacc)
+            acc = nacc = 0
+    write(acc, nacc)
     return crc
 
 
@@ -710,7 +649,7 @@ def encode_bzip2(
             f"block_bytes {block_bytes} cannot fit level {level}'s buffer "
             f"after worst-case RLE1 expansion"
         )
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(int.from_bytes(b"BZh", "big"), 24)
     bw.write(0x30 + level, 8)
     stream_crc = 0
@@ -721,7 +660,8 @@ def encode_bzip2(
         ) ^ blk_crc
     bw.write(_FOOTER_MAGIC, 48)
     bw.write(stream_crc, 32)
-    return bw.flush()
+    bw.align()
+    return bw.getvalue()
 
 
 def encode_bzip2_multistream(

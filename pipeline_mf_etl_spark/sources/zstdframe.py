@@ -72,6 +72,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.bitio import LsbReader, LsbWriter
+
 ZSTD_MAGIC = 0xFD2FB528
 
 _M64 = (1 << 64) - 1
@@ -128,8 +130,9 @@ def xxh64(data: bytes, seed: int = 0) -> int:
 
 
 # ---------------------------------------------------------------------------
-# bit IO — zstd entropy payloads are read BACKWARD from a sentinel bit;
-# table descriptions are read FORWARD bit-by-bit (LSB first)
+# bit IO — zstd entropy payloads are read BACKWARD from a sentinel bit
+# (the pair below); table descriptions are read FORWARD, LSB-first
+# (bitio.LsbReader / bitio.LsbWriter)
 # ---------------------------------------------------------------------------
 
 
@@ -205,32 +208,6 @@ class _BackBits:
         else:
             self.acc = 0
             self.acc_bits = 0
-
-
-class _FwdBits:
-    """Forward LSB-first bit reader (FSE table descriptions)."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        out = 0
-        for k in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("FSE table description runs off the block")
-            out |= ((self.data[byte] >> (self.pos & 7)) & 1) << k
-            self.pos += 1
-        return out
-
-    def rewind(self, n: int) -> None:
-        self.pos -= n
-
-    def byte_pos(self) -> int:
-        return (self.pos + 7) >> 3
 
 
 class _BitWriter:
@@ -368,7 +345,7 @@ def fse_read_description(
     """Parse a forward-read FSE table description; returns the built
     table and the number of BYTES consumed (descriptions are
     byte-aligned at their end)."""
-    fb = _FwdBits(data)
+    fb = LsbReader(data)
     alog = fb.read(4) + 5
     if alog > max_alog:
         raise ValueError(f"FSE accuracy log {alog} exceeds the maximum {max_alog}")
@@ -385,7 +362,7 @@ def fse_read_description(
         low_mask = (1 << (bits - 1)) - 1
         threshold = (1 << bits) - 1 - remaining
         if (val & low_mask) < threshold:
-            fb.rewind(1)
+            fb.pos -= 1
             val &= low_mask
         elif val > low_mask:
             val -= threshold
@@ -402,13 +379,14 @@ def fse_read_description(
                     break
     if remaining != 1:
         raise ValueError("FSE distribution overshoots the table size")
-    return FseTable(norm, alog), fb.byte_pos()
+    return FseTable(norm, alog), (fb.pos + 7) >> 3
 
 
 def fse_write_description(norm: list[int], alog: int) -> bytes:
     """Emit the forward-read table description for ``norm`` (the exact
     inverse of fse_read_description)."""
-    bits_out: list[tuple[int, int]] = [(alog - 5, 4)]
+    w = LsbWriter()
+    w.write(alog - 5, 4)
     remaining = (1 << alog) + 1
     i = 0
     while remaining > 1:
@@ -418,11 +396,11 @@ def fse_write_description(norm: list[int], alog: int) -> bytes:
         threshold = (1 << bits) - 1 - remaining
         val = proba + 1
         if val < threshold:
-            bits_out.append((val, bits - 1))
+            w.write(val, bits - 1)
         else:
             # large values set the top bit; values whose low bits
             # collide with a small value get the threshold offset
-            bits_out.append((val + threshold if val > low_mask else val, bits))
+            w.write(val + threshold if val > low_mask else val, bits)
         remaining -= -proba if proba < 0 else proba
         i += 1
         if proba == 0:
@@ -432,23 +410,11 @@ def fse_write_description(norm: list[int], alog: int) -> bytes:
                 run += 1
             i += run
             while True:
-                bits_out.append((min(run, 3), 2))
+                w.write(min(run, 3), 2)
                 if run < 3:
                     break
                 run -= 3
-    # serialize LSB-first
-    out = bytearray()
-    acc = nb = 0
-    for v, n in bits_out:
-        acc |= v << nb
-        nb += n
-        while nb >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nb -= 8
-    if nb:
-        out.append(acc & 0xFF)
-    return bytes(out)
+    return w.getvalue()
 
 
 # the RFC 8878 default distributions (Predefined_Mode tables)
@@ -664,7 +630,7 @@ def huf_write_weights(weights: list[int]) -> bytes | None:
     carries at most 128 weights; when the last symbol exceeds 128
     (non-ASCII / binary alphabets) only the FSE transport applies, and
     None is returned if it does not fit — the caller stores literals
-    raw (ADVICE r12: this path used to reject every alphabet > 128)."""
+    raw, so alphabets beyond 128 symbols still encode."""
     transmitted = weights[:-1]
     n = len(transmitted)
     if not 1 <= n <= 255:
@@ -781,6 +747,8 @@ def _seq_tables(
     if mode == 0:  # Predefined
         return default, pos, default
     if mode == 1:  # RLE: one byte, that symbol for every sequence
+        if pos >= len(data):
+            raise ValueError(f"{what} RLE symbol runs off the block")
         sym = data[pos]
         if sym > max_symbol:
             raise ValueError(f"{what} RLE symbol {sym} out of range")
@@ -840,9 +808,15 @@ class _EntropyCtx:
 
 
 def _decode_literals(data: bytes, ctx: _EntropyCtx) -> tuple[bytes, int]:
+    if not data:
+        raise ValueError("compressed block has no literals section")
     b0 = data[0]
     ltype = b0 & 3
     sf = (b0 >> 2) & 3
+    # header bytes, plus the one RLE byte
+    need = (1, 2, 1, 3)[sf] + (ltype == 1) if ltype < 2 else (3, 3, 4, 5)[sf]
+    if need > len(data):
+        raise ValueError("literals section header runs off the block")
     if ltype in (0, 1):  # Raw / RLE
         if sf in (0, 2):
             rsize, pos = b0 >> 3, 1
@@ -917,15 +891,20 @@ def _decode_sequences(
 ) -> list[tuple[int, int, int]]:
     """Returns [(literal_length, offset_value, match_length)] with
     offset_value still raw (repeat resolution happens at execution)."""
+    if not data:
+        raise ValueError("compressed block has no sequences section")
     b0 = data[0]
     if b0 == 0:
         return []
+    pos = 1 if b0 < 128 else 2 if b0 < 255 else 3
+    if pos >= len(data):
+        raise ValueError("sequences section header runs off the block")
     if b0 < 128:
-        ns, pos = b0, 1
+        ns = b0
     elif b0 < 255:
-        ns, pos = ((b0 - 128) << 8) | data[1], 2
+        ns = ((b0 - 128) << 8) | data[1]
     else:
-        ns, pos = int.from_bytes(data[1:3], "little") + 0x7F00, 3
+        ns = int.from_bytes(data[1:3], "little") + 0x7F00
     modes = data[pos]
     pos += 1
     if modes & 3:
@@ -1090,6 +1069,8 @@ def _decode_one_frame(payload: bytes, pos: int) -> tuple[dict, int]:
         raise ValueError("not a zstd frame (bad magic)")
     payload = payload[pos:]  # frame-relative below; absolute pos re-added
     abs_base = pos
+    if len(payload) < 5:
+        raise ValueError("zstd frame truncated (missing frame header)")
     fhd = payload[4]
     fcs_flag = fhd >> 6
     single_segment = bool(fhd & 0x20)
@@ -1099,14 +1080,16 @@ def _decode_one_frame(payload: bytes, pos: int) -> tuple[dict, int]:
     did_flag = fhd & 0x03
     if did_flag:
         raise NotImplementedError("zstd dictionaries (DictID) not supported")
+    fcs_bytes = {0: 1 if single_segment else 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
     pos = 5
+    if pos + (not single_segment) + fcs_bytes > len(payload):
+        raise ValueError("zstd frame header truncated")
     window = None
     if not single_segment:
         wd = payload[pos]
         pos += 1
         base = 1 << (10 + (wd >> 3))
         window = base + (base >> 3) * (wd & 7)
-    fcs_bytes = {0: 1 if single_segment else 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
     declared = None
     if fcs_bytes:
         declared = int.from_bytes(payload[pos : pos + fcs_bytes], "little")
@@ -1536,7 +1519,7 @@ def encode_zstd_frame(
         # a single-segment frame's window IS the content size, which
         # this repo's own decoder gates at _WINDOW_CAP — fall back to a
         # bounded window descriptor instead of emitting an undecodable
-        # frame (ADVICE r12)
+        # frame
         single_segment = False
     if single_segment:
         if n < 256:
@@ -1697,7 +1680,7 @@ def encode_zstd_seekable(
     format's 128 KiB): per-block costs (three FSE table plans + the
     Huffman header) dominate the pure-Python encoder, so small blocks
     are both slower AND larger — measured 0.42 -> 1.16 MB/s and -20%
-    output moving 1 KiB -> 64 KiB on corpus-shaped text (r14). Callers
+    output moving 1 KiB -> 64 KiB on corpus-shaped text. Callers
     that probe block geometry (c8's one-block-per-512B-frame layout)
     pass it explicitly."""
     if frame_content_size <= 0:

@@ -9,8 +9,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
 from pipeline_mf_etl_spark.operators.flac import (
-    _BitReader,
     _utf8_decode_number,
     _utf8_encode_number,
     crc8,
@@ -179,7 +179,7 @@ class TestPrimitives:
     def test_utf8_number_round_trip(self):
         for n in (0, 1, 0x7F, 0x80, 0x7FF, 0x800, 0xFFFF, 0x10000, (1 << 36) - 1):
             enc = _utf8_encode_number(n)
-            assert _utf8_decode_number(_BitReader(enc)) == n
+            assert _utf8_decode_number(MsbReader(enc)) == n
 
     def test_crc_vectors(self):
         # published check values: CRC-8/ATM ("123456789") = 0xF4,
@@ -220,29 +220,11 @@ class TestSpark:
         assert plan.count("Exchange roundrobinpartitioning") <= 1  # fan-out
 
 class TestVectorizedBitWriter:
-    """r15: the rice/raw encode loops moved to bulk NumPy bit vectors —
-    these pin byte-exact equality against the per-sample scalar path."""
-
-    def test_write_bits_array_matches_per_bit_writes(self):
-        from pipeline_mf_etl_spark.operators.flac import _BitWriter
-
-        rng = np.random.default_rng(7)
-        for trial in range(20):
-            bits = rng.integers(0, 2, int(rng.integers(1, 200))).astype(np.uint8)
-            lead = int(rng.integers(0, 8))  # misalign the accumulator
-            a, b = _BitWriter(), _BitWriter()
-            for w in (a, b):
-                if lead:
-                    w.write(trial & ((1 << lead) - 1), lead)
-            a.write_bits_array(bits)
-            for bit in bits.tolist():
-                b.write(int(bit), 1)
-            a.align(), b.align()
-            assert a.getvalue() == b.getvalue(), f"trial {trial} lead {lead}"
+    """The rice/raw encode loops write bulk NumPy bit vectors; these pin
+    byte-exact equality against the per-sample scalar path."""
 
     def test_rice_bits_matches_scalar_rice_codes(self):
         from pipeline_mf_etl_spark.operators.flac import (
-            _BitWriter,
             _rice_bits,
             _signed_bits,
             _zigzag,
@@ -252,12 +234,12 @@ class TestVectorizedBitWriter:
         for param in (0, 1, 3, 7, 14):
             res = rng.integers(-(1 << 12), 1 << 12, 257).astype(np.int64)
             u = _zigzag(res)
-            vec = _BitWriter()
+            vec = MsbWriter()
             vec.write_bits_array(_rice_bits(u, param))
             vec.align()
-            ref = _BitWriter()
+            ref = MsbWriter()
             for val in u:
-                ref.write_unary(int(val) >> param)
+                ref.write(1, (int(val) >> param) + 1)  # unary quotient
                 if param:
                     ref.write(int(val) & ((1 << param) - 1), param)
             ref.align()
@@ -265,11 +247,11 @@ class TestVectorizedBitWriter:
         # raw two's-complement fields (escape partitions / verbatim)
         for raw_bits in (1, 5, 17):
             seg = rng.integers(-(1 << (raw_bits - 1)), 1 << (raw_bits - 1), 64)
-            vec = _BitWriter()
+            vec = MsbWriter()
             vec.write_bits_array(_signed_bits(seg, raw_bits))
             vec.align()
-            ref = _BitWriter()
+            ref = MsbWriter()
             for v in seg:
-                ref.write_signed(int(v), raw_bits)
+                ref.write(int(v) & ((1 << raw_bits) - 1), raw_bits)
             ref.align()
             assert vec.getvalue() == ref.getvalue(), f"raw_bits {raw_bits}"

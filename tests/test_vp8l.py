@@ -9,6 +9,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from pipeline_mf_etl_spark.bitio import LsbReader, LsbWriter
 from pipeline_mf_etl_spark.operators import vp8l as V
 
 SF = "/root/testdata/sf0.001"
@@ -16,22 +17,22 @@ SF = "/root/testdata/sf0.001"
 
 class TestBitIO:
     def test_lsb_first_round_trip(self):
-        bw = V.BitWriter()
+        bw = LsbWriter()
         vals = [(5, 3), (0, 1), (1023, 10), (1, 1), (77, 8), (16383, 14)]
         for v, n in vals:
             bw.write(v, n)
-        br = V.BitReader(bw.getvalue())
+        br = LsbReader(bw.getvalue())
         for v, n in vals:
             assert br.read(n) == v
 
     def test_write_code_reverses_bits(self):
-        bw = V.BitWriter()
-        bw.write_code(0b110, 3)  # MSB of the code enters the stream first
-        br = V.BitReader(bw.getvalue())
+        bw = LsbWriter()
+        V.write_code(bw, 0b110, 3)  # MSB of the code enters the stream first
+        br = LsbReader(bw.getvalue())
         assert [br.read(1) for _ in range(3)] == [1, 1, 0]
 
     def test_exhaustion_raises(self):
-        br = V.BitReader(b"\xff")
+        br = LsbReader(b"\xff")
         br.read(8)
         with pytest.raises(ValueError, match="exhausted"):
             br.read(1)
@@ -58,38 +59,38 @@ class TestPrefixCodes:
         # 300-symbol alphabet, 37 used -> zeros force 17/18, the
         # balanced plateau forces 16 runs
         hist = {s: 1 for s in range(10, 300, 8)}
-        bw = V.BitWriter()
+        bw = LsbWriter()
         V._write_prefix_code(bw, hist, 304)
-        dec = V._read_prefix_code(V.BitReader(bw.getvalue()), 304)
+        dec = V._read_prefix_code(LsbReader(bw.getvalue()), 304)
         lens = V.balanced_lengths(sorted(hist))
         codes = V.canonical_codes(lens)
-        bw2 = V.BitWriter()
+        bw2 = LsbWriter()
         for s in sorted(hist):
             c, n = codes[s]
-            bw2.write_code(c, n)
-        br = V.BitReader(bw2.getvalue())
+            V.write_code(bw2, c, n)
+        br = LsbReader(bw2.getvalue())
         assert [dec.read(br) for _ in sorted(hist)] == sorted(hist)
 
     def test_simple_paths_round_trip(self):
         for used in ([0], [1], [200], [3, 250]):
-            bw = V.BitWriter()
+            bw = LsbWriter()
             V._write_prefix_code(bw, {s: 1 for s in used}, 280)
-            br = V.BitReader(bw.getvalue())
+            br = LsbReader(bw.getvalue())
             dec = V._read_prefix_code(br, 280)
             if len(used) == 1:
                 assert dec.read(br) == used[0]  # consumes no bits
             else:
-                bw2 = V.BitWriter()
+                bw2 = LsbWriter()
                 bw2.write(0, 1)
                 bw2.write(1, 1)
-                br2 = V.BitReader(bw2.getvalue())
+                br2 = LsbReader(bw2.getvalue())
                 assert dec.read(br2) == used[0]
                 assert dec.read(br2) == used[1]
 
     def test_max_symbol_header_supported(self):
         # hand-write a normal code using the explicit max_symbol header:
         # symbols 0 and 1 with length 1 each, then max_symbol cuts off
-        bw = V.BitWriter()
+        bw = LsbWriter()
         bw.write(0, 1)  # normal
         bw.write(0, 4)  # num_code_lengths = 4 -> order 17,18,0,1
         for ln in (0, 0, 1, 1):  # CL code: syms {0,1} at length 1
@@ -100,8 +101,8 @@ class TestPrefixCodes:
         cl_codes = V.canonical_codes({0: 1, 1: 1})
         for sym in (1, 1):  # two symbols of length 1
             c, n = cl_codes[sym]
-            bw.write_code(c, n)
-        dec = V._read_prefix_code(V.BitReader(bw.getvalue()), 256)
+            V.write_code(bw, c, n)
+        dec = V._read_prefix_code(LsbReader(bw.getvalue()), 256)
         assert dec.max_len == 1
 
 
@@ -109,10 +110,10 @@ class TestLz77Split:
     def test_prefix_value_round_trip(self):
         for v in list(range(1, 70)) + [127, 128, 500, 4096, 100000]:
             sym, extra, ebits = V._prefix_encode(v)
-            bw = V.BitWriter()
+            bw = LsbWriter()
             if ebits:
                 bw.write(extra, ebits)
-            br = V.BitReader(bw.getvalue() or b"\x00")
+            br = LsbReader(bw.getvalue() or b"\x00")
             assert V._prefix_decode(sym, br) == v
             assert sym < 40 or v > 1 << 20
 
@@ -216,7 +217,7 @@ class TestVp8lRoundTrip:
     def test_short_distance_codes_gate_via_stream(self):
         """Build the gate stream with the real writer machinery: encode
         ops by hand with a distance VALUE of 1 (neighborhood range)."""
-        bw = V.BitWriter()
+        bw = LsbWriter()
         bw.write(0x2F, 8)
         bw.write(3, 14)  # width 4
         bw.write(0, 14)  # height 1
@@ -231,9 +232,9 @@ class TestVp8lRoundTrip:
             V._write_prefix_code(bw, h, a)
         codes = V.canonical_codes({40: 1, 256: 1})
         c, n = codes[40]
-        bw.write_code(c, n)  # literal green 40
+        V.write_code(bw, c, n)  # literal green 40
         c, n = codes[256]
-        bw.write_code(c, n)  # copy len 1 ...
+        V.write_code(bw, c, n)  # copy len 1 ...
         # distance code: simple single-symbol 0 -> dist_code = 1 (2D map)
         with pytest.raises(NotImplementedError, match="neighborhood"):
             V.decode_vp8l(bw.getvalue())

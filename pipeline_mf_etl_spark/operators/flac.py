@@ -43,40 +43,22 @@ import hashlib
 import numpy as np
 
 from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+from pipeline_mf_etl_spark.crc import crc_table, crc_update
 
 # ---------------------------------------------------------------------------
 # CRCs (FLAC frame integrity): CRC-8 poly 0x07, CRC-16 poly 0x8005
 # ---------------------------------------------------------------------------
 
-
-def _make_crc_table(poly: int, width: int) -> list[int]:
-    top = 1 << (width - 1)
-    mask = (1 << width) - 1
-    table = []
-    for byte in range(256):
-        crc = byte << (width - 8)
-        for _ in range(8):
-            crc = ((crc << 1) ^ poly) if crc & top else (crc << 1)
-        table.append(crc & mask)
-    return table
-
-
-_CRC8 = _make_crc_table(0x07, 8)
-_CRC16 = _make_crc_table(0x8005, 16)
+_CRC8 = crc_table(0x07, 8)
+_CRC16 = crc_table(0x8005, 16)
 
 
 def crc8(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc = _CRC8[crc ^ b]
-    return crc
+    return crc_update(_CRC8, 0, data)
 
 
 def crc16(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFF) ^ _CRC16[(crc >> 8) ^ b]
-    return crc
+    return crc_update(_CRC16, 0, data)
 
 
 # ---------------------------------------------------------------------------
@@ -895,30 +877,17 @@ def _text_to_pcm(doc_id: int, text: str):
 
 def with_flac_payload(df, text_col: str = "text"):
     """Attach a real FLAC stream per row (Arrow-batched, map-only)."""
-    import pandas as pd  # noqa: F401  (imported for parity with siblings)
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pipeline_mf_etl_spark.payload import synth_payload
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(i, t):
+        if len(t) < 1:
+            return None
+        return encode_flac(
+            _text_to_pcm(int(i), t), sample_rate=FLAC_SAMPLE_RATE, block_size=FLAC_BLOCK
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_flac(
-                    _text_to_pcm(int(i), t),
-                    sample_rate=FLAC_SAMPLE_RATE,
-                    block_size=FLAC_BLOCK,
-                )
-                if len(t) >= 1
-                else None
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("audio/flac")
+    return synth_payload(
+        df, encode, "audio/flac", cols=("doc_id", text_col), nullable=True
     )
 
 
@@ -927,8 +896,9 @@ def decode_flac_features(df, id_col: str = "doc_id"):
     re-correlation, MD5) and emit exact-integer statistics. ``dot0``
     weights channel-0 samples by position so a decoder that reorders
     or drops frames cannot hash-match."""
-    import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
+
+    from pipeline_mf_etl_spark.payload import map_payload
 
     schema = StructType(
         [
@@ -943,27 +913,21 @@ def decode_flac_features(df, id_col: str = "doc_id"):
         ]
     )
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    continue
-                f = parse_flac(bytes(payload))
-                s = f["samples"].astype(np.int64)
-                ch0 = s[0]
-                rows.append(
-                    (
-                        int(doc_id),
-                        f["n_channels"],
-                        f["total_samples"],
-                        f["n_frames"],
-                        f["sample_rate"],
-                        int(s.sum()),
-                        int(np.abs(s).max()),
-                        int((ch0 * (np.arange(len(ch0)) + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[x.name for x in schema.fields])
+    def rows(doc_id, payload):
+        if payload is None:
+            return
+        f = parse_flac(payload)
+        s = f["samples"].astype(np.int64)
+        ch0 = s[0]
+        yield (
+            int(doc_id),
+            f["n_channels"],
+            f["total_samples"],
+            f["n_frames"],
+            f["sample_rate"],
+            int(s.sum()),
+            int(np.abs(s).max()),
+            int((ch0 * (np.arange(len(ch0)) + 1)).sum()),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, schema)
+    return map_payload(df, schema, rows, id_col)

@@ -2,9 +2,10 @@
 
 A 100 TB training-data pipeline carries image/audio/video as opaque
 ``binary`` columns with typed metadata, and runs decode / feature
-extraction / frame sampling as Arrow-batched Python over
-``mapInPandas``. The container has no image/audio codecs, so the DECODE
-step is a clearly-marked gate (``decode_media``); everything around it —
+extraction / frame sampling as Arrow-batched Python (every step goes
+through ``payload.synth_payload`` or ``payload.map_payload``). The
+container has no image/audio codecs, so the DECODE step is a
+clearly-marked gate (``decode_media``); everything around it —
 schema, batch shape, partitioning, deterministic byte-level features —
 is real and tested.
 
@@ -18,7 +19,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 )
 
 from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+from pipeline_mf_etl_spark.payload import map_payload, synth_payload
 
 N_HIST_BINS = 16
 
@@ -504,32 +505,22 @@ def with_adpcm_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     way, and a decoder that mis-ordered stereo words or shared state
     across channels would replay against wrong headers and hash-diverge.
     Docs shorter than one block yield a legal 0-block file."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(doc_id, t):
+        raw = t.encode("utf-8")
+        nb = len(raw) // 5
+        headers = []
+        codes = []
+        for b in range(nb):
+            c0 = raw[5 * b]
+            headers.append(((c0 - 128) * 256, c0 % 89))
+            for cb in raw[5 * b + 1 : 5 * b + 5]:
+                codes.append(cb & 0x0F)
+                codes.append(cb >> 4)
+        ch = 2 if int(doc_id) % 2 and nb % 2 == 0 else 1
+        return encode_wav_adpcm_codes(headers, codes, channels=ch)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                raw = t.encode("utf-8")
-                nb = len(raw) // 5
-                headers = []
-                codes = []
-                for b in range(nb):
-                    c0 = raw[5 * b]
-                    headers.append(((c0 - 128) * 256, c0 % 89))
-                    for cb in raw[5 * b + 1 : 5 * b + 5]:
-                        codes.append(cb & 0x0F)
-                        codes.append(cb >> 4)
-                ch = 2 if int(doc_id) % 2 and nb % 2 == 0 else 1
-                payloads.append(encode_wav_adpcm_codes(headers, codes, channels=ch))
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("audio/wav"))
+    return synth_payload(df, encode, "audio/wav", cols=("doc_id", text_col))
 
 
 def decode_adpcm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -537,33 +528,23 @@ def decode_adpcm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     step-table replay and emit exact integer amplitude stats. Map-only
     Arrow pipeline, zero shuffles; 0-block files emit NULL stats."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                v = parse_wav_adpcm(bytes(payload))
-                s = v["samples"].astype(np.int64)
-                if s.size:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            v["sample_rate"],
-                            int(s.size),
-                            float(s.sum()) / s.size,
-                            int(np.abs(s).max()),
-                            int(s.min()),
-                            int(s.max()),
-                        )
-                    )
-                else:
-                    rows.append(
-                        (int(doc_id), v["sample_rate"], 0, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ADPCM_FEATURE_SCHEMA.fields]
+    def rows(doc_id, payload):
+        v = parse_wav_adpcm(payload)
+        s = v["samples"].astype(np.int64)
+        if s.size:
+            yield (
+                int(doc_id),
+                v["sample_rate"],
+                int(s.size),
+                float(s.sum()) / s.size,
+                int(np.abs(s).max()),
+                int(s.min()),
+                int(s.max()),
             )
+        else:
+            yield (int(doc_id), v["sample_rate"], 0, None, None, None, None)
 
-    return df.select(id_col, "payload").mapInPandas(feats, ADPCM_FEATURE_SCHEMA)
+    return map_payload(df, ADPCM_FEATURE_SCHEMA, rows, id_col)
 
 
 def with_wav_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -571,24 +552,14 @@ def with_wav_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     of the text becomes the int16 sample ``(b - 128) * 256``. Arrow-
     batched; the mapping is invertible so an oracle can derive decoded
     stats straight from the characters."""
-    fields = list(df.schema.fields)
-    from pyspark.sql.types import BinaryType
 
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(t):
+        return encode_wav_pcm16(
+            (np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.int16) - 128)
+            * 256
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_wav_pcm16(
-                    (np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.int16) - 128)
-                    * 256
-                )
-                for t in pdf[text_col]
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("audio/wav"))
+    return synth_payload(df, encode, "audio/wav", cols=(text_col,))
 
 
 def decode_wav_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -597,36 +568,30 @@ def decode_wav_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     float64 (exact-int/exact-int) so any engine agrees bitwise before
     rounding."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                w = parse_wav(bytes(payload))
-                if w["n_channels"] != 1:
-                    # mono stats on interleaved frames would misreport
-                    # duration/mean/rms — fail loudly, never guess
-                    raise ValueError(
-                        f"doc {doc_id}: {w['n_channels']}-channel WAV "
-                        "unsupported; decode_wav_features expects mono"
-                    )
-                s = w["samples"].astype(np.int64)
-                n = len(s)
-                rows.append(
-                    (
-                        int(doc_id),
-                        w["sample_rate"],
-                        w["n_channels"],
-                        w["bits_per_sample"],
-                        n,
-                        n / w["sample_rate"],
-                        float(s.sum()) / n if n else None,
-                        float(np.sqrt(float((s * s).sum()) / n)) if n else None,
-                        int(np.abs(s).max()) if n else None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        w = parse_wav(payload)
+        if w["n_channels"] != 1:
+            # mono stats on interleaved frames would misreport
+            # duration/mean/rms — fail loudly, never guess
+            raise ValueError(
+                f"doc {doc_id}: {w['n_channels']}-channel WAV "
+                "unsupported; decode_wav_features expects mono"
+            )
+        s = w["samples"].astype(np.int64)
+        n = len(s)
+        yield (
+            int(doc_id),
+            w["sample_rate"],
+            w["n_channels"],
+            w["bits_per_sample"],
+            n,
+            n / w["sample_rate"],
+            float(s.sum()) / n if n else None,
+            float(np.sqrt(float((s * s).sum()) / n)) if n else None,
+            int(np.abs(s).max()) if n else None,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, WAV_FEATURE_SCHEMA)
+    return map_payload(df, WAV_FEATURE_SCHEMA, rows, id_col)
 
 
 def extract_byte_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -638,31 +603,21 @@ def extract_byte_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     with a deterministic byte-level 'featurizer' standing in for the
     codec."""
 
-    def feats(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            out_rows = []
-            for i, payload in enumerate(pdf["payload"]):
-                b = bytes(payload)
-                arr = np.frombuffer(b, dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=N_HIST_BINS).astype("float64")
-                total = hist.sum()
-                out_rows.append(
-                    (
-                        int(ids[i]),
-                        len(b),
-                        list(hist / total) if total else [0.0] * N_HIST_BINS,
-                        # exact int-sum / count division: bitwise equal to
-                        # any engine computing SUM(byte)/COUNT in float64
-                        float(arr.sum()) / len(arr) if len(arr) else None,
-                        hashlib.sha256(b).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in FEATURE_SCHEMA.fields]
-            )
+    def rows(doc_id, b):
+        arr = np.frombuffer(b, dtype=np.uint8)
+        hist = np.bincount(arr >> 4, minlength=N_HIST_BINS).astype("float64")
+        total = hist.sum()
+        yield (
+            int(doc_id),
+            len(b),
+            list(hist / total) if total else [0.0] * N_HIST_BINS,
+            # exact int-sum / count division: bitwise equal to
+            # any engine computing SUM(byte)/COUNT in float64
+            float(arr.sum()) / len(arr) if len(arr) else None,
+            hashlib.sha256(b).hexdigest(),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, FEATURE_SCHEMA)
+    return map_payload(df, FEATURE_SCHEMA, rows, id_col)
 
 
 def sample_frames(df: DataFrame, id_col: str = "doc_id", stride: int = 4) -> DataFrame:
@@ -769,25 +724,13 @@ def with_ppm_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     to whole pixel rows (height = len//3//width; short docs yield a
     legal 0-row image). Arrow-batched; the mapping is invertible so an
     oracle can derive decoded stats straight from the characters."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(t):
+        raw = t.encode("utf-8")
+        h = len(raw) // 3 // PPM_WIDTH
+        return encode_ppm(raw[: 3 * PPM_WIDTH * h], PPM_WIDTH, h)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                h = len(raw) // 3 // PPM_WIDTH
-                payloads.append(encode_ppm(raw[: 3 * PPM_WIDTH * h], PPM_WIDTH, h))
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("image/x-portable-pixmap")
-    )
+    return synth_payload(df, encode, "image/x-portable-pixmap", cols=(text_col,))
 
 
 def decode_ppm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -796,45 +739,39 @@ def decode_ppm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     in float64 (exact-int / exact-int) so any engine agrees bitwise
     before rounding; luma is the Rec.601 mix of the RAW channel means."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_ppm(bytes(payload))
-                px = p["pixels"].astype(np.int64)
-                n = p["width"] * p["height"]
-                if n:
-                    sr, sg, sb = (
-                        int(px[0::3].sum()),
-                        int(px[1::3].sum()),
-                        int(px[2::3].sum()),
-                    )
-                    mr = float(sr) / n
-                    mg = float(sg) / n
-                    mb = float(sb) / n
-                    # Rec.601 luma mean, HALF-UP rounded to 6 dp in EXACT
-                    # integer arithmetic: the rational (299*sr + 587*sg
-                    # + 114*sb) / (1000*n) has a terminating decimal
-                    # expansion for power-of-two n (1/64000 ends at
-                    # digit 9), so it can land EXACTLY on the 7th-digit
-                    # .5 tie — where Spark's BigDecimal HALF_UP and
-                    # DuckDB's multiply-then-round disagree on the
-                    # nearest-double approximation (measured 13-in-5000
-                    # flips at sf0.1). Integer floor-division makes the
-                    # tie-break exact and engine-independent; the oracle
-                    # computes the identical formula in BIGINTs.
-                    num = 299 * sr + 587 * sg + 114 * sb
-                    den = 1000 * n
-                    luma = float((2_000_000 * num + den) // (2 * den)) / 1e6
-                    mx = int(px.max())
-                else:
-                    mr = mg = mb = luma = mx = None
-                rows.append(
-                    (int(doc_id), p["width"], p["height"], n, mr, mg, mb, luma, mx)
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PPM_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        p = parse_ppm(payload)
+        px = p["pixels"].astype(np.int64)
+        n = p["width"] * p["height"]
+        if n:
+            sr, sg, sb = (
+                int(px[0::3].sum()),
+                int(px[1::3].sum()),
+                int(px[2::3].sum()),
+            )
+            mr = float(sr) / n
+            mg = float(sg) / n
+            mb = float(sb) / n
+            # Rec.601 luma mean, HALF-UP rounded to 6 dp in EXACT
+            # integer arithmetic: the rational (299*sr + 587*sg
+            # + 114*sb) / (1000*n) has a terminating decimal
+            # expansion for power-of-two n (1/64000 ends at
+            # digit 9), so it can land EXACTLY on the 7th-digit
+            # .5 tie — where Spark's BigDecimal HALF_UP and
+            # DuckDB's multiply-then-round disagree on the
+            # nearest-double approximation (measured 13-in-5000
+            # flips at sf0.1). Integer floor-division makes the
+            # tie-break exact and engine-independent; the oracle
+            # computes the identical formula in BIGINTs.
+            num = 299 * sr + 587 * sg + 114 * sb
+            den = 1000 * n
+            luma = float((2_000_000 * num + den) // (2 * den)) / 1e6
+            mx = int(px.max())
+        else:
+            mr = mg = mb = luma = mx = None
+        yield (int(doc_id), p["width"], p["height"], n, mr, mg, mb, luma, mx)
 
-    return df.select(id_col, "payload").mapInPandas(feats, PPM_FEATURE_SCHEMA)
+    return map_payload(df, PPM_FEATURE_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -958,26 +895,14 @@ def with_y4m_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     frames (short docs yield a legal 0-frame stream). Arrow-batched; the
     mapping is invertible so an oracle can derive decoded frame stats
     straight from the characters."""
-    from pyspark.sql.types import BinaryType
-
     per = Y4M_WIDTH * Y4M_HEIGHT
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                n = len(raw) // per
-                payloads.append(
-                    encode_y4m(raw[: n * per].reshape(n, per), Y4M_WIDTH, Y4M_HEIGHT)
-                )
-            pdf["payload"] = payloads
-            yield pdf
+    def encode(t):
+        raw = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
+        n = len(raw) // per
+        return encode_y4m(raw[: n * per].reshape(n, per), Y4M_WIDTH, Y4M_HEIGHT)
 
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("video/x-yuv4mpeg"))
+    return synth_payload(df, encode, "video/x-yuv4mpeg", cols=(text_col,))
 
 
 def decode_y4m_frame_stats(
@@ -995,32 +920,26 @@ def decode_y4m_frame_stats(
     engine agrees bitwise before rounding. 0-frame streams emit no
     rows, matching the explode-shaped sampler (mm3) semantics."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                v = parse_y4m(bytes(payload))
-                fr = v["frames"].astype(np.int64)
-                n = fr.shape[0]
-                y_len = v["width"] * v["height"]  # Y plane leads the frame
-                for idx in range(0, n, stride):
-                    luma = fr[idx, :y_len]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            v["width"],
-                            v["height"],
-                            v["fps_num"],
-                            v["fps_den"],
-                            n,
-                            idx,
-                            float(luma.sum()) / y_len,
-                            int(luma.max()),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in Y4M_FRAME_SCHEMA.fields])
+    def rows(doc_id, payload):
+        v = parse_y4m(payload)
+        fr = v["frames"].astype(np.int64)
+        n = fr.shape[0]
+        y_len = v["width"] * v["height"]  # Y plane leads the frame
+        for idx in range(0, n, stride):
+            luma = fr[idx, :y_len]
+            yield (
+                int(doc_id),
+                v["width"],
+                v["height"],
+                v["fps_num"],
+                v["fps_den"],
+                n,
+                idx,
+                float(luma.sum()) / y_len,
+                int(luma.max()),
+            )
 
-    return df.select(id_col, "payload").mapInPandas(feats, Y4M_FRAME_SCHEMA)
+    return map_payload(df, Y4M_FRAME_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1049,37 +968,34 @@ def ahash_ppm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode each PPM payload and emit its 64-bit average-hash as two
     32-bit halves (null for 0-row images). One map-only Arrow pass."""
 
-    def feats(batches):
-        g = AHASH_GRID
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_ppm(bytes(payload))
-                w, h = p["width"], p["height"]
-                if h == 0:
-                    rows.append((int(doc_id), 0, None, None))
-                    continue
-                px = p["pixels"].astype(np.int64).reshape(h, w, 3).sum(axis=2)
-                ys, xs = np.arange(h), np.arange(w)
-                r = (ys * g) // h
-                c = (xs * g) // w
-                cs = np.zeros((g, g), dtype=np.int64)
-                cn = np.zeros((g, g), dtype=np.int64)
-                np.add.at(cs, (r[:, None].repeat(w, 1), c[None, :].repeat(h, 0)), px)
-                np.add.at(cn, (r[:, None].repeat(w, 1), c[None, :].repeat(h, 0)), 1)
-                ts, tn = int(cs.sum()), int(cn.sum())
-                hi = lo = 0
-                for b in range(g * g):
-                    rr, cc = b // g, b % g
-                    if cn[rr, cc] and tn * int(cs[rr, cc]) > int(cn[rr, cc]) * ts:
-                        if b < 32:
-                            hi |= 1 << (31 - b)
-                        else:
-                            lo |= 1 << (63 - b)
-                rows.append((int(doc_id), int(h), hi, lo))
-            yield pd.DataFrame(rows, columns=[f.name for f in AHASH_SCHEMA.fields])
+    g = AHASH_GRID
 
-    return df.select(id_col, "payload").mapInPandas(feats, AHASH_SCHEMA)
+    def rows(doc_id, payload):
+        p = parse_ppm(payload)
+        w, h = p["width"], p["height"]
+        if h == 0:
+            yield (int(doc_id), 0, None, None)
+            return
+        px = p["pixels"].astype(np.int64).reshape(h, w, 3).sum(axis=2)
+        ys, xs = np.arange(h), np.arange(w)
+        r = (ys * g) // h
+        c = (xs * g) // w
+        cs = np.zeros((g, g), dtype=np.int64)
+        cn = np.zeros((g, g), dtype=np.int64)
+        np.add.at(cs, (r[:, None].repeat(w, 1), c[None, :].repeat(h, 0)), px)
+        np.add.at(cn, (r[:, None].repeat(w, 1), c[None, :].repeat(h, 0)), 1)
+        ts, tn = int(cs.sum()), int(cn.sum())
+        hi = lo = 0
+        for b in range(g * g):
+            rr, cc = b // g, b % g
+            if cn[rr, cc] and tn * int(cs[rr, cc]) > int(cn[rr, cc]) * ts:
+                if b < 32:
+                    hi |= 1 << (31 - b)
+                else:
+                    lo |= 1 << (63 - b)
+        yield (int(doc_id), int(h), hi, lo)
+
+    return map_payload(df, AHASH_SCHEMA, rows, id_col)
 
 
 WAV_SEGMENT_SCHEMA = StructType(
@@ -1112,49 +1028,43 @@ def wav_segment_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Arrow-batched map pass — same scale shape as every codec leg:
     linear in payload bytes, zero shuffles."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                w = parse_wav(bytes(payload))
-                s = w["samples"].astype(np.int64)
-                n = len(s)
-                if n == 0:
-                    rows.append((int(doc_id), 0, 0, 0, 0, 0, 0))
-                    continue
-                sil = np.abs(s) < WAV_SILENCE_AMP
-                # run-length encode the silent mask
-                flips = np.flatnonzero(np.diff(sil.astype(np.int8))) + 1
-                starts = np.concatenate(([0], flips))
-                ends = np.concatenate((flips, [n]))
-                lens = ends - starts
-                vals = sil[starts]
-                sil_lens = lens[vals]
-                gap = vals & (lens >= WAV_MIN_GAP)
-                n_gaps = int(gap.sum())
-                gap_samples = int(lens[gap].sum())
-                # gaps are maximal silent runs, so two gaps are never
-                # adjacent: the n_gaps+1 spans around them are empty
-                # only at the doc's edges
-                n_segments = n_gaps + 1
-                if n_gaps and gap[0]:
-                    n_segments -= 1
-                if n_gaps and gap[-1]:
-                    n_segments -= 1
-                rows.append(
-                    (
-                        int(doc_id),
-                        n,
-                        int(sil.sum()),
-                        int(sil_lens.max()) if len(sil_lens) else 0,
-                        n_gaps,
-                        n_segments,
-                        n - gap_samples,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_SEGMENT_SCHEMA.fields])
+    def rows(doc_id, payload):
+        w = parse_wav(payload)
+        s = w["samples"].astype(np.int64)
+        n = len(s)
+        if n == 0:
+            yield (int(doc_id), 0, 0, 0, 0, 0, 0)
+            return
+        sil = np.abs(s) < WAV_SILENCE_AMP
+        # run-length encode the silent mask
+        flips = np.flatnonzero(np.diff(sil.astype(np.int8))) + 1
+        starts = np.concatenate(([0], flips))
+        ends = np.concatenate((flips, [n]))
+        lens = ends - starts
+        vals = sil[starts]
+        sil_lens = lens[vals]
+        gap = vals & (lens >= WAV_MIN_GAP)
+        n_gaps = int(gap.sum())
+        gap_samples = int(lens[gap].sum())
+        # gaps are maximal silent runs, so two gaps are never
+        # adjacent: the n_gaps+1 spans around them are empty
+        # only at the doc's edges
+        n_segments = n_gaps + 1
+        if n_gaps and gap[0]:
+            n_segments -= 1
+        if n_gaps and gap[-1]:
+            n_segments -= 1
+        yield (
+            int(doc_id),
+            n,
+            int(sil.sum()),
+            int(sil_lens.max()) if len(sil_lens) else 0,
+            n_gaps,
+            n_segments,
+            n - gap_samples,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, WAV_SEGMENT_SCHEMA)
+    return map_payload(df, WAV_SEGMENT_SCHEMA, rows, id_col)
 
 
 RESIZE_GRID = 4
@@ -1186,33 +1096,31 @@ def resize_ppm_cells(df: DataFrame, id_col: str = "doc_id", grid: int = RESIZE_G
     emit nothing.
     """
 
-    def cells(batches):
-        for pdf in batches:
-            out = {k.name: [] for k in RESIZE_CELL_SCHEMA.fields}
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
-                meta = parse_ppm(bytes(payload))
-                h, w = meta["height"], meta["width"]
-                if h == 0:
-                    continue
-                px = meta["pixels"].reshape(h, w, 3)
-                ys = (np.arange(h) * grid) // h
-                xs = (np.arange(w) * grid) // w
-                cell = ys[:, None] * grid + xs[None, :]  # (h, w) cell ids
-                flat = cell.ravel()
-                sums = np.zeros((grid * grid, 3), dtype=np.int64)
-                np.add.at(sums, flat, px.reshape(-1, 3).astype(np.int64))
-                counts = np.bincount(flat, minlength=grid * grid)
-                for cid in np.nonzero(counts)[0]:
-                    out["doc_id"].append(int(did))
-                    out["cell_y"].append(int(cid // grid))
-                    out["cell_x"].append(int(cid % grid))
-                    out["n_px"].append(int(counts[cid]))
-                    out["sum_r"].append(int(sums[cid, 0]))
-                    out["sum_g"].append(int(sums[cid, 1]))
-                    out["sum_b"].append(int(sums[cid, 2]))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        meta = parse_ppm(payload)
+        h, w = meta["height"], meta["width"]
+        if h == 0:
+            return
+        px = meta["pixels"].reshape(h, w, 3)
+        ys = (np.arange(h) * grid) // h
+        xs = (np.arange(w) * grid) // w
+        cell = ys[:, None] * grid + xs[None, :]  # (h, w) cell ids
+        flat = cell.ravel()
+        sums = np.zeros((grid * grid, 3), dtype=np.int64)
+        np.add.at(sums, flat, px.reshape(-1, 3).astype(np.int64))
+        counts = np.bincount(flat, minlength=grid * grid)
+        for cid in np.nonzero(counts)[0]:
+            yield (
+                int(did),
+                int(cid // grid),
+                int(cid % grid),
+                int(counts[cid]),
+                int(sums[cid, 0]),
+                int(sums[cid, 1]),
+                int(sums[cid, 2]),
+            )
 
-    return df.select(id_col, "payload").mapInPandas(cells, RESIZE_CELL_SCHEMA)
+    return map_payload(df, RESIZE_CELL_SCHEMA, rows, id_col)
 
 
 WAV_DOWNSAMPLE_FACTOR = 8
@@ -1237,25 +1145,18 @@ def downsample_wav_blocks(
     exact-int downstream so engines agree bitwise. The trailing
     partial block keeps its own (smaller) count."""
 
-    def blocks(batches):
-        for pdf in batches:
-            out = {k.name: [] for k in WAV_BLOCK_SCHEMA.fields}
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
-                s = parse_wav(bytes(payload))["samples"].astype(np.int64)
-                n = len(s)
-                if n == 0:
-                    continue
-                starts = np.arange(0, n, factor)
-                sums = np.add.reduceat(s, starts)
-                counts = np.minimum(starts + factor, n) - starts
-                for bi in range(len(starts)):
-                    out["doc_id"].append(int(did))
-                    out["block_idx"].append(int(bi))
-                    out["n_samples"].append(int(counts[bi]))
-                    out["sum_sample"].append(int(sums[bi]))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        s = parse_wav(payload)["samples"].astype(np.int64)
+        n = len(s)
+        if n == 0:
+            return
+        starts = np.arange(0, n, factor)
+        sums = np.add.reduceat(s, starts)
+        counts = np.minimum(starts + factor, n) - starts
+        for bi in range(len(starts)):
+            yield (int(did), int(bi), int(counts[bi]), int(sums[bi]))
 
-    return df.select(id_col, "payload").mapInPandas(blocks, WAV_BLOCK_SCHEMA)
+    return map_payload(df, WAV_BLOCK_SCHEMA, rows, id_col)
 
 
 VIDEO_POOL_SCHEMA = StructType(
@@ -1275,37 +1176,26 @@ def pool_y4m_frames(df: DataFrame, id_col: str = "doc_id", stride: int = 4) -> D
     geometry) — decode + sample + pool in one Arrow pass, no shuffle;
     means divide exact-int/16 downstream."""
 
-    def cells(batches):
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_POOL_SCHEMA.fields}
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
-                meta = parse_y4m(bytes(payload))
-                frames = meta["frames"]  # (n_frames, 64) uint8 luma
-                for fi in range(0, frames.shape[0], stride):
-                    q = (
-                        frames[fi]
-                        .reshape(2, 4, 2, 4)
-                        .astype(np.int64)
-                        .sum(axis=(1, 3))
-                    )
-                    for cy in range(2):
-                        for cx in range(2):
-                            out["doc_id"].append(int(did))
-                            out["frame_idx"].append(int(fi))
-                            out["cell_y"].append(cy)
-                            out["cell_x"].append(cx)
-                            out["sum_luma"].append(int(q[cy, cx]))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        frames = parse_y4m(payload)["frames"]  # (n_frames, 64) uint8 luma
+        for fi in range(0, frames.shape[0], stride):
+            q = (
+                frames[fi]
+                .reshape(2, 4, 2, 4)
+                .astype(np.int64)
+                .sum(axis=(1, 3))
+            )
+            for cy in range(2):
+                for cx in range(2):
+                    yield (int(did), int(fi), cy, cx, int(q[cy, cx]))
 
-    return df.select(id_col, "payload").mapInPandas(cells, VIDEO_POOL_SCHEMA)
+    return map_payload(df, VIDEO_POOL_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
 # PNG — dependency-free COMPRESSED-codec encoder (synthesis side) +
-# decoder: the first member of the compressed-decode family the r6
-# verdict listed as missing (JPEG/MP4 still need PIL/av and stay
-# loudly gated in decode_media; PNG's entire stack — zlib DEFLATE +
-# the five scanline filters + CRC-chunked container — is stdlib+numpy).
+# decoder with no codec library: PNG's entire stack — zlib DEFLATE +
+# the five scanline filters + CRC-chunked container — is stdlib+numpy.
 # Layout: 8-byte signature, then length/type/data/CRC chunks; IHDR
 # carries geometry (8-bit RGB = bit depth 8, color type 2), IDAT holds
 # the zlib stream of filtered scanlines (one leading filter-type byte
@@ -1692,31 +1582,18 @@ def with_gif_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     certified, via the row-weighted checksum the feature pass emits
     (stats alone are row-order-invariant; the weighted sum is not).
     Docs shorter than one row carry a NULL payload."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(t):
+        raw = t.encode("utf-8")
+        rows = min(len(raw) // GIF_COLS, GIF_MAX_ROWS)
+        if rows == 0:
+            return None
+        return encode_gif_gray(
+            raw[: rows * GIF_COLS], GIF_COLS, rows,
+            interlace=rows >= 8,
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                rows = min(len(raw) // GIF_COLS, GIF_MAX_ROWS)
-                if rows == 0:
-                    payloads.append(None)
-                    continue
-                payloads.append(
-                    encode_gif_gray(
-                        raw[: rows * GIF_COLS], GIF_COLS, rows,
-                        interlace=rows >= 8,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/gif"))
+    return synth_payload(df, encode, "image/gif", cols=(text_col,), nullable=True)
 
 
 def decode_gif_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1726,32 +1603,26 @@ def decode_gif_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     even when the pixel multiset is right). Map-only Arrow pipeline;
     NULL payloads yield the 0-geometry row with NULL stats."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append((int(doc_id), GIF_COLS, 0, 0, None, None, None, None))
-                    continue
-                v = parse_gif(bytes(payload))
-                px = v["frames"][0]["pixels"].astype(np.int64)
-                h, w = px.shape
-                weights = 1 + np.arange(h, dtype=np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        h * w,
-                        float(px.sum()) / (h * w),
-                        int(px.max()),
-                        int(px.min()),
-                        int((px.sum(axis=1) * weights).sum()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in GIF_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), GIF_COLS, 0, 0, None, None, None, None)
+            return
+        v = parse_gif(payload)
+        px = v["frames"][0]["pixels"].astype(np.int64)
+        h, w = px.shape
+        weights = 1 + np.arange(h, dtype=np.int64)
+        yield (
+            int(doc_id),
+            w,
+            h,
+            h * w,
+            float(px.sum()) / (h * w),
+            int(px.max()),
+            int(px.min()),
+            int((px.sum(axis=1) * weights).sum()),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, GIF_FEATURE_SCHEMA)
+    return map_payload(df, GIF_FEATURE_SCHEMA, rows, id_col)
 
 
 BMP_COLS = 62  # synthesis: 62-wide rows force a REAL 2-byte stride pad
@@ -1764,28 +1635,15 @@ def with_bmp_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     the oracle recomputes stats from the characters — and the
     row-weighted checksum certifies the bottom-up flip. Docs shorter
     than one row carry a NULL payload."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(t):
+        raw = t.encode("utf-8")
+        rows = len(raw) // BMP_COLS
+        if rows == 0:
+            return None
+        return encode_bmp_gray(raw[: rows * BMP_COLS], BMP_COLS, rows)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                rows = len(raw) // BMP_COLS
-                if rows == 0:
-                    payloads.append(None)
-                    continue
-                payloads.append(
-                    encode_bmp_gray(raw[: rows * BMP_COLS], BMP_COLS, rows)
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/bmp"))
+    return synth_payload(df, encode, "image/bmp", cols=(text_col,), nullable=True)
 
 
 def decode_bmp_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1795,32 +1653,26 @@ def decode_bmp_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     though the pixel multiset is identical). Map-only Arrow pipeline;
     NULL payloads yield the 0-geometry row with NULL stats."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append((int(doc_id), BMP_COLS, 0, 0, None, None, None, None))
-                    continue
-                v = parse_bmp(bytes(payload))
-                px = v["pixels"].astype(np.int64)
-                h, w = px.shape
-                weights = 1 + np.arange(h, dtype=np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        h * w,
-                        float(px.sum()) / (h * w),
-                        int(px.max()),
-                        int(px.min()),
-                        int((px.sum(axis=1) * weights).sum()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in GIF_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), BMP_COLS, 0, 0, None, None, None, None)
+            return
+        v = parse_bmp(payload)
+        px = v["pixels"].astype(np.int64)
+        h, w = px.shape
+        weights = 1 + np.arange(h, dtype=np.int64)
+        yield (
+            int(doc_id),
+            w,
+            h,
+            h * w,
+            float(px.sum()) / (h * w),
+            int(px.max()),
+            int(px.min()),
+            int((px.sum(axis=1) * weights).sum()),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, GIF_FEATURE_SCHEMA)
+    return map_payload(df, GIF_FEATURE_SCHEMA, rows, id_col)
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -2123,23 +1975,13 @@ def with_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     mapping as with_ppm_payload, width PPM_WIDTH, whole rows only) —
     but run through the real compressed encoder, so downstream decode
     exercises inflate + all five filter reconstructions."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(t):
+        raw = t.encode("utf-8")
+        h = len(raw) // 3 // PPM_WIDTH
+        return encode_png(raw[: 3 * PPM_WIDTH * h], PPM_WIDTH, h)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                h = len(raw) // 3 // PPM_WIDTH
-                payloads.append(encode_png(raw[: 3 * PPM_WIDTH * h], PPM_WIDTH, h))
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/png"))
+    return synth_payload(df, encode, "image/png", cols=(text_col,))
 
 
 # mm12b synthesis: cycle the five 8-bit color types per document
@@ -2177,37 +2019,26 @@ def with_png_color_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     in the color type doc_id % 5 selects (so the whole corpus covers
     gray, RGB, palette, gray+alpha and RGBA), whole rows only, Adam7-
     interlaced at 8+ rows. Docs too short for one row carry NULL."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(doc_id, t):
+        ct = PNG_COLOR_MODES[int(doc_id) % 5]
+        bpp = _PNG_COLOR_CHANNELS[ct]
+        raw = t.encode("utf-8")
+        h = len(raw) // (bpp * PNG_COLOR_WIDTH)
+        if h == 0:
+            return None
+        return encode_png_ex(
+            raw[: bpp * PNG_COLOR_WIDTH * h],
+            PNG_COLOR_WIDTH,
+            h,
+            color_type=ct,
+            palette=PNG_IDENTITY_PALETTE if ct == 3 else None,
+            interlace=h >= 8,
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                ct = PNG_COLOR_MODES[int(doc_id) % 5]
-                bpp = _PNG_COLOR_CHANNELS[ct]
-                raw = t.encode("utf-8")
-                h = len(raw) // (bpp * PNG_COLOR_WIDTH)
-                if h == 0:
-                    payloads.append(None)
-                    continue
-                payloads.append(
-                    encode_png_ex(
-                        raw[: bpp * PNG_COLOR_WIDTH * h],
-                        PNG_COLOR_WIDTH,
-                        h,
-                        color_type=ct,
-                        palette=PNG_IDENTITY_PALETTE if ct == 3 else None,
-                        interlace=h >= 8,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/png"))
+    return synth_payload(
+        df, encode, "image/png", cols=("doc_id", text_col), nullable=True
+    )
 
 
 def decode_png_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2217,47 +2048,37 @@ def decode_png_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFram
     that certify pixel ORDER (de-interlacing) — one Arrow pass, zero
     shuffles, no driver involvement."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                ct = PNG_COLOR_MODES[int(doc_id) % 5]
-                if payload is None:
-                    rows.append(
-                        (int(doc_id), ct, PNG_COLOR_WIDTH, 0, 0, 0,
-                         None, None, None, None, None)
-                    )
-                    continue
-                v = parse_png(bytes(payload))
-                if v["color_type"] != ct:
-                    raise ValueError(
-                        f"doc {doc_id}: decoded color type {v['color_type']} "
-                        f"!= synthesized {ct}"
-                    )
-                ex = png_expand_rgb(v).astype(np.int64)
-                h, w, c = ex.shape
-                rw = 1 + np.arange(h, dtype=np.int64)
-                cw = 1 + np.arange(w, dtype=np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        ct,
-                        w,
-                        h,
-                        h * w,
-                        h * w * c,
-                        float(ex.sum()) / (h * w * c),
-                        int(ex.max()),
-                        int(ex.min()),
-                        int((ex.sum(axis=(1, 2)) * rw).sum()),
-                        int((ex.sum(axis=(0, 2)) * cw).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PNG_COLOR_FEATURE_SCHEMA.fields]
+    def rows(doc_id, payload):
+        ct = PNG_COLOR_MODES[int(doc_id) % 5]
+        if payload is None:
+            yield (int(doc_id), ct, PNG_COLOR_WIDTH, 0, 0, 0,
+                   None, None, None, None, None)
+            return
+        v = parse_png(payload)
+        if v["color_type"] != ct:
+            raise ValueError(
+                f"doc {doc_id}: decoded color type {v['color_type']} "
+                f"!= synthesized {ct}"
             )
+        ex = png_expand_rgb(v).astype(np.int64)
+        h, w, c = ex.shape
+        rw = 1 + np.arange(h, dtype=np.int64)
+        cw = 1 + np.arange(w, dtype=np.int64)
+        yield (
+            int(doc_id),
+            ct,
+            w,
+            h,
+            h * w,
+            h * w * c,
+            float(ex.sum()) / (h * w * c),
+            int(ex.max()),
+            int(ex.min()),
+            int((ex.sum(axis=(1, 2)) * rw).sum()),
+            int((ex.sum(axis=(0, 2)) * cw).sum()),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, PNG_COLOR_FEATURE_SCHEMA)
+    return map_payload(df, PNG_COLOR_FEATURE_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3823,30 +3644,19 @@ def with_jpeg_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     (see the section comment), so the oracle can recompute decoded
     stats straight from the characters. Docs shorter than one block
     row carry a NULL payload (a 0-height JPEG frame is not encodable)."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(t):
+        raw = t.encode("utf-8")
+        br = min(len(raw) // JPEG_BLOCKS_PER_ROW, JPEG_MAX_BLOCK_ROWS)
+        if br == 0:
+            return None
+        vals = np.frombuffer(
+            raw[: br * JPEG_BLOCKS_PER_ROW], dtype=np.uint8
+        ).reshape(br, JPEG_BLOCKS_PER_ROW)
+        gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+        return encode_jpeg_gray(gray.tobytes(), JPEG_WIDTH, 8 * br)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                br = min(len(raw) // JPEG_BLOCKS_PER_ROW, JPEG_MAX_BLOCK_ROWS)
-                if br == 0:
-                    payloads.append(None)
-                    continue
-                vals = np.frombuffer(
-                    raw[: br * JPEG_BLOCKS_PER_ROW], dtype=np.uint8
-                ).reshape(br, JPEG_BLOCKS_PER_ROW)
-                gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(encode_jpeg_gray(gray.tobytes(), JPEG_WIDTH, 8 * br))
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/jpeg"))
+    return synth_payload(df, encode, "image/jpeg", cols=(text_col,), nullable=True)
 
 
 def with_jpeg_progressive_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -3856,32 +3666,19 @@ def with_jpeg_progressive_payload(df: DataFrame, text_col: str = "text") -> Data
     reconstruction argument (the progressive scans re-encode the same
     quantized coefficients), so the SAME oracle certifies the whole
     annex-G decode path."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(t):
+        raw = t.encode("utf-8")
+        br = min(len(raw) // JPEG_BLOCKS_PER_ROW, JPEG_MAX_BLOCK_ROWS)
+        if br == 0:
+            return None
+        vals = np.frombuffer(
+            raw[: br * JPEG_BLOCKS_PER_ROW], dtype=np.uint8
+        ).reshape(br, JPEG_BLOCKS_PER_ROW)
+        gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+        return encode_jpeg_progressive_gray(gray.tobytes(), JPEG_WIDTH, 8 * br)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                br = min(len(raw) // JPEG_BLOCKS_PER_ROW, JPEG_MAX_BLOCK_ROWS)
-                if br == 0:
-                    payloads.append(None)
-                    continue
-                vals = np.frombuffer(
-                    raw[: br * JPEG_BLOCKS_PER_ROW], dtype=np.uint8
-                ).reshape(br, JPEG_BLOCKS_PER_ROW)
-                gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(
-                    encode_jpeg_progressive_gray(gray.tobytes(), JPEG_WIDTH, 8 * br)
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/jpeg"))
+    return synth_payload(df, encode, "image/jpeg", cols=(text_col,), nullable=True)
 
 
 def decode_jpeg_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3890,30 +3687,24 @@ def decode_jpeg_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     shuffles; NULL payloads (sub-block docs) yield the 0-geometry row
     with NULL stats, mirroring mm12's empty-image convention."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append((int(doc_id), JPEG_WIDTH, 0, 0, None, None, None))
-                    continue
-                p = parse_jpeg_gray(bytes(payload))
-                px = p["pixels"].astype(np.int64)
-                n = p["width"] * p["height"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        p["width"],
-                        p["height"],
-                        n,
-                        float(px.sum()) / n,
-                        int(px.max()),
-                        int(px.min()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), JPEG_WIDTH, 0, 0, None, None, None)
+            return
+        p = parse_jpeg_gray(payload)
+        px = p["pixels"].astype(np.int64)
+        n = p["width"] * p["height"]
+        yield (
+            int(doc_id),
+            p["width"],
+            p["height"],
+            n,
+            float(px.sum()) / n,
+            int(px.max()),
+            int(px.min()),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, JPEG_FEATURE_SCHEMA)
+    return map_payload(df, JPEG_FEATURE_SCHEMA, rows, id_col)
 
 
 JPEG_MCUS_PER_ROW = 8  # color synthesis: one 16x16 MCU per 3 characters
@@ -3950,39 +3741,26 @@ def with_jpeg_color_payload(
     ``restart_mod=M`` gives each doc restart_interval = br % M (0 =
     none for that doc) — a deterministic per-doc DRI mix the header
     probe's oracle can recompute (mm16)."""
-    from pyspark.sql.types import BinaryType
-
     per_row = 3 * JPEG_MCUS_PER_ROW
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = t.encode("utf-8")
-                br = min(len(raw) // per_row, JPEG_MAX_MCU_ROWS)
-                if br == 0:
-                    payloads.append(None)
-                    continue
-                vals = np.frombuffer(raw[: br * per_row], dtype=np.uint8).reshape(
-                    br, JPEG_MCUS_PER_ROW, 3
-                )
-                y = np.kron(vals[..., 0], np.ones((16, 16), dtype=np.uint8))
-                cb = np.kron(vals[..., 1], np.ones((8, 8), dtype=np.uint8))
-                cr = np.kron(vals[..., 2], np.ones((8, 8), dtype=np.uint8))
-                payloads.append(
-                    encode_jpeg_ycbcr420(
-                        y.tobytes(), cb.tobytes(), cr.tobytes(),
-                        JPEG_COLOR_WIDTH, 16 * br,
-                        restart_interval=(br % restart_mod) if restart_mod else 0,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf
+    def encode(t):
+        raw = t.encode("utf-8")
+        br = min(len(raw) // per_row, JPEG_MAX_MCU_ROWS)
+        if br == 0:
+            return None
+        vals = np.frombuffer(raw[: br * per_row], dtype=np.uint8).reshape(
+            br, JPEG_MCUS_PER_ROW, 3
+        )
+        y = np.kron(vals[..., 0], np.ones((16, 16), dtype=np.uint8))
+        cb = np.kron(vals[..., 1], np.ones((8, 8), dtype=np.uint8))
+        cr = np.kron(vals[..., 2], np.ones((8, 8), dtype=np.uint8))
+        return encode_jpeg_ycbcr420(
+            y.tobytes(), cb.tobytes(), cr.tobytes(),
+            JPEG_COLOR_WIDTH, 16 * br,
+            restart_interval=(br % restart_mod) if restart_mod else 0,
+        )
 
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/jpeg"))
+    return synth_payload(df, encode, "image/jpeg", cols=(text_col,), nullable=True)
 
 
 def decode_jpeg_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3991,40 +3769,30 @@ def decode_jpeg_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFra
     geometry/stats. Map-only Arrow pipeline, zero shuffles; NULL
     payloads yield the 0-geometry row with NULL stats."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        (int(doc_id), JPEG_COLOR_WIDTH, 0, 0, None, None, None, None, None)
-                    )
-                    continue
-                v = parse_jpeg(bytes(payload))
-                if v["components"] != 3:
-                    raise ValueError(
-                        f"expected a 3-component stream, got {v['components']}"
-                    )
-                yp, cbp, crp = (p.astype(np.int64) for p in v["planes"])
-                n = v["width"] * v["height"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        v["width"],
-                        v["height"],
-                        n,
-                        float(yp.sum()) / n,
-                        float(cbp.sum()) / n,
-                        float(crp.sum()) / n,
-                        int(yp.max()),
-                        int(yp.min()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_COLOR_FEATURE_SCHEMA.fields]
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), JPEG_COLOR_WIDTH, 0, 0, None, None, None, None, None)
+            return
+        v = parse_jpeg(payload)
+        if v["components"] != 3:
+            raise ValueError(
+                f"expected a 3-component stream, got {v['components']}"
             )
+        yp, cbp, crp = (p.astype(np.int64) for p in v["planes"])
+        n = v["width"] * v["height"]
+        yield (
+            int(doc_id),
+            v["width"],
+            v["height"],
+            n,
+            float(yp.sum()) / n,
+            float(cbp.sum()) / n,
+            float(crp.sum()) / n,
+            int(yp.max()),
+            int(yp.min()),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, JPEG_COLOR_FEATURE_SCHEMA)
+    return map_payload(df, JPEG_COLOR_FEATURE_SCHEMA, rows, id_col)
 
 
 def decode_png_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -4033,45 +3801,39 @@ def decode_png_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (shared PPM_FEATURE_SCHEMA — the two decoders are drop-in
     alternatives for the image leg)."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_png(bytes(payload))
-                px = p["pixels"].astype(np.int64)
-                n = p["width"] * p["height"]
-                if n:
-                    sr, sg, sb = (
-                        int(px[0::3].sum()),
-                        int(px[1::3].sum()),
-                        int(px[2::3].sum()),
-                    )
-                    mr = float(sr) / n
-                    mg = float(sg) / n
-                    mb = float(sb) / n
-                    # Rec.601 luma mean, HALF-UP rounded to 6 dp in EXACT
-                    # integer arithmetic: the rational (299*sr + 587*sg
-                    # + 114*sb) / (1000*n) has a terminating decimal
-                    # expansion for power-of-two n (1/64000 ends at
-                    # digit 9), so it can land EXACTLY on the 7th-digit
-                    # .5 tie — where Spark's BigDecimal HALF_UP and
-                    # DuckDB's multiply-then-round disagree on the
-                    # nearest-double approximation (measured 13-in-5000
-                    # flips at sf0.1). Integer floor-division makes the
-                    # tie-break exact and engine-independent; the oracle
-                    # computes the identical formula in BIGINTs.
-                    num = 299 * sr + 587 * sg + 114 * sb
-                    den = 1000 * n
-                    luma = float((2_000_000 * num + den) // (2 * den)) / 1e6
-                    mx = int(px.max())
-                else:
-                    mr = mg = mb = luma = mx = None
-                rows.append(
-                    (int(doc_id), p["width"], p["height"], n, mr, mg, mb, luma, mx)
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PPM_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        p = parse_png(payload)
+        px = p["pixels"].astype(np.int64)
+        n = p["width"] * p["height"]
+        if n:
+            sr, sg, sb = (
+                int(px[0::3].sum()),
+                int(px[1::3].sum()),
+                int(px[2::3].sum()),
+            )
+            mr = float(sr) / n
+            mg = float(sg) / n
+            mb = float(sb) / n
+            # Rec.601 luma mean, HALF-UP rounded to 6 dp in EXACT
+            # integer arithmetic: the rational (299*sr + 587*sg
+            # + 114*sb) / (1000*n) has a terminating decimal
+            # expansion for power-of-two n (1/64000 ends at
+            # digit 9), so it can land EXACTLY on the 7th-digit
+            # .5 tie — where Spark's BigDecimal HALF_UP and
+            # DuckDB's multiply-then-round disagree on the
+            # nearest-double approximation (measured 13-in-5000
+            # flips at sf0.1). Integer floor-division makes the
+            # tie-break exact and engine-independent; the oracle
+            # computes the identical formula in BIGINTs.
+            num = 299 * sr + 587 * sg + 114 * sb
+            den = 1000 * n
+            luma = float((2_000_000 * num + den) // (2 * den)) / 1e6
+            mx = int(px.max())
+        else:
+            mr = mg = mb = luma = mx = None
+        yield (int(doc_id), p["width"], p["height"], n, mr, mg, mb, luma, mx)
 
-    return df.select(id_col, "payload").mapInPandas(feats, PPM_FEATURE_SCHEMA)
+    return map_payload(df, PPM_FEATURE_SCHEMA, rows, id_col)
 
 
 # ===========================================================================
@@ -4918,26 +4680,14 @@ def with_mp4_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     consecutive 8x8 mono luma samples (64 bytes each, whole samples
     only — short docs yield a legal 0-sample file). Invertible, so the
     oracle derives decoded stats straight from the characters."""
-    from pyspark.sql.types import BinaryType
-
     per = MP4_WIDTH * MP4_HEIGHT
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                n = len(raw) // per
-                payloads.append(
-                    encode_mp4(raw[: n * per].reshape(n, per), MP4_WIDTH, MP4_HEIGHT)
-                )
-            pdf["payload"] = payloads
-            yield pdf
+    def encode(t):
+        raw = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
+        n = len(raw) // per
+        return encode_mp4(raw[: n * per].reshape(n, per), MP4_WIDTH, MP4_HEIGHT)
 
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("video/mp4"))
+    return synth_payload(df, encode, "video/mp4", cols=(text_col,))
 
 
 def decode_mp4_features(
@@ -4948,42 +4698,36 @@ def decode_mp4_features(
     tick duration, and exact luma stats over the sampled frames. One
     map-only Arrow pass, zero shuffles; 0-sample files emit NULL stats."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                v = parse_mp4(bytes(payload))
-                if v["codec"] != "raw":
-                    # parse_mp4 also demuxes 'jpeg' tracks (ragged
-                    # samples, no frame matrix) — this RAW-frame
-                    # consumer must name the mismatch, not die on a
-                    # missing key inside the Arrow worker
-                    raise ValueError(
-                        f"expected an uncompressed 'raw ' track, got "
-                        f"codec {v['codec']!r} — use decode_mp4_mjpeg_features"
-                    )
-                # stride BEFORE widening: only sampled frames pay the
-                # int64 conversion (8x bytes) in the Arrow worker
-                picked = v["frames"][::stride].astype(np.int64)
-                if picked.shape[0]:
-                    mean = float(picked.sum()) / picked.size
-                    mx = int(picked.max())
-                else:
-                    mean = mx = None
-                rows.append(
-                    (
-                        int(doc_id),
-                        v["width"],
-                        v["height"],
-                        v["n_samples"],
-                        v["duration"],
-                        mean,
-                        mx,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MP4_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        v = parse_mp4(payload)
+        if v["codec"] != "raw":
+            # parse_mp4 also demuxes 'jpeg' tracks (ragged
+            # samples, no frame matrix) — this RAW-frame
+            # consumer must name the mismatch, not die on a
+            # missing key inside the Arrow worker
+            raise ValueError(
+                f"expected an uncompressed 'raw ' track, got "
+                f"codec {v['codec']!r} — use decode_mp4_mjpeg_features"
+            )
+        # stride BEFORE widening: only sampled frames pay the
+        # int64 conversion (8x bytes) in the Arrow worker
+        picked = v["frames"][::stride].astype(np.int64)
+        if picked.shape[0]:
+            mean = float(picked.sum()) / picked.size
+            mx = int(picked.max())
+        else:
+            mean = mx = None
+        yield (
+            int(doc_id),
+            v["width"],
+            v["height"],
+            v["n_samples"],
+            v["duration"],
+            mean,
+            mx,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, MP4_FEATURE_SCHEMA)
+    return map_payload(df, MP4_FEATURE_SCHEMA, rows, id_col)
 
 
 def probe_jpeg_header(payload: bytes) -> dict:
@@ -5070,30 +4814,22 @@ def probe_jpeg_features(
     from the CALLER (the synthesis layer knows what a missing payload
     would have been; this generic operator does not)."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        (int(doc_id), null_width, 0, null_components, False, 0, 0)
-                    )
-                    continue
-                v = probe_jpeg_header(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        v["width"],
-                        v["height"],
-                        v["n_components"],
-                        v["progressive"],
-                        v["restart_interval"],
-                        v["width"] * v["height"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_PROBE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), null_width, 0, null_components, False, 0, 0)
+            return
+        v = probe_jpeg_header(payload)
+        yield (
+            int(doc_id),
+            v["width"],
+            v["height"],
+            v["n_components"],
+            v["progressive"],
+            v["restart_interval"],
+            v["width"] * v["height"],
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, JPEG_PROBE_SCHEMA)
+    return map_payload(df, JPEG_PROBE_SCHEMA, rows, id_col)
 
 
 MJPEG_FRAME_CHARS = 64  # 16 blocks/row x 4 rows: one char per 8x8 block
@@ -5110,34 +4846,22 @@ def with_mjpeg_mp4_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     decode. Block-constant frames round-trip byte-exactly, so the
     oracle recomputes decoded stats straight from the characters. Short
     docs yield a legal 0-sample file."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(t):
+        raw = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
+        n = len(raw) // MJPEG_FRAME_CHARS
+        samples = []
+        for f in range(n):
+            vals = raw[
+                f * MJPEG_FRAME_CHARS : (f + 1) * MJPEG_FRAME_CHARS
+            ].reshape(4, 16)
+            gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+            samples.append(
+                encode_jpeg_gray(gray.tobytes(), MJPEG_FRAME_W, MJPEG_FRAME_H)
+            )
+        return encode_mp4_mjpeg(samples, MJPEG_FRAME_W, MJPEG_FRAME_H)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for t in pdf[text_col]:
-                raw = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                n = len(raw) // MJPEG_FRAME_CHARS
-                samples = []
-                for f in range(n):
-                    vals = raw[
-                        f * MJPEG_FRAME_CHARS : (f + 1) * MJPEG_FRAME_CHARS
-                    ].reshape(4, 16)
-                    gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                    samples.append(
-                        encode_jpeg_gray(gray.tobytes(), MJPEG_FRAME_W, MJPEG_FRAME_H)
-                    )
-                payloads.append(
-                    encode_mp4_mjpeg(samples, MJPEG_FRAME_W, MJPEG_FRAME_H)
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("video/mp4"))
+    return synth_payload(df, encode, "video/mp4", cols=(text_col,))
 
 
 def decode_mp4_mjpeg_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5149,38 +4873,32 @@ def decode_mp4_mjpeg_features(df: DataFrame, id_col: str = "doc_id") -> DataFram
     shuffles; 0-sample files emit NULL stats. Non-JPEG codecs fail
     loudly at the stsd gate (parse_mp4)."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                v = parse_mp4(bytes(payload))
-                if v["codec"] != "jpeg":
-                    raise ValueError(
-                        f"expected an MJPEG track, got codec {v['codec']!r}"
-                    )
-                total = cnt = 0
-                mx = None
-                for s in v["samples"]:
-                    p = parse_jpeg_gray(s)
-                    px = p["pixels"].astype(np.int64)
-                    total += int(px.sum())
-                    cnt += px.size
-                    m = int(px.max())
-                    mx = m if mx is None else max(mx, m)
-                rows.append(
-                    (
-                        int(doc_id),
-                        v["width"],
-                        v["height"],
-                        v["n_samples"],
-                        v["duration"],
-                        (float(total) / cnt) if cnt else None,
-                        mx,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MP4_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        v = parse_mp4(payload)
+        if v["codec"] != "jpeg":
+            raise ValueError(
+                f"expected an MJPEG track, got codec {v['codec']!r}"
+            )
+        total = cnt = 0
+        mx = None
+        for s in v["samples"]:
+            p = parse_jpeg_gray(s)
+            px = p["pixels"].astype(np.int64)
+            total += int(px.sum())
+            cnt += px.size
+            m = int(px.max())
+            mx = m if mx is None else max(mx, m)
+        yield (
+            int(doc_id),
+            v["width"],
+            v["height"],
+            v["n_samples"],
+            v["duration"],
+            (float(total) / cnt) if cnt else None,
+            mx,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, MP4_FEATURE_SCHEMA)
+    return map_payload(df, MP4_FEATURE_SCHEMA, rows, id_col)
 
 
 # ===========================================================================
@@ -5517,40 +5235,29 @@ def with_h264_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     crop derived from the length and first bytes, profile/level from
     doc_id — every field the oracle recomputes arithmetically. Docs
     shorter than one slice carry NULL."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(doc_id, t):
+        raw = t.encode("utf-8")
+        ns = len(raw) // H264_SLICE_BYTES
+        if ns == 0:
+            return None
+        blocks = [
+            raw[i * H264_SLICE_BYTES : (i + 1) * H264_SLICE_BYTES]
+            for i in range(ns)
+        ]
+        return encode_h264_annexb(
+            blocks,
+            profile_idc=66 + 11 * (int(doc_id) % 2),
+            level_idc=30 + 10 * (int(doc_id) % 3),
+            width_mbs=1 + len(raw) % 40,
+            height_mbs=1 + (len(raw) // 7) % 30,
+            crop_right=raw[0] % 2,
+            crop_bottom=raw[1] % 2,
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                raw = t.encode("utf-8")
-                ns = len(raw) // H264_SLICE_BYTES
-                if ns == 0:
-                    payloads.append(None)
-                    continue
-                blocks = [
-                    raw[i * H264_SLICE_BYTES : (i + 1) * H264_SLICE_BYTES]
-                    for i in range(ns)
-                ]
-                payloads.append(
-                    encode_h264_annexb(
-                        blocks,
-                        profile_idc=66 + 11 * (int(doc_id) % 2),
-                        level_idc=30 + 10 * (int(doc_id) % 3),
-                        width_mbs=1 + len(raw) % 40,
-                        height_mbs=1 + (len(raw) // 7) % 30,
-                        crop_right=raw[0] % 2,
-                        crop_bottom=raw[1] % 2,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("video/h264"))
+    return synth_payload(
+        df, encode, "video/h264", cols=("doc_id", text_col), nullable=True
+    )
 
 
 def probe_h264_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5558,32 +5265,24 @@ def probe_h264_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     and emit routing metadata — one Arrow pass, zero shuffles, no pixel
     decode anywhere. NULL payloads emit the 0-stream row."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, 0, 0, 0, None)
-                    )
-                    continue
-                v = parse_h264_annexb(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        v["profile_idc"],
-                        v["level_idc"],
-                        v["width"],
-                        v["height"],
-                        v["n_nal_units"],
-                        v["n_slices"],
-                        v["n_idr"],
-                        v["payload_byte_sum"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in H264_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), None, None, None, None, 0, 0, 0, None)
+            return
+        v = parse_h264_annexb(payload)
+        yield (
+            int(doc_id),
+            v["profile_idc"],
+            v["level_idc"],
+            v["width"],
+            v["height"],
+            v["n_nal_units"],
+            v["n_slices"],
+            v["n_idr"],
+            v["payload_byte_sum"],
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, H264_FEATURE_SCHEMA)
+    return map_payload(df, H264_FEATURE_SCHEMA, rows, id_col)
 
 
 # ===========================================================================
@@ -5618,46 +5317,35 @@ def with_avc1_mp4_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     (mm21) — so the two probes share one oracle arithmetic. Every slice
     body plants a raw 00 00 01 before escaping (escape certification).
     Docs shorter than one sample carry NULL."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(doc_id, t):
+        raw = t.encode("utf-8")
+        ns = len(raw) // H264_SLICE_BYTES
+        if ns == 0:
+            return None
+        nals = []
+        for i in range(ns):
+            hdr = 0x65 if i % 8 == 0 else 0x41
+            body = _H264_SLICE_MARKER + raw[
+                i * H264_SLICE_BYTES : (i + 1) * H264_SLICE_BYTES
+            ]
+            nals.append([bytes([hdr]) + _h264_escape(body)])
+        return encode_mp4_avc1(
+            nals,
+            dict(
+                profile_idc=66 + 11 * (int(doc_id) % 2),
+                level_idc=30 + 10 * (int(doc_id) % 3),
+                width_mbs=1 + len(raw) % 40,
+                height_mbs=1 + (len(raw) // 7) % 30,
+                crop_right=raw[0] % 2,
+                crop_bottom=raw[1] % 2,
+            ),
+            sync_samples=[i + 1 for i in range(ns) if i % 8 == 0],
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                raw = t.encode("utf-8")
-                ns = len(raw) // H264_SLICE_BYTES
-                if ns == 0:
-                    payloads.append(None)
-                    continue
-                nals = []
-                for i in range(ns):
-                    hdr = 0x65 if i % 8 == 0 else 0x41
-                    body = _H264_SLICE_MARKER + raw[
-                        i * H264_SLICE_BYTES : (i + 1) * H264_SLICE_BYTES
-                    ]
-                    nals.append([bytes([hdr]) + _h264_escape(body)])
-                payloads.append(
-                    encode_mp4_avc1(
-                        nals,
-                        dict(
-                            profile_idc=66 + 11 * (int(doc_id) % 2),
-                            level_idc=30 + 10 * (int(doc_id) % 3),
-                            width_mbs=1 + len(raw) % 40,
-                            height_mbs=1 + (len(raw) // 7) % 30,
-                            crop_right=raw[0] % 2,
-                            crop_bottom=raw[1] % 2,
-                        ),
-                        sync_samples=[i + 1 for i in range(ns) if i % 8 == 0],
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("video/mp4"))
+    return synth_payload(
+        df, encode, "video/mp4", cols=("doc_id", text_col), nullable=True
+    )
 
 
 def probe_avc1_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5668,68 +5356,62 @@ def probe_avc1_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     a container whose sync table lies about its bitstream fails
     loudly. One Arrow pass, zero shuffles, no pixel decode."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append((int(doc_id), None, None, None, None, 0, 0, None))
-                    continue
-                v = parse_mp4(bytes(payload))
-                if v["codec"] != "avc1":
-                    raise ValueError(f"doc {doc_id}: expected avc1, got {v['codec']}")
-                avcc = v["avcc"]
-                ls = avcc["length_size"]
-                payload_sum = 0
-                idr_samples = []
-                for si, sample in enumerate(v["samples"]):
-                    pos = 0
-                    while pos < len(sample):
-                        ln = int.from_bytes(sample[pos : pos + ls], "big")
-                        nal = sample[pos + ls : pos + ls + ln]
-                        if len(nal) != ln:
-                            raise ValueError(
-                                f"sample {si}: NAL length {ln} overruns the sample"
-                            )
-                        if nal[0] & 0x80:
-                            raise ValueError(
-                                f"forbidden_zero_bit in sample {si} NAL"
-                            )
-                        ntype = nal[0] & 0x1F
-                        if ntype not in (1, 5):
-                            raise ValueError(
-                                f"unexpected NAL type {ntype} in an avc1 sample"
-                            )
-                        body = _h264_unescape(nal[1:])
-                        if not body.startswith(_H264_SLICE_MARKER):
-                            raise ValueError(
-                                "slice body lost its marker — escape round "
-                                "trip broken"
-                            )
-                        payload_sum += sum(body)
-                        if ntype == 5:
-                            idr_samples.append(si + 1)
-                        pos += ls + ln
-                sync = v["sync_samples"] or list(range(1, v["n_samples"] + 1))
-                if idr_samples != sync:
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), None, None, None, None, 0, 0, None)
+            return
+        v = parse_mp4(payload)
+        if v["codec"] != "avc1":
+            raise ValueError(f"doc {doc_id}: expected avc1, got {v['codec']}")
+        avcc = v["avcc"]
+        ls = avcc["length_size"]
+        payload_sum = 0
+        idr_samples = []
+        for si, sample in enumerate(v["samples"]):
+            pos = 0
+            while pos < len(sample):
+                ln = int.from_bytes(sample[pos : pos + ls], "big")
+                nal = sample[pos + ls : pos + ls + ln]
+                if len(nal) != ln:
                     raise ValueError(
-                        f"stss {sync} disagrees with IDR NALs {idr_samples}"
+                        f"sample {si}: NAL length {ln} overruns the sample"
                     )
-                rows.append(
-                    (
-                        int(doc_id),
-                        avcc["profile_idc"],
-                        avcc["level_idc"],
-                        v["width"],
-                        v["height"],
-                        v["n_samples"],
-                        len(sync),
-                        payload_sum,
+                if nal[0] & 0x80:
+                    raise ValueError(
+                        f"forbidden_zero_bit in sample {si} NAL"
                     )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AVC1_FEATURE_SCHEMA.fields])
+                ntype = nal[0] & 0x1F
+                if ntype not in (1, 5):
+                    raise ValueError(
+                        f"unexpected NAL type {ntype} in an avc1 sample"
+                    )
+                body = _h264_unescape(nal[1:])
+                if not body.startswith(_H264_SLICE_MARKER):
+                    raise ValueError(
+                        "slice body lost its marker — escape round "
+                        "trip broken"
+                    )
+                payload_sum += sum(body)
+                if ntype == 5:
+                    idr_samples.append(si + 1)
+                pos += ls + ln
+        sync = v["sync_samples"] or list(range(1, v["n_samples"] + 1))
+        if idr_samples != sync:
+            raise ValueError(
+                f"stss {sync} disagrees with IDR NALs {idr_samples}"
+            )
+        yield (
+            int(doc_id),
+            avcc["profile_idc"],
+            avcc["level_idc"],
+            v["width"],
+            v["height"],
+            v["n_samples"],
+            len(sync),
+            payload_sum,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, AVC1_FEATURE_SCHEMA)
+    return map_payload(df, AVC1_FEATURE_SCHEMA, rows, id_col)
 
 
 # ===========================================================================
@@ -5763,34 +5445,23 @@ def with_aac_mp4_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     fields derived from doc_id (object type 2/5, rate 48000/44100/16000,
     channels 1/2) so the oracle recomputes them arithmetically. Docs
     shorter than one frame carry NULL."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
+    def encode(doc_id, t):
+        raw = t.encode("utf-8")
+        ns = len(raw) // 32
+        if ns == 0:
+            return None
+        frames = [raw[i * 32 : (i + 1) * 32] for i in range(ns)]
+        return encode_mp4_aac(
+            frames,
+            object_type=2 + 3 * (int(doc_id) % 2),
+            freq_index=AAC_SYNTH_FREQ_INDEX[int(doc_id) % 3],
+            channels=1 + int(doc_id) % 2,
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                raw = t.encode("utf-8")
-                ns = len(raw) // 32
-                if ns == 0:
-                    payloads.append(None)
-                    continue
-                frames = [raw[i * 32 : (i + 1) * 32] for i in range(ns)]
-                payloads.append(
-                    encode_mp4_aac(
-                        frames,
-                        object_type=2 + 3 * (int(doc_id) % 2),
-                        freq_index=AAC_SYNTH_FREQ_INDEX[int(doc_id) % 3],
-                        channels=1 + int(doc_id) % 2,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("audio/mp4"))
+    return synth_payload(
+        df, encode, "audio/mp4", cols=("doc_id", text_col), nullable=True
+    )
 
 
 def probe_aac_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5799,30 +5470,24 @@ def probe_aac_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     against the sample entry) and sum the sliced access-unit bytes —
     one Arrow pass, zero shuffles, no filterbank decode."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append((int(doc_id), None, None, None, 0, None))
-                    continue
-                v = parse_mp4(bytes(payload))
-                if v["codec"] != "mp4a":
-                    raise ValueError(f"doc {doc_id}: expected mp4a, got {v['codec']}")
-                a = v["audio"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        a["object_type"],
-                        a["sampling_rate"],
-                        a["channels"],
-                        v["n_samples"],
-                        sum(sum(s) for s in v["samples"]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AAC_FEATURE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), None, None, None, 0, None)
+            return
+        v = parse_mp4(payload)
+        if v["codec"] != "mp4a":
+            raise ValueError(f"doc {doc_id}: expected mp4a, got {v['codec']}")
+        a = v["audio"]
+        yield (
+            int(doc_id),
+            a["object_type"],
+            a["sampling_rate"],
+            a["channels"],
+            v["n_samples"],
+            sum(sum(s) for s in v["samples"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, AAC_FEATURE_SCHEMA)
+    return map_payload(df, AAC_FEATURE_SCHEMA, rows, id_col)
 
 
 # ===========================================================================
@@ -6111,48 +5776,37 @@ def with_hevc_mp4_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     the same oracle arithmetic family as mm21/mm22. Every slice body
     plants a raw 00 00 01 before escaping. Docs shorter than one
     sample carry NULL."""
-    from pyspark.sql.types import BinaryType
-
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
     levels = (93, 120, 150)
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                raw = t.encode("utf-8")
-                ns = len(raw) // H264_SLICE_BYTES
-                if ns == 0:
-                    payloads.append(None)
-                    continue
-                nals = []
-                for i in range(ns):
-                    ntype = HEVC_NAL_IDR_W_RADL if i % 8 == 0 else HEVC_NAL_TRAIL_R
-                    body = _H264_SLICE_MARKER + raw[
-                        i * H264_SLICE_BYTES : (i + 1) * H264_SLICE_BYTES
-                    ]
-                    nals.append([_hevc_nal(ntype, _h264_escape(body))])
-                payloads.append(
-                    encode_mp4_hevc(
-                        nals,
-                        dict(
-                            profile_idc=1 + int(doc_id) % 2,
-                            tier=int(doc_id) % 2,
-                            level_idc=levels[int(doc_id) % 3],
-                            pic_width=16 * (1 + len(raw) % 40),
-                            pic_height=16 * (1 + (len(raw) // 7) % 30),
-                            conf_right=raw[0] % 2,
-                            conf_bottom=raw[1] % 2,
-                        ),
-                        sync_samples=[i + 1 for i in range(ns) if i % 8 == 0],
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf
+    def encode(doc_id, t):
+        raw = t.encode("utf-8")
+        ns = len(raw) // H264_SLICE_BYTES
+        if ns == 0:
+            return None
+        nals = []
+        for i in range(ns):
+            ntype = HEVC_NAL_IDR_W_RADL if i % 8 == 0 else HEVC_NAL_TRAIL_R
+            body = _H264_SLICE_MARKER + raw[
+                i * H264_SLICE_BYTES : (i + 1) * H264_SLICE_BYTES
+            ]
+            nals.append([_hevc_nal(ntype, _h264_escape(body))])
+        return encode_mp4_hevc(
+            nals,
+            dict(
+                profile_idc=1 + int(doc_id) % 2,
+                tier=int(doc_id) % 2,
+                level_idc=levels[int(doc_id) % 3],
+                pic_width=16 * (1 + len(raw) % 40),
+                pic_height=16 * (1 + (len(raw) // 7) % 30),
+                conf_right=raw[0] % 2,
+                conf_bottom=raw[1] % 2,
+            ),
+            sync_samples=[i + 1 for i in range(ns) if i % 8 == 0],
+        )
 
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("video/mp4"))
+    return synth_payload(
+        df, encode, "video/mp4", cols=("doc_id", text_col), nullable=True
+    )
 
 
 def probe_hevc_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6163,73 +5817,63 @@ def probe_hevc_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     cross-validated against stss. One Arrow pass, zero shuffles, no
     pixel decode."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, 0, 0, None)
-                    )
-                    continue
-                v = parse_mp4(bytes(payload))
-                if v["codec"] != "hvc1":
-                    raise ValueError(f"doc {doc_id}: expected hvc1, got {v['codec']}")
-                cfg = v["hvcc"]
-                ls = cfg["length_size"]
-                payload_sum = 0
-                irap_samples = []
-                for si, sample in enumerate(v["samples"]):
-                    pos = 0
-                    while pos < len(sample):
-                        ln = int.from_bytes(sample[pos : pos + ls], "big")
-                        nal = sample[pos + ls : pos + ls + ln]
-                        if len(nal) != ln:
-                            raise ValueError(
-                                f"sample {si}: NAL length {ln} overruns the sample"
-                            )
-                        if nal[0] & 0x80:
-                            raise ValueError(
-                                f"forbidden_zero_bit in sample {si} NAL"
-                            )
-                        ntype = (nal[0] >> 1) & 0x3F
-                        if ntype not in (HEVC_NAL_TRAIL_R, HEVC_NAL_IDR_W_RADL):
-                            raise ValueError(
-                                f"unexpected NAL type {ntype} in an hvc1 sample"
-                            )
-                        body = _h264_unescape(nal[2:])
-                        if not body.startswith(_H264_SLICE_MARKER):
-                            raise ValueError(
-                                "slice body lost its marker — escape round "
-                                "trip broken"
-                            )
-                        payload_sum += sum(body)
-                        if ntype == HEVC_NAL_IDR_W_RADL:
-                            irap_samples.append(si + 1)
-                        pos += ls + ln
-                sync = v["sync_samples"] or list(range(1, v["n_samples"] + 1))
-                if irap_samples != sync:
+    def rows(doc_id, payload):
+        if payload is None:
+            yield (int(doc_id), None, None, None, None, None, 0, 0, None)
+            return
+        v = parse_mp4(payload)
+        if v["codec"] != "hvc1":
+            raise ValueError(f"doc {doc_id}: expected hvc1, got {v['codec']}")
+        cfg = v["hvcc"]
+        ls = cfg["length_size"]
+        payload_sum = 0
+        irap_samples = []
+        for si, sample in enumerate(v["samples"]):
+            pos = 0
+            while pos < len(sample):
+                ln = int.from_bytes(sample[pos : pos + ls], "big")
+                nal = sample[pos + ls : pos + ls + ln]
+                if len(nal) != ln:
                     raise ValueError(
-                        f"stss {sync} disagrees with IRAP NALs {irap_samples}"
+                        f"sample {si}: NAL length {ln} overruns the sample"
                     )
-                rows.append(
-                    (
-                        int(doc_id),
-                        cfg["profile_idc"],
-                        cfg["tier"],
-                        cfg["level_idc"],
-                        v["width"],
-                        v["height"],
-                        v["n_samples"],
-                        len(sync),
-                        payload_sum,
+                if nal[0] & 0x80:
+                    raise ValueError(
+                        f"forbidden_zero_bit in sample {si} NAL"
                     )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in HEVC_FEATURE_SCHEMA.fields]
+                ntype = (nal[0] >> 1) & 0x3F
+                if ntype not in (HEVC_NAL_TRAIL_R, HEVC_NAL_IDR_W_RADL):
+                    raise ValueError(
+                        f"unexpected NAL type {ntype} in an hvc1 sample"
+                    )
+                body = _h264_unescape(nal[2:])
+                if not body.startswith(_H264_SLICE_MARKER):
+                    raise ValueError(
+                        "slice body lost its marker — escape round "
+                        "trip broken"
+                    )
+                payload_sum += sum(body)
+                if ntype == HEVC_NAL_IDR_W_RADL:
+                    irap_samples.append(si + 1)
+                pos += ls + ln
+        sync = v["sync_samples"] or list(range(1, v["n_samples"] + 1))
+        if irap_samples != sync:
+            raise ValueError(
+                f"stss {sync} disagrees with IRAP NALs {irap_samples}"
             )
+        yield (
+            int(doc_id),
+            cfg["profile_idc"],
+            cfg["tier"],
+            cfg["level_idc"],
+            v["width"],
+            v["height"],
+            v["n_samples"],
+            len(sync),
+            payload_sum,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, HEVC_FEATURE_SCHEMA)
+    return map_payload(df, HEVC_FEATURE_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -6326,7 +5970,7 @@ def probe_mp3(payload: bytes) -> dict:
         id3_ver = payload[3]
         if id3_ver not in (3, 4):
             # v2.2 has 3-byte frame ids/sizes — a different grammar;
-            # gate loudly per the module convention (ADVICE r10)
+            # an unimplemented grammar raises, it is never guessed at
             raise ValueError(f"only ID3v2.3/v2.4 implemented (got v2.{id3_ver})")
         flags = payload[5]
         ss = payload[6:10]
@@ -6449,49 +6093,33 @@ MP3_PROBE_SCHEMA = StructType(
 
 def with_mp3_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach one synthetic MP3 stream per row (Arrow-batched)."""
-    from pyspark.sql.types import BinaryType
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_mp3(int(i), t) for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("audio/mpeg"))
+    return synth_payload(
+        df, lambda i, t: encode_mp3(int(i), t), "audio/mpeg", cols=("doc_id", text_col)
+    )
 
 
 def probe_mp3_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Run the routing walk over every payload; one Arrow map pass."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = probe_mp3(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        p["n_frames"],
-                        p["sample_rate"],
-                        p["channel_mode"],
-                        int(p["has_crc"]),
-                        p["total_samples"],
-                        p["duration_ms"],
-                        p["sum_frame_bytes"],
-                        p["kbps_min"],
-                        p["kbps_max"],
-                        int(p["is_vbr"]),
-                        p["id3_title"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MP3_PROBE_SCHEMA.fields])
+    def rows(doc_id, payload):
+        p = probe_mp3(payload)
+        yield (
+            int(doc_id),
+            p["n_frames"],
+            p["sample_rate"],
+            p["channel_mode"],
+            int(p["has_crc"]),
+            p["total_samples"],
+            p["duration_ms"],
+            p["sum_frame_bytes"],
+            p["kbps_min"],
+            p["kbps_max"],
+            int(p["is_vbr"]),
+            p["id3_title"],
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, MP3_PROBE_SCHEMA)
+    return map_payload(df, MP3_PROBE_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -6688,49 +6316,32 @@ TIFF_PROBE_SCHEMA = StructType(
 
 
 def with_tiff_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    from pyspark.sql.types import BinaryType
-
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_tiff_exif(int(i), t)
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/tiff"))
+    return synth_payload(
+        df,
+        lambda i, t: encode_tiff_exif(int(i), t),
+        "image/tiff",
+        cols=("doc_id", text_col),
+    )
 
 
 def probe_tiff_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_tiff_exif(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        p["endian"],
-                        p["n_ifds"],
-                        p["n_ifd0_entries"],
-                        p["width"],
-                        p["height"],
-                        p["orientation"],
-                        p["make"],
-                        p["n_exif_entries"],
-                        p["iso"],
-                        p["datetime_original"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_PROBE_SCHEMA.fields]
-            )
+    def rows(doc_id, payload):
+        p = parse_tiff_exif(payload)
+        yield (
+            int(doc_id),
+            p["endian"],
+            p["n_ifds"],
+            p["n_ifd0_entries"],
+            p["width"],
+            p["height"],
+            p["orientation"],
+            p["make"],
+            p["n_exif_entries"],
+            p["iso"],
+            p["datetime_original"],
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, TIFF_PROBE_SCHEMA)
+    return map_payload(df, TIFF_PROBE_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -7011,21 +6622,13 @@ TIFF_PIXEL_SCHEMA = StructType(
 
 
 def with_tiff_pixel_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    from pyspark.sql.types import BinaryType
-
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_tiff_pixels(int(i), t)
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/tiff"))
+    return synth_payload(
+        df,
+        lambda i, t: encode_tiff_pixels(int(i), t),
+        "image/tiff",
+        cols=("doc_id", text_col),
+        nullable=True,
+    )
 
 
 def decode_tiff_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -7035,56 +6638,46 @@ def decode_tiff_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (docs shorter than one row) yield the 0-geometry row with NULL
     stats. Map-only Arrow pipeline."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                i = int(doc_id)
-                rgb = bool(i % 2)
-                if payload is None:
-                    rows.append(
-                        (
-                            i,
-                            "rgb" if rgb else "gray",
-                            {1: "none", 8: "deflate", 32773: "packbits"}[
-                                TIFF_COMPRESSIONS[i % 3]
-                            ],
-                            TIFF_RGB_COLS if rgb else TIFF_GRAY_COLS,
-                            0, 0, 1 + i % 5, 0, 0,
-                            None, None, None, None, None, None, None,
-                        )
-                    )
-                    continue
-                v = parse_tiff_pixels(bytes(payload))
-                px = v["samples"].astype(np.int64)
-                h, spp = v["height"], v["spp"]
-                weights = 1 + np.arange(h, dtype=np.int64)
-                chan = px.reshape(h, v["width"], spp).sum(axis=(0, 1))
-                rows.append(
-                    (
-                        i,
-                        v["mode"],
-                        v["compression"],
-                        v["width"],
-                        h,
-                        v["n_strips"],
-                        v["rows_per_strip"],
-                        h * v["width"],
-                        h * v["width"] * spp,
-                        float(px.sum()) / px.size,
-                        int(px.max()),
-                        int(px.min()),
-                        int((px.sum(axis=1) * weights).sum()),
-                        int(chan[0]),
-                        int(chan[1]) if spp == 3 else None,
-                        int(chan[2]) if spp == 3 else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_PIXEL_SCHEMA.fields]
+    def rows(doc_id, payload):
+        i = int(doc_id)
+        rgb = bool(i % 2)
+        if payload is None:
+            yield (
+                i,
+                "rgb" if rgb else "gray",
+                {1: "none", 8: "deflate", 32773: "packbits"}[
+                    TIFF_COMPRESSIONS[i % 3]
+                ],
+                TIFF_RGB_COLS if rgb else TIFF_GRAY_COLS,
+                0, 0, 1 + i % 5, 0, 0,
+                None, None, None, None, None, None, None,
             )
+            return
+        v = parse_tiff_pixels(payload)
+        px = v["samples"].astype(np.int64)
+        h, spp = v["height"], v["spp"]
+        weights = 1 + np.arange(h, dtype=np.int64)
+        chan = px.reshape(h, v["width"], spp).sum(axis=(0, 1))
+        yield (
+            i,
+            v["mode"],
+            v["compression"],
+            v["width"],
+            h,
+            v["n_strips"],
+            v["rows_per_strip"],
+            h * v["width"],
+            h * v["width"] * spp,
+            float(px.sum()) / px.size,
+            int(px.max()),
+            int(px.min()),
+            int((px.sum(axis=1) * weights).sum()),
+            int(chan[0]),
+            int(chan[1]) if spp == 3 else None,
+            int(chan[2]) if spp == 3 else None,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, TIFF_PIXEL_SCHEMA)
+    return map_payload(df, TIFF_PIXEL_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -7251,44 +6844,25 @@ WEBP_PROBE_SCHEMA = StructType(
 
 
 def with_webp_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    from pyspark.sql.types import BinaryType
-
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_webp(int(i), t) for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/webp"))
+    return synth_payload(
+        df, lambda i, t: encode_webp(int(i), t), "image/webp", cols=("doc_id", text_col)
+    )
 
 
 def probe_webp_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_webp(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        p["form"],
-                        p["width"],
-                        p["height"],
-                        int(p["has_alpha"]),
-                        p["n_chunks"],
-                        int(p["has_exif"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WEBP_PROBE_SCHEMA.fields]
-            )
+    def rows(doc_id, payload):
+        p = parse_webp(payload)
+        yield (
+            int(doc_id),
+            p["form"],
+            p["width"],
+            p["height"],
+            int(p["has_alpha"]),
+            p["n_chunks"],
+            int(p["has_exif"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, WEBP_PROBE_SCHEMA)
+    return map_payload(df, WEBP_PROBE_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -7557,45 +7131,26 @@ WEBM_PROBE_SCHEMA = StructType(
 
 
 def with_webm_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    from pyspark.sql.types import BinaryType
-
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_webm(int(i), t) for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("video/webm"))
+    return synth_payload(
+        df, lambda i, t: encode_webm(int(i), t), "video/webm", cols=("doc_id", text_col)
+    )
 
 
 def probe_webm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_webm(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        p["doc_type"],
-                        p["duration_ms"],
-                        p["n_tracks"],
-                        p["video_codec"],
-                        p["audio_codec"],
-                        p["width"],
-                        p["height"],
-                        p["channels"],
-                        p["n_clusters"],
-                        p["n_blocks"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WEBM_PROBE_SCHEMA.fields]
-            )
+    def rows(doc_id, payload):
+        p = parse_webm(payload)
+        yield (
+            int(doc_id),
+            p["doc_type"],
+            p["duration_ms"],
+            p["n_tracks"],
+            p["video_codec"],
+            p["audio_codec"],
+            p["width"],
+            p["height"],
+            p["channels"],
+            p["n_clusters"],
+            p["n_blocks"],
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, WEBM_PROBE_SCHEMA)
+    return map_payload(df, WEBM_PROBE_SCHEMA, rows, id_col)

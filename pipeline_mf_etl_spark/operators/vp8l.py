@@ -927,17 +927,15 @@ def parse_webp_lossless(payload: bytes) -> dict:
 # oracle replays every output column from the characters
 # ---------------------------------------------------------------------------
 
-import pandas as pd  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.types import (  # noqa: E402
-    BinaryType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pipeline_mf_etl_spark.payload import map_payload, synth_payload  # noqa: E402
 
 VP8L_FEATURE_SCHEMA = StructType(
     [
@@ -962,19 +960,13 @@ _VARIANT_NAMES = ("none", "subgreen", "predictor", "crosscolor", "palette")
 
 
 def with_webp_lossless_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), True)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_webp_lossless(int(i), t)
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn("mime", F.lit("image/webp"))
+    return synth_payload(
+        df,
+        lambda i, t: encode_webp_lossless(int(i), t),
+        "image/webp",
+        cols=("doc_id", text_col),
+        nullable=True,
+    )
 
 
 def decode_webp_lossless_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -984,51 +976,41 @@ def decode_webp_lossless_features(df: DataFrame, id_col: str = "doc_id") -> Data
     cache / palette metadata as READ FROM THE STREAM. NULL payloads
     (docs shorter than one pixel row) yield the 0-geometry row."""
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                i = int(doc_id)
-                variant = _VARIANT_NAMES[i % 5]
-                if payload is None:
-                    rows.append(
-                        (
-                            i,
-                            variant,
-                            VP8L_PAL_COLS if variant == "palette" else VP8L_RGB_COLS,
-                            0, 0,
-                            0 if i % 2 == 0 else 6,
-                            PALETTE_SIZES[(i // 5) % 3]
-                            if variant == "palette" else None,
-                            None, None, None, None, None, None, 0,
-                        )
-                    )
-                    continue
-                out = parse_webp_lossless(bytes(payload))
-                arr = out["pixels"].astype(np.int64)
-                h, w = out["height"], out["width"]
-                rgb = arr[..., 1:]
-                weights = 1 + np.arange(h, dtype=np.int64)
-                rows.append(
-                    (
-                        i,
-                        out["variant"],
-                        w,
-                        h,
-                        h * w,
-                        out["cache_bits"],
-                        out["palette_size"],
-                        int(arr[..., 1].sum()),
-                        int(arr[..., 2].sum()),
-                        int(arr[..., 3].sum()),
-                        int(rgb.max()),
-                        int(rgb.min()),
-                        int((rgb.sum(axis=(1, 2)) * weights).sum()),
-                        int((arr[..., 0] == 255).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VP8L_FEATURE_SCHEMA.fields]
+    def rows(doc_id, payload):
+        i = int(doc_id)
+        variant = _VARIANT_NAMES[i % 5]
+        if payload is None:
+            yield (
+                i,
+                variant,
+                VP8L_PAL_COLS if variant == "palette" else VP8L_RGB_COLS,
+                0, 0,
+                0 if i % 2 == 0 else 6,
+                PALETTE_SIZES[(i // 5) % 3]
+                if variant == "palette" else None,
+                None, None, None, None, None, None, 0,
             )
+            return
+        out = parse_webp_lossless(payload)
+        arr = out["pixels"].astype(np.int64)
+        h, w = out["height"], out["width"]
+        rgb = arr[..., 1:]
+        weights = 1 + np.arange(h, dtype=np.int64)
+        yield (
+            i,
+            out["variant"],
+            w,
+            h,
+            h * w,
+            out["cache_bits"],
+            out["palette_size"],
+            int(arr[..., 1].sum()),
+            int(arr[..., 2].sum()),
+            int(arr[..., 3].sum()),
+            int(rgb.max()),
+            int(rgb.min()),
+            int((rgb.sum(axis=(1, 2)) * weights).sum()),
+            int((arr[..., 0] == 255).sum()),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, VP8L_FEATURE_SCHEMA)
+    return map_payload(df, VP8L_FEATURE_SCHEMA, rows, id_col)

@@ -29,39 +29,63 @@ def _r(col, n=6):
     "a1_grouped_stats",
     oracle="""
     SELECT l_returnflag, l_linestatus,
-           ROUND(SUM(l_quantity), 2)                                   AS sum_qty,
-           ROUND(SUM(l_extendedprice), 2)                              AS sum_base_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)           AS sum_disc_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           ROUND(AVG(l_quantity), 6)                                   AS avg_qty,
-           ROUND(AVG(l_extendedprice), 6)                              AS avg_price,
-           ROUND(AVG(l_discount), 6)                                   AS avg_disc,
+           ROUND(SUM(q), 2)::DOUBLE                                    AS sum_qty,
+           ROUND(SUM(p), 2)::DOUBLE                                    AS sum_base_price,
+           ROUND(SUM(p * (1 - d)), 2)::DOUBLE                          AS sum_disc_price,
+           ROUND(SUM(p * (1 - d) * (1 + t)), 2)::DOUBLE                AS sum_charge,
+           ROUND(SUM(q)::DOUBLE / COUNT(q), 6)                         AS avg_qty,
+           ROUND(SUM(p)::DOUBLE / COUNT(p), 6)                         AS avg_price,
+           ROUND(SUM(d)::DOUBLE / COUNT(d), 6)                         AS avg_disc,
            ROUND(QUANTILE_CONT(l_quantity, 0.5), 6)                    AS med_qty,
-           ROUND(STDDEV_POP(l_discount), 6)                            AS std_disc,
+           ROUND(SQRT((COUNT(d) * SUM(d * d) - SUM(d) * SUM(d))::DOUBLE
+                      / (COUNT(d) * COUNT(d))), 6)                     AS std_disc,
            COUNT(*)                                                    AS count_order
-    FROM lineitem
+    FROM (SELECT *, l_quantity::DECIMAL(12,2) AS q,
+                 l_extendedprice::DECIMAL(12,2) AS p,
+                 l_discount::DECIMAL(3,2) AS d, l_tax::DECIMAL(3,2) AS t
+          FROM lineitem)
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
 )
 def a1_grouped_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped stats core (A1): count/sum/avg/exact-median/stddev_pop."""
+    """Grouped stats core (A1): count/sum/avg/exact-median/stddev_pop.
+
+    The money columns hold 2-dp values, so every sum accumulates and
+    rounds exactly in DECIMAL, independent of row order and task split
+    (a double sum accumulates in task order, and its last-ulp drift
+    can cross a rounding boundary). AVG divides the exact sum, as a
+    double, by the count; STDDEV_POP comes from the exact n, Σx and
+    Σx²: ``sqrt((n·Σx² − (Σx)²) / n²)``. The oracle computes the same
+    formulas in DuckDB DECIMALs."""
     li = load_table(spark, sf_dir, "lineitem")
+    one = F.lit(1).cast("decimal(3,2)")
+    qty = F.col("l_quantity").cast("decimal(12,2)")
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc = F.col("l_discount").cast("decimal(3,2)")
+    tax = F.col("l_tax").cast("decimal(3,2)")
+
+    def sum2(col):
+        return _r(F.sum(col), 2).cast("double")
+
+    def avg(col):
+        return _r(F.sum(col).cast("double") / F.count(col))
+
+    n = F.count(disc)
+    var_num = (n * F.sum(disc * disc) - F.sum(disc) * F.sum(disc)).cast("double")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _r(F.sum("l_quantity"), 2).alias("sum_qty"),
-            _r(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            _r(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            _r(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))), 2
-            ).alias("sum_charge"),
-            _r(F.avg("l_quantity")).alias("avg_qty"),
-            _r(F.avg("l_extendedprice")).alias("avg_price"),
-            _r(F.avg("l_discount")).alias("avg_disc"),
+            sum2(qty).alias("sum_qty"),
+            sum2(price).alias("sum_base_price"),
+            sum2(price * (one - disc)).alias("sum_disc_price"),
+            sum2(price * (one - disc) * (one + tax)).alias("sum_charge"),
+            avg(qty).alias("avg_qty"),
+            avg(price).alias("avg_price"),
+            avg(disc).alias("avg_disc"),
             _r(F.expr("percentile(l_quantity, 0.5)")).alias("med_qty"),
-            _r(F.stddev_pop("l_discount")).alias("std_disc"),
+            _r(F.sqrt(var_num / (n * n))).alias("std_disc"),
             F.count("*").alias("count_order"),
         )
     )

@@ -18,7 +18,8 @@ Walks the REAL container structure:
 
 Spark layer: deterministic per-document synthesis (multi-record,
 multi-block, union branches exercised) + one Arrow map extraction pass.
-Query ``c4_avro_extract`` joins the r11-pending set.
+Query ``c4_avro_extract`` runs the extraction against a DuckDB oracle
+that recomputes every column from the characters.
 
 Reference parity: none — engine ADDITION for the data-engineering
 ingestion surface.
@@ -30,17 +31,15 @@ import hashlib
 import json
 import zlib
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pipeline_mf_etl_spark.payload import map_payload, synth_payload
 
 _MAGIC = b"Obj\x01"
 
@@ -314,20 +313,11 @@ def synth_avro(doc_id: int, text: str, lang: str) -> bytes:
 
 
 def with_avro_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                synth_avro(int(i), t, lg)
-                for i, t, lg in zip(pdf["doc_id"], pdf[text_col], pdf["lang"])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/avro")
+    return synth_payload(
+        df,
+        lambda i, t, lg: synth_avro(int(i), t, lg),
+        "application/avro",
+        cols=("doc_id", text_col, "lang"),
     )
 
 
@@ -336,24 +326,18 @@ def extract_avro_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     verification) and reassemble the text in seq order — one Arrow
     map pass."""
 
-    def extract(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_avro(bytes(payload))
-                recs = sorted(p["records"], key=lambda r: r["seq"])
-                if any(r["doc_id"] != doc_id for r in recs):
-                    raise ValueError(f"container {doc_id}: foreign doc_id inside")
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(recs),
-                        p["n_blocks"],
-                        p["codec"],
-                        "".join(r["chunk"] for r in recs),
-                        sum(1 for r in recs if r["lang"] is None),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AVRO_DOC_SCHEMA.fields])
+    def rows(doc_id, payload):
+        p = parse_avro(payload)
+        recs = sorted(p["records"], key=lambda r: r["seq"])
+        if any(r["doc_id"] != doc_id for r in recs):
+            raise ValueError(f"container {doc_id}: foreign doc_id inside")
+        yield (
+            int(doc_id),
+            len(recs),
+            p["n_blocks"],
+            p["codec"],
+            "".join(r["chunk"] for r in recs),
+            sum(1 for r in recs if r["lang"] is None),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(extract, AVRO_DOC_SCHEMA)
+    return map_payload(df, AVRO_DOC_SCHEMA, rows, id_col)

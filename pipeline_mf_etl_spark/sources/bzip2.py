@@ -31,6 +31,7 @@ from __future__ import annotations
 import numpy as np
 
 from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+from pipeline_mf_etl_spark.crc import crc_table, crc_update
 
 _BLOCK_MAGIC = 0x314159265359  # pi
 _FOOTER_MAGIC = 0x177245385090  # sqrt(pi)
@@ -44,26 +45,11 @@ _GROUP_SIZE = 50  # symbols per Huffman group selector
 # ---------------------------------------------------------------------------
 
 
-def _crc_table() -> list[int]:
-    tbl = []
-    for i in range(256):
-        c = i << 24
-        for _ in range(8):
-            c = ((c << 1) ^ 0x04C11DB7) if c & 0x80000000 else (c << 1)
-            c &= 0xFFFFFFFF
-        tbl.append(c)
-    return tbl
-
-
-_CRC_TABLE = _crc_table()
+_CRC32 = crc_table(0x04C11DB7, 32)
 
 
 def bz2_crc32(data: bytes) -> int:
-    crc = 0xFFFFFFFF
-    tbl = _CRC_TABLE
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ tbl[((crc >> 24) ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
+    return crc_update(_CRC32, 0xFFFFFFFF, data) ^ 0xFFFFFFFF
 
 
 # ---------------------------------------------------------------------------
@@ -693,43 +679,30 @@ def with_bzip2_payload(df, text_col: str = "text"):
     multistream layout at document grain), level digit cycling
     ``1 + doc_id % 9`` so every header shape carries hash signal.
     Map-only Arrow pass."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pipeline_mf_etl_spark.payload import synth_payload
 
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(i, t):
+        return encode_bzip2_multistream(
+            [(t + "\n").encode("utf-8")] * (2 + int(i) % 2),
+            level=1 + int(i) % 9,
+            block_bytes=BZ2_BLOCK_BYTES,
+        )[0]
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_bzip2_multistream(
-                    [(t + "\n").encode("utf-8")] * (2 + int(i) % 2),
-                    level=1 + int(i) % 9,
-                    block_bytes=BZ2_BLOCK_BYTES,
-                )[0]
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/x-bzip2")
-    )
+    return synth_payload(df, encode, "application/x-bzip2", cols=("doc_id", text_col))
 
 
 def extract_bzip2_documents(df, id_col: str = "doc_id"):
     """Decode each multistream payload through the fully verified walk
     (per-block and per-stream CRCs) and emit stream/block accounting +
     content integrity. Map-only Arrow pass."""
-    import hashlib
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType,
         StringType,
         StructField,
         StructType,
     )
+
+    from pipeline_mf_etl_spark.payload import content_digest, map_payload
 
     schema = StructType(
         [
@@ -743,23 +716,14 @@ def extract_bzip2_documents(df, id_col: str = "doc_id"):
         ]
     )
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                out = decode_bzip2_stream(bytes(payload))
-                content = out["content"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        out["n_streams"],
-                        out["n_blocks"],
-                        out["levels"][0],
-                        len(content),
-                        hashlib.md5(content).hexdigest(),
-                        content.decode("utf-8").split("\n", 1)[0],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows(doc_id, payload):
+        out = decode_bzip2_stream(payload)
+        yield (
+            int(doc_id),
+            out["n_streams"],
+            out["n_blocks"],
+            out["levels"][0],
+            *content_digest(out["content"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, schema)
+    return map_payload(df, schema, rows, id_col)

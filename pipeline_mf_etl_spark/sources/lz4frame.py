@@ -30,17 +30,16 @@ violations, every checksum/size mismatch.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pipeline_mf_etl_spark.payload import content_digest, map_payload, synth_payload
 
 LZ4_MAGIC = 0x184D2204
 
@@ -362,54 +361,31 @@ def synth_lz4_content(text: str) -> bytes:
 
 
 def with_lz4_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(i, t):
+        return encode_lz4_frame(
+            synth_lz4_content(t),
+            block_size=LZ4_BLOCK_SIZE,
+            block_checksum=bool(int(i) % 2),
+            content_checksum=bool(int(i) % 3),
+            with_content_size=True,
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_lz4_frame(
-                    synth_lz4_content(t),
-                    block_size=LZ4_BLOCK_SIZE,
-                    block_checksum=bool(int(i) % 2),
-                    content_checksum=bool(int(i) % 3),
-                    with_content_size=True,
-                )
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/x-lz4")
-    )
+    return synth_payload(df, encode, "application/x-lz4", cols=("doc_id", text_col))
 
 
 def extract_lz4_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode each LZ4 frame through the verified path and emit frame
     accounting + content integrity columns. Map-only Arrow pass."""
-    import hashlib
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                out = decode_lz4_frame(bytes(payload))
-                content = out["content"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        out["n_blocks"],
-                        out["n_blocks"] - out["n_stored_blocks"],
-                        out["had_block_checksums"],
-                        out["had_content_checksum"],
-                        len(content),
-                        hashlib.md5(content).hexdigest(),
-                        content.decode("utf-8").split("\n", 1)[0],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in LZ4_DOC_SCHEMA.fields]
-            )
+    def rows(doc_id, payload):
+        out = decode_lz4_frame(payload)
+        yield (
+            int(doc_id),
+            out["n_blocks"],
+            out["n_blocks"] - out["n_stored_blocks"],
+            out["had_block_checksums"],
+            out["had_content_checksum"],
+            *content_digest(out["content"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, LZ4_DOC_SCHEMA)
+    return map_payload(df, LZ4_DOC_SCHEMA, rows, id_col)

@@ -29,7 +29,8 @@ are byte-stable and the oracle recomputes extraction results from the
 characters.
 
 Reference parity: none — engine ADDITION for the LLM-training-data
-surface. Query ``c3_pdf_extract`` joins the r11-pending set.
+surface. Query ``c3_pdf_extract`` runs the extraction against a DuckDB
+oracle that recomputes every column from the characters.
 """
 
 from __future__ import annotations
@@ -37,17 +38,15 @@ from __future__ import annotations
 import re
 import zlib
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pipeline_mf_etl_spark.payload import map_payload, synth_payload
 
 PAGE_CHARS = 80  # synthesis: characters per page
 
@@ -501,40 +500,26 @@ PDF_DOC_SCHEMA = StructType(
 
 
 def with_pdf_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                synth_pdf(int(i), t) for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/pdf")
+    return synth_payload(
+        df,
+        lambda i, t: synth_pdf(int(i), t),
+        "application/pdf",
+        cols=("doc_id", text_col),
     )
 
 
 def extract_pdf_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Full structure walk + text extraction per PDF — one Arrow pass."""
 
-    def extract(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                p = parse_pdf(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        p["n_pages"],
-                        p["n_objects"],
-                        p["version"],
-                        "".join(p["page_texts"]),
-                        len(p["page_texts"][0]) if p["page_texts"] else 0,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PDF_DOC_SCHEMA.fields])
+    def rows(doc_id, payload):
+        p = parse_pdf(payload)
+        yield (
+            int(doc_id),
+            p["n_pages"],
+            p["n_objects"],
+            p["version"],
+            "".join(p["page_texts"]),
+            len(p["page_texts"][0]) if p["page_texts"] else 0,
+        )
 
-    return df.select(id_col, "payload").mapInPandas(extract, PDF_DOC_SCHEMA)
+    return map_payload(df, PDF_DOC_SCHEMA, rows, id_col)

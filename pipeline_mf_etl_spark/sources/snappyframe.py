@@ -22,11 +22,8 @@ shards ship Snappy. Implements the REAL public formats:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -34,23 +31,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.crc import crc_table, crc_update
+from pipeline_mf_etl_spark.payload import content_digest, map_payload, synth_payload
+
 # ---------------------------------------------------------------------------
-# CRC-32C (Castagnoli) — reflected polynomial 0x82F63B78
+# CRC-32C (Castagnoli) — reflected polynomial 0x1EDC6F41
 # ---------------------------------------------------------------------------
 
-_CRC32C_TABLE = []
-for _n in range(256):
-    _c = _n
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
-    _CRC32C_TABLE.append(_c)
+_CRC32C = crc_table(0x1EDC6F41, 32, reflected=True)
 
 
 def crc32c(data: bytes) -> int:
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = _CRC32C_TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
+    return crc_update(_CRC32C, 0xFFFFFFFF, data) ^ 0xFFFFFFFF
 
 
 def _mask_crc(crc: int) -> int:
@@ -287,25 +279,16 @@ SNAPPY_DOC_SCHEMA = StructType(
 
 
 def with_snappy_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(i, t):
+        return encode_snappy_frame(
+            ((t + "\n") * SNAPPY_REPEATS).encode("utf-8"),
+            chunk_size=SNAPPY_CHUNK_SIZE,
+            with_padding=int(i) % 7 == 0,
+            force_uncompressed=int(i) % 5 == 0,
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_snappy_frame(
-                    ((t + "\n") * SNAPPY_REPEATS).encode("utf-8"),
-                    chunk_size=SNAPPY_CHUNK_SIZE,
-                    with_padding=int(i) % 7 == 0,
-                    force_uncompressed=int(i) % 5 == 0,
-                )
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/x-snappy-framed")
+    return synth_payload(
+        df, encode, "application/x-snappy-framed", cols=("doc_id", text_col)
     )
 
 
@@ -321,29 +304,17 @@ def extract_snappy_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     certifies the decode, matching the oracle's doc_id arithmetic only
     because the synthesis forces exactly those docs raw (and the x3
     repetition makes every unforced doc compress at least one chunk)."""
-    import hashlib
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                out = decode_snappy_frame(bytes(payload))
-                content = out["content"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        out["n_chunks"],
-                        out["n_uncompressed_chunks"],
-                        out["n_skipped_chunks"],
-                        len(content),
-                        hashlib.md5(content).hexdigest(),
-                        content.decode("utf-8").split("\n", 1)[0],
-                        out["n_chunks"] > 0
-                        and out["n_uncompressed_chunks"] == out["n_chunks"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SNAPPY_DOC_SCHEMA.fields]
-            )
+    def rows(doc_id, payload):
+        out = decode_snappy_frame(payload)
+        yield (
+            int(doc_id),
+            out["n_chunks"],
+            out["n_uncompressed_chunks"],
+            out["n_skipped_chunks"],
+            *content_digest(out["content"]),
+            out["n_chunks"] > 0
+            and out["n_uncompressed_chunks"] == out["n_chunks"],
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, SNAPPY_DOC_SCHEMA)
+    return map_payload(df, SNAPPY_DOC_SCHEMA, rows, id_col)

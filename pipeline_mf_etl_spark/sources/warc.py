@@ -31,28 +31,24 @@ only (ingest/read_txt.py). WARC is an engine ADDITION for the
 LLM-training-data pipeline surface (the upstream of the documents
 table that every dedup/quality/text query consumes).
 
-Registration note: the r10 certification window was already full with
-the r9-verdict rotation when this landed, so the query layer
-(``c1_warc_extract``) registers in round 11; this module ships with
-library tests (tests/test_warc.py) in round 10.
+Query ``c1_warc_extract`` runs the extraction against a DuckDB oracle
+that recomputes every column from the characters; tests/test_warc.py
+covers the library layer (member split, record walk, HTTP parse).
 """
 
 from __future__ import annotations
 
 import zlib
 
-import numpy as np  # noqa: F401  (kept: synthesis siblings import via this module)
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pipeline_mf_etl_spark.payload import map_payload, synth_payload
 
 CRLF = b"\r\n"
 
@@ -480,20 +476,12 @@ def with_warc_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach one synthetic .warc.gz capture per row (Arrow-batched,
     map-only). The synthesis is deterministic in (doc_id, text) so a
     SQL oracle can recompute every downstream stat from the characters."""
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                synth_warc_gz(int(i), t)
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/warc+gzip")
+    return synth_payload(
+        df,
+        lambda i, t: synth_warc_gz(int(i), t),
+        "application/warc+gzip",
+        cols=("doc_id", text_col),
     )
 
 
@@ -509,38 +497,30 @@ def extract_warc_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     accounting is visible (dropping here would hide curation counts).
     """
 
-    def extract(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                members = split_gzip_members(bytes(payload))
-                records = [r for m in members for r in parse_warc(m)]
-                responses = [r for r in records if r["type"] == "response"]
-                if len(responses) != 1:
-                    raise ValueError(
-                        f"doc {doc_id}: expected exactly one response record, "
-                        f"found {len(responses)}"
-                    )
-                resp = responses[0]
-                lower = {k.lower(): v for k, v in resp["headers"].items()}
-                http = parse_http_response(resp["payload"])
-                rows.append(
-                    (
-                        int(doc_id),
-                        lower.get("warc-target-uri"),
-                        lower.get("warc-date"),
-                        http["status"],
-                        http["content_type"],
-                        len(members),
-                        len(records),
-                        sum(1 for r in records if r["type"] == "request"),
-                        len(responses),
-                        http["body"].decode("utf-8"),
-                        len(http["body"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_DOC_SCHEMA.fields]
+    def rows(doc_id, payload):
+        members = split_gzip_members(payload)
+        records = [r for m in members for r in parse_warc(m)]
+        responses = [r for r in records if r["type"] == "response"]
+        if len(responses) != 1:
+            raise ValueError(
+                f"doc {doc_id}: expected exactly one response record, "
+                f"found {len(responses)}"
             )
+        resp = responses[0]
+        lower = {k.lower(): v for k, v in resp["headers"].items()}
+        http = parse_http_response(resp["payload"])
+        yield (
+            int(doc_id),
+            lower.get("warc-target-uri"),
+            lower.get("warc-date"),
+            http["status"],
+            http["content_type"],
+            len(members),
+            len(records),
+            sum(1 for r in records if r["type"] == "request"),
+            len(responses),
+            http["body"].decode("utf-8"),
+            len(http["body"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(extract, WARC_DOC_SCHEMA)
+    return map_payload(df, WARC_DOC_SCHEMA, rows, id_col)

@@ -26,6 +26,8 @@ from __future__ import annotations
 import hashlib
 import zlib
 
+from pipeline_mf_etl_spark.crc import crc_table, crc_update
+
 _XZ_MAGIC = b"\xfd7zXZ\x00"
 _XZ_FOOTER_MAGIC = b"YZ"
 _FILTER_LZMA2 = 0x21
@@ -38,26 +40,11 @@ _CHECK_NAMES = {0x00: "none", 0x01: "crc32", 0x04: "crc64", 0x0A: "sha256"}
 # ---------------------------------------------------------------------------
 
 
-def _crc64_table() -> list[int]:
-    poly = 0xC96C5795D7870F42  # reflected 0x42F0E1EBA9EA3693
-    tbl = []
-    for i in range(256):
-        c = i
-        for _ in range(8):
-            c = (c >> 1) ^ poly if c & 1 else c >> 1
-        tbl.append(c)
-    return tbl
-
-
-_CRC64_TABLE = _crc64_table()
+_CRC64 = crc_table(0x42F0E1EBA9EA3693, 64, reflected=True)
 
 
 def xz_crc64(data: bytes, crc: int = 0) -> int:
-    crc ^= 0xFFFFFFFFFFFFFFFF
-    tbl = _CRC64_TABLE
-    for b in data:
-        crc = (crc >> 8) ^ tbl[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFFFFFFFFFF
+    return crc_update(_CRC64, crc ^ 0xFFFFFFFFFFFFFFFF, data) ^ 0xFFFFFFFFFFFFFFFF
 
 
 def _varint(data: bytes, pos: int) -> tuple[int, int]:
@@ -209,7 +196,8 @@ def _lzma_decode_chunk(
     ``dict_base`` is the output offset of the last dictionary reset:
     the spec's pos_state/lit_state position and all match-distance
     bounds are relative to it, NOT to the block-global ``len(out)``
-    (ADVICE r13: a spec-valid mid-block dict reset decoded garbage)."""
+    (measured from the block start, a spec-valid mid-block dictionary
+    reset decodes garbage)."""
     pb_mask = (1 << st.pb) - 1
     lp_mask = (1 << st.lp) - 1
     lc = st.lc
@@ -554,52 +542,40 @@ def with_xz_payload(df, text_col: str = "text"):
     signal. Map-only Arrow pass."""
     import lzma
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pipeline_mf_etl_spark.payload import synth_payload
 
     checks = {
         "crc32": lzma.CHECK_CRC32,
         "crc64": lzma.CHECK_CRC64,
         "sha256": lzma.CHECK_SHA256,
     }
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                b"".join(
-                    lzma.compress(
-                        (t + "\n").encode("utf-8"),
-                        format=lzma.FORMAT_XZ,
-                        check=checks[_XZ_CHECKS[int(i) % 3]],
-                        preset=1,
-                    )
-                    for _ in range(1 + int(i) % 2)
-                )
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
+    def encode(i, t):
+        return b"".join(
+            lzma.compress(
+                (t + "\n").encode("utf-8"),
+                format=lzma.FORMAT_XZ,
+                check=checks[_XZ_CHECKS[int(i) % 3]],
+                preset=1,
+            )
+            for _ in range(1 + int(i) % 2)
+        )
 
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/x-xz")
-    )
+    return synth_payload(df, encode, "application/x-xz", cols=("doc_id", text_col))
 
 
 def extract_xz_documents(df, id_col: str = "doc_id"):
     """Decode each multistream .xz payload through the full verified
     walk (block checks, index, footer) and emit stream/block accounting
     + content integrity. Map-only Arrow pass."""
-    import hashlib
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType,
         StringType,
         StructField,
         StructType,
     )
+
+    from pipeline_mf_etl_spark.payload import content_digest, map_payload
 
     schema = StructType(
         [
@@ -613,23 +589,14 @@ def extract_xz_documents(df, id_col: str = "doc_id"):
         ]
     )
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                out = decode_xz_stream(bytes(payload))
-                content = out["content"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        out["n_streams"],
-                        out["n_blocks"],
-                        out["checks"][0],
-                        len(content),
-                        hashlib.md5(content).hexdigest(),
-                        content.decode("utf-8").split("\n", 1)[0],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def rows(doc_id, payload):
+        out = decode_xz_stream(payload)
+        yield (
+            int(doc_id),
+            out["n_streams"],
+            out["n_blocks"],
+            out["checks"][0],
+            *content_digest(out["content"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, schema)
+    return map_payload(df, schema, rows, id_col)

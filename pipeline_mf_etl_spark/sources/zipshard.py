@@ -19,11 +19,11 @@ library facade:
 
 The writer emits deterministic archives (fixed DOS timestamp, no extra
 fields, method per member) so synthesized shards are byte-stable and
-the future oracle can recompute extraction results from the characters.
+the oracle can recompute extraction results from the characters.
 
 Reference parity: none — engine ADDITION for the LLM-training-data
-surface. Registration note: query ``c2_zip_extract`` joins the
-r11-pending set (queries/corpus_ingest.PENDING_QUERIES).
+surface. Query ``c2_zip_extract`` runs the extraction against a DuckDB
+oracle that recomputes every column from the characters.
 """
 
 from __future__ import annotations
@@ -31,17 +31,15 @@ from __future__ import annotations
 import struct
 import zlib
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pipeline_mf_etl_spark.payload import map_payload, synth_payload
 
 _LOCAL_SIG = b"PK\x03\x04"
 _CD_SIG = b"PK\x01\x02"
@@ -214,19 +212,11 @@ def synth_zip(doc_id: int, text: str) -> bytes:
 
 
 def with_zip_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
-
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                synth_zip(int(i), t) for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/zip")
+    return synth_payload(
+        df,
+        lambda i, t: synth_zip(int(i), t),
+        "application/zip",
+        cols=("doc_id", text_col),
     )
 
 
@@ -234,27 +224,21 @@ def extract_zip_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Extract every bundle (full CRC-verified walk) and emit the
     member accounting plus the text payload — one Arrow map pass."""
 
-    def extract(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                members = parse_zip(bytes(payload))
-                by_name = {m["name"]: m for m in members}
-                text_m = by_name.get(f"doc_{doc_id}/text.txt")
-                meta_m = by_name.get(f"doc_{doc_id}/meta.json")
-                if text_m is None or meta_m is None:
-                    raise ValueError(f"doc {doc_id}: bundle missing text/meta member")
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(members),
-                        sum(1 for m in members if m["method"] == DEFLATED),
-                        sum(1 for m in members if m["method"] == STORED),
-                        sum(len(m["payload"]) for m in members),
-                        text_m["payload"].decode("utf-8"),
-                        len(meta_m["payload"]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in ZIP_DOC_SCHEMA.fields])
+    def rows(doc_id, payload):
+        members = parse_zip(payload)
+        by_name = {m["name"]: m for m in members}
+        text_m = by_name.get(f"doc_{doc_id}/text.txt")
+        meta_m = by_name.get(f"doc_{doc_id}/meta.json")
+        if text_m is None or meta_m is None:
+            raise ValueError(f"doc {doc_id}: bundle missing text/meta member")
+        yield (
+            int(doc_id),
+            len(members),
+            sum(1 for m in members if m["method"] == DEFLATED),
+            sum(1 for m in members if m["method"] == STORED),
+            sum(len(m["payload"]) for m in members),
+            text_m["payload"].decode("utf-8"),
+            len(meta_m["payload"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(extract, ZIP_DOC_SCHEMA)
+    return map_payload(df, ZIP_DOC_SCHEMA, rows, id_col)

@@ -60,11 +60,8 @@ table, every size/checksum mismatch.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -73,6 +70,7 @@ from pyspark.sql.types import (
 )
 
 from pipeline_mf_etl_spark.bitio import LsbReader, LsbWriter
+from pipeline_mf_etl_spark.payload import content_digest, map_payload, synth_payload
 
 ZSTD_MAGIC = 0xFD2FB528
 
@@ -1597,26 +1595,15 @@ ZSTD_DOC_SCHEMA = StructType(
 
 
 def with_zstd_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    fields = list(df.schema.fields)
-    schema = StructType(fields + [StructField("payload", BinaryType(), False)])
+    def encode(i, t):
+        return encode_zstd_frame(
+            ((t + "\n") * ZSTD_REPEATS).encode("utf-8"),
+            block_size=ZSTD_BLOCK_SIZE,
+            content_checksum=int(i) % 2 == 0,
+            single_segment=int(i) % 3 != 0,
+        )
 
-    def synth(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                encode_zstd_frame(
-                    ((t + "\n") * ZSTD_REPEATS).encode("utf-8"),
-                    block_size=ZSTD_BLOCK_SIZE,
-                    content_checksum=int(i) % 2 == 0,
-                    single_segment=int(i) % 3 != 0,
-                )
-                for i, t in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pdf
-
-    return df.mapInPandas(synth, schema).withColumn(
-        "mime", F.lit("application/zstd")
-    )
+    return synth_payload(df, encode, "application/zstd", cols=("doc_id", text_col))
 
 
 def extract_zstd_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1625,31 +1612,19 @@ def extract_zstd_documents(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     n_compressed_blocks is a compressor property SQL cannot replay —
     the registered query (c7) excludes it and tests/test_zstd.py
     asserts it instead."""
-    import hashlib
 
-    def feats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                out = decode_zstd_frame(bytes(payload))
-                content = out["content"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        out["n_blocks"],
-                        out["n_compressed_blocks"],
-                        out["single_segment"],
-                        out["had_checksum"],
-                        len(content),
-                        hashlib.md5(content).hexdigest(),
-                        content.decode("utf-8").split("\n", 1)[0],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ZSTD_DOC_SCHEMA.fields]
-            )
+    def rows(doc_id, payload):
+        out = decode_zstd_frame(payload)
+        yield (
+            int(doc_id),
+            out["n_blocks"],
+            out["n_compressed_blocks"],
+            out["single_segment"],
+            out["had_checksum"],
+            *content_digest(out["content"]),
+        )
 
-    return df.select(id_col, "payload").mapInPandas(feats, ZSTD_DOC_SCHEMA)
+    return map_payload(df, ZSTD_DOC_SCHEMA, rows, id_col)
 
 
 # ---------------------------------------------------------------------------

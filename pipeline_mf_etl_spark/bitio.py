@@ -17,6 +17,14 @@ than the stream has. Codec-specific framing (padding values, byte
 stuffing, exp-Golomb, rice codes, prefix-code bit order) stays in the
 codec modules as functions over these classes.
 
+Byte-aligned LEB128 varints (protobuf/TFRecord, snappy, xz, Avro) are
+one pair here too: :func:`uvarint_encode` and :func:`uvarint_decode`,
+7 bits per byte, least significant group first, high bit set on every
+byte but the last. The decoder takes the format's maximum byte length;
+running off the buffer raises one ``ValueError``. Per-format rules (a
+64-bit range check, xz's padding byte, Avro's zigzag) stay with the
+format.
+
 Every state update is O(1): bits live in a small accumulator or behind
 a bit cursor into the byte buffer, never in one big int that covers the
 whole stream, where each shift would cost O(stream) and make large
@@ -234,3 +242,29 @@ class LsbReader:
         if self.pos + nbits > self._nbits:
             raise ValueError("bitstream exhausted")
         self.pos += nbits
+
+
+def uvarint_encode(n: int) -> bytes:
+    """LEB128 bytes of the non-negative int ``n``."""
+    if n < 0:
+        raise ValueError(f"varint of negative value {n}")
+    out = bytearray()
+    while n >= 0x80:
+        out.append((n & 0x7F) | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def uvarint_decode(data: bytes, pos: int, max_len: int) -> tuple[int, int]:
+    """Read the LEB128 varint at ``data[pos]`` of at most ``max_len``
+    bytes; return ``(value, position after it)``."""
+    n = 0
+    for i in range(max_len):
+        if pos + i >= len(data):
+            raise ValueError("truncated varint")
+        b = data[pos + i]
+        n |= (b & 0x7F) << (7 * i)
+        if not b & 0x80:
+            return n, pos + i + 1
+    raise ValueError(f"varint longer than {max_len} bytes")

@@ -1,18 +1,41 @@
-"""Gaussian HMM: driver-side EM fit + broadcast distributed decode
-(SURVEY.md §2.8 M9-M11).
+"""Gaussian HMM: driver-side EM fit and a distributed decode over one
+batched kernel (SURVEY.md §2.8 M9-M11).
 
 The reference fits hmmlearn's GaussianHMM on a stacked matrix of
 per-ticker sequences (research_hmm/hmm_model.py:29-98) and decodes each
 ticker with the fitted model (research_hmm/decode.py:57-157). hmmlearn
-is not available here, so the EM/Viterbi/forward-backward core is a
-small, deterministic pure-NumPy implementation (diagonal covariance,
-log-space, seeded quantile init — no RNG in the loop).
+is not available here, so the core is a small, deterministic pure-NumPy
+implementation (diagonal covariance, log space, seeded quantile init,
+no RNG in the loop).
+
+Kernel. Series are padded into a ``[series, time, state]`` block and
+every step of a recursion runs over all series of the block at once;
+time is the only Python loop. It has three parts: ``_log_b`` (emission
+log-probabilities), ``_forward_backward`` (log α, log β and the
+log-likelihood of each series) and ``_viterbi``. The EM fit and the
+decode both go through them; there is no per-series recursion.
+
+Padding and mask invariant. A block holds its series longest first, so
+the series still running at step ``t`` are a prefix of the block
+(``_live``) and each recursion step reads and writes only that prefix.
+Past a series' end its emission log-probabilities and log α are -inf
+and its log β is 0, so its state posteriors, transition posteriors and
+(zero-padded) features contribute exactly 0 to every EM statistic, and
+its Viterbi path and posteriors are cut at its length. Per series, each
+value is the same sequence of float operations as a one-series
+recursion, so a series decodes identically whichever series share its
+block.
+
+Chunking. ``_blocks`` pads series in length order and starts a new
+block when the next one would exceed ``_BLOCK_CELLS`` padded bars
+(series × the block's longest length), so one long series pads only the
+block it heads, never a whole partition.
 
 Scale shape (same as the reference's design, SURVEY.md §7.4): the model
-is tiny (K states × D features); FIT runs on a driver-collected,
-capped sample of sequences (the reference caps everything the same
-way); DECODE is embarrassingly parallel per series via mapInPandas with
-the parameters broadcast in the closure.
+is tiny (K states × D features); FIT runs on a driver-collected, capped
+sample of sequences (the reference caps everything the same way);
+DECODE runs per partition in mapInPandas with the parameters in the
+closure.
 
 Sequence contract (research_hmm/sequence_builder.py:25-108): one series
 per key, time-ordered, sequences shorter than ``min_len`` dropped,
@@ -25,15 +48,40 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 _LOG2PI = float(np.log(2.0 * np.pi))
+# Padded bars per kernel block. A block holds a few float arrays of K
+# values per padded bar (K*K for the fit's transition posteriors), so
+# this bounds its memory whatever the series lengths.
+_BLOCK_CELLS = 1 << 16
+
+
+def _lse(a: np.ndarray, axis: int) -> np.ndarray:
+    m = a.max(axis=axis, keepdims=True)
+    return (m + np.log(np.exp(a - m).sum(axis=axis, keepdims=True))).squeeze(axis)
+
+
+def _live(lengths: np.ndarray, t_len: int) -> np.ndarray:
+    """Series of a longest-first block still running at each step."""
+    return (lengths[:, None] > np.arange(t_len)).sum(0)
+
+
+def _blocks(sequences: list[np.ndarray]):
+    """Pad non-empty ``[T_i, D]`` series into longest-first blocks.
+    Yields ``(idx, x, lengths)``: the input positions of the block's
+    series, the zero-padded ``[n, T, D]`` block and the series lengths."""
+    lengths = np.array([len(s) for s in sequences], dtype=np.int64)
+    order = np.argsort(-lengths, kind="stable")
+    i = 0
+    while i < len(order):
+        idx = order[i : i + max(1, _BLOCK_CELLS // int(lengths[order[i]]))]
+        i += len(idx)
+        lens = lengths[idx]
+        x = np.zeros((len(idx), lens[0], sequences[idx[0]].shape[1]))
+        for j, s in enumerate(idx):
+            x[j, : lens[j]] = sequences[s]
+        yield idx, x, lens
 
 
 class DiagGaussianHMM:
@@ -49,38 +97,59 @@ class DiagGaussianHMM:
         self.vars: np.ndarray | None = None
         self.loglik_path: list[float] = []
 
-    # -- emission log-probs ------------------------------------------------
-    def _log_b(self, x: np.ndarray) -> np.ndarray:
-        diff = x[:, None, :] - self.means[None, :, :]
-        return -0.5 * (
-            (diff * diff / self.vars[None, :, :]).sum(-1)
-            + np.log(self.vars).sum(-1)[None, :]
-            + x.shape[1] * _LOG2PI
+    # -- kernel: [series, time, state] blocks ------------------------------
+    def _log_b(self, x: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+        diff = x[:, :, None, :] - self.means
+        logb = -0.5 * (
+            (diff * diff / self.vars).sum(-1)
+            + np.log(self.vars).sum(-1)
+            + x.shape[-1] * _LOG2PI
         )
+        logb[np.arange(x.shape[1]) >= lengths[:, None]] = -np.inf
+        return logb
 
-    # -- forward/backward in log space ------------------------------------
-    @staticmethod
-    def _lse(a: np.ndarray, axis: int) -> np.ndarray:
-        m = a.max(axis=axis, keepdims=True)
-        return (m + np.log(np.exp(a - m).sum(axis=axis, keepdims=True))).squeeze(axis)
-
-    def _forward(self, logb: np.ndarray) -> np.ndarray:
-        t_len = logb.shape[0]
-        la = np.empty((t_len, self.k))
-        la[0] = self.log_pi + logb[0]
+    def _forward_backward(self, logb: np.ndarray, lengths: np.ndarray):
+        n, t_len, k = logb.shape
+        live = _live(lengths, t_len)
+        la = np.full((n, t_len, k), -np.inf)
+        la[:, 0] = self.log_pi + logb[:, 0]
         for t in range(1, t_len):
-            la[t] = logb[t] + self._lse(la[t - 1][:, None] + self.log_a, axis=0)
-        return la
-
-    def _backward(self, logb: np.ndarray) -> np.ndarray:
-        t_len = logb.shape[0]
-        lb = np.zeros((t_len, self.k))
+            m = live[t]
+            la[:m, t] = logb[:m, t] + _lse(la[:m, t - 1, :, None] + self.log_a, axis=1)
+        lb = np.zeros((n, t_len, k))
         for t in range(t_len - 2, -1, -1):
-            lb[t] = self._lse(self.log_a + (logb[t + 1] + lb[t + 1])[None, :], axis=1)
-        return lb
+            m = live[t + 1]
+            lb[:m, t] = _lse(self.log_a + (logb[:m, t + 1] + lb[:m, t + 1])[:, None, :], axis=2)
+        ll = _lse(la[np.arange(n), lengths - 1], axis=1)
+        return la, lb, ll
+
+    def _viterbi(self, logb: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+        n, t_len, k = logb.shape
+        live = _live(lengths, t_len)
+        delta = self.log_pi + logb[:, 0]
+        back = np.zeros((n, t_len, k), dtype="int32")
+        for t in range(1, t_len):
+            m = live[t]
+            cand = delta[:m, :, None] + self.log_a
+            back[:m, t] = cand.argmax(axis=1)
+            delta[:m] = cand.max(axis=1) + logb[:m, t]
+        path = np.zeros((n, t_len), dtype="int32")
+        path[np.arange(n), lengths - 1] = delta.argmax(axis=1)
+        for t in range(t_len - 2, -1, -1):
+            m = live[t + 1]
+            path[:m, t] = back[np.arange(m), t + 1, path[:m, t + 1]]
+        return path
 
     # -- EM ---------------------------------------------------------------
-    def fit(self, sequences: list[np.ndarray]) -> "DiagGaussianHMM":
+    def fit(self, sequences: list[np.ndarray], min_len: int = 1) -> "DiagGaussianHMM":
+        """Baum-Welch on the series of at least ``min_len`` bars."""
+        sampled = len(sequences)
+        sequences = [s for s in sequences if len(s) >= max(min_len, 1)]
+        if not sequences:
+            raise ValueError(
+                f"HMM fit: no series reached min_len={min_len} bars "
+                f"({sampled} series sampled)"
+            )
         x_all = np.concatenate(sequences, axis=0)
         d = x_all.shape[1]
         # deterministic quantile init: state j anchored at the
@@ -97,6 +166,7 @@ class DiagGaussianHMM:
         np.fill_diagonal(a0, 0.9)
         self.log_a = np.log(a0)
 
+        blocks = [(x, lens) for _, x, lens in _blocks(sequences)]
         prev_ll = -np.inf
         for _ in range(self.n_iter):
             ll_total = 0.0
@@ -105,23 +175,21 @@ class DiagGaussianHMM:
             g_acc = np.zeros(self.k)
             mean_acc = np.zeros((self.k, d))
             sq_acc = np.zeros((self.k, d))
-            for x in sequences:
-                logb = self._log_b(x)
-                la, lb = self._forward(logb), self._backward(logb)
-                ll = self._lse(la[-1], axis=0)
-                ll_total += float(ll)
-                lg = la + lb - ll
-                g = np.exp(lg)
-                # pairwise transition posteriors
+            for x, lens in blocks:
+                logb = self._log_b(x, lens)
+                la, lb, ll = self._forward_backward(logb, lens)
+                g = np.exp(la + lb - ll[:, None, None])
+                # pairwise transition posteriors; 0 wherever t+1 is padding
                 xi = np.exp(
-                    la[:-1, :, None] + self.log_a[None, :, :]
-                    + (logb[1:] + lb[1:])[:, None, :] - ll
+                    la[:, :-1, :, None] + self.log_a
+                    + (logb[:, 1:] + lb[:, 1:])[:, :, None, :] - ll[:, None, None, None]
                 )
-                pi_acc += g[0]
-                a_acc += xi.sum(0)
-                g_acc += g.sum(0)
-                mean_acc += g.T @ x
-                sq_acc += g.T @ (x * x)
+                ll_total += float(ll.sum())
+                pi_acc += g[:, 0].sum(0)
+                a_acc += xi.sum((0, 1))
+                g_acc += g.sum((0, 1))
+                mean_acc += np.einsum("ntk,ntd->kd", g, x)
+                sq_acc += np.einsum("ntk,ntd->kd", g, x * x)
             self.loglik_path.append(ll_total)
             # M-step
             self.log_pi = np.log(pi_acc / pi_acc.sum() + 1e-300)
@@ -134,26 +202,19 @@ class DiagGaussianHMM:
         return self
 
     # -- decode ------------------------------------------------------------
-    def viterbi(self, x: np.ndarray) -> np.ndarray:
-        logb = self._log_b(x)
-        t_len = logb.shape[0]
-        delta = self.log_pi + logb[0]
-        back = np.zeros((t_len, self.k), dtype="int32")
-        for t in range(1, t_len):
-            cand = delta[:, None] + self.log_a
-            back[t] = cand.argmax(axis=0)
-            delta = cand.max(axis=0) + logb[t]
-        path = np.empty(t_len, dtype="int32")
-        path[-1] = int(delta.argmax())
-        for t in range(t_len - 2, -1, -1):
-            path[t] = back[t + 1][path[t + 1]]
-        return path
-
-    def posteriors(self, x: np.ndarray) -> np.ndarray:
-        logb = self._log_b(x)
-        la, lb = self._forward(logb), self._backward(logb)
-        ll = self._lse(la[-1], axis=0)
-        return np.exp(la + lb - ll)
+    def decode(self, sequences: list[np.ndarray]) -> tuple[list[np.ndarray], list[np.ndarray]]:
+        """Viterbi path ``[T_i]`` and state posteriors ``[T_i, K]`` of
+        each non-empty series, in input order."""
+        paths: list = [None] * len(sequences)
+        posts: list = [None] * len(sequences)
+        for idx, x, lens in _blocks(sequences):
+            logb = self._log_b(x, lens)
+            la, lb, ll = self._forward_backward(logb, lens)
+            post = np.exp(la + lb - ll[:, None, None])
+            path = self._viterbi(logb, lens)
+            for j, i in enumerate(idx):
+                paths[i], posts[i] = path[j, : lens[j]], post[j, : lens[j]]
+        return paths, posts
 
     def to_params(self) -> dict:
         return {
@@ -174,15 +235,11 @@ class DiagGaussianHMM:
         return m
 
 
-DECODE_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("event_id", LongType(), False),
-        StructField("hmm_state", IntegerType(), False),
-        StructField("state_prob_max", DoubleType(), False),
-        StructField("state_entropy", DoubleType(), False),
-    ]
-)
+DECODE_FIELDS = [
+    StructField("hmm_state", IntegerType(), False),
+    StructField("state_prob_max", DoubleType(), False),
+    StructField("state_entropy", DoubleType(), False),
+]
 
 
 def decode_distributed(
@@ -191,53 +248,46 @@ def decode_distributed(
     feature_cols: list[str],
     min_len: int = 20,
 ) -> DataFrame:
-    """Viterbi + posterior decode of every series with the broadcast
-    model — one mapInPandas pass, parallel across series
-    (reference research_hmm/decode.py:57-157, distributed)."""
+    """Viterbi + posterior decode of every series with the model's
+    parameters in the closure: one mapInPandas pass, each partition's
+    series decoded in length-ordered kernel blocks (reference
+    research_hmm/decode.py:57-157, distributed). Rows with a non-finite
+    feature are dropped before series lengths are counted; every
+    decoded row keeps all columns of ``bars``, then ``DECODE_FIELDS``."""
 
     def run(batches):
-        model = DiagGaussianHMM.from_params(params)
         pdfs = list(batches)
         if not pdfs:
             return
+        # rows arrive in (user_id, ts, event_id) order: one series per run of user_id
         pdf = pd.concat(pdfs, ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values(["user_id", "ts", "event_id"], kind="mergesort")
-        out = []
-        for uid, g in pdf.groupby("user_id", sort=False):
-            x = g[feature_cols].to_numpy(dtype="float64")
-            mask = np.isfinite(x).all(axis=1)
-            g, x = g[mask], x[mask]
-            if len(g) < min_len:
-                continue  # sequence_builder drops short sequences
-            states = model.viterbi(x)
-            post = model.posteriors(x)
-            pmax = post.max(axis=1)
-            # log only where post > eps — np.where alone still evaluates
-            # log(0) on the masked-out entries and spews RuntimeWarnings
-            plogp = np.zeros_like(post)
-            nz = post > 1e-12
-            plogp[nz] = post[nz] * np.log(post[nz])
-            ent = -plogp.sum(axis=1)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "user_id": g["user_id"].to_numpy(),
-                        "event_id": g["event_id"].to_numpy(),
-                        "hmm_state": states,
-                        "state_prob_max": pmax,
-                        "state_entropy": ent,
-                    }
-                )
-            )
-        if out:
-            yield pd.concat(out, ignore_index=True)
+        x = pdf[feature_cols].to_numpy(dtype="float64")
+        rows = np.flatnonzero(np.isfinite(x).all(axis=1))
+        uid = pdf["user_id"].to_numpy()[rows]
+        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
+        lengths = np.diff(np.r_[starts, len(uid)])
+        keep = lengths >= min_len
+        rows, lengths = rows[np.repeat(keep, lengths)], lengths[keep]
+        if not len(rows):
+            return  # sequence_builder drops short sequences
+        seqs = np.split(x[rows], np.cumsum(lengths)[:-1])
+        paths, posts = DiagGaussianHMM.from_params(params).decode(seqs)
+        post = np.concatenate(posts)
+        # log only where post > eps — np.where alone still evaluates
+        # log(0) on the masked-out entries and spews RuntimeWarnings
+        plogp = np.zeros_like(post)
+        nz = post > 1e-12
+        plogp[nz] = post[nz] * np.log(post[nz])
+        yield pdf.take(rows).assign(
+            hmm_state=np.concatenate(paths),
+            state_prob_max=post.max(axis=1),
+            state_entropy=-plogp.sum(axis=1),
+        )
 
     from pipeline_mf_etl_spark.functions.core import island_repartition
 
     return (
         island_repartition(bars, "user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(run, DECODE_SCHEMA)
+        .mapInPandas(run, StructType(bars.schema.fields + DECODE_FIELDS))
     )

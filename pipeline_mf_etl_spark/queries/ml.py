@@ -506,14 +506,16 @@ def hmm_decoded_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "value", ret.alias("ret_1"), F.abs(ret).alias("abs_ret_1")
     )
 
-    # FIT: capped driver sample — smallest user ids, deterministic; the
-    # model is K×D-tiny so the sample bound is what matters at scale
-    # (the reference caps its training matrices the same way).
-    train_keys = [r[0] for r in
-                  bars.select("user_id").distinct().orderBy("user_id").limit(60).collect()]
+    # FIT: capped driver sample — the 60 smallest user ids,
+    # deterministic, taken in one action; the model is K×D-tiny so the
+    # sample bound is what matters at scale (the reference caps its
+    # training matrices the same way). Each user's bars sit in one
+    # partition in (ts, event_id) order, so no global sort is needed;
+    # the series go to the fit in user_id order.
+    keys = ev.select("user_id").distinct().orderBy("user_id").limit(60)
     train = (
-        bars.filter(F.col("user_id").isin(train_keys))
-        .orderBy("user_id", "ts", "event_id")
+        bars.join(keys, "user_id", "left_semi")
+        .sortWithinPartitions("user_id", "ts", "event_id")
         .select("user_id", "ret_1", "abs_ret_1")
         .collect()
     )
@@ -521,17 +523,18 @@ def hmm_decoded_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in train:
         if r["ret_1"] is not None:
             seqs.setdefault(r["user_id"], []).append((r["ret_1"], r["abs_ret_1"]))
-    sequences = [np.array(v) for v in seqs.values() if len(v) >= 20]
-    model = DiagGaussianHMM(n_states=3, n_iter=30).fit(sequences)
+    model = DiagGaussianHMM(n_states=3, n_iter=30).fit(
+        [np.array(seqs[u]) for u in sorted(seqs)], min_len=20
+    )
 
     decoded = decode_distributed(bars, model.to_params(), ["ret_1", "abs_ret_1"], min_len=20)
     out = _export(
-        decoded.join(bars.select("event_id", "ts", "value", "ret_1"), "event_id").select(
+        decoded.select(
             "event_id",
             "user_id",
             "ts",
             "value",
-            F.col("hmm_state").cast("int").alias("hmm_state"),
+            "hmm_state",
             "state_prob_max",
             "state_entropy",
             "ret_1",

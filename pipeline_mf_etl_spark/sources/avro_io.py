@@ -39,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.bitio import uvarint_decode, uvarint_encode
 from pipeline_mf_etl_spark.payload import map_payload, synth_payload
 
 _MAGIC = b"Obj\x01"
@@ -49,31 +50,11 @@ _MAGIC = b"Obj\x01"
 
 
 def _zigzag_encode(n: int) -> bytes:
-    u = (n << 1) ^ (n >> 63) if n < 0 else n << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return uvarint_encode((n << 1) ^ (n >> 63) if n < 0 else n << 1)
 
 
 def _zigzag_decode(data: bytes, pos: int) -> tuple[int, int]:
-    shift = u = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("truncated Avro varint")
-        b = data[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 70:
-            raise ValueError("Avro varint longer than 10 bytes")
+    u, pos = uvarint_decode(data, pos, 10)  # a 64-bit long is at most 10 bytes
     return (u >> 1) ^ -(u & 1), pos
 
 

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.bitio import uvarint_decode, uvarint_encode
 from pipeline_mf_etl_spark.crc import crc_table, crc_update
 from pipeline_mf_etl_spark.payload import content_digest, map_payload, synth_payload
 
@@ -54,30 +55,6 @@ def _mask_crc(crc: int) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while n >= 0x80:
-        out.append((n & 0x7F) | 0x80)
-        n >>= 7
-    out.append(n)
-    return bytes(out)
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    n = shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("snappy varint runs off the block")
-        b = data[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-        if shift >= 35:
-            raise ValueError("snappy varint longer than 5 bytes")
-
-
 def _emit_literal(out: bytearray, lits: bytes) -> None:
     n = len(lits)
     if n == 0:
@@ -97,7 +74,7 @@ def snappy_compress(src: bytes) -> bytes:
     """Greedy hash-table Snappy compressor: copy-2 elements (16-bit
     offsets, lengths 4..64 per the format's copy-2 length field)."""
     n = len(src)
-    out = bytearray(_varint(n))
+    out = bytearray(uvarint_encode(n))
     table: dict[bytes, int] = {}
     i = 0
     anchor = 0
@@ -121,7 +98,7 @@ def snappy_compress(src: bytes) -> bytes:
 
 
 def snappy_decompress(block: bytes) -> bytes:
-    expected, pos = _read_varint(block, 0)
+    expected, pos = uvarint_decode(block, 0, 5)
     out = bytearray()
     n = len(block)
     while pos < n:

@@ -42,6 +42,7 @@ from __future__ import annotations
 import struct
 from typing import Iterable, Iterator
 
+from pipeline_mf_etl_spark.bitio import uvarint_decode, uvarint_encode
 from pipeline_mf_etl_spark.sources.snappyframe import _mask_crc, crc32c
 
 #: Feature kinds, in the field-number order of the Feature one-of.
@@ -57,29 +58,11 @@ _I64_MASK = (1 << 64) - 1
 # ---------------------------------------------------------------------------
 
 
-def _uvarint(n: int) -> bytes:
-    out = bytearray()
-    while n >= 0x80:
-        out.append((n & 0x7F) | 0x80)
-        n >>= 7
-    out.append(n)
-    return bytes(out)
-
-
 def _read_uvarint(data: bytes, pos: int) -> tuple[int, int]:
-    n = shift = 0
-    for _ in range(10):  # an int64 varint is at most 10 bytes
-        if pos >= len(data):
-            raise ValueError("tfrecord: truncated varint")
-        b = data[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            if n > _I64_MASK:
-                raise ValueError("tfrecord: varint exceeds 64 bits")
-            return n, pos
-        shift += 7
-    raise ValueError("tfrecord: varint longer than 10 bytes")
+    n, pos = uvarint_decode(data, pos, 10)  # an int64 varint is at most 10 bytes
+    if n > _I64_MASK:
+        raise ValueError("tfrecord: varint exceeds 64 bits")
+    return n, pos
 
 
 def _read_tag(data: bytes, pos: int) -> tuple[int, int, int]:
@@ -96,7 +79,7 @@ def _read_len_delimited(data: bytes, pos: int) -> tuple[bytes, int]:
 
 def _ld(field: int, payload: bytes) -> bytes:
     """A length-delimited (wire type 2) field."""
-    return _uvarint((field << 3) | 2) + _uvarint(len(payload)) + payload
+    return uvarint_encode((field << 3) | 2) + uvarint_encode(len(payload)) + payload
 
 
 # ---------------------------------------------------------------------------
@@ -113,7 +96,7 @@ def _encode_feature(kind: str, values: list) -> bytes:
         body = b"".join(struct.pack("<f", float(v)) for v in values)
         return _ld(2, _ld(1, body) if values else b"")
     if kind == "int64":
-        body = b"".join(_uvarint(int(v) & _I64_MASK) for v in values)
+        body = b"".join(uvarint_encode(int(v) & _I64_MASK) for v in values)
         return _ld(3, _ld(1, body) if values else b"")
     raise ValueError(f"tfrecord: unknown feature kind {kind!r}")
 

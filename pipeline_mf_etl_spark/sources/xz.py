@@ -26,6 +26,7 @@ from __future__ import annotations
 import hashlib
 import zlib
 
+from pipeline_mf_etl_spark.bitio import uvarint_decode
 from pipeline_mf_etl_spark.crc import crc_table, crc_update
 
 _XZ_MAGIC = b"\xfd7zXZ\x00"
@@ -48,19 +49,12 @@ def xz_crc64(data: bytes, crc: int = 0) -> int:
 
 
 def _varint(data: bytes, pos: int) -> tuple[int, int]:
-    """xz multibyte integer (7 bits per byte, high bit = continue)."""
-    val = 0
-    for i in range(9):
-        if pos >= len(data):
-            raise ValueError("xz varint truncated")
-        b = data[pos]
-        pos += 1
-        val |= (b & 0x7F) << (7 * i)
-        if not b & 0x80:
-            if b == 0 and i:
-                raise ValueError("xz varint with padding byte")
-            return val, pos
-    raise ValueError("xz varint longer than 9 bytes")
+    """xz multibyte integer: LEB128 of at most 9 bytes, no trailing
+    zero byte after the first."""
+    val, end = uvarint_decode(data, pos, 9)
+    if end - pos > 1 and data[end - 1] == 0:
+        raise ValueError("xz varint with padding byte")
+    return val, end
 
 
 # ---------------------------------------------------------------------------

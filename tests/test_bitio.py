@@ -1,7 +1,8 @@
 """Shared bit I/O (pipeline_mf_etl_spark/bitio.py): round trips in both
 bit orders, zero-padded peeks, loud exhaustion and overflow, the bulk
-MSB-first writer, and a drift guard that keeps codec modules from
-growing private bit reader/writer classes again."""
+MSB-first writer, the LEB128 varint pair and the per-format rules
+layered on it, and drift guards that keep codec modules from growing
+private bit reader/writer classes or varint loops again."""
 
 from __future__ import annotations
 
@@ -12,7 +13,14 @@ from pathlib import Path
 import numpy as np
 import pytest
 
-from pipeline_mf_etl_spark.bitio import LsbReader, LsbWriter, MsbReader, MsbWriter
+from pipeline_mf_etl_spark.bitio import (
+    LsbReader,
+    LsbWriter,
+    MsbReader,
+    MsbWriter,
+    uvarint_decode,
+    uvarint_encode,
+)
 
 
 def _random_fields(seed: int) -> list[tuple[int, int]]:
@@ -172,3 +180,103 @@ def test_bit_io_lives_in_bitio():
             if isinstance(node, ast.ClassDef) and "Bit" in node.name:
                 found.add((rel, node.name))
     assert found == _BIT_CLASS_EXEMPT
+
+
+@pytest.mark.parametrize(
+    "value, encoded",
+    [(0, b"\x00"), (1, b"\x01"), (127, b"\x7f"), (128, b"\x80\x01"), (300, b"\xac\x02"),
+     ((1 << 64) - 1, b"\xff" * 9 + b"\x01")],
+)
+def test_uvarint_vectors(value, encoded):
+    assert uvarint_encode(value) == encoded
+    assert uvarint_decode(b"\xaa" + encoded + b"\xbb", 1, 10) == (value, 1 + len(encoded))
+
+
+def test_uvarint_round_trip_and_errors():
+    rng = random.Random(5)
+    for _ in range(500):
+        v = rng.getrandbits(rng.randint(0, 63))
+        enc = uvarint_encode(v)
+        assert uvarint_decode(enc, 0, 9) == (v, len(enc))
+        with pytest.raises(ValueError, match="truncated varint"):
+            uvarint_decode(enc[:-1], 0, 10)
+    with pytest.raises(ValueError, match="longer than 5 bytes"):
+        uvarint_decode(uvarint_encode(1 << 35), 0, 5)
+    assert uvarint_decode(uvarint_encode((1 << 35) - 1), 0, 5) == ((1 << 35) - 1, 5)
+    with pytest.raises(ValueError, match="negative"):
+        uvarint_encode(-1)
+
+
+def test_format_rules_over_the_shared_varint():
+    from pipeline_mf_etl_spark.sources.avro_io import _zigzag_decode, _zigzag_encode
+    from pipeline_mf_etl_spark.sources.tfrecord import _read_uvarint
+    from pipeline_mf_etl_spark.sources.xz import _varint
+
+    for n, enc in [(0, b"\x00"), (-1, b"\x01"), (1, b"\x02"), (-64, b"\x7f"), (64, b"\x80\x01")]:
+        assert _zigzag_encode(n) == enc and _zigzag_decode(enc, 0) == (n, len(enc))
+    for n in (-(1 << 63), (1 << 63) - 1):
+        assert _zigzag_decode(_zigzag_encode(n), 0) == (n, 10)
+    with pytest.raises(ValueError, match="exceeds 64 bits"):
+        _read_uvarint(uvarint_encode(1 << 64), 0)
+    assert _varint(b"\x00", 0) == (0, 1)
+    with pytest.raises(ValueError, match="padding byte"):
+        _varint(b"\x81\x00", 0)
+    with pytest.raises(ValueError, match="longer than 9 bytes"):
+        _varint(b"\x80" * 9 + b"\x01", 0)
+
+
+# 7-bit length groups most significant first (MPEG-4 descriptor sizes,
+# ISO 14496-1 §8.3.3): a different encoding from LEB128
+_VARINT_LOOP_EXEMPT = {
+    ("operators/multimodal.py", "_mp4_descriptor"),
+    ("operators/multimodal.py", "desc"),
+}
+
+
+def _seven_bit_group_loops(tree: ast.AST) -> set[str]:
+    """Functions holding a loop with ``& 0x7F``, a 0x80 bit operation and
+    a shift: the shape of a hand-rolled varint."""
+    found = set()
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, (ast.For, ast.While)):
+                nodes = list(ast.walk(child))
+                consts = {
+                    side.value
+                    for n in nodes
+                    if isinstance(n, ast.BinOp) and isinstance(n.op, (ast.BitAnd, ast.BitOr))
+                    for side in (n.left, n.right)
+                    if isinstance(side, ast.Constant)
+                }
+                shifts = any(
+                    isinstance(n, (ast.BinOp, ast.AugAssign))
+                    and isinstance(n.op, (ast.LShift, ast.RShift))
+                    for n in nodes
+                )
+                if {0x7F, 0x80} <= consts and shifts:
+                    found.add(fn)
+            visit(child, fn)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_varints_live_in_bitio():
+    """Drift guard: no module but bitio.py hand-rolls a 7-bit-group
+    varint loop, except the MPEG-4 big-endian descriptor lengths."""
+    import pipeline_mf_etl_spark
+
+    root = Path(pipeline_mf_etl_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        found |= {(rel, fn) for fn in _seven_bit_group_loops(tree)}
+    assert ("bitio.py", "uvarint_decode") in found  # the guard sees the real loop
+    assert found - {("bitio.py", "uvarint_decode"), ("bitio.py", "uvarint_encode")} == (
+        _VARINT_LOOP_EXEMPT
+    )

@@ -4,6 +4,9 @@ Each case stages seeded row permutations of an sf0.1 table under
 ``tmp_path`` (split into several files, so the scan also runs as
 several tasks), runs the query on every copy at 1 and at 4 shuffle
 partitions, and asserts the collected rows are identical, unrounded.
+For v4 the partitioning also decides which users share an HMM decode
+block, so this is the check that the batched kernel decodes a series
+independently of its block.
 sf0.1 rather than sf0.01: with 10x the rows per group, a task-order
 double sum drifts far enough to cross a 2-dp rounding boundary (a1's
 ``sum_disc_price`` did), where at sf0.01 the rounding still hides it.
@@ -12,6 +15,7 @@ double sum drifts far enough to cross a 2-dp rounding boundary (a1's
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pyarrow as pa
@@ -19,6 +23,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from pipeline_mf_etl_spark.queries import all_queries
+from pipeline_mf_etl_spark.queries.export import _EXPORT_ROOT, _tag
+from pipeline_mf_etl_spark.queries.ml import _HMM_EXPORT_CACHE
 from tests.conftest import SF_SMOKE
 
 SF_BENCH = os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")
@@ -37,7 +43,9 @@ def _stage_shuffled(table: str, dst: str, seed: int, n_files: int = 3) -> str:
     return dst
 
 
-@pytest.mark.parametrize("name, table", [("a1_grouped_stats", "lineitem")])
+@pytest.mark.parametrize(
+    "name, table", [("a1_grouped_stats", "lineitem"), ("v4_hmm_ribbon", "events")]
+)
 def test_rows_ignore_row_order_and_shuffle_partitions(spark, tmp_path, name, table):
     fn = all_queries()[name].spark
     dirs = [_stage_shuffled(table, str(tmp_path / f"seed{s}"), s) for s in range(3)]
@@ -47,9 +55,14 @@ def test_rows_ignore_row_order_and_shuffle_partitions(spark, tmp_path, name, tab
         for parts in (1, 4):
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
             for d in dirs:
+                # v4's decode is memoized per (session, sf dir): without
+                # this the 4-partition leg would read the 1-partition export
+                _HMM_EXPORT_CACHE.clear()
                 results[(d, parts)] = sorted(tuple(r) for r in fn(spark, d).collect())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for d in dirs:  # v4's per-sf-dir export lands in the shared export root
+            shutil.rmtree(os.path.join(_EXPORT_ROOT, _tag(d)), ignore_errors=True)
     first = next(iter(results.values()))
     assert first
     for key, rows in results.items():

@@ -25,6 +25,13 @@ running off the buffer raises one ``ValueError``. Per-format rules (a
 64-bit range check, xz's padding byte, Avro's zigzag) stay with the
 format.
 
+Canonical prefix codes (VP8L, bzip2, JPEG) come from one builder,
+:func:`canonical_codes`: it assigns consecutive codes to ``(symbol,
+length)`` pairs in the order given, shifting left whenever the length
+grows. The order is the format's rule and stays with the caller: VP8L
+and bzip2 sort by (length, symbol); a JPEG DHT lists symbols in its own
+order within each length.
+
 Every state update is O(1): bits live in a small accumulator or behind
 a bit cursor into the byte buffer, never in one big int that covers the
 whole stream, where each shift would cost O(stream) and make large
@@ -242,6 +249,19 @@ class LsbReader:
         if self.pos + nbits > self._nbits:
             raise ValueError("bitstream exhausted")
         self.pos += nbits
+
+
+def canonical_codes(pairs) -> dict[int, tuple[int, int]]:
+    """``symbol -> (code, length)`` for ``(symbol, length)`` pairs given
+    in assignment order (non-decreasing length, distinct symbols)."""
+    out: dict[int, tuple[int, int]] = {}
+    code = prev_len = 0
+    for sym, ln in pairs:
+        code <<= ln - prev_len
+        out[sym] = (code, ln)
+        code += 1
+        prev_len = ln
+    return out
 
 
 def uvarint_encode(n: int) -> bytes:

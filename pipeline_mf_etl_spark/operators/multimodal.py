@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter, canonical_codes
 from pipeline_mf_etl_spark.payload import map_payload, synth_payload
 
 N_HIST_BINS = 16
@@ -2144,17 +2144,11 @@ def _jpeg_dct_matrix() -> np.ndarray:
 _JPEG_D = _jpeg_dct_matrix()
 
 
-def _jpeg_canonical_codes(bits: list[int], values: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length) for a JPEG DHT (bits[i] codes of length i+1)."""
-    codes: dict[int, tuple[int, int]] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[values[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
+def _dht_pairs(bits: list[int], values: list[int]):
+    """(symbol, length) pairs of a JPEG DHT in table order: bits[i]
+    symbols of length i+1, taken from ``values`` in sequence. Table
+    order is not symbol order (the AC tables list 0xF0 before 0x01)."""
+    return zip(values, [ln for ln, n in enumerate(bits, 1) for _ in range(n)])
 
 
 # Canonical tables the encoder emits in DHT (decoder always reads the
@@ -2170,8 +2164,8 @@ _JPEG_AC_VALUES = [0x00, 0xF0] + [
 _JPEG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPEG_AC_VALUES), 0, 0, 0, 0, 0, 0, 0, 0]
 
 # the encoder's tables never change — build their code dicts once
-_JPEG_DC_CODES = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALUES)
-_JPEG_AC_CODES = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALUES)
+_JPEG_DC_CODES = canonical_codes(_dht_pairs(_JPEG_DC_BITS, _JPEG_DC_VALUES))
+_JPEG_AC_CODES = canonical_codes(_dht_pairs(_JPEG_AC_BITS, _JPEG_AC_VALUES))
 
 
 def _jpeg_scan_bytes(w: MsbWriter) -> bytes:
@@ -2445,7 +2439,7 @@ _JPEG_PROG_AC_VALUES = (
 )
 _JPEG_PROG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPEG_PROG_AC_VALUES),
                       0, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_PROG_AC_CODES = _jpeg_canonical_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALUES)
+_JPEG_PROG_AC_CODES = canonical_codes(_dht_pairs(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALUES))
 
 
 def _jpeg_flush_eobrun(w: MsbWriter, eobrun: int, ac_codes) -> int:
@@ -3297,14 +3291,12 @@ def parse_jpeg(payload: bytes) -> dict:
                 values = list(seg[off + 17 : off + 17 + n])
                 if len(bits) != 16 or len(values) != n:
                     raise ValueError("truncated JPEG DHT table")
-                table: dict[tuple[int, int], int] = {}
-                code, k = 0, 0
-                for length in range(1, 17):
-                    for _ in range(bits[length - 1]):
-                        table[(length, code)] = values[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
+                if len(set(values)) != n:
+                    raise ValueError("JPEG DHT table repeats a symbol")
+                table = {
+                    (ln, code): sym
+                    for sym, (code, ln) in canonical_codes(_dht_pairs(bits, values)).items()
+                }
                 huff[(tc, th)] = (table, bytes(seg[off : off + 17 + n]))
                 off += 17 + n
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from pipeline_mf_etl_spark import bitio
 from pipeline_mf_etl_spark.bitio import LsbReader, LsbWriter
 
 
@@ -55,16 +56,7 @@ def write_code(bw: LsbWriter, code: int, nbits: int) -> None:
 def canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
     """sym -> (code, nbits), canonical assignment: codes ordered by
     (length, symbol)."""
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    prev_len = 0
-    for sym in sorted(lengths, key=lambda s: (lengths[s], s)):
-        ln = lengths[sym]
-        code <<= ln - prev_len
-        out[sym] = (code, ln)
-        code += 1
-        prev_len = ln
-    return out
+    return bitio.canonical_codes(sorted(lengths.items(), key=lambda p: (p[1], p[0])))
 
 
 class PrefixDecoder:

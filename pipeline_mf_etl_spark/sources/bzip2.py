@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter
+from pipeline_mf_etl_spark.bitio import MsbReader, MsbWriter, canonical_codes
 from pipeline_mf_etl_spark.crc import crc_table, crc_update
 
 _BLOCK_MAGIC = 0x314159265359  # pi
@@ -105,9 +105,9 @@ def _huff_peek_table(lens: list[int]) -> list[int]:
     prefix; 0 marks codes longer than the peek width (walk fallback).
     Built once per Huffman table: one list index replaces the per-bit
     limit/base walk on the hot path."""
-    codes = _huff_codes(lens)
     lut = [0] * (1 << _PEEK_BITS)
-    for sym, (code, length) in enumerate(zip(codes, lens)):
+    codes = canonical_codes(sorted(enumerate(lens), key=lambda p: p[1]))
+    for sym, (code, length) in codes.items():
         if length > _PEEK_BITS:
             continue
         packed = (sym << 5) | length
@@ -149,18 +149,6 @@ def _huff_lengths(freq: list[int]) -> list[int]:
         if max(lens) <= _MAX_HUF_LEN:
             return lens
         f = [max(1, x >> 1) for x in f]
-
-
-def _huff_codes(lens: list[int]) -> list[int]:
-    codes = [0] * len(lens)
-    vec = 0
-    for length in range(min(lens), max(lens) + 1):
-        for s, ln in enumerate(lens):
-            if ln == length:
-                codes[s] = vec
-                vec += 1
-        vec <<= 1
-    return codes
 
 
 def _local_bits(data: bytes, pos: int) -> tuple[int, int, int]:
@@ -562,7 +550,8 @@ def _encode_block(bw: MsbWriter, chunk: bytes) -> int:
     for s in syms:
         freq[s] += 1
     lens = _huff_lengths(freq)
-    codes = _huff_codes(lens)
+    by_sym = canonical_codes(sorted(enumerate(lens), key=lambda p: p[1]))
+    codes = [by_sym[s][0] for s in range(len(lens))]  # list: the emission loop indexes it
     n_selectors = (len(syms) + _GROUP_SIZE - 1) // _GROUP_SIZE
     if n_selectors >= 1 << 15:
         raise ValueError("bzip2 block needs too many selectors")

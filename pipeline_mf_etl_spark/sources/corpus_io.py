@@ -110,318 +110,28 @@ def read_jsonl_corpus(
     return valid, rejects
 
 
+
 # ---------------------------------------------------------------------------
-# seekable-zstd shard layout (r12 verdict task 6): the .jsonl.zst
-# sibling of compact_parquet_dir. One seekable archive per shard plus a
-# doc-level byte-range index — the layout that lets a 100 TB corpus
-# serve POINT lookups with three range GETs per doc (17-byte footer
-# probe, seek table, covering frames) instead of a full-shard
-# decompress. c8_seekable_extract certifies the frame math per-doc;
-# this is the same primitive at shard grain.
+# Shard layouts. Every format below is the same three-part layout: shard
+# files of format-specific bytes, each published atomically by the one
+# task that writes it whole, plus a ``_index`` parquet of per-row
+# locators (byte range, line, batch/row) so a corpus far larger than
+# any one machine serves POINT lookups with a few range reads per row
+# and FULL scans shard-parallel. _write_shards / _fetch_shards /
+# _scan_shards own placement, publish, index and shard access; a format
+# supplies only its encoder and its per-shard decoders.
 # ---------------------------------------------------------------------------
 
-ZST_INDEX_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("shard", StringType(), False),
-        StructField("offset", LongType(), False),
-        StructField("length", LongType(), False),
-    ]
-)
 
-
-def write_jsonl_zst_corpus(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 4,
-    frame_content_size: int = 65536,
-) -> DataFrame:
-    """Write a documents corpus as ``shard-<N>.jsonl.zst`` seekable-zstd
-    archives plus a ``_index`` parquet of (doc_id, shard, offset,
-    length) byte ranges. Docs are hash-assigned to shards and sorted by
-    doc_id within each, so the layout is deterministic up to shard
-    numbering; encoding runs shard-parallel in one Spark job (the index
-    write is the action that drives it). Returns the index DataFrame
-    read back from ``<path>/_index``."""
-    import json
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.zstdframe import encode_zstd_seekable
-
-    os.makedirs(path, exist_ok=True)
-    cols = [f.name for f in DOCUMENTS_SCHEMA.fields]
-    spark = df.sparkSession
-    fcs = frame_content_size
-
-    def write_shard(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        shard = f"shard-{pid:05d}.jsonl.zst"
-        blobs: list[bytes] = []
-        idx: list[tuple] = []
-        off = 0
-        for r in rows:
-            line = (
-                json.dumps(
-                    {c: _py(r.get(c)) for c in cols}, ensure_ascii=False
-                ).encode("utf-8")
-                + b"\n"
-            )
-            idx.append((_py(r.get("doc_id")), shard, off, len(line)))
-            off += len(line)
-            blobs.append(line)
-        payload = encode_zstd_seekable(
-            b"".join(blobs), frame_content_size=fcs
-        )
-        tmp = os.path.join(path, f".{shard}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-        os.replace(tmp, os.path.join(path, shard))  # atomic publish
-        yield pd.DataFrame(
-            idx, columns=[f.name for f in ZST_INDEX_SCHEMA.fields]
-        )
-
-    index = (
-        df.select(*cols)
-        .repartition(n_shards, F.pmod(F.coalesce("doc_id", F.lit(0)), F.lit(n_shards)))
-        .sortWithinPartitions("doc_id")
-        .mapInPandas(write_shard, ZST_INDEX_SCHEMA)
-    )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
-
-
-#: export_ordered_jsonl_zst's index rows: the byte-range index plus the
-#: training-order position the line was written at
-ZST_ORDERED_INDEX_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("shard", StringType(), False),
-        StructField("offset", LongType(), False),
-        StructField("length", LongType(), False),
-        StructField("pos", LongType(), False),
-    ]
-)
-
-
-def export_ordered_jsonl_zst(
-    df: DataFrame,
-    order: DataFrame,
-    path: str,
-    n_shards: int,
-    frame_content_size: int = 65536,
-) -> DataFrame:
-    """Ship a training-order assignment as the layout a 100-TB corpus
-    actually trains from (r13 verdict task 7): ``order`` carries
-    (shard, doc_id, pos) — exactly o15_shard_shuffle's output — and
-    each assignment shard becomes one ``shard-<s>.jsonl.zst`` seekable
-    archive with lines in ``pos`` order, plus a ``_index`` parquet of
-    (doc_id, shard, offset, length, pos) byte ranges for point lookups
-    (read_jsonl_zst_doc / read_jsonl_zst_docs).
-
-    Unlike write_jsonl_zst_corpus (whose shard files are named by
-    PARTITION id, deterministic only up to shard numbering), the file
-    here is named by the assignment's shard VALUE: rows are hashed to
-    tasks by that value, so a task may own several whole shards (or
-    none) but a shard is never split — each archive is written whole,
-    in order, by one task. One shuffle (the repartition); encoding runs
-    shard-parallel; the index write is the driving action."""
-    import json
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.zstdframe import encode_zstd_seekable
-
-    os.makedirs(path, exist_ok=True)
-    cols = [f.name for f in DOCUMENTS_SCHEMA.fields]
-    spark = df.sparkSession
-    fcs = frame_content_size
-
-    def write_shards(batches):
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        by_shard: dict[int, list[dict]] = {}
-        for r in rows:
-            by_shard.setdefault(int(r["shard"]), []).append(r)
-        out: list[tuple] = []
-        for s, rs in sorted(by_shard.items()):
-            # sortWithinPartitions already ordered (shard, pos); the
-            # in-memory sort is a cheap idempotence guard
-            rs.sort(key=lambda r: int(r["pos"]))
-            shard_name = f"shard-{s:05d}.jsonl.zst"
-            blobs: list[bytes] = []
-            off = 0
-            for r in rs:
-                line = (
-                    json.dumps(
-                        {c: _py(r.get(c)) for c in cols}, ensure_ascii=False
-                    ).encode("utf-8")
-                    + b"\n"
-                )
-                out.append(
-                    (_py(r["doc_id"]), shard_name, off, len(line), int(r["pos"]))
-                )
-                off += len(line)
-                blobs.append(line)
-            payload = encode_zstd_seekable(
-                b"".join(blobs), frame_content_size=fcs
-            )
-            tmp = os.path.join(path, f".{shard_name}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-            os.replace(tmp, os.path.join(path, shard_name))  # atomic publish
-        yield pd.DataFrame(
-            out, columns=[f.name for f in ZST_ORDERED_INDEX_SCHEMA.fields]
-        )
-
-    index = (
-        df.select(*cols)
-        .join(order.select("shard", "doc_id", "pos"), "doc_id")
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "pos")
-        .mapInPandas(write_shards, ZST_ORDERED_INDEX_SCHEMA)
-    )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
-
-
-#: write_jsonl_bz2_dump's index rows: one per document — the stream's
-#: byte range within its shard plus the document's line number inside
-#: the decoded stream (the Wikipedia dump-index shape: offset published
-#: per stream, records addressed within it)
-BZ2_DUMP_INDEX_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("shard", StringType(), False),
-        StructField("offset", LongType(), False),
-        StructField("length", LongType(), False),
-        StructField("line_no", LongType(), False),
-    ]
-)
-
-
-def write_jsonl_bz2_dump(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 4,
-    docs_per_stream: int = 16,
-    level: int = 1,
-) -> DataFrame:
-    """Write a documents corpus in the Wikipedia-multistream layout
-    (r13 verdict task 9): each shard is a concatenation of independent
-    bzip2 STREAMS of ``docs_per_stream`` JSONL lines, byte-aligned so a
-    reader can hand any single stream to any task — exactly what the
-    published dump index enables. Returns the per-document index
-    (doc_id, shard, offset, length, line_no) read back from
-    ``<path>/_index``; ``decode_bzip2_at`` on the byte range at
-    ``offset`` is the record-grain access primitive."""
-    import json
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.bzip2 import encode_bzip2
-
-    os.makedirs(path, exist_ok=True)
-    cols = [f.name for f in DOCUMENTS_SCHEMA.fields]
-    spark = df.sparkSession
-
-    def write_shard(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        shard = f"dump-{pid:05d}.jsonl.bz2"
-        payload = bytearray()
-        idx: list[tuple] = []
-        for i in range(0, len(rows), docs_per_stream):
-            chunk = rows[i : i + docs_per_stream]
-            lines = [
-                json.dumps(
-                    {c: _py(r.get(c)) for c in cols}, ensure_ascii=False
-                ).encode("utf-8")
-                + b"\n"
-                for r in chunk
-            ]
-            enc = encode_bzip2(b"".join(lines), level=level)
-            off = len(payload)
-            for line_no, r in enumerate(chunk):
-                idx.append(
-                    (_py(r.get("doc_id")), shard, off, len(enc), line_no)
-                )
-            payload += enc
-        tmp = os.path.join(path, f".{shard}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(bytes(payload))
-        os.replace(tmp, os.path.join(path, shard))  # atomic publish
-        yield pd.DataFrame(
-            idx, columns=[f.name for f in BZ2_DUMP_INDEX_SCHEMA.fields]
-        )
-
-    index = (
-        df.select(*cols)
-        .repartition(
-            n_shards, F.pmod(F.coalesce("doc_id", F.lit(0)), F.lit(n_shards))
-        )
-        .sortWithinPartitions("doc_id")
-        .mapInPandas(write_shard, BZ2_DUMP_INDEX_SCHEMA)
-    )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
-
-
-def read_jsonl_bz2_docs(index: DataFrame, corpus_dir: str) -> DataFrame:
-    """Distributed dump-index point-lookup: each index row resolves by
-    range-reading ONLY its stream's bytes (seek + bounded read — the
-    object-store range-GET pattern), decoding that one stream through
-    the CRC-verified walk (sources/bzip2.decode_bzip2_at), and picking
-    the document's line. Streams co-requested in a batch decode once
-    (pandas groupby on the byte range). Returns DOCUMENTS_SCHEMA rows."""
-    import json
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.bzip2 import decode_bzip2_at
-
-    def fetch(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for (shard, off, ln), grp in pdf.groupby(
-                ["shard", "offset", "length"], sort=False
-            ):
-                with open(os.path.join(corpus_dir, shard), "rb") as fh:
-                    fh.seek(int(off))
-                    data = fh.read(int(ln))
-                res = decode_bzip2_at(data, 0)
-                lines = res["content"].decode("utf-8").splitlines()
-                for line_no in grp["line_no"]:
-                    doc = json.loads(lines[int(line_no)])
-                    rows.append(
-                        tuple(doc.get(f.name) for f in DOCUMENTS_SCHEMA.fields)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DOCUMENTS_SCHEMA.fields]
-            )
-
-    return index.select("shard", "offset", "length", "line_no").mapInPandas(
-        fetch, DOCUMENTS_SCHEMA
+def _index_schema(id_col: str, *locators: str) -> StructType:
+    """``_index`` rows: the row's id, its shard file name and the
+    non-null long locators that address the row inside that file."""
+    return StructType(
+        [
+            StructField(id_col, LongType(), True),
+            StructField("shard", StringType(), False),
+        ]
+        + [StructField(n, LongType(), False) for n in locators]
     )
 
 
@@ -437,6 +147,308 @@ def _py(v):
     return v
 
 
+def _json_line(row: dict, cols: list[str]) -> bytes:
+    """One JSONL line of ``cols``: UTF-8 with non-ASCII kept literal,
+    newline-terminated."""
+    import json
+
+    return (
+        json.dumps({c: _py(row.get(c)) for c in cols}, ensure_ascii=False).encode(
+            "utf-8"
+        )
+        + b"\n"
+    )
+
+
+def _byte_ranges(blobs: list[bytes]) -> tuple[bytes, list[tuple[int, int]]]:
+    """Concatenate ``blobs``; the (offset, length) of each in the result."""
+    locs, off = [], 0
+    for b in blobs:
+        locs.append((off, len(b)))
+        off += len(b)
+    return b"".join(blobs), locs
+
+
+def _write_shards(
+    df: DataFrame,
+    path: str,
+    n_shards: int,
+    cols: list[str],
+    id_col: str,
+    name: str,
+    index_schema: StructType,
+    encode,
+    order: DataFrame | None = None,
+) -> DataFrame:
+    """Write ``df``'s ``cols`` as shard files under ``path`` and return
+    the ``_index`` parquet read back from ``<path>/_index``. Encoding
+    runs shard-parallel in one Spark job; the index write drives it.
+
+    Placement without ``order``: rows hash to ``pmod(id, n_shards)``
+    tasks, sorted by id, and each non-empty task writes one file named
+    ``name.format(partition id)`` — deterministic up to shard numbering.
+    With ``order`` (shard, doc_id, pos): rows are hashed to tasks by the
+    assignment's shard VALUE, so a task may own several whole shards (or
+    none) but a shard is never split; each shard is written in ``pos``
+    order to ``name.format(shard value)`` and its index rows end in
+    ``pos``.
+
+    ``encode(rows) -> (payload, locators)`` turns one shard's row dicts
+    into its file bytes and one locator tuple per row; the index row is
+    (id, shard file, *locator[, pos]). A shard lands under a dot-prefixed
+    tmp name and is renamed into place, so readers never see a partial
+    file."""
+    import os
+
+    import pandas as pd
+
+    os.makedirs(path, exist_ok=True)
+    ordered = order is not None
+
+    def write(batches):
+        rows: list[dict] = []
+        for pdf in batches:
+            rows.extend(pdf.to_dict("records"))
+        if not rows:
+            return
+        if ordered:
+            by_shard: dict[int, list[dict]] = {}
+            for r in rows:
+                by_shard.setdefault(int(r["shard"]), []).append(r)
+            groups = sorted(by_shard.items())
+        else:
+            from pyspark import TaskContext
+
+            groups = [(TaskContext.get().partitionId(), rows)]
+        out: list[tuple] = []
+        for s, rs in groups:
+            if ordered:
+                # sortWithinPartitions already ordered (shard, pos); the
+                # in-memory sort is a cheap idempotence guard
+                rs.sort(key=lambda r: int(r["pos"]))
+            shard = name.format(s)
+            payload, locs = encode(rs)
+            tmp = os.path.join(path, f".{shard}.tmp")
+            with open(tmp, "wb") as fh:
+                fh.write(payload)
+            os.replace(tmp, os.path.join(path, shard))  # atomic publish
+            for r, loc in zip(rs, locs):
+                tail = (int(r["pos"]),) if ordered else ()
+                out.append((_py(r.get(id_col)), shard, *loc, *tail))
+        yield pd.DataFrame(out, columns=index_schema.fieldNames())
+
+    placed = df.select(*cols)
+    if ordered:
+        placed = (
+            placed.join(order.select("shard", "doc_id", "pos"), "doc_id")
+            .repartition(n_shards, "shard")
+            .sortWithinPartitions("shard", "pos")
+        )
+    else:
+        placed = placed.repartition(
+            n_shards, F.pmod(F.coalesce(id_col, F.lit(0)), F.lit(n_shards))
+        ).sortWithinPartitions(id_col)
+    index_dir = os.path.join(path, "_index")
+    placed.mapInPandas(write, index_schema).write.mode("overwrite").parquet(index_dir)
+    return df.sparkSession.read.parquet(index_dir)
+
+
+def _fetch_shards(
+    index: DataFrame,
+    corpus_dir: str,
+    locators: list[str],
+    schema: StructType,
+    read,
+) -> DataFrame:
+    """Distributed point lookup: the index rows of each Arrow batch are
+    grouped by shard and each shard file is opened once per group;
+    ``read(fh, grp)`` yields ``schema`` rows for the group's locator
+    columns from the open shard ``fh`` (``fh.name`` is its path)."""
+    import os
+
+    import pandas as pd
+
+    def fetch(batches):
+        for pdf in batches:
+            rows: list[tuple] = []
+            for shard, grp in pdf.groupby("shard", sort=False):
+                with open(os.path.join(corpus_dir, str(shard)), "rb") as fh:
+                    rows.extend(read(fh, grp))
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
+
+    return index.select("shard", *locators).mapInPandas(fetch, schema)
+
+
+def _scan_shards(
+    spark: SparkSession,
+    path: str,
+    suffixes: tuple[str, ...],
+    schema: StructType,
+    decode,
+) -> DataFrame:
+    """Distributed full scan, one task per shard file (the grain a
+    large cluster distributes on): every file under ``path`` ending in
+    one of ``suffixes`` is read whole and ``decode(name, data)`` returns
+    its ``schema`` rows."""
+    import os
+
+    import pandas as pd
+
+    shards = sorted(n for n in os.listdir(path) if n.endswith(suffixes))
+    if not shards:
+        raise ValueError(f"{path}: no {suffixes[0]} shards found")
+
+    def scan(batches):
+        for pdf in batches:
+            for name in pdf["shard"]:
+                with open(os.path.join(path, str(name)), "rb") as fh:
+                    data = fh.read()
+                yield pd.DataFrame(
+                    decode(str(name), data), columns=schema.fieldNames()
+                )
+
+    files = spark.createDataFrame(
+        [(s,) for s in shards], StructType([StructField("shard", StringType(), False)])
+    ).repartition(len(shards), "shard")
+    return files.mapInPandas(scan, schema)
+
+
+# ---------------------------------------------------------------------------
+# seekable-zstd shard layout: the .jsonl.zst sibling of
+# compact_parquet_dir. One seekable archive per shard plus a doc-level
+# byte-range index, so a point lookup costs three range reads (17-byte
+# footer probe, seek table, covering frames) instead of a full-shard
+# decompress. c8_seekable_extract certifies the frame math per doc;
+# this is the same primitive at shard grain.
+# ---------------------------------------------------------------------------
+
+ZST_INDEX_SCHEMA = _index_schema("doc_id", "offset", "length")
+
+#: export_ordered_jsonl_zst's index rows: the byte-range index plus the
+#: training-order position the line was written at
+ZST_ORDERED_INDEX_SCHEMA = _index_schema("doc_id", "offset", "length", "pos")
+
+
+def _zst_encoder(cols: list[str], frame_content_size: int):
+    from pipeline_mf_etl_spark.sources.zstdframe import encode_zstd_seekable
+
+    def encode(rows):
+        data, locs = _byte_ranges([_json_line(r, cols) for r in rows])
+        return encode_zstd_seekable(data, frame_content_size=frame_content_size), locs
+
+    return encode
+
+
+def write_jsonl_zst_corpus(
+    df: DataFrame,
+    path: str,
+    n_shards: int = 4,
+    frame_content_size: int = 65536,
+) -> DataFrame:
+    """Write a documents corpus as ``shard-<N>.jsonl.zst`` seekable-zstd
+    archives plus a ``_index`` parquet of (doc_id, shard, offset,
+    length) byte ranges. Docs are hash-assigned to shards and sorted by
+    doc_id within each, so the layout is deterministic up to shard
+    numbering; encoding runs shard-parallel in one Spark job (the index
+    write is the action that drives it). Returns the index DataFrame
+    read back from ``<path>/_index``."""
+    cols = DOCUMENTS_SCHEMA.fieldNames()
+    return _write_shards(
+        df, path, n_shards, cols, "doc_id", "shard-{:05d}.jsonl.zst",
+        ZST_INDEX_SCHEMA, _zst_encoder(cols, frame_content_size),
+    )
+
+
+def export_ordered_jsonl_zst(
+    df: DataFrame,
+    order: DataFrame,
+    path: str,
+    n_shards: int,
+    frame_content_size: int = 65536,
+) -> DataFrame:
+    """Ship a training-order assignment as the layout a 100-TB corpus
+    actually trains from: ``order`` carries (shard, doc_id, pos) —
+    exactly o15_shard_shuffle's output — and each assignment shard
+    becomes one ``shard-<s>.jsonl.zst`` seekable archive with lines in
+    ``pos`` order, plus a ``_index`` parquet of (doc_id, shard, offset,
+    length, pos) byte ranges for point lookups (read_jsonl_zst_doc /
+    read_jsonl_zst_docs).
+
+    Unlike write_jsonl_zst_corpus (whose shard files are named by
+    PARTITION id, deterministic only up to shard numbering), the file
+    here is named by the assignment's shard VALUE and written whole, in
+    order, by one task. One shuffle (the repartition); encoding runs
+    shard-parallel; the index write is the driving action."""
+    cols = DOCUMENTS_SCHEMA.fieldNames()
+    return _write_shards(
+        df, path, n_shards, cols, "doc_id", "shard-{:05d}.jsonl.zst",
+        ZST_ORDERED_INDEX_SCHEMA, _zst_encoder(cols, frame_content_size),
+        order=order,
+    )
+
+
+def _zst_ranges(fh, ranges):
+    """Yield the decoded bytes of each (offset, length) range of the
+    open seekable archive ``fh``, ranges in ascending offset order.
+    The 17-byte footer probe and the seek table are read once; after
+    that only the frames COVERING a range are read, each decoded and
+    xxh64-verified at most once (frames ending before the current range
+    leave the cache), so corruption outside the covering frames cannot
+    affect — or fail — a lookup."""
+    import bisect
+    import os
+
+    from pipeline_mf_etl_spark.sources.zstdframe import (
+        decode_zstd_frame,
+        parse_zstd_seek_footer,
+        xxh64,
+        zstd_seek_footer_length,
+    )
+
+    path = fh.name
+    size = fh.seek(0, os.SEEK_END)
+    if size < 17:
+        raise ValueError(f"{path}: too short for a seekable archive")
+    fh.seek(size - 17)
+    need = zstd_seek_footer_length(fh.read(17))
+    fh.seek(size - need)
+    table = parse_zstd_seek_footer(fh.read(need), size)
+    d_offs = [e["d_off"] for e in table]
+    cache: dict[int, bytes] = {}
+    for off, ln in ranges:
+        end = off + ln
+        for fi in [
+            k for k in cache if table[k]["d_off"] + table[k]["d_size"] <= off
+        ]:
+            del cache[fi]
+        out = bytearray()
+        fi = max(bisect.bisect_right(d_offs, off) - 1, 0)
+        while fi < len(table) and table[fi]["d_off"] < end:
+            ent = table[fi]
+            if ent["d_off"] + ent["d_size"] > off and fi not in cache:
+                fh.seek(ent["c_off"])
+                data = decode_zstd_frame(fh.read(ent["c_size"]))["content"]
+                if len(data) != ent["d_size"]:
+                    raise ValueError(
+                        f"{path}: frame size disagrees with the seek table"
+                    )
+                if ent["checksum"] is not None and (
+                    xxh64(data) & 0xFFFFFFFF
+                ) != ent["checksum"]:
+                    raise ValueError(f"{path}: covering-frame checksum mismatch")
+                cache[fi] = data
+            if fi in cache:
+                out += cache[fi][
+                    max(off - ent["d_off"], 0) : min(end - ent["d_off"], ent["d_size"])
+                ]
+            fi += 1
+        if len(out) != ln:
+            raise ValueError(
+                f"{path}: byte range [{off}, {end}) outside the archive"
+            )
+        yield bytes(out)
+
+
 def read_jsonl_zst_doc(shard_path: str, offset: int, length: int) -> dict:
     """Point lookup of ONE document from a seekable shard: reads the
     17-byte footer probe, the seek table, then ONLY the frames covering
@@ -445,47 +457,10 @@ def read_jsonl_zst_doc(shard_path: str, offset: int, length: int) -> dict:
     xxh64 checksums are verified on every frame touched, so corruption
     OUTSIDE the covering frames cannot affect (or fail) the lookup."""
     import json
-    import os
-
-    from pipeline_mf_etl_spark.sources.zstdframe import (
-        decode_zstd_frame,
-        parse_zstd_seek_footer,
-        xxh64,
-        zstd_seek_footer_length,
-    )
 
     with open(shard_path, "rb") as fh:
-        size = fh.seek(0, os.SEEK_END)
-        if size < 17:
-            raise ValueError(f"{shard_path}: too short for a seekable archive")
-        fh.seek(size - 17)
-        need = zstd_seek_footer_length(fh.read(17))
-        fh.seek(size - need)
-        table = parse_zstd_seek_footer(fh.read(need), size)
-        end = offset + length
-        out = bytearray()
-        for ent in table:
-            f_end = ent["d_off"] + ent["d_size"]
-            if f_end <= offset or ent["d_off"] >= end:
-                continue  # untouched frame: not even read from disk
-            fh.seek(ent["c_off"])
-            data = decode_zstd_frame(fh.read(ent["c_size"]))["content"]
-            if len(data) != ent["d_size"]:
-                raise ValueError(
-                    f"{shard_path}: frame size disagrees with the seek table"
-                )
-            if ent["checksum"] is not None and (
-                xxh64(data) & 0xFFFFFFFF
-            ) != ent["checksum"]:
-                raise ValueError(f"{shard_path}: covering-frame checksum mismatch")
-            out += data[
-                max(offset - ent["d_off"], 0) : min(end - ent["d_off"], ent["d_size"])
-            ]
-    if len(out) != length:
-        raise ValueError(
-            f"{shard_path}: byte range [{offset}, {end}) outside the archive"
-        )
-    return json.loads(out.decode("utf-8"))
+        data = next(_zst_ranges(fh, [(offset, length)]))
+    return json.loads(data.decode("utf-8"))
 
 
 def read_jsonl_zst_docs(index: DataFrame, corpus_dir: str) -> DataFrame:
@@ -494,124 +469,110 @@ def read_jsonl_zst_docs(index: DataFrame, corpus_dir: str) -> DataFrame:
     map pass — the retrieval half of the shard layout (e.g. serving an
     ANN hit list). Returns DOCUMENTS_SCHEMA rows.
 
-    Bulk-fetch economics (r14): a naive per-row read_jsonl_zst_doc
-    re-opens the shard, re-reads the seek table, and RE-DECODES the
-    covering frame for every doc it contains — ~frame_size/doc_size
-    redundant decode work (measured 26.8s for a full 5,000-doc fetch at
-    sf0.1). Here each shard's footer is parsed once per batch group and
-    lookups proceed in ascending offset order with a sliding frame
-    cache, so every frame is read and checksum-verified AT MOST ONCE
-    per task (2.0s for the same fetch). Single-doc semantics, integrity
-    checks, and covering-frames-only IO are identical to
-    read_jsonl_zst_doc, which remains the one-off primitive."""
-    import bisect
+    Each shard's seek table is parsed once per batch group and lookups
+    run in ascending offset order, so every frame is read and
+    checksum-verified at most once per group, where a per-row
+    read_jsonl_zst_doc would re-decode a covering frame once for each
+    doc it holds. Single-doc semantics, integrity checks and
+    covering-frames-only IO are read_jsonl_zst_doc's."""
     import json
-    import os
 
-    import pandas as pd
+    cols = DOCUMENTS_SCHEMA.fieldNames()
 
-    from pipeline_mf_etl_spark.sources.zstdframe import (
-        decode_zstd_frame,
-        parse_zstd_seek_footer,
-        xxh64,
-        zstd_seek_footer_length,
+    def read(fh, grp):
+        grp = grp.sort_values("offset")
+        ranges = [(int(o), int(n)) for o, n in zip(grp["offset"], grp["length"])]
+        for data in _zst_ranges(fh, ranges):
+            doc = json.loads(data.decode("utf-8"))
+            yield tuple(doc.get(c) for c in cols)
+
+    return _fetch_shards(
+        index, corpus_dir, ["offset", "length"], DOCUMENTS_SCHEMA, read
     )
 
-    cols = [f.name for f in DOCUMENTS_SCHEMA.fields]
 
-    def fetch(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for shard, grp in pdf.groupby("shard", sort=False):
-                path = os.path.join(corpus_dir, shard)
-                with open(path, "rb") as fh:
-                    size = fh.seek(0, os.SEEK_END)
-                    if size < 17:
-                        raise ValueError(
-                            f"{path}: too short for a seekable archive"
-                        )
-                    fh.seek(size - 17)
-                    need = zstd_seek_footer_length(fh.read(17))
-                    fh.seek(size - need)
-                    table = parse_zstd_seek_footer(fh.read(need), size)
-                    d_offs = [e["d_off"] for e in table]
-                    cache: dict[int, bytes] = {}
-                    order = grp.sort_values("offset")
-                    for off, ln in zip(order["offset"], order["length"]):
-                        off, ln = int(off), int(ln)
-                        end = off + ln
-                        # offsets ascend: frames ending before this doc
-                        # can never be needed again
-                        for fi in [
-                            k
-                            for k in cache
-                            if table[k]["d_off"] + table[k]["d_size"] <= off
-                        ]:
-                            del cache[fi]
-                        out = bytearray()
-                        fi = max(bisect.bisect_right(d_offs, off) - 1, 0)
-                        while fi < len(table) and table[fi]["d_off"] < end:
-                            ent = table[fi]
-                            if ent["d_off"] + ent["d_size"] <= off:
-                                fi += 1
-                                continue
-                            if fi not in cache:
-                                fh.seek(ent["c_off"])
-                                data = decode_zstd_frame(
-                                    fh.read(ent["c_size"])
-                                )["content"]
-                                if len(data) != ent["d_size"]:
-                                    raise ValueError(
-                                        f"{path}: frame size disagrees "
-                                        f"with the seek table"
-                                    )
-                                if ent["checksum"] is not None and (
-                                    xxh64(data) & 0xFFFFFFFF
-                                ) != ent["checksum"]:
-                                    raise ValueError(
-                                        f"{path}: covering-frame "
-                                        f"checksum mismatch"
-                                    )
-                                cache[fi] = data
-                            data = cache[fi]
-                            out += data[
-                                max(off - ent["d_off"], 0) : min(
-                                    end - ent["d_off"], ent["d_size"]
-                                )
-                            ]
-                            fi += 1
-                        if len(out) != ln:
-                            raise ValueError(
-                                f"{path}: byte range [{off}, {end}) "
-                                f"outside the archive"
-                            )
-                        doc = json.loads(out.decode("utf-8"))
-                        rows.append(tuple(doc.get(c) for c in cols))
-            yield pd.DataFrame(rows, columns=cols)
+#: write_jsonl_bz2_dump's index rows: one per document — the stream's
+#: byte range within its shard plus the document's line number inside
+#: the decoded stream (the Wikipedia dump-index shape: offset published
+#: per stream, records addressed within it)
+BZ2_DUMP_INDEX_SCHEMA = _index_schema("doc_id", "offset", "length", "line_no")
 
-    return index.select("shard", "offset", "length").mapInPandas(
-        fetch, DOCUMENTS_SCHEMA
+
+def write_jsonl_bz2_dump(
+    df: DataFrame,
+    path: str,
+    n_shards: int = 4,
+    docs_per_stream: int = 16,
+    level: int = 1,
+) -> DataFrame:
+    """Write a documents corpus in the Wikipedia-multistream layout:
+    each shard is a concatenation of independent bzip2 STREAMS of
+    ``docs_per_stream`` JSONL lines, byte-aligned so a reader can hand
+    any single stream to any task — exactly what the published dump
+    index enables. Returns the per-document index (doc_id, shard,
+    offset, length, line_no) read back from ``<path>/_index``;
+    ``decode_bzip2_at`` on the byte range at ``offset`` is the
+    record-grain access primitive."""
+    from pipeline_mf_etl_spark.sources.bzip2 import encode_bzip2
+
+    cols = DOCUMENTS_SCHEMA.fieldNames()
+
+    def encode(rows):
+        payload, locs = bytearray(), []
+        for i in range(0, len(rows), docs_per_stream):
+            chunk = rows[i : i + docs_per_stream]
+            enc = encode_bzip2(b"".join(_json_line(r, cols) for r in chunk), level=level)
+            locs += [(len(payload), len(enc), n) for n in range(len(chunk))]
+            payload += enc
+        return bytes(payload), locs
+
+    return _write_shards(
+        df, path, n_shards, cols, "doc_id", "dump-{:05d}.jsonl.bz2",
+        BZ2_DUMP_INDEX_SCHEMA, encode,
+    )
+
+
+def read_jsonl_bz2_docs(index: DataFrame, corpus_dir: str) -> DataFrame:
+    """Distributed dump-index point-lookup: each index row resolves by
+    range-reading ONLY its stream's bytes (seek + bounded read — the
+    object-store range-GET pattern), decoding that one stream through
+    the CRC-verified walk (sources/bzip2.decode_bzip2_at), and picking
+    the document's line. Streams co-requested in a batch decode once
+    (pandas groupby on the byte range). Returns DOCUMENTS_SCHEMA rows."""
+    import json
+
+    from pipeline_mf_etl_spark.sources.bzip2 import decode_bzip2_at
+
+    cols = DOCUMENTS_SCHEMA.fieldNames()
+
+    def read(fh, grp):
+        for (off, ln), lines in grp.groupby(["offset", "length"], sort=False):
+            fh.seek(int(off))
+            # split on the newline byte only: str.splitlines would also
+            # split inside a document at U+2028, U+0085 and the like,
+            # which json.dumps leaves unescaped
+            stream = decode_bzip2_at(fh.read(int(ln)), 0)["content"].split(b"\n")
+            for line_no in lines["line_no"]:
+                doc = json.loads(stream[int(line_no)].decode("utf-8"))
+                yield tuple(doc.get(c) for c in cols)
+
+    return _fetch_shards(
+        index, corpus_dir, ["offset", "length", "line_no"], DOCUMENTS_SCHEMA, read
     )
 
 
 # ---------------------------------------------------------------------------
-# TFRecord shard layout (round 14): the training-data container the TF
-# ecosystem consumes directly. Same layout family as the seekable-zstd
-# (c10) and bzip2-dump (c12) exports: one shard file per task + a
-# doc-level byte-range index, because TFRecord framing is byte-aligned
-# and length-prefixed — every record IS a range-readable unit with its
-# own masked-CRC32C integrity, so a 100 TB corpus serves point lookups
-# with one range GET per doc and full scans shard-parallel.
+# TFRecord shard layout: the training-data container the TF ecosystem
+# consumes directly. TFRecord framing is byte-aligned and length-
+# prefixed, so every record IS a range-readable unit with its own
+# masked-CRC32C integrity: a point lookup is one range read per doc.
 # ---------------------------------------------------------------------------
 
-TFRECORD_INDEX_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("shard", StringType(), False),
-        StructField("offset", LongType(), False),
-        StructField("length", LongType(), False),
-    ]
-)
+TFRECORD_INDEX_SCHEMA = _index_schema("doc_id", "offset", "length")
+
+#: export_ordered_tfrecord's index rows: the record byte-range index
+#: plus the training-order position the record was written at
+TFRECORD_ORDERED_INDEX_SCHEMA = _index_schema("doc_id", "offset", "length", "pos")
 
 
 def _tfrecord_field_plan(schema: StructType) -> list[tuple[str, str, bool]]:
@@ -714,6 +675,34 @@ def _example_to_row(
     return tuple(out)
 
 
+def _utf8_columns(schema: StructType) -> dict[str, bool]:
+    """Which columns decode BytesList values back to str (StringType /
+    array<string>) vs keep raw bytes (BinaryType / array<binary>)."""
+    from pyspark.sql.types import ArrayType
+
+    out = {}
+    for f in schema.fields:
+        dt = f.dataType
+        if isinstance(dt, ArrayType):
+            dt = dt.elementType
+        out[f.name] = isinstance(dt, StringType)
+    return out
+
+
+def _tfrecord_encoder(plan, gzip_members: bool):
+    import gzip
+
+    from pipeline_mf_etl_spark.sources.tfrecord import frame_record
+
+    def encode(rows):
+        data, locs = _byte_ranges([frame_record(_row_to_example(r, plan)) for r in rows])
+        if gzip_members:
+            data = gzip.compress(data, compresslevel=6, mtime=0)
+        return data, locs
+
+    return encode
+
+
 def write_tfrecord_corpus(
     df: DataFrame,
     path: str,
@@ -737,204 +726,18 @@ def write_tfrecord_corpus(
     per ``_tfrecord_field_plan`` (e.g. the embeddings table's
     ``array<float>`` rides FloatList exactly). ``id_col`` names the
     column the index's ``doc_id`` carries."""
-    import gzip
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.tfrecord import (
-        frame_record,
-        framed_length,
-    )
-
     if compression not in (None, "gzip"):
         raise ValueError(f"tfrecord: unsupported compression {compression!r}")
-    os.makedirs(path, exist_ok=True)
     schema = schema or DOCUMENTS_SCHEMA
     plan = _tfrecord_field_plan(schema)
-    cols = [f.name for f in schema.fields]
+    cols = schema.fieldNames()
     if id_col not in cols:
         raise ValueError(f"tfrecord: id column {id_col!r} not in schema")
-    spark = df.sparkSession
     ext = ".tfrecord.gz" if compression else ".tfrecord"
-
-    def write_shard(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        shard = f"shard-{pid:05d}{ext}"
-        blobs: list[bytes] = []
-        idx: list[tuple] = []
-        off = 0
-        for r in rows:
-            rec = frame_record(_row_to_example(r, plan))
-            assert len(rec) == framed_length(len(rec) - 16)
-            idx.append((_py(r.get(id_col)), shard, off, len(rec)))
-            off += len(rec)
-            blobs.append(rec)
-        payload = b"".join(blobs)
-        if compression:
-            payload = gzip.compress(payload, compresslevel=6, mtime=0)
-        tmp = os.path.join(path, f".{shard}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-        os.replace(tmp, os.path.join(path, shard))  # atomic publish
-        yield pd.DataFrame(
-            idx, columns=[f.name for f in TFRECORD_INDEX_SCHEMA.fields]
-        )
-
-    index = (
-        df.select(*cols)
-        .repartition(
-            n_shards, F.pmod(F.coalesce(id_col, F.lit(0)), F.lit(n_shards))
-        )
-        .sortWithinPartitions(id_col)
-        .mapInPandas(write_shard, TFRECORD_INDEX_SCHEMA)
+    return _write_shards(
+        df, path, n_shards, cols, id_col, "shard-{:05d}" + ext,
+        TFRECORD_INDEX_SCHEMA, _tfrecord_encoder(plan, bool(compression)),
     )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
-
-
-def read_tfrecord_docs(
-    index: DataFrame,
-    corpus_dir: str,
-    schema: StructType | None = None,
-) -> DataFrame:
-    """Distributed point-lookup over a TFRecord shard corpus: each index
-    row range-reads ONLY its record's bytes (seek + bounded read — the
-    object-store range-GET pattern), verifies both masked CRCs, and
-    decodes the one tf.Example. Gzip shards decompress once per task
-    and slice the cached stream (offsets address uncompressed bytes).
-    ``schema`` must match the one the corpus was written with
-    (documents contract by default)."""
-    import gzip
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.tfrecord import read_tfrecord_at
-
-    schema = schema or DOCUMENTS_SCHEMA
-    plan = _tfrecord_field_plan(schema)
-    utf8 = _utf8_columns(schema)
-
-    def fetch(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for shard, grp in pdf.groupby("shard", sort=False):
-                p = os.path.join(corpus_dir, str(shard))
-                if str(shard).endswith(".gz"):
-                    with open(p, "rb") as fh:
-                        stream = gzip.decompress(fh.read())
-                    for off, ln in zip(grp["offset"], grp["length"]):
-                        rows.append(
-                            _example_to_row(
-                                read_tfrecord_at(
-                                    stream[int(off) : int(off) + int(ln)]
-                                ),
-                                plan,
-                                utf8,
-                            )
-                        )
-                else:
-                    order = grp.sort_values("offset")  # sequential seeks
-                    with open(p, "rb") as fh:
-                        for off, ln in zip(order["offset"], order["length"]):
-                            fh.seek(int(off))
-                            rows.append(
-                                _example_to_row(
-                                    read_tfrecord_at(fh.read(int(ln))),
-                                    plan,
-                                    utf8,
-                                )
-                            )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
-
-    return index.select("shard", "offset", "length").mapInPandas(
-        fetch, schema
-    )
-
-
-def _utf8_columns(schema: StructType) -> dict[str, bool]:
-    """Which columns decode BytesList values back to str (StringType /
-    array<string>) vs keep raw bytes (BinaryType / array<binary>)."""
-    from pyspark.sql.types import ArrayType
-
-    out = {}
-    for f in schema.fields:
-        dt = f.dataType
-        if isinstance(dt, ArrayType):
-            dt = dt.elementType
-        out[f.name] = isinstance(dt, StringType)
-    return out
-
-
-def read_tfrecord_corpus(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-) -> DataFrame:
-    """Full-scan read of a TFRecord shard corpus: shard-grain parallel
-    (each task walks whole record streams with every CRC verified), the
-    grain a 1000-executor cluster distributes on. Handles ``.tfrecord``
-    and ``.tfrecord.gz`` shards together."""
-    import gzip
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.tfrecord import iter_tfrecord
-
-    schema = schema or DOCUMENTS_SCHEMA
-    plan = _tfrecord_field_plan(schema)
-    utf8 = _utf8_columns(schema)
-    shards = sorted(
-        n
-        for n in os.listdir(path)
-        if n.endswith(".tfrecord") or n.endswith(".tfrecord.gz")
-    )
-    if not shards:
-        raise ValueError(f"{path}: no .tfrecord shards found")
-
-    def scan(batches):
-        for pdf in batches:
-            for name in pdf["shard"]:
-                with open(os.path.join(path, str(name)), "rb") as fh:
-                    data = fh.read()
-                if str(name).endswith(".gz"):
-                    data = gzip.decompress(data)
-                rows = [
-                    _example_to_row(payload, plan, utf8)
-                    for _, _, payload in iter_tfrecord(data)
-                ]
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in schema.fields]
-                )
-
-    files = spark.createDataFrame(
-        [(s,) for s in shards], StructType([StructField("shard", StringType(), False)])
-    ).repartition(len(shards), "shard")
-    return files.mapInPandas(scan, schema)
-
-
-#: export_ordered_tfrecord's index rows: the record byte-range index
-#: plus the training-order position the record was written at
-TFRECORD_ORDERED_INDEX_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("shard", StringType(), False),
-        StructField("offset", LongType(), False),
-        StructField("length", LongType(), False),
-        StructField("pos", LongType(), False),
-    ]
-)
 
 
 def export_ordered_tfrecord(
@@ -955,79 +758,83 @@ def export_ordered_tfrecord(
     shard VALUE (a shard is never split across tasks), one shuffle (the
     repartition), record encoding shard-parallel, the index write is
     the driving action."""
-    import os
+    schema = schema or DOCUMENTS_SCHEMA
+    return _write_shards(
+        df, path, n_shards, schema.fieldNames(), "doc_id", "shard-{:05d}.tfrecord",
+        TFRECORD_ORDERED_INDEX_SCHEMA,
+        _tfrecord_encoder(_tfrecord_field_plan(schema), False), order=order,
+    )
 
-    import pandas as pd
 
-    from pipeline_mf_etl_spark.sources.tfrecord import frame_record
+def read_tfrecord_docs(
+    index: DataFrame,
+    corpus_dir: str,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Distributed point-lookup over a TFRecord shard corpus: each index
+    row range-reads ONLY its record's bytes (seek + bounded read — the
+    object-store range-GET pattern), verifies both masked CRCs, and
+    decodes the one tf.Example. Gzip shards decompress once per task
+    and slice the cached stream (offsets address uncompressed bytes).
+    ``schema`` must match the one the corpus was written with
+    (documents contract by default)."""
+    import gzip
 
-    os.makedirs(path, exist_ok=True)
+    from pipeline_mf_etl_spark.sources.tfrecord import read_tfrecord_at
+
     schema = schema or DOCUMENTS_SCHEMA
     plan = _tfrecord_field_plan(schema)
-    cols = [f.name for f in schema.fields]
-    spark = df.sparkSession
+    utf8 = _utf8_columns(schema)
 
-    def write_shards(batches):
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        by_shard: dict[int, list[dict]] = {}
-        for r in rows:
-            by_shard.setdefault(int(r["shard"]), []).append(r)
-        out: list[tuple] = []
-        for s, rs in sorted(by_shard.items()):
-            # sortWithinPartitions already ordered (shard, pos); the
-            # in-memory sort is a cheap idempotence guard
-            rs.sort(key=lambda r: int(r["pos"]))
-            shard_name = f"shard-{s:05d}.tfrecord"
-            blobs: list[bytes] = []
-            off = 0
-            for r in rs:
-                rec = frame_record(_row_to_example(r, plan))
-                out.append(
-                    (_py(r["doc_id"]), shard_name, off, len(rec), int(r["pos"]))
-                )
-                off += len(rec)
-                blobs.append(rec)
-            tmp = os.path.join(path, f".{shard_name}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(b"".join(blobs))
-            os.replace(tmp, os.path.join(path, shard_name))  # atomic publish
-        yield pd.DataFrame(
-            out, columns=[f.name for f in TFRECORD_ORDERED_INDEX_SCHEMA.fields]
-        )
+    def read(fh, grp):
+        stream = gzip.decompress(fh.read()) if fh.name.endswith(".gz") else None
+        grp = grp.sort_values("offset")  # sequential seeks
+        for off, ln in zip(grp["offset"], grp["length"]):
+            off, ln = int(off), int(ln)
+            if stream is None:
+                fh.seek(off)
+                rec = fh.read(ln)
+            else:
+                rec = stream[off : off + ln]
+            yield _example_to_row(read_tfrecord_at(rec), plan, utf8)
 
-    index = (
-        df.select(*cols)
-        .join(order.select("shard", "doc_id", "pos"), "doc_id")
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "pos")
-        .mapInPandas(write_shards, TFRECORD_ORDERED_INDEX_SCHEMA)
-    )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
+    return _fetch_shards(index, corpus_dir, ["offset", "length"], schema, read)
+
+
+def read_tfrecord_corpus(
+    spark: SparkSession,
+    path: str,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Full-scan read of a TFRecord shard corpus: shard-grain parallel
+    (each task walks whole record streams with every CRC verified).
+    Handles ``.tfrecord`` and ``.tfrecord.gz`` shards together."""
+    import gzip
+
+    from pipeline_mf_etl_spark.sources.tfrecord import iter_tfrecord
+
+    schema = schema or DOCUMENTS_SCHEMA
+    plan = _tfrecord_field_plan(schema)
+    utf8 = _utf8_columns(schema)
+
+    def decode(name, data):
+        if name.endswith(".gz"):
+            data = gzip.decompress(data)
+        return [_example_to_row(p, plan, utf8) for _, _, p in iter_tfrecord(data)]
+
+    return _scan_shards(spark, path, (".tfrecord", ".tfrecord.gz"), schema, decode)
 
 
 # ---------------------------------------------------------------------------
-# Arrow IPC shard layout (round 14): the HuggingFace-datasets
-# interchange — each shard a Feather-V2 ``.arrow`` FILE whose footer
-# makes record batches RANDOM-ACCESS, plus a doc-level (shard, batch,
-# row) index. Point lookups are two range GETs (10-byte tail probe +
-# footer, then the one covering block); full scans are shard-grain
-# parallel. Codec: sources/arrowipc.py (dependency-free, pyarrow-
-# cross-validated both directions).
+# Arrow IPC shard layout: the HuggingFace-datasets interchange — each
+# shard a Feather-V2 ``.arrow`` FILE whose footer makes record batches
+# RANDOM-ACCESS, plus a doc-level (shard, batch, row) index. A point
+# lookup is two range reads (10-byte tail probe + footer, then the one
+# covering block). Codec: sources/arrowipc.py (dependency-free,
+# pyarrow-cross-validated both directions).
 # ---------------------------------------------------------------------------
 
-ARROW_INDEX_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("shard", StringType(), False),
-        StructField("batch", LongType(), False),
-        StructField("row", LongType(), False),
-    ]
-)
+ARROW_INDEX_SCHEMA = _index_schema("doc_id", "batch", "row")
 
 
 def _arrow_fields(schema: StructType) -> list:
@@ -1095,6 +902,20 @@ def _rows_to_arrow_columns(rows: list[dict], schema: StructType) -> list[list]:
     return cols
 
 
+def _arrow_encoder(schema: StructType, batch_rows: int):
+    from pipeline_mf_etl_spark.sources.arrowipc import encode_arrow_file
+
+    fields = _arrow_fields(schema)
+
+    def encode(rows):
+        payload = encode_arrow_file(
+            fields, _rows_to_arrow_columns(rows, schema), batch_rows=batch_rows
+        )
+        return payload, [(i // batch_rows, i % batch_rows) for i in range(len(rows))]
+
+    return encode
+
+
 def write_arrow_corpus(
     df: DataFrame,
     path: str,
@@ -1108,517 +929,15 @@ def write_arrow_corpus(
     shard-parallel in one Spark job, atomic per-shard publish.
     ``batch_rows`` bounds record-batch size (the random-access grain).
     Returns the index read back from ``<path>/_index``."""
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.arrowipc import encode_arrow_file
-
-    os.makedirs(path, exist_ok=True)
     schema = schema or DOCUMENTS_SCHEMA
-    fields = _arrow_fields(schema)
-    cols = [f.name for f in schema.fields]
+    encode = _arrow_encoder(schema, batch_rows)
+    cols = schema.fieldNames()
     if id_col not in cols:
         raise ValueError(f"arrow: id column {id_col!r} not in schema")
-    spark = df.sparkSession
-
-    def write_shard(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        shard = f"shard-{pid:05d}.arrow"
-        payload = encode_arrow_file(
-            fields, _rows_to_arrow_columns(rows, schema), batch_rows=batch_rows
-        )
-        tmp = os.path.join(path, f".{shard}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-        os.replace(tmp, os.path.join(path, shard))  # atomic publish
-        idx = [
-            (_py(r.get(id_col)), shard, i // batch_rows, i % batch_rows)
-            for i, r in enumerate(rows)
-        ]
-        yield pd.DataFrame(
-            idx, columns=[f.name for f in ARROW_INDEX_SCHEMA.fields]
-        )
-
-    index = (
-        df.select(*cols)
-        .repartition(
-            n_shards, F.pmod(F.coalesce(id_col, F.lit(0)), F.lit(n_shards))
-        )
-        .sortWithinPartitions(id_col)
-        .mapInPandas(write_shard, ARROW_INDEX_SCHEMA)
+    return _write_shards(
+        df, path, n_shards, cols, id_col, "shard-{:05d}.arrow",
+        ARROW_INDEX_SCHEMA, encode,
     )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
-
-
-def read_arrow_docs(
-    index: DataFrame,
-    corpus_dir: str,
-    schema: StructType | None = None,
-) -> DataFrame:
-    """Distributed point-lookup over an Arrow shard corpus: per shard,
-    one 10-byte tail probe + the footer, then ONLY the covering blocks
-    (each decoded at most once per task), never the whole file — the
-    object-store range-GET pattern at batch grain."""
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.arrowipc import (
-        arrow_footer_length,
-        load_arrow_dictionaries,
-        parse_footer_flatbuffer,
-        read_arrow_batch_at,
-    )
-
-    schema = schema or DOCUMENTS_SCHEMA
-
-    def fetch(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for shard, grp in pdf.groupby("shard", sort=False):
-                p = os.path.join(corpus_dir, str(shard))
-                with open(p, "rb") as fh:
-                    size = fh.seek(0, os.SEEK_END)
-                    fh.seek(size - 10)
-                    flen = arrow_footer_length(fh.read(10))
-                    fh.seek(size - 10 - flen)
-                    meta = parse_footer_flatbuffer(fh.read(flen))
-                    blocks = meta["blocks"]
-
-                    def _range_read(off, n):
-                        fh.seek(off)
-                        return fh.read(n)
-
-                    dicts = load_arrow_dictionaries(
-                        b"", meta, read=_range_read
-                    )
-                    cache: dict[int, list[list]] = {}
-                    order = grp.sort_values(["batch", "row"])
-                    for b, rrow in zip(order["batch"], order["row"]):
-                        b, rrow = int(b), int(rrow)
-                        if b >= len(blocks):
-                            raise ValueError(
-                                f"{p}: batch {b} beyond footer blocks"
-                            )
-                        if b not in cache:
-                            # ascending batch order: earlier batches are
-                            # never needed again
-                            cache.clear()
-                            off, ml, bl = blocks[b]
-                            fh.seek(off)
-                            cache[b] = read_arrow_batch_at(
-                                fh.read(ml + bl), 0, ml, bl,
-                                meta["fields"], dicts,
-                            )
-                        cols = cache[b]
-                        rows.append(tuple(c[rrow] for c in cols))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
-
-    return index.select("shard", "batch", "row").mapInPandas(fetch, schema)
-
-
-def read_arrow_corpus(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-) -> DataFrame:
-    """Full-scan read of an Arrow shard corpus, shard-grain parallel."""
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.arrowipc import decode_arrow_file
-
-    schema = schema or DOCUMENTS_SCHEMA
-    shards = sorted(n for n in os.listdir(path) if n.endswith(".arrow"))
-    if not shards:
-        raise ValueError(f"{path}: no .arrow shards found")
-
-    def scan(batches):
-        for pdf in batches:
-            for name in pdf["shard"]:
-                with open(os.path.join(path, str(name)), "rb") as fh:
-                    out = decode_arrow_file(fh.read())
-                rows = list(zip(*out["columns"])) if out["columns"] else []
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in schema.fields]
-                )
-
-    files = spark.createDataFrame(
-        [(s,) for s in shards],
-        StructType([StructField("shard", StringType(), False)]),
-    ).repartition(len(shards), "shard")
-    return files.mapInPandas(scan, schema)
-
-
-# ---------------------------------------------------------------------------
-# safetensors embedding-shard layout (round 14): the HF tensor
-# container as the EMBEDDINGS interchange — one ``.safetensors`` file
-# per shard holding vec_id (I64 [n]), embedding (F32 [n, d]) and label
-# (I32 [n]) tensors, plus a (vec_id, shard, row) index. Because the
-# format is raw C-order tensors behind a JSON header, a row lookup is
-# pure offset arithmetic: header probe + three bounded range GETs, no
-# framing walk at all (sources/safetensors.py:tensor_row_range).
-# Tensors cannot represent SQL NULL — the writer REJECTS null cells
-# loudly rather than inventing sentinels.
-# ---------------------------------------------------------------------------
-
-SAFETENSORS_INDEX_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), True),
-        StructField("shard", StringType(), False),
-        StructField("row", LongType(), False),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), True),
-        StructField("embedding", ArrayType(FloatType(), True), True),
-        StructField("label", IntegerType(), True),
-    ]
-)
-
-
-def write_safetensors_corpus(
-    df: DataFrame, path: str, n_shards: int = 4
-) -> DataFrame:
-    """Write an embeddings table (vec_id, embedding array<float>,
-    label) as ``shard-<N>.safetensors`` files + a ``_index`` parquet of
-    (vec_id, shard, row); shard-parallel, atomic publish. The embedding
-    dimension must be uniform (the fixed-[n, d] tensor contract) and no
-    cell may be NULL — both violations raise."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.safetensors import encode_safetensors
-
-    os.makedirs(path, exist_ok=True)
-    spark = df.sparkSession
-
-    def write_shard(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        shard = f"shard-{pid:05d}.safetensors"
-        ids, labels, embs = [], [], []
-        for r in rows:
-            vid, lab, emb = r.get("vec_id"), r.get("label"), r.get("embedding")
-            if _py(vid) is None or _py(lab) is None or emb is None:
-                raise ValueError(
-                    "safetensors: NULL cell — tensors cannot represent "
-                    "SQL NULL"
-                )
-            ids.append(int(vid))
-            labels.append(int(lab))
-            embs.append(np.asarray(emb, dtype="<f4"))
-        d = len(embs[0])
-        if any(len(e) != d for e in embs):
-            raise ValueError("safetensors: ragged embedding dimensions")
-        mat = np.vstack(embs).astype("<f4")
-        payload = encode_safetensors(
-            {
-                "vec_id": ("I64", [len(ids)], np.asarray(ids, "<i8").tobytes()),
-                "label": ("I32", [len(ids)], np.asarray(labels, "<i4").tobytes()),
-                "embedding": ("F32", [len(ids), d], mat.tobytes()),
-            },
-            metadata={"layout": "embeddings-v1"},
-        )
-        tmp = os.path.join(path, f".{shard}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-        os.replace(tmp, os.path.join(path, shard))  # atomic publish
-        yield pd.DataFrame(
-            [(ids[i], shard, i) for i in range(len(ids))],
-            columns=[f.name for f in SAFETENSORS_INDEX_SCHEMA.fields],
-        )
-
-    index = (
-        df.select("vec_id", "embedding", "label")
-        .repartition(
-            n_shards, F.pmod(F.coalesce("vec_id", F.lit(0)), F.lit(n_shards))
-        )
-        .sortWithinPartitions("vec_id")
-        .mapInPandas(write_shard, SAFETENSORS_INDEX_SCHEMA)
-    )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
-
-
-def read_safetensors_rows(index: DataFrame, corpus_dir: str) -> DataFrame:
-    """Distributed row lookup over a safetensors shard corpus: per
-    shard one header probe, then per row three bounded range reads
-    (vec_id, label, embedding row) located by offset arithmetic alone.
-    Returns EMBEDDINGS_SCHEMA rows."""
-    import os
-    import struct as _struct
-
-    import numpy as np
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.safetensors import (
-        decode_safetensors_header,
-        tensor_row_range,
-    )
-
-    def fetch(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for shard, grp in pdf.groupby("shard", sort=False):
-                p = os.path.join(corpus_dir, str(shard))
-                with open(p, "rb") as fh:
-                    (n,) = _struct.unpack("<Q", fh.read(8))
-                    fh.seek(0)
-                    header_blob = fh.read(8 + n)
-                    size = fh.seek(0, os.SEEK_END)
-                    # header-only validation against the file size: no
-                    # byte of the data region is read until a row asks
-                    meta = decode_safetensors_header(
-                        header_blob, total_length=size
-                    )
-                    for row in grp.sort_values("row")["row"]:
-                        row = int(row)
-                        vals = []
-                        for name, dt in (
-                            ("vec_id", "<i8"),
-                            ("label", "<i4"),
-                            ("embedding", "<f4"),
-                        ):
-                            off, ln = tensor_row_range(meta, name, row)
-                            fh.seek(off)
-                            vals.append(np.frombuffer(fh.read(ln), dt))
-                        rows.append(
-                            (
-                                int(vals[0][0]),
-                                [float(x) for x in vals[2]],
-                                int(vals[1][0]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in EMBEDDINGS_SCHEMA.fields]
-            )
-
-    return index.select("shard", "row").mapInPandas(fetch, EMBEDDINGS_SCHEMA)
-
-
-def read_safetensors_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Full-scan read of a safetensors shard corpus, shard-parallel."""
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.safetensors import (
-        decode_safetensors_header,
-        tensor_to_numpy,
-    )
-
-    shards = sorted(n for n in os.listdir(path) if n.endswith(".safetensors"))
-    if not shards:
-        raise ValueError(f"{path}: no .safetensors shards found")
-
-    def scan(batches):
-        for pdf in batches:
-            for name in pdf["shard"]:
-                with open(os.path.join(path, str(name)), "rb") as fh:
-                    blob = fh.read()
-                meta = decode_safetensors_header(blob)
-                ids = tensor_to_numpy(blob, meta, "vec_id")
-                labels = tensor_to_numpy(blob, meta, "label")
-                mat = tensor_to_numpy(blob, meta, "embedding")
-                rows = [
-                    (int(ids[i]), [float(x) for x in mat[i]], int(labels[i]))
-                    for i in range(len(ids))
-                ]
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in EMBEDDINGS_SCHEMA.fields]
-                )
-
-    files = spark.createDataFrame(
-        [(s,) for s in shards],
-        StructType([StructField("shard", StringType(), False)]),
-    ).repartition(len(shards), "shard")
-    return files.mapInPandas(scan, EMBEDDINGS_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# npz embedding-shard layout (round 14): np.savez's container as the
-# EMBEDDINGS interchange — one uncompressed ``.npz`` per shard holding
-# vec_id/label/embedding arrays + a (vec_id, shard, row) index. STORED
-# members keep every array range-addressable inside the archive, so a
-# row lookup is the ZIP central-directory walk (header-grain) + pure
-# offset arithmetic into the member (sources/npy.py:npy_row_range) —
-# the same two-range-GET economics as c15's safetensors. NULL cells
-# reject loudly (arrays have no null concept).
-# ---------------------------------------------------------------------------
-
-
-def write_npz_corpus(df: DataFrame, path: str, n_shards: int = 4) -> DataFrame:
-    """Write an embeddings table as ``shard-<N>.npz`` archives + a
-    ``_index`` parquet of (vec_id, shard, row); shard-parallel, atomic
-    publish. Same constraints as the safetensors writer: uniform
-    embedding dimension, no NULL cells."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.npy import write_npz
-
-    os.makedirs(path, exist_ok=True)
-    spark = df.sparkSession
-
-    def write_shard(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        shard = f"shard-{pid:05d}.npz"
-        ids, labels, embs = [], [], []
-        for r in rows:
-            vid, lab, emb = r.get("vec_id"), r.get("label"), r.get("embedding")
-            if _py(vid) is None or _py(lab) is None or emb is None:
-                raise ValueError(
-                    "npz: NULL cell — arrays cannot represent SQL NULL"
-                )
-            ids.append(int(vid))
-            labels.append(int(lab))
-            embs.append(np.asarray(emb, dtype="<f4"))
-        d = len(embs[0])
-        if any(len(e) != d for e in embs):
-            raise ValueError("npz: ragged embedding dimensions")
-        mat = np.vstack(embs).astype("<f4")
-        payload = write_npz(
-            {
-                "vec_id": ("<i8", (len(ids),), np.asarray(ids, "<i8").tobytes()),
-                "label": ("<i4", (len(ids),), np.asarray(labels, "<i4").tobytes()),
-                "embedding": ("<f4", (len(ids), d), mat.tobytes()),
-            }
-        )
-        tmp = os.path.join(path, f".{shard}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-        os.replace(tmp, os.path.join(path, shard))  # atomic publish
-        yield pd.DataFrame(
-            [(ids[i], shard, i) for i in range(len(ids))],
-            columns=[f.name for f in SAFETENSORS_INDEX_SCHEMA.fields],
-        )
-
-    index = (
-        df.select("vec_id", "embedding", "label")
-        .repartition(
-            n_shards, F.pmod(F.coalesce("vec_id", F.lit(0)), F.lit(n_shards))
-        )
-        .sortWithinPartitions("vec_id")
-        .mapInPandas(write_shard, SAFETENSORS_INDEX_SCHEMA)
-    )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
-
-
-def read_npz_rows(index: DataFrame, corpus_dir: str) -> DataFrame:
-    """Distributed row lookup over an npz shard corpus: per shard one
-    archive walk (central directory + npy headers), then per row three
-    offset-arithmetic slices out of the STORED members. Returns
-    EMBEDDINGS_SCHEMA rows."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.npy import npy_row_range, read_npz
-
-    def fetch(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for shard, grp in pdf.groupby("shard", sort=False):
-                p = os.path.join(corpus_dir, str(shard))
-                with open(p, "rb") as fh:
-                    blob = fh.read()
-                m = read_npz(blob)
-                for name in ("vec_id", "label", "embedding"):
-                    if name not in m or not m[name]["stored"]:
-                        raise ValueError(
-                            f"{p}: member {name!r} missing or not STORED"
-                        )
-
-                def row_slice(name, row, dt):
-                    e = m[name]
-                    off, ln = npy_row_range(e, row)
-                    base = e["member_offset"]
-                    return np.frombuffer(blob[base + off : base + off + ln], dt)
-
-                for row in grp.sort_values("row")["row"]:
-                    row = int(row)
-                    rows.append(
-                        (
-                            int(row_slice("vec_id", row, "<i8")[0]),
-                            [float(x) for x in row_slice("embedding", row, "<f4")],
-                            int(row_slice("label", row, "<i4")[0]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in EMBEDDINGS_SCHEMA.fields]
-            )
-
-    return index.select("shard", "row").mapInPandas(fetch, EMBEDDINGS_SCHEMA)
-
-
-def read_npz_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Full-scan read of an npz shard corpus, shard-parallel."""
-    import os
-
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.npy import npy_to_numpy, read_npz
-
-    shards = sorted(n for n in os.listdir(path) if n.endswith(".npz"))
-    if not shards:
-        raise ValueError(f"{path}: no .npz shards found")
-
-    def scan(batches):
-        for pdf in batches:
-            for name in pdf["shard"]:
-                with open(os.path.join(path, str(name)), "rb") as fh:
-                    blob = fh.read()
-                m = read_npz(blob)
-                ids = npy_to_numpy(m["vec_id"]["payload"])
-                labels = npy_to_numpy(m["label"]["payload"])
-                mat = npy_to_numpy(m["embedding"]["payload"])
-                rows = [
-                    (int(ids[i]), [float(x) for x in mat[i]], int(labels[i]))
-                    for i in range(len(ids))
-                ]
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in EMBEDDINGS_SCHEMA.fields]
-                )
-
-    files = spark.createDataFrame(
-        [(s,) for s in shards],
-        StructType([StructField("shard", StringType(), False)]),
-    ).repartition(len(shards), "shard")
-    return files.mapInPandas(scan, EMBEDDINGS_SCHEMA)
 
 
 def export_ordered_arrow(
@@ -1638,60 +957,279 @@ def export_ordered_arrow(
     footer random access (read_arrow_docs). Shard files are named by
     the assignment's shard VALUE (a shard is never split across
     tasks); one shuffle, encoding shard-parallel."""
+    schema = schema or DOCUMENTS_SCHEMA
+    return _write_shards(
+        df, path, n_shards, schema.fieldNames(), "doc_id", "shard-{:05d}.arrow",
+        _index_schema("doc_id", "batch", "row", "pos"),
+        _arrow_encoder(schema, batch_rows), order=order,
+    )
+
+
+def read_arrow_docs(
+    index: DataFrame,
+    corpus_dir: str,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Distributed point-lookup over an Arrow shard corpus: per shard,
+    one 10-byte tail probe + the footer, then ONLY the covering blocks
+    (each decoded at most once per task), never the whole file — the
+    object-store range-GET pattern at batch grain."""
     import os
 
-    import pandas as pd
-
-    from pipeline_mf_etl_spark.sources.arrowipc import encode_arrow_file
-
-    os.makedirs(path, exist_ok=True)
-    schema = schema or DOCUMENTS_SCHEMA
-    fields = _arrow_fields(schema)
-    cols = [f.name for f in schema.fields]
-    spark = df.sparkSession
-    ordered_schema = StructType(
-        list(ARROW_INDEX_SCHEMA.fields) + [StructField("pos", LongType(), False)]
+    from pipeline_mf_etl_spark.sources.arrowipc import (
+        arrow_footer_length,
+        load_arrow_dictionaries,
+        parse_footer_flatbuffer,
+        read_arrow_batch_at,
     )
 
-    def write_shards(batches):
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        if not rows:
-            return
-        by_shard: dict[int, list[dict]] = {}
-        for r in rows:
-            by_shard.setdefault(int(r["shard"]), []).append(r)
-        out: list[tuple] = []
-        for s, rs in sorted(by_shard.items()):
-            rs.sort(key=lambda r: int(r["pos"]))  # idempotence guard
-            shard_name = f"shard-{s:05d}.arrow"
-            payload = encode_arrow_file(
-                fields,
-                _rows_to_arrow_columns(rs, schema),
-                batch_rows=batch_rows,
-            )
-            tmp = os.path.join(path, f".{shard_name}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-            os.replace(tmp, os.path.join(path, shard_name))  # atomic
-            for i, r in enumerate(rs):
-                out.append(
-                    (
-                        _py(r["doc_id"]), shard_name,
-                        i // batch_rows, i % batch_rows, int(r["pos"]),
-                    )
+    schema = schema or DOCUMENTS_SCHEMA
+
+    def read(fh, grp):
+        size = fh.seek(0, os.SEEK_END)
+        fh.seek(size - 10)
+        flen = arrow_footer_length(fh.read(10))
+        fh.seek(size - 10 - flen)
+        meta = parse_footer_flatbuffer(fh.read(flen))
+        blocks = meta["blocks"]
+
+        def range_read(off, n):
+            fh.seek(off)
+            return fh.read(n)
+
+        dicts = load_arrow_dictionaries(b"", meta, read=range_read)
+        cached, cols = None, None
+        grp = grp.sort_values(["batch", "row"])
+        for b, row in zip(grp["batch"], grp["row"]):
+            b = int(b)
+            if b >= len(blocks):
+                raise ValueError(f"{fh.name}: batch {b} beyond footer blocks")
+            if b != cached:
+                # ascending batch order: earlier batches are never
+                # needed again
+                off, ml, bl = blocks[b]
+                cached = b
+                cols = read_arrow_batch_at(
+                    range_read(off, ml + bl), 0, ml, bl, meta["fields"], dicts
                 )
-        yield pd.DataFrame(
-            out, columns=[f.name for f in ordered_schema.fields]
+            yield tuple(c[int(row)] for c in cols)
+
+    return _fetch_shards(index, corpus_dir, ["batch", "row"], schema, read)
+
+
+def read_arrow_corpus(
+    spark: SparkSession,
+    path: str,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Full-scan read of an Arrow shard corpus, shard-grain parallel."""
+    from pipeline_mf_etl_spark.sources.arrowipc import decode_arrow_file
+
+    def decode(name, data):
+        out = decode_arrow_file(data)
+        return list(zip(*out["columns"])) if out["columns"] else []
+
+    return _scan_shards(spark, path, (".arrow",), schema or DOCUMENTS_SCHEMA, decode)
+
+
+# ---------------------------------------------------------------------------
+# Embedding-shard layouts (safetensors, npz): the EMBEDDINGS table
+# (vec_id I64 [n], embedding F32 [n, d], label I32 [n]) as fixed-shape
+# tensors, one file per shard, plus a (vec_id, shard, row) index. A row
+# lookup is pure offset arithmetic into the tensors — no framing walk.
+# Tensors cannot represent SQL NULL and need one embedding dimension:
+# the writers REJECT both loudly rather than inventing sentinels.
+# ---------------------------------------------------------------------------
+
+SAFETENSORS_INDEX_SCHEMA = _index_schema("vec_id", "row")
+
+EMBEDDINGS_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType(), True),
+        StructField("embedding", ArrayType(FloatType(), True), True),
+        StructField("label", IntegerType(), True),
+    ]
+)
+
+
+def _embedding_tensors(rows: list[dict], fmt: str, what: str):
+    """One shard's (vec_id <i8 [n], label <i4 [n], embedding <f4 [n, d])
+    arrays; a NULL cell or a ragged dimension raises, naming ``fmt``."""
+    import numpy as np
+
+    ids, labels, embs = [], [], []
+    for r in rows:
+        vid, lab, emb = r.get("vec_id"), r.get("label"), r.get("embedding")
+        if _py(vid) is None or _py(lab) is None or emb is None:
+            raise ValueError(f"{fmt}: NULL cell — {what} cannot represent SQL NULL")
+        ids.append(int(vid))
+        labels.append(int(lab))
+        embs.append(np.asarray(emb, dtype="<f4"))
+    d = len(embs[0])
+    if any(len(e) != d for e in embs):
+        raise ValueError(f"{fmt}: ragged embedding dimensions")
+    return (
+        np.asarray(ids, "<i8"),
+        np.asarray(labels, "<i4"),
+        np.vstack(embs).astype("<f4"),
+    )
+
+
+def _write_embedding_shards(df, path, n_shards, ext, encode):
+    return _write_shards(
+        df, path, n_shards, EMBEDDINGS_SCHEMA.fieldNames(), "vec_id",
+        "shard-{:05d}" + ext, SAFETENSORS_INDEX_SCHEMA,
+        lambda rows: (encode(rows), [(i,) for i in range(len(rows))]),
+    )
+
+
+def _embedding_rows(ids, mat, labels) -> list[tuple]:
+    return [
+        (int(ids[i]), [float(x) for x in mat[i]], int(labels[i]))
+        for i in range(len(ids))
+    ]
+
+
+def write_safetensors_corpus(
+    df: DataFrame, path: str, n_shards: int = 4
+) -> DataFrame:
+    """Write an embeddings table (vec_id, embedding array<float>,
+    label) as ``shard-<N>.safetensors`` files + a ``_index`` parquet of
+    (vec_id, shard, row); shard-parallel, atomic publish. The embedding
+    dimension must be uniform (the fixed-[n, d] tensor contract) and no
+    cell may be NULL — both violations raise."""
+    from pipeline_mf_etl_spark.sources.safetensors import encode_safetensors
+
+    def encode(rows):
+        ids, labels, mat = _embedding_tensors(rows, "safetensors", "tensors")
+        n, d = mat.shape
+        return encode_safetensors(
+            {
+                "vec_id": ("I64", [n], ids.tobytes()),
+                "label": ("I32", [n], labels.tobytes()),
+                "embedding": ("F32", [n, d], mat.tobytes()),
+            },
+            metadata={"layout": "embeddings-v1"},
         )
 
-    index = (
-        df.select(*cols)
-        .join(order.select("shard", "doc_id", "pos"), "doc_id")
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "pos")
-        .mapInPandas(write_shards, ordered_schema)
+    return _write_embedding_shards(df, path, n_shards, ".safetensors", encode)
+
+
+def read_safetensors_rows(index: DataFrame, corpus_dir: str) -> DataFrame:
+    """Distributed row lookup over a safetensors shard corpus: per
+    shard one header probe, then per row three bounded range reads
+    (vec_id, label, embedding row) located by offset arithmetic alone.
+    Returns EMBEDDINGS_SCHEMA rows."""
+    import os
+    import struct as _struct
+
+    import numpy as np
+
+    from pipeline_mf_etl_spark.sources.safetensors import (
+        decode_safetensors_header,
+        tensor_row_range,
     )
-    index.write.mode("overwrite").parquet(os.path.join(path, "_index"))
-    return spark.read.parquet(os.path.join(path, "_index"))
+
+    def read(fh, grp):
+        (n,) = _struct.unpack("<Q", fh.read(8))
+        fh.seek(0)
+        header_blob = fh.read(8 + n)
+        size = fh.seek(0, os.SEEK_END)
+        # header-only validation against the file size: no byte of the
+        # data region is read until a row asks
+        meta = decode_safetensors_header(header_blob, total_length=size)
+
+        def cell(name, row, dt):
+            off, ln = tensor_row_range(meta, name, row)
+            fh.seek(off)
+            return np.frombuffer(fh.read(ln), dt)
+
+        for row in grp.sort_values("row")["row"]:
+            row = int(row)
+            vec_id, label = cell("vec_id", row, "<i8"), cell("label", row, "<i4")
+            yield _embedding_rows(vec_id, [cell("embedding", row, "<f4")], label)[0]
+
+    return _fetch_shards(index, corpus_dir, ["row"], EMBEDDINGS_SCHEMA, read)
+
+
+def read_safetensors_corpus(spark: SparkSession, path: str) -> DataFrame:
+    """Full-scan read of a safetensors shard corpus, shard-parallel."""
+    from pipeline_mf_etl_spark.sources.safetensors import (
+        decode_safetensors_header,
+        tensor_to_numpy,
+    )
+
+    def decode(name, blob):
+        meta = decode_safetensors_header(blob)
+        return _embedding_rows(
+            *(tensor_to_numpy(blob, meta, t) for t in ("vec_id", "embedding", "label"))
+        )
+
+    return _scan_shards(spark, path, (".safetensors",), EMBEDDINGS_SCHEMA, decode)
+
+
+def write_npz_corpus(df: DataFrame, path: str, n_shards: int = 4) -> DataFrame:
+    """Write an embeddings table as ``shard-<N>.npz`` archives + a
+    ``_index`` parquet of (vec_id, shard, row); shard-parallel, atomic
+    publish. Same constraints as the safetensors writer: uniform
+    embedding dimension, no NULL cells. Members are STORED, so every
+    array stays range-addressable inside the archive."""
+    from pipeline_mf_etl_spark.sources.npy import write_npz
+
+    def encode(rows):
+        ids, labels, mat = _embedding_tensors(rows, "npz", "arrays")
+        n, d = mat.shape
+        return write_npz(
+            {
+                "vec_id": ("<i8", (n,), ids.tobytes()),
+                "label": ("<i4", (n,), labels.tobytes()),
+                "embedding": ("<f4", (n, d), mat.tobytes()),
+            }
+        )
+
+    return _write_embedding_shards(df, path, n_shards, ".npz", encode)
+
+
+def read_npz_rows(index: DataFrame, corpus_dir: str) -> DataFrame:
+    """Distributed row lookup over an npz shard corpus: per shard one
+    archive walk (central directory + npy headers), then per row three
+    offset-arithmetic slices out of the STORED members. Returns
+    EMBEDDINGS_SCHEMA rows."""
+    import numpy as np
+
+    from pipeline_mf_etl_spark.sources.npy import npy_row_range, read_npz
+
+    def read(fh, grp):
+        blob = fh.read()
+        m = read_npz(blob)
+        for name in ("vec_id", "label", "embedding"):
+            if name not in m or not m[name]["stored"]:
+                raise ValueError(
+                    f"{fh.name}: member {name!r} missing or not STORED"
+                )
+
+        def cell(name, row, dt):
+            e = m[name]
+            off, ln = npy_row_range(e, row)
+            base = e["member_offset"]
+            return np.frombuffer(blob[base + off : base + off + ln], dt)
+
+        for row in grp.sort_values("row")["row"]:
+            row = int(row)
+            vec_id, label = cell("vec_id", row, "<i8"), cell("label", row, "<i4")
+            yield _embedding_rows(vec_id, [cell("embedding", row, "<f4")], label)[0]
+
+    return _fetch_shards(index, corpus_dir, ["row"], EMBEDDINGS_SCHEMA, read)
+
+
+def read_npz_corpus(spark: SparkSession, path: str) -> DataFrame:
+    """Full-scan read of an npz shard corpus, shard-parallel."""
+    from pipeline_mf_etl_spark.sources.npy import npy_to_numpy, read_npz
+
+    def decode(name, blob):
+        m = read_npz(blob)
+        return _embedding_rows(
+            *(npy_to_numpy(m[t]["payload"]) for t in ("vec_id", "embedding", "label"))
+        )
+
+    return _scan_shards(spark, path, (".npz",), EMBEDDINGS_SCHEMA, decode)

@@ -585,6 +585,45 @@ def continuous_daily_rollup(
     )
 
 
+def _binary_dropzone(
+    spark: SparkSession, path: str, glob: str, max_files: int, extract, schema
+) -> DataFrame:
+    """A drop zone tailed by Spark's binaryFile source: each file under
+    ``path`` matching ``glob`` is picked up exactly once
+    (checkpoint-tracked), at most ``max_files`` per micro-batch — which
+    bounds micro-batch memory — and ``extract`` maps the (path, content)
+    Arrow batches to ``schema`` rows. ``extract`` must turn a bad file
+    into reject rows, never an exception: the checkpointed source would
+    replay a failing file forever and wedge the stream."""
+    from pyspark.sql.types import (
+        BinaryType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    # the binaryFile source's fixed schema, stated explicitly (the
+    # streaming source refuses to infer)
+    binary_schema = StructType(
+        [
+            StructField("path", StringType(), False),
+            StructField("modificationTime", TimestampType(), False),
+            StructField("length", LongType(), False),
+            StructField("content", BinaryType(), True),
+        ]
+    )
+    raw = (
+        spark.readStream.format("binaryFile")
+        .schema(binary_schema)
+        .option("pathGlobFilter", glob)
+        .option("maxFilesPerTrigger", max_files)
+        .load(path)
+    )
+    return raw.select("path", "content").mapInPandas(extract, schema)
+
+
 def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming twin of the batch WARC ingestion (sources/warc.py):
     tail a drop-zone of ``.warc.gz`` captures with Spark's binaryFile
@@ -626,9 +665,9 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
         # A real drop-zone carries pages in arbitrary (and mislabeled)
         # encodings. A strict decode here would fail the micro-batch,
         # and the checkpointed binaryFile source would replay the same
-        # files and fail forever — wedging the stream (ADVICE r10). Use
-        # the declared charset when it resolves, utf-8 otherwise, and
-        # ALWAYS errors="replace" so no byte sequence can raise.
+        # files and fail forever — wedging the stream. Use the declared
+        # charset when it resolves, utf-8 otherwise, and ALWAYS
+        # errors="replace" so no byte sequence can raise.
         enc = "utf-8"
         if content_type and "charset=" in content_type:
             cand = content_type.split("charset=", 1)[1].split(";")[0].strip()
@@ -669,26 +708,7 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    from pyspark.sql.types import BinaryType, TimestampType
-
-    # the binaryFile source's fixed schema, stated explicitly (the
-    # streaming source refuses to infer)
-    binary_schema = StructType(
-        [
-            StructField("path", StringType(), False),
-            StructField("modificationTime", TimestampType(), False),
-            StructField("length", LongType(), False),
-            StructField("content", BinaryType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("maxFilesPerTrigger", 4)
-        .load(path)
-    )
-    return raw.select("path", "content").mapInPandas(extract, schema)
+    return _binary_dropzone(spark, path, "*.warc.gz", 4, extract, schema)
 
 
 def read_compressed_jsonl_stream(
@@ -737,13 +757,13 @@ def read_compressed_jsonl_stream(
         decode, glob = _gz, "*.jsonl.gz"
     elif codec == "bzip2":
         # Wikipedia-dump convention: multistream .bz2 shards — the
-        # fully verified RLE1/BWT/Huffman walk (sources/bzip2.py, r13)
+        # fully verified RLE1/BWT/Huffman walk (sources/bzip2.py)
         from pipeline_mf_etl_spark.sources.bzip2 import decode_bzip2_stream
 
         decode, glob = decode_bzip2_stream, "*.jsonl.bz2"
     elif codec == "xz":
         # OSCAR-style .xz shards — the full container walk with block
-        # checks + index/footer validation (sources/xz.py, r13)
+        # checks + index/footer validation (sources/xz.py)
         from pipeline_mf_etl_spark.sources.xz import decode_xz_stream
 
         decode, glob = decode_xz_stream, "*.jsonl.xz"
@@ -753,14 +773,7 @@ def read_compressed_jsonl_stream(
             "(lz4|snappy|zstd|gzip|bzip2|xz)"
         )
 
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     schema = StructType(
         [
@@ -828,22 +841,7 @@ def read_compressed_jsonl_stream(
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    binary_schema = StructType(
-        [
-            StructField("path", StringType(), False),
-            StructField("modificationTime", TimestampType(), False),
-            StructField("length", LongType(), False),
-            StructField("content", BinaryType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", 8)
-        .load(path)
-    )
-    return raw.select("path", "content").mapInPandas(extract, schema)
+    return _binary_dropzone(spark, path, glob, 8, extract, schema)
 
 
 def ingest_dropzone_jsonl(
@@ -906,14 +904,7 @@ def read_tfrecord_stream(spark: SparkSession, path: str) -> DataFrame:
     tf.Example doesn't fit the documents contract becomes a per-record
     reject row. Never an exception: the checkpointed source would
     replay a failing file forever and wedge the stream."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from pipeline_mf_etl_spark.sources.corpus_io import (
         DOCUMENTS_SCHEMA,
@@ -964,22 +955,7 @@ def read_tfrecord_stream(spark: SparkSession, path: str) -> DataFrame:
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    binary_schema = StructType(
-        [
-            StructField("path", StringType(), False),
-            StructField("modificationTime", TimestampType(), False),
-            StructField("length", LongType(), False),
-            StructField("content", BinaryType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("pathGlobFilter", "*.tfrecord")
-        .option("maxFilesPerTrigger", 8)
-        .load(path)
-    )
-    return raw.select("path", "content").mapInPandas(extract, schema)
+    return _binary_dropzone(spark, path, "*.tfrecord", 8, extract, schema)
 
 
 def read_arrow_stream_dropzone(spark: SparkSession, path: str) -> DataFrame:
@@ -992,14 +968,7 @@ def read_arrow_stream_dropzone(spark: SparkSession, path: str) -> DataFrame:
     so unlike TFRecord there is no mid-file salvage grain: the footer
     is all-or-nothing); a decoded row that violates the documents
     contract becomes a per-row BAD_ROW reject."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from pipeline_mf_etl_spark.sources.arrowipc import decode_arrow_file
     from pipeline_mf_etl_spark.sources.corpus_io import DOCUMENTS_SCHEMA
@@ -1055,19 +1024,4 @@ def read_arrow_stream_dropzone(spark: SparkSession, path: str) -> DataFrame:
                     rows.append((spath, i, *vals, bad))
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    binary_schema = StructType(
-        [
-            StructField("path", StringType(), False),
-            StructField("modificationTime", TimestampType(), False),
-            StructField("length", LongType(), False),
-            StructField("content", BinaryType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("pathGlobFilter", "*.arrow")
-        .option("maxFilesPerTrigger", 8)
-        .load(path)
-    )
-    return raw.select("path", "content").mapInPandas(extract, schema)
+    return _binary_dropzone(spark, path, "*.arrow", 8, extract, schema)

@@ -19,6 +19,30 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _drop_tmp_exports(tmp_path_factory):
+    """An export dir (``.artifacts/ml_export/<tag>/<name>``) written for
+    a corpus under this session's basetemp is never read again once that
+    corpus is gone; remove each one at session end. Exports of the
+    shared testdata dirs stay for the next run."""
+    yield
+    import glob
+    import json
+    import shutil
+
+    from pipeline_mf_etl_spark.queries.export import _EXPORT_ROOT
+
+    base = os.path.realpath(tmp_path_factory.getbasetemp())
+    for meta_path in glob.glob(os.path.join(_EXPORT_ROOT, "*", "*", "_meta.json")):
+        with open(meta_path) as fh:
+            sf_dir = os.path.realpath(json.load(fh).get("sf_dir", ""))
+        if os.path.commonpath([base, sf_dir]) == base:
+            shutil.rmtree(os.path.dirname(meta_path))
+            tag_dir = os.path.dirname(os.path.dirname(meta_path))
+            if not os.listdir(tag_dir):
+                os.rmdir(tag_dir)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

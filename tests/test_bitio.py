@@ -18,6 +18,7 @@ from pipeline_mf_etl_spark.bitio import (
     LsbWriter,
     MsbReader,
     MsbWriter,
+    canonical_codes,
     uvarint_decode,
     uvarint_encode,
 )
@@ -280,3 +281,63 @@ def test_varints_live_in_bitio():
     assert found - {("bitio.py", "uvarint_decode"), ("bitio.py", "uvarint_encode")} == (
         _VARINT_LOOP_EXEMPT
     )
+
+
+def _code_assignment_loops(tree: ast.AST) -> set[str]:
+    """Functions holding a loop that both ``+= 1`` and ``<<=`` the same
+    name: the shape of a hand-rolled canonical prefix-code builder."""
+    found = set()
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, (ast.For, ast.While)):
+                aug = [
+                    n for n in ast.walk(child)
+                    if isinstance(n, ast.AugAssign) and isinstance(n.target, ast.Name)
+                ]
+                shifted = {n.target.id for n in aug if isinstance(n.op, ast.LShift)}
+                counted = {
+                    n.target.id
+                    for n in aug
+                    if isinstance(n.op, ast.Add)
+                    and isinstance(n.value, ast.Constant)
+                    and n.value.value == 1
+                }
+                if shifted & counted:
+                    found.add(fn)
+            visit(child, fn)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_canonical_codes_live_in_bitio():
+    """Drift guard: VP8L, bzip2 and JPEG assign canonical prefix codes
+    through bitio.canonical_codes; no other module loops over lengths
+    handing out consecutive codes."""
+    import pipeline_mf_etl_spark
+
+    root = Path(pipeline_mf_etl_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        found |= {(rel, fn) for fn in _code_assignment_loops(tree)}
+    assert found == {("bitio.py", "canonical_codes")}
+
+
+@pytest.mark.parametrize(
+    "pairs, want",
+    [
+        # (length, symbol) order, the VP8L/bzip2 rule
+        ([(1, 1), (0, 2), (2, 3), (3, 3)], {1: (0, 1), 0: (2, 2), 2: (6, 3), 3: (7, 3)}),
+        # JPEG table order: 0xF0 precedes 0x01 within length 2
+        ([(0x00, 2), (0xF0, 2), (0x01, 2), (0x02, 3)],
+         {0x00: (0, 2), 0xF0: (1, 2), 0x01: (2, 2), 0x02: (6, 3)}),
+    ],
+)
+def test_canonical_codes_follow_the_given_order(pairs, want):
+    assert canonical_codes(pairs) == want

@@ -136,6 +136,16 @@ def _jpeg_dht_overrun() -> bytes:
     return bytes(blob)
 
 
+def _jpeg_dht_repeated_symbol() -> bytes:
+    """A baseline JPEG whose DC table lists DC category 0 twice (in place
+    of category 1), so two codes would decode to one symbol."""
+    blob = bytearray(mm.encode_jpeg_gray(bytes(range(64)) * 2, 16, 8))
+    seg = blob.index(b"\xff\xc4") + 4
+    assert blob[seg + 17 : seg + 19] == b"\x00\x01"  # DC values 0, 1, ...
+    blob[seg + 18] = 0
+    return bytes(blob)
+
+
 def _decode_zstd_block(body: bytes) -> dict:
     """Decode a single-segment zstd frame holding one last compressed
     block with ``body`` as its content."""
@@ -157,6 +167,7 @@ _CORRUPT = {
     "zstd_block_no_sequences_header": lambda: _decode_zstd_block(b"\x00"),
     "zstd_block_rle_sequence_symbol_cut": lambda: _decode_zstd_block(b"\x00\x01\x40"),
     "jpeg_dht_counts_exceed_values": lambda: mm.parse_jpeg(_jpeg_dht_overrun()),
+    "jpeg_dht_repeated_symbol": lambda: mm.parse_jpeg(_jpeg_dht_repeated_symbol()),
     "bzip2_oversubscribed_huffman_lengths": lambda: bzip2._huff_decode_table(
         [1, 1, 1]
     ),

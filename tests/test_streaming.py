@@ -1016,3 +1016,29 @@ class TestArrowDropZone:
         assert rejects == ["BAD_FRAME", "BAD_ROW"]
         bad_row = [r for r in rows if r["reject_reason"] and "BAD_ROW" in r["reject_reason"]][0]
         assert bad_row["doc_id"] == 3 and bad_row["n_chars"] is None
+
+
+def test_dropzone_readers_keep_glob_and_trigger_bound(monkeypatch):
+    """Every binaryFile drop-zone reader goes through the one
+    _binary_dropzone source, with its own glob and its own
+    maxFilesPerTrigger (WARC archives are the large ones)."""
+    from pipeline_mf_etl_spark.streaming import transforms as T
+
+    seen = []
+    monkeypatch.setattr(
+        T, "_binary_dropzone",
+        lambda spark, path, glob, max_files, extract, schema: seen.append(
+            (glob, max_files)
+        ),
+    )
+    T.read_warc_stream(None, "zone")
+    for codec in ("lz4", "snappy", "zstd", "gzip", "bzip2", "xz"):
+        T.read_compressed_jsonl_stream(None, "zone", codec=codec)
+    T.read_tfrecord_stream(None, "zone")
+    T.read_arrow_stream_dropzone(None, "zone")
+    assert seen == [
+        ("*.warc.gz", 4),
+        ("*.jsonl.lz4", 8), ("*.jsonl.sz", 8), ("*.jsonl.zst", 8),
+        ("*.jsonl.gz", 8), ("*.jsonl.bz2", 8), ("*.jsonl.xz", 8),
+        ("*.tfrecord", 8), ("*.arrow", 8),
+    ]

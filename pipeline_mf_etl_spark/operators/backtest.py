@@ -1,4 +1,10 @@
-"""Per-series trade simulation (SURVEY.md §2.9 B6).
+"""The backtest rules shared by the ``run`` pipeline and the b/v/st
+query families: the B2 state map, the B5 transition entry signal, the
+B4 execution-realism gates and the B6 per-series trade simulation.
+Each rule is defined here once; the DuckDB oracles read the same state
+map text (``STATE_MAP_SQL``).
+
+Trade simulation (SURVEY.md §2.9 B6).
 
 The reference's backtest engine (backtest/engine.py:106-292) is an
 inherently sequential per-ticker event loop: a pending entry fills at
@@ -29,7 +35,8 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -38,6 +45,92 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pipeline_mf_etl_spark.config import Settings
+from pipeline_mf_etl_spark.operators.windows import rolling_min_samples, series_window
+
+# B2 state mapping (reference backtest/state_mapping.py:54-118): event
+# type -> (trade side, signal eligibility); unmapped types are side 0
+# and not eligible.
+STATE_MAP = (
+    ("purchase", 1, True),
+    ("error", -1, True),
+    ("click", 0, False),
+    ("view", 0, False),
+    ("signup", 0, False),
+)
+# SQL inline table, read by the Spark frame and the DuckDB oracles alike
+STATE_MAP_SQL = "(VALUES " + ", ".join(
+    f"('{t}', {s}, {str(e).upper()})" for t, s, e in STATE_MAP
+) + ") AS m(event_type, side, eligible)"
+
+
+def state_map_frame(spark: SparkSession) -> DataFrame:
+    """The state map as a frame. It plans as one ``LocalTableScan``, so
+    a join with it starts no Python stage of its own."""
+    return spark.sql("SELECT * FROM " + STATE_MAP_SQL)
+
+
+def with_state_map(df: DataFrame, upper: bool = False) -> DataFrame:
+    """B2: broadcast left join of the state map on ``event_type``,
+    adding ``side`` (0 when unmapped) and ``eligible`` (false when
+    unmapped). ``upper`` matches upper-cased event types."""
+    m = state_map_frame(df.sparkSession)
+    if upper:
+        m = m.withColumn("event_type", F.upper("event_type"))
+    return df.join(F.broadcast(m), "event_type", "left").withColumns(
+        {"side": F.coalesce("side", F.lit(0)), "eligible": F.coalesce("eligible", F.lit(False))}
+    )
+
+
+def entry_signal(w: WindowSpec) -> Column:
+    """B5 state_transition_entry (reference backtest/signals.py:20-242):
+    an eligible bar whose ``event_type`` differs from the previous bar's
+    in window ``w`` (or that opens its series) raises an entry signal."""
+    prev = F.lag("event_type").over(w)
+    return F.col("eligible") & (prev.isNull() | (F.col("event_type") != prev))
+
+
+def b4_gate_columns(df: DataFrame, s: Settings) -> DataFrame:
+    """Append the B4 realism gate columns (reference backtest/
+    execution_realism.py:208-559) to a per-bar frame carrying (user_id,
+    ts, event_id, value, dollar_vol): the three fail flags, the fixed-
+    precedence ``primary_reason`` (PRICE_FLOOR, then WARMUP, then
+    DOLLAR_VOL; NULL when every gate passes) and ``exec_eligible``.
+    Every window partitions on the series key, so a caller whose frame
+    already windows on user_id pays no extra shuffle; composing the
+    gates into that pass avoids joining two per-bar frames on event_id,
+    which would shuffle the full bar table twice."""
+    r = s.realism
+    w = series_window()
+    df = df.withColumn(
+        "history_bars", F.count("*").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    med = rolling_min_samples(
+        F.expr("percentile(dollar_vol, 0.5)"),
+        F.col("dollar_vol"),
+        w,
+        r.dollar_vol_window,
+    )
+    df = df.withColumn("dv_med_20", med)
+    price_fail = F.col("value") < r.price_floor
+    warm_fail = F.col("history_bars") < r.warmup_bars
+    dv_fail = F.coalesce(F.col("dv_med_20") < r.dollar_vol_floor, F.lit(False))
+    reason = (
+        F.when(price_fail, "PRICE_FLOOR")
+        .when(warm_fail, "WARMUP")
+        .when(dv_fail, "DOLLAR_VOL")
+    )
+    return df.withColumns(
+        {
+            "price_floor_fail": price_fail,
+            "warmup_fail": warm_fail,
+            "dollar_vol_fail": dv_fail,
+            "primary_reason": reason,
+            "exec_eligible": ~(price_fail | warm_fail | dv_fail),
+        }
+    )
+
 
 TRADE_SCHEMA = StructType(
     [

@@ -37,6 +37,28 @@ def rolling_min_samples(agg: Column, count_col: Column, w: WindowSpec, n: int) -
     return F.when(F.count(count_col).over(frame) >= n, agg.over(frame))
 
 
+def flow_state(ewm_col: str, w: WindowSpec) -> tuple[Column, Column]:
+    """S0-S4 flow-state grammar (reference gold/event_grammar_v1.py:
+    360-404) over a smoothed column: returns ``(flow, code)`` with
+    ``flow = ewm - 10`` and the tinyint ``code`` of its quadrant — 0
+    warm-up (NULL flow), 1 positive and rising, 2 positive and falling,
+    3 non-positive and falling, 4 non-positive and rising. The slope
+    is against the previous bar in ``w``; the first bar counts as
+    rising."""
+    flow = F.col(ewm_col) - 10.0
+    # slope vs the previous smoothed value (the constant cancels)
+    slope = flow - (F.lag(ewm_col).over(w) - 10.0)
+    rising = F.coalesce(slope >= 0, F.lit(True))
+    code = (
+        F.when(flow.isNull(), 0)
+        .when((flow > 0) & rising, 1)
+        .when(flow > 0, 2)
+        .when(rising, 4)
+        .otherwise(3)
+    )
+    return flow, code.cast("tinyint")
+
+
 def bars_since(flag: Column, w: WindowSpec) -> Column:
     """Rows since the last row where ``flag`` was true (0 on the event row
     itself, NULL before the first event).

@@ -24,23 +24,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.config import Settings, load_settings
-from pipeline_mf_etl_spark.operators.backtest import simulate_trades
+from pipeline_mf_etl_spark.operators.backtest import (
+    b4_gate_columns,
+    entry_signal,
+    simulate_trades,
+    with_state_map,
+)
 from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
-from pipeline_mf_etl_spark.operators.windows import series_window
+from pipeline_mf_etl_spark.operators.windows import flow_state, series_window
 from pipeline_mf_etl_spark.sources.readers import load_table
 from pipeline_mf_etl_spark.sources.writers import (
     write_csv_twin,
     write_json_artifact,
     write_partitioned,
-)
-
-# B2-style state mapping (same tiny table as queries/backtest.py).
-_STATE_MAP = (
-    ("purchase", 1, True),
-    ("error", -1, True),
-    ("click", 0, False),
-    ("view", 0, False),
-    ("signup", 0, False),
 )
 
 
@@ -91,8 +87,8 @@ def silver_layer(bronze: DataFrame, gap_days: int = 7) -> DataFrame:
 
 
 def gold_layer(silver: DataFrame, s: Settings) -> DataFrame:
-    """W3 EWM smoothing + S0-S4 flow states + B5 entry signals over the
-    valid silver rows."""
+    """W3 EWM smoothing + S0-S4 flow states + B2 state map + B5 entry
+    signals over the valid silver rows (the f1/b2/b5 builders)."""
     valid = silver.filter("is_valid_row").drop(
         *[c for c in silver.columns if c.startswith("q_")]
     )
@@ -105,27 +101,9 @@ def gold_layer(silver: DataFrame, s: Settings) -> DataFrame:
         out_col="ewm",
     )
     w = series_window()
-    flow = F.col("ewm") - 10.0
-    slope = flow - (F.lag("ewm").over(w) - 10.0)
-    rising = F.coalesce(slope >= 0, F.lit(True))
-    state = (
-        F.when(flow.isNull(), 0)
-        .when((flow > 0) & rising, 1)
-        .when(flow > 0, 2)
-        .when(rising, 4)
-        .otherwise(3)
-    )
-    df = df.withColumn("flow_state_code", state.cast("tinyint"))
-    spark = df.sparkSession
-    m = F.broadcast(
-        spark.createDataFrame(
-            list(_STATE_MAP), schema="event_type_raw string, side int, eligible boolean"
-        ).select(F.upper("event_type_raw").alias("event_type"), "side", "eligible")
-    )
-    df = df.join(m, "event_type", "left").fillna({"side": 0, "eligible": False})
-    prev_state = F.lag("event_type").over(w)
-    transition = prev_state.isNull() | (F.col("event_type") != prev_state)
-    return df.withColumn("signal", F.col("eligible") & transition)
+    df = df.withColumn("flow_state_code", flow_state("ewm", w)[1])
+    # bronze upper-cases event types
+    return with_state_map(df, upper=True).withColumn("signal", entry_signal(w))
 
 
 def research_layer(gold: DataFrame) -> DataFrame:
@@ -145,49 +123,20 @@ def research_layer(gold: DataFrame) -> DataFrame:
 
 
 def backtest_layer(gold: DataFrame, s: Settings) -> tuple[DataFrame, DataFrame]:
-    """B4+B6/B7: execution-realism gating, trade simulation on the
-    surviving signals, and summary metrics.
-
-    Realism flags mirror the oracle-certified b4 query (price floor /
-    warmup / rolling dollar-vol median floor with fixed-precedence
-    primary reason, reference backtest/execution_realism.py:208-559);
-    suppressed entry signals are rolled up by reason so the report can
-    show WHY candidates were dropped (reference suppression
-    diagnostics, execution_realism.py:440-470).
+    """B4+B6/B7: the b4 execution-realism gates, trade simulation on
+    the surviving signals, and the suppressed entry signals rolled up by
+    primary reason, so the report can show WHY candidates were dropped
+    (reference suppression diagnostics, execution_realism.py:440-470).
 
     Returns (trades, suppression_by_reason); callers compute summary
     metrics with :func:`trade_metrics` over whichever frame they mean
     (usually the read-back written layer).
     """
-    from pipeline_mf_etl_spark.operators.windows import rolling_min_samples
-
-    r = s.realism
-    w = series_window()
     dv = F.col("value") * F.col("prop_k")
     bars = gold.select(
         "user_id", "ts", "event_id", "value", "side", "signal", dv.alias("dollar_vol")
-    ).withColumn(
-        "history_bars",
-        F.count("*").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    med = rolling_min_samples(
-        F.expr("percentile(dollar_vol, 0.5)"),
-        F.col("dollar_vol"),
-        w,
-        r.dollar_vol_window,
-    )
-    bars = bars.withColumn("dv_med", med)
-    price_fail = F.col("value") < r.price_floor
-    warm_fail = F.col("history_bars") < r.warmup_bars
-    dv_fail = F.coalesce(F.col("dv_med") < r.dollar_vol_floor, F.lit(False))
-    reason = (
-        F.when(price_fail, "PRICE_FLOOR")
-        .when(warm_fail, "WARMUP")
-        .when(dv_fail, "DOLLAR_VOL")
-    )
-    bars = bars.withColumn("exec_eligible", ~(price_fail | warm_fail | dv_fail)).withColumn(
-        "suppress_reason", reason
-    )
+    bars = b4_gate_columns(bars, s).withColumnRenamed("primary_reason", "suppress_reason")
     suppression = (
         bars.filter(F.col("signal") & ~F.col("exec_eligible"))
         .groupBy("suppress_reason")

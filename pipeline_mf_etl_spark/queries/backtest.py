@@ -18,8 +18,14 @@ from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.config import Settings, load_settings
 from pipeline_mf_etl_spark.functions.core import safe_div
-from pipeline_mf_etl_spark.operators.backtest import simulate_trades
-from pipeline_mf_etl_spark.operators.windows import rolling_min_samples, series_window
+from pipeline_mf_etl_spark.operators.backtest import (
+    STATE_MAP_SQL,
+    b4_gate_columns,
+    entry_signal,
+    simulate_trades,
+    with_state_map,
+)
+from pipeline_mf_etl_spark.operators.windows import series_window
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
@@ -30,52 +36,20 @@ _W = "PARTITION BY user_id ORDER BY ts, event_id"
 # Settings to get a (frame, oracle) pair at any knob value.
 _S = load_settings()
 
-# B2 state mapping (reference backtest/state_mapping.py:54-118): tiny
-# direction/eligibility lookup, broadcast-joined.
-_STATE_MAP = (
-    ("purchase", 1, True),
-    ("error", -1, True),
-    ("click", 0, False),
-    ("view", 0, False),
-    ("signup", 0, False),
-)
-_STATE_MAP_SQL = "(VALUES " + ", ".join(
-    f"('{t}', {s}, {str(e).upper()})" for t, s, e in _STATE_MAP
-) + ") AS m(event_type, side, eligible)"
-
 _HOLD = _S.backtest.hold_bars
 _COST = _S.backtest.round_trip_cost  # two-sided fee+slippage fraction
 
 
-def _state_map_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(_STATE_MAP), schema="event_type string, side int, eligible boolean"
-    )
-
-
 def _mapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B1/B2: adapter + broadcast state-mapping join."""
-    ev = load_table(spark, sf_dir, "events")
-    m = F.broadcast(_state_map_df(spark))
-    return ev.join(m, "event_type", "left").select(
-        "event_id",
-        "ts",
-        "user_id",
-        "event_type",
-        "value",
-        F.coalesce("side", F.lit(0)).alias("side"),
-        F.coalesce("eligible", F.lit(False)).alias("eligible"),
+    return with_state_map(load_table(spark, sf_dir, "events")).select(
+        "event_id", "ts", "user_id", "event_type", "value", "side", "eligible"
     )
 
 
 def _with_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B5 state_transition_entry: eligible row whose state differs from the
-    previous bar's state (or the first bar) raises an entry signal."""
-    df = _mapped(spark, sf_dir)
-    w = series_window()
-    prev_state = F.lag("event_type").over(w)
-    transition = prev_state.isNull() | (F.col("event_type") != prev_state)
-    return df.withColumn("signal", F.col("eligible") & transition)
+    """B5 state_transition_entry signals over the mapped bars."""
+    return _mapped(spark, sf_dir).withColumn("signal", entry_signal(series_window()))
 
 
 # SQL twin of _with_signals, shared by the b5/b7/b8 oracles.
@@ -84,7 +58,7 @@ _SIGNALS_CTE = f"""
         SELECT e.event_id, e.ts, e.user_id, e.event_type, e.value,
                COALESCE(m.side, 0) AS side,
                COALESCE(m.eligible, FALSE) AS eligible
-        FROM events e LEFT JOIN {_STATE_MAP_SQL} USING (event_type)
+        FROM events e LEFT JOIN {STATE_MAP_SQL} USING (event_type)
     ), signals AS (
         SELECT *,
                eligible AND (LAG(event_type) OVER ({_W}) IS NULL
@@ -104,7 +78,7 @@ _SIGNALS_CTE = f"""
     SELECT e.event_id, e.user_id, e.event_type,
            COALESCE(m.side, 0) AS side,
            COALESCE(m.eligible, FALSE) AS signal_eligible
-    FROM events e LEFT JOIN {_STATE_MAP_SQL} USING (event_type)
+    FROM events e LEFT JOIN {STATE_MAP_SQL} USING (event_type)
     """,
 )
 def b2_state_eligibility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,45 +147,6 @@ def b4_oracle(s: Settings) -> str:
            NOT ({fails[0]} OR {fails[1]} OR {fails[2]}) AS exec_eligible
     FROM rolled
     """
-
-
-def b4_gate_columns(df: DataFrame, s: Settings) -> DataFrame:
-    """Append the B4 realism gate columns (fail flags, fixed-precedence
-    primary_reason, exec_eligible) to a per-bar frame carrying
-    (user_id, ts, event_id, value, dollar_vol). All windows partition
-    on the series key, so a caller whose frame already windows on
-    user_id pays no extra shuffle — the reason v2 composes this
-    in-pass instead of joining two per-bar frames on event_id (which
-    would co-shuffle the full bar table twice at scale)."""
-    r = s.realism
-    w = series_window()
-    df = df.withColumn(
-        "history_bars", F.count("*").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    med = rolling_min_samples(
-        F.expr("percentile(dollar_vol, 0.5)"),
-        F.col("dollar_vol"),
-        w,
-        r.dollar_vol_window,
-    )
-    df = df.withColumn("dv_med_20", med)
-    price_fail = F.col("value") < r.price_floor
-    warm_fail = F.col("history_bars") < r.warmup_bars
-    dv_fail = F.coalesce(F.col("dv_med_20") < r.dollar_vol_floor, F.lit(False))
-    reason = (
-        F.when(price_fail, "PRICE_FLOOR")
-        .when(warm_fail, "WARMUP")
-        .when(dv_fail, "DOLLAR_VOL")
-    )
-    return df.withColumns(
-        {
-            "price_floor_fail": price_fail,
-            "warmup_fail": warm_fail,
-            "dollar_vol_fail": dv_fail,
-            "primary_reason": reason,
-            "exec_eligible": ~(price_fail | warm_fail | dv_fail),
-        }
-    )
 
 
 def b4_frame(spark: SparkSession, sf_dir: str, s: Settings) -> DataFrame:

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.functions.core import safe_div
 from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
-from pipeline_mf_etl_spark.operators.windows import bars_since, series_window
+from pipeline_mf_etl_spark.operators.windows import bars_since, flow_state, series_window
 from pipeline_mf_etl_spark.queries.registry import query
 
 _W = "PARTITION BY user_id ORDER BY ts, event_id"
@@ -150,24 +150,12 @@ def w3_ewm_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f1_flow_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S0-S4 flow-state coding: warmup / rising-positive / falling-positive /
     falling-negative / rising-negative quadrants of the smoothed measure."""
-    df = _ewm(spark, sf_dir)
-    w = series_window()
-    flow = F.col("ewm_10") - 10.0
-    # slope vs previous smoothed value (lag of ewm cancels the constant).
-    slope = flow - (F.lag("ewm_10").over(w) - 10.0)
-    rising = F.coalesce(slope >= 0, F.lit(True))
-    state = (
-        F.when(flow.isNull(), 0)
-        .when((flow > 0) & rising, 1)
-        .when(flow > 0, 2)
-        .when(rising, 4)
-        .otherwise(3)
-    )
-    return df.select(
+    flow, code = flow_state("ewm_10", series_window())
+    return _ewm(spark, sf_dir).select(
         "event_id",
         "user_id",
         F.round(flow, 6).alias("flow"),
-        state.cast("tinyint").alias("flow_state_code"),
+        code.alias("flow_state_code"),
     )
 
 

@@ -29,8 +29,9 @@ _REGISTRY: dict[str, "QuerySpec"] = {}
 # Modules that register queries on import. Order matters: the driver's
 # correctness harness certifies the first 50 registered queries; the
 # _PRIORITY tuple below pins the current certification window exactly
-# and is the SINGLE source of truth for the rotation (the r12 verdict
-# asked that the prose never restate the list — read the tuple).
+# and is the single source of truth for the rotation, so no prose
+# restates the list. Every listed module must import: a failed import
+# raises instead of silently dropping that module's queries.
 # NOTE: viewer's v2 oracle imports queries.backtest at decoration time,
 # so keep backtest ahead of viewer in this list (otherwise backtest's
 # queries register mid-viewer-import and the fill order shifts).
@@ -44,9 +45,9 @@ _QUERY_MODULES = (
     "pipeline_mf_etl_spark.queries.streaming",
     "pipeline_mf_etl_spark.queries.multimodal",
     # corpus ingestion (c1-c4, t15, wd1) right after multimodal, whose
-    # probe queries it composes with (registered r11)
+    # probe queries it composes with
     "pipeline_mf_etl_spark.queries.corpus_ingest",
-    # URL-layer curation (t16/d12, new r11)
+    # URL-layer curation (t16/d12)
     "pipeline_mf_etl_spark.queries.urls",
     "pipeline_mf_etl_spark.queries.viewer",
     "pipeline_mf_etl_spark.queries.corpus",
@@ -55,11 +56,9 @@ _QUERY_MODULES = (
     "pipeline_mf_etl_spark.queries.windows",
     "pipeline_mf_etl_spark.queries.relational",
     "pipeline_mf_etl_spark.queries.stats",
-    # registers LAST (outside the r4 window; certify in r5): imports SQL
-    # fragments from dedup + text, both already loaded by this point
+    # imports SQL fragments from dedup + text, so it loads after both
     "pipeline_mf_etl_spark.queries.curation",
-    # register last (round-6 rotation queue): BM25/hybrid retrieval and
-    # the near-dup graph analytics
+    # BM25/hybrid retrieval and the near-dup graph analytics
     "pipeline_mf_etl_spark.queries.retrieval",
     "pipeline_mf_etl_spark.queries.graph",
 )
@@ -223,10 +222,7 @@ def query(
 
 def all_queries() -> dict[str, QuerySpec]:
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            continue  # module not built yet; registry stays partial
+        importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     # Module order already front-loads the least-certified families; within
     # that, _PRIORITY pulls named stragglers to the very front.

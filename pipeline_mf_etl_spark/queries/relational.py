@@ -248,7 +248,8 @@ def a12_quantile_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "j2_broadcast_enrich",
     oracle="""
     SELECT p.p_brand, n.n_name,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           ROUND(SUM(l.l_extendedprice::DECIMAL(12,2)
+                     * (1 - l.l_discount::DECIMAL(3,2))), 2)::DOUBLE AS revenue,
            COUNT(*) AS n_lines
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey
@@ -258,8 +259,14 @@ def a12_quantile_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j2_broadcast_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-schema enrich (J2): fact joined to broadcast dims, grouped revenue."""
+    """Star-schema enrich (J2): fact joined to broadcast dims, grouped
+    revenue. Price and discount hold 2-dp values, so revenue sums and
+    rounds exactly in DECIMAL, independent of row order and task split
+    (as a1 does); the oracle computes the same formula."""
     li = load_table(spark, sf_dir, "lineitem")
+    one = F.lit(1).cast("decimal(3,2)")
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc = F.col("l_discount").cast("decimal(3,2)")
     part = load_table(spark, sf_dir, "part")
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
@@ -269,7 +276,7 @@ def j2_broadcast_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .groupBy("p_brand", "n_name")
         .agg(
-            _r(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
+            _r(F.sum(price * (one - disc)), 2).cast("double").alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )

@@ -182,14 +182,14 @@ def st5_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # state needed for the join itself).
 # ---------------------------------------------------------------------------
 def _st6_oracle() -> str:
-    from pipeline_mf_etl_spark.queries.backtest import _STATE_MAP_SQL
+    from pipeline_mf_etl_spark.operators.backtest import STATE_MAP_SQL
 
     return f"""
     SELECT CAST(date_trunc('day', e.ts) AS DATE) AS window_day,
            COALESCE(m.side, 0) AS side,
            COUNT(*) AS n_events,
            ROUND(SUM(e.value), 6) AS sum_value
-    FROM events e LEFT JOIN {_STATE_MAP_SQL} USING (event_type)
+    FROM events e LEFT JOIN {STATE_MAP_SQL} USING (event_type)
     GROUP BY 1, 2
     """
 
@@ -199,11 +199,11 @@ def st6_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment + tumbling day windows per
     trade side; tests/test_streaming.py drives the same transform
     through readStream(availableNow) and asserts identical results."""
-    from pipeline_mf_etl_spark.queries.backtest import _state_map_df
+    from pipeline_mf_etl_spark.operators.backtest import state_map_frame
     from pipeline_mf_etl_spark.streaming import enriched_side_rollup
 
     return enriched_side_rollup(
-        load_table(spark, sf_dir, "events"), _state_map_df(spark)
+        load_table(spark, sf_dir, "events"), state_map_frame(spark)
     )
 
 

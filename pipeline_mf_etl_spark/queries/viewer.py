@@ -476,27 +476,28 @@ def v2_viewer_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing one per-series shuffle — joining two separately-derived
     per-bar frames on event_id would co-shuffle the full bar table
     twice at scale."""
+    from pipeline_mf_etl_spark.operators.backtest import (
+        b4_gate_columns,
+        entry_signal,
+        with_state_map,
+    )
     from pipeline_mf_etl_spark.operators.windows import series_window
-    from pipeline_mf_etl_spark.queries.backtest import _S, _state_map_df, b4_gate_columns
+    from pipeline_mf_etl_spark.queries.backtest import _S
 
     ev = load_table(spark, sf_dir, "events")
-    m = F.broadcast(_state_map_df(spark))
-    base = ev.join(m, "event_type", "left").select(
+    base = with_state_map(ev).select(
         "event_id",
         "ts",
         "user_id",
         "event_type",
         "value",
-        F.coalesce("side", F.lit(0)).alias("side"),
-        F.coalesce("eligible", F.lit(False)).alias("eligible"),
+        "side",
+        "eligible",
         (F.col("value") * F.get_json_object("props", "$.k").cast("double")).alias(
             "dollar_vol"
         ),
     )
-    w = series_window()
-    prev_state = F.lag("event_type").over(w)
-    transition = prev_state.isNull() | (F.col("event_type") != prev_state)
-    sig = base.withColumn("signal", F.col("eligible") & transition)
+    sig = base.withColumn("signal", entry_signal(series_window()))
     gated = b4_gate_columns(sig, _S)
     overlay = (
         ev.select("user_id")

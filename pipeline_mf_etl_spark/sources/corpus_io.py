@@ -184,14 +184,13 @@ def _write_shards(
     the ``_index`` parquet read back from ``<path>/_index``. Encoding
     runs shard-parallel in one Spark job; the index write drives it.
 
-    Placement without ``order``: rows hash to ``pmod(id, n_shards)``
-    tasks, sorted by id, and each non-empty task writes one file named
-    ``name.format(partition id)`` — deterministic up to shard numbering.
-    With ``order`` (shard, doc_id, pos): rows are hashed to tasks by the
-    assignment's shard VALUE, so a task may own several whole shards (or
-    none) but a shard is never split; each shard is written in ``pos``
-    order to ``name.format(shard value)`` and its index rows end in
-    ``pos``.
+    Placement: every row carries a shard VALUE — ``pmod(coalesce(id,
+    0), n_shards)`` without ``order``, the assignment's ``shard`` with
+    ``order`` (shard, doc_id, pos). Rows are hashed to tasks by that
+    value, so a task may own several whole shards (or none) but a shard
+    is never split; each shard is written to ``name.format(shard
+    value)``, in id order, or in ``pos`` order with ``order``, where its
+    index rows also end in ``pos``.
 
     ``encode(rows) -> (payload, locators)`` turns one shard's row dicts
     into its file bytes and one locator tuple per row; the index row is
@@ -211,21 +210,13 @@ def _write_shards(
             rows.extend(pdf.to_dict("records"))
         if not rows:
             return
-        if ordered:
-            by_shard: dict[int, list[dict]] = {}
-            for r in rows:
-                by_shard.setdefault(int(r["shard"]), []).append(r)
-            groups = sorted(by_shard.items())
-        else:
-            from pyspark import TaskContext
-
-            groups = [(TaskContext.get().partitionId(), rows)]
+        # sortWithinPartitions made each shard's rows contiguous and in
+        # file order
+        by_shard: dict[int, list[dict]] = {}
+        for r in rows:
+            by_shard.setdefault(int(r["shard"]), []).append(r)
         out: list[tuple] = []
-        for s, rs in groups:
-            if ordered:
-                # sortWithinPartitions already ordered (shard, pos); the
-                # in-memory sort is a cheap idempotence guard
-                rs.sort(key=lambda r: int(r["pos"]))
+        for s, rs in sorted(by_shard.items()):
             shard = name.format(s)
             payload, locs = encode(rs)
             tmp = os.path.join(path, f".{shard}.tmp")
@@ -239,15 +230,14 @@ def _write_shards(
 
     placed = df.select(*cols)
     if ordered:
-        placed = (
-            placed.join(order.select("shard", "doc_id", "pos"), "doc_id")
-            .repartition(n_shards, "shard")
-            .sortWithinPartitions("shard", "pos")
-        )
+        placed = placed.join(order.select("shard", "doc_id", "pos"), "doc_id")
+        within = "pos"
     else:
-        placed = placed.repartition(
-            n_shards, F.pmod(F.coalesce(id_col, F.lit(0)), F.lit(n_shards))
-        ).sortWithinPartitions(id_col)
+        placed = placed.withColumn(
+            "shard", F.pmod(F.coalesce(id_col, F.lit(0)), F.lit(n_shards))
+        )
+        within = id_col
+    placed = placed.repartition(n_shards, "shard").sortWithinPartitions("shard", within)
     index_dir = os.path.join(path, "_index")
     placed.mapInPandas(write, index_schema).write.mode("overwrite").parquet(index_dir)
     return df.sparkSession.read.parquet(index_dir)

@@ -326,6 +326,42 @@ def test_ewm_smooth_many_matches_single(spark):
     assert bad.count() == 0
 
 
+def test_ewm_smooth_matches_per_series_pandas(spark):
+    """Interleaved series spread over several island partitions, a ``ts``
+    tie broken by ``event_id`` and a NULL ``ts`` match pandas run one
+    series at a time over rows sorted by (ts, event_id), NULL ts last.
+    The island trusts Spark's sort for that order, so this pins the
+    sort's NULL placement too."""
+    import datetime as dt
+
+    from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
+
+    t0 = dt.datetime(2024, 1, 1)
+    rng = np.random.default_rng(7)
+    rows = []
+    for eid in range(60):
+        uid = int(rng.integers(1, 6))
+        ts = t0 + dt.timedelta(minutes=int(rng.integers(0, 40)))
+        rows.append((eid, uid, ts, float(rng.normal(10, 3))))
+    rows.append((60, 2, rows[5][2], 4.5))  # same ts as another row
+    rows.append((61, 2, rows[5][2], 7.5))
+    rows.append((62, 3, None, 9.0))  # NULL ts sorts after every bar
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, value double"
+    ).repartition(3)
+    got = {
+        r["event_id"]: r["ewm"]
+        for r in ewm_smooth(df, ["user_id"], ["ts", "event_id"], "value", 3, "ewm").collect()
+    }
+    pdf = pd.DataFrame(rows, columns=["event_id", "user_id", "ts", "value"])
+    want = {}
+    for _, g in pdf.groupby("user_id"):
+        g = g.sort_values(["ts", "event_id"], na_position="last")
+        sm = g["value"].ewm(alpha=1 / 3, adjust=False, min_periods=3).mean()
+        want.update({e: (None if np.isnan(v) else v) for e, v in zip(g["event_id"], sm)})
+    assert got == want
+
+
 def test_rowwise_buckets_match_grouped(spark, duck):
     """minhash_band_buckets_rowwise (the per-row form the streaming
     paths run) must emit exactly the (doc_id, band, band_hash) rows of

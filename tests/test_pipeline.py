@@ -332,3 +332,69 @@ def test_compact_cli(spark, tmp_path, capsys):
     stats = json.loads(capsys.readouterr().out)
     assert stats["files_before"] == 16 and stats["files_after"] == 1
     assert spark.read.parquet(str(tmp_path / "out")).count() == 5_000
+
+
+def _rules_defined(tree) -> set[str]:
+    """The medallion domain rules whose Spark definition ``tree`` holds."""
+    import ast
+
+    def const(node):
+        return node.value if isinstance(node, ast.Constant) else None
+
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Tuple) and [const(e) for e in node.elts] == ["purchase", 1, True]:
+            found.add("state_map")
+        elif isinstance(node, ast.BinOp) and isinstance(node.op, ast.BitAnd):
+            for side in (node.left, node.right):
+                if (
+                    isinstance(side, ast.Call)
+                    and isinstance(side.func, ast.Attribute)
+                    and side.func.attr == "col"
+                    and [const(a) for a in side.args] == ["eligible"]
+                ):
+                    found.add("entry_signal")
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr == "when" and "PRICE_FLOOR" in [const(a) for a in node.args]:
+                found.add("realism_gates")
+            if node.func.attr == "otherwise":
+                codes = [const(node.args[0])]
+                cur = node.func.value
+                while (
+                    isinstance(cur, ast.Call)
+                    and isinstance(cur.func, ast.Attribute)
+                    and cur.func.attr == "when"
+                ):
+                    codes.append(const(cur.args[1]))
+                    cur = cur.func.value
+                if codes[::-1] == [0, 1, 2, 4, 3]:
+                    found.add("flow_states")
+    return found
+
+
+def test_medallion_rules_have_one_home():
+    """Drift guard: the S0-S4 flow-state chain, the B5 entry signal,
+    the B4 gate chain and the B2 state-map tuple are each defined in
+    one operators module, which both the ``run`` pipeline and the
+    oracle-certified queries call; ``pipeline.py`` imports no query
+    module (importing one registers queries and loads settings)."""
+    import ast
+    from pathlib import Path
+
+    import pipeline_mf_etl_spark
+
+    root = Path(pipeline_mf_etl_spark.__file__).parent
+    homes: dict[str, list[str]] = {}
+    for path in sorted(root.rglob("*.py")):
+        for rule in _rules_defined(ast.parse(path.read_text(encoding="utf-8"))):
+            homes.setdefault(rule, []).append(path.relative_to(root).as_posix())
+    assert homes == {
+        "entry_signal": ["operators/backtest.py"],
+        "flow_states": ["operators/windows.py"],
+        "realism_gates": ["operators/backtest.py"],
+        "state_map": ["operators/backtest.py"],
+    }
+    tree = ast.parse((root / "pipeline.py").read_text(encoding="utf-8"))
+    imported = [n.module or "" for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)]
+    imported += [a.name for n in ast.walk(tree) if isinstance(n, ast.Import) for a in n.names]
+    assert not [m for m in imported if m.startswith("pipeline_mf_etl_spark.queries")], imported

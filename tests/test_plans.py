@@ -47,6 +47,29 @@ def test_dim_joins_broadcast(spark, name):
     assert "Cartesian" not in plan, plan
 
 
+@pytest.mark.parametrize(
+    "name", ["b2_state_eligibility", "b6_trade_sim", "v2_viewer_markers", "st6_stream_enrich"]
+)
+def test_state_map_is_a_local_relation(spark, name):
+    """The 5-row state map plans as a LocalTableScan: an ExistingRDD
+    scan of a driver-side list would start a Python stage of its own."""
+    plan = _plan(spark, name)
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_gold_layer_state_map_is_a_local_relation(spark):
+    from pipeline_mf_etl_spark.config import load_settings
+    from pipeline_mf_etl_spark.pipeline import bronze_layer, gold_layer, silver_layer
+    from pipeline_mf_etl_spark.sources.readers import load_table
+    from tests.conftest import SF_SMOKE
+
+    silver = silver_layer(bronze_layer(load_table(spark, SF_SMOKE, "events")))
+    plan = gold_layer(silver, load_settings())._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
 def test_window_stack_single_shuffle(spark):
     """All rolling stats over one series key share a single hash
     exchange — each extra exchange is a full re-shuffle of the fact

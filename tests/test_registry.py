@@ -46,6 +46,21 @@ def test_assert_exports_fresh_rejects_stale(tmp_path, monkeypatch):
     ex.assert_exports_fresh("SELECT 1")
 
 
+def test_missing_query_module_raises(monkeypatch):
+    """A listed module that fails to import must fail the registry,
+    not drop its queries from the driver surface and the parity
+    parametrization without a word."""
+    from pipeline_mf_etl_spark.queries import registry
+
+    monkeypatch.setattr(
+        registry,
+        "_QUERY_MODULES",
+        registry._QUERY_MODULES + ("pipeline_mf_etl_spark.queries._absent",),
+    )
+    with pytest.raises(ModuleNotFoundError):
+        registry.all_queries()
+
+
 def test_no_query_escapes_certification_window():
     """The backlog invariant as code (r8 verdict task 7: g3 slipped past
     the r8 window because it registered after the pin): every registered

@@ -30,9 +30,9 @@ from tests.conftest import SF_SMOKE
 SF_BENCH = os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")
 
 
-def _stage_shuffled(table: str, dst: str, seed: int, n_files: int = 3) -> str:
+def _stage_shuffled(table: str, dst: str, seed: int, n_files: int = 3) -> None:
     """Write a seeded row permutation of ``table`` as ``n_files`` parquet
-    files under ``dst/<table>.parquet/``; return ``dst``."""
+    files under ``dst/<table>.parquet/``."""
     t = pq.read_table(os.path.join(SF_BENCH, f"{table}.parquet"))
     t = t.take(pa.array(np.random.default_rng(seed).permutation(t.num_rows)))
     out = os.path.join(dst, f"{table}.parquet")
@@ -40,15 +40,26 @@ def _stage_shuffled(table: str, dst: str, seed: int, n_files: int = 3) -> str:
     step = -(-t.num_rows // n_files)
     for i in range(n_files):
         pq.write_table(t.slice(i * step, step), os.path.join(out, f"part-{i}.parquet"))
-    return dst
+
+
+# dimension tables a query joins; staged shuffled next to its fact table
+_DIMS = {"j2_broadcast_enrich": ("part", "supplier", "nation")}
 
 
 @pytest.mark.parametrize(
-    "name, table", [("a1_grouped_stats", "lineitem"), ("v4_hmm_ribbon", "events")]
+    "name, table",
+    [
+        ("a1_grouped_stats", "lineitem"),
+        ("j2_broadcast_enrich", "lineitem"),
+        ("v4_hmm_ribbon", "events"),
+    ],
 )
 def test_rows_ignore_row_order_and_shuffle_partitions(spark, tmp_path, name, table):
     fn = all_queries()[name].spark
-    dirs = [_stage_shuffled(table, str(tmp_path / f"seed{s}"), s) for s in range(3)]
+    dirs = [str(tmp_path / f"seed{s}") for s in range(3)]
+    for s, d in enumerate(dirs):
+        for t in (table, *_DIMS.get(name, ())):
+            _stage_shuffled(t, d, s)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     results = {}
     try:

@@ -196,14 +196,18 @@ def shard_digests(spark, name: str, out: str) -> dict:
     }
 
 
-# recorded before the shard writers and readers were folded onto one
-# skeleton (_write_shards / _fetch_shards / _scan_shards)
+# Reads and schemas recorded before the shard writers and readers were
+# folded onto one skeleton (_write_shards / _fetch_shards / _scan_shards).
+# The hash-placed layouts' files and index were re-recorded when
+# placement moved onto the shard-value path the ordered layouts use:
+# pmod(id, 2) now fills both shards.
 _PINS: dict[str, dict] = {
     "arrow": {
         "files": {
-            "shard-00001.arrow": "5423531b017466cde7add26c697ebb82d952b788da5bf08cf23f111553517bd3",
+            "shard-00000.arrow": "33af757acd617bdc3995db8f0cf85d5f4da09c7b84857d805667f195e7338f5f",
+            "shard-00001.arrow": "d3f9e85c85a736b454aa9dc47f5ab25ed17bf01117ef635b44f3e9015f47a7eb",
         },
-        "index": "5dec397ea3eca6adc97aea6b56af1abb2bfeecf9b151b6c395097cad5ec4794a",
+        "index": "ec95ba224bb1a7fc097148bce59e407a5c8030242ab02b5bae62dc055f52398d",
         "reads": {
             "docs": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
             "scan": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
@@ -212,9 +216,10 @@ _PINS: dict[str, dict] = {
     },
     "arrow_embeddings": {
         "files": {
-            "shard-00001.arrow": "ef12d07e3944e707df157cfdce3815eba7fa59f578b885d2d084eb5a271e838b",
+            "shard-00000.arrow": "616c6195c41516baa158c501527c1c1d0bd481d3c1561c561fa5939f231c6f70",
+            "shard-00001.arrow": "7e6eee67fa34afd519b228f49da8cd4ebdc33ee19b5ef97e465291a0f30cf8d4",
         },
-        "index": "d89e8f93f41acd794a4c036023ba36607b1577e112cdc727c3ba7d902f760ac4",
+        "index": "73317075027203ad597f5d95e8109eca96f58a71ad2f646e88deaf442d8d4c2d",
         "reads": {
             "docs": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
             "scan": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
@@ -236,9 +241,10 @@ _PINS: dict[str, dict] = {
     },
     "jsonl_bz2_dump": {
         "files": {
-            "dump-00001.jsonl.bz2": "fd21ca220ba8e563ebc1428c5dfccb563a03ada1ca4d505993966993921a279d",
+            "dump-00000.jsonl.bz2": "d0f0591905ad7ce23291dd5c54c98a25ccfc171b11d273e276e49034fad38354",
+            "dump-00001.jsonl.bz2": "14c7b2ae07e8adbe4972906cb602bbfd9cffc8db21bc5a1228f3321bf3ed4b70",
         },
-        "index": "4c02c2eabfe11e6b7da74fbebe63e32ddf258753cd4b1dcb42fa297d1bdf03c0",
+        "index": "41502376fb5870f687abf9290448d1da330acccbc809c16e1c6d98adc4d72c19",
         "reads": {
             "docs": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
         },
@@ -246,9 +252,10 @@ _PINS: dict[str, dict] = {
     },
     "jsonl_zst": {
         "files": {
-            "shard-00001.jsonl.zst": "b7a4ff78e39944bca6adb5886cc895fa6a93207e5e6ea7fcde14eeebdb25043f",
+            "shard-00000.jsonl.zst": "3662ca8cf774e22fb721951fa5379ef77a8d21c1ae8418e93744983f4ccdc93a",
+            "shard-00001.jsonl.zst": "13a561b9b89378a573cc6dee08fc62876ac19ee7d9b232ed4a42764ddb198b5d",
         },
-        "index": "4c41bfdba038b48a5c8a162a8c587ccd5a15fb8c6ec4b8341c9abf9e9ebffe51",
+        "index": "697aaa12b111cf7d119ccecc6d12ee57b0c44d612fa76ea4c077b73804be7d4a",
         "reads": {
             "doc": "eddaa01c2652645964881d4c179f1cdcaa068a7e4743ee31609e1301ee04429c",
             "docs": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
@@ -270,9 +277,10 @@ _PINS: dict[str, dict] = {
     },
     "npz": {
         "files": {
-            "shard-00001.npz": "420feed92092880c3dec8b87bd693721f5b3e3b426630796fc641b238f0a0365",
+            "shard-00000.npz": "e0b91781ebe1bf351c4c63a522e5ca62c746ed656b57d9421bef699c8e9565be",
+            "shard-00001.npz": "63e90471a63a2a530df2956f41fd91fdc4fd526b7ae7df5c7727712baccbd26b",
         },
-        "index": "aca05170787a945e12de8d68e3686b6b56be1d165ea74f502e776b7b9282357e",
+        "index": "97871e9f4202e45a12318955c919b731ad57703b2537bf19b1dca1517d34ebe4",
         "reads": {
             "rows": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
             "scan": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
@@ -281,9 +289,10 @@ _PINS: dict[str, dict] = {
     },
     "safetensors": {
         "files": {
-            "shard-00001.safetensors": "fd671bda0b836b7b40d87cbafea90d3b16913b40aa5eea6a40e680dc1b2a798b",
+            "shard-00000.safetensors": "f78351a54ae726c43c945d0e96ee7cb2c32011395ce7daffd4f9d8bae728348a",
+            "shard-00001.safetensors": "bbd998fb819a6a4a9cf3a743095e98230855ed2b7ac56fe9c89667eb51e64d83",
         },
-        "index": "a2b71e1535f51e454b9c2330b71b84c2377818e0ac24e5826705b555f2256312",
+        "index": "c0a5b427483be68cf62d75267fdc750bfee546c2315e6476604dbe49dc9daa39",
         "reads": {
             "rows": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
             "scan": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
@@ -292,9 +301,10 @@ _PINS: dict[str, dict] = {
     },
     "tfrecord": {
         "files": {
-            "shard-00001.tfrecord": "783a7ef99d0bbaf29745d84f16dbb6e74434b360bfa97eef82134557bbd9cc8e",
+            "shard-00000.tfrecord": "2eb1e507086b6891bcf537b2682842850a4d16f50dc746a42a679d75acf299ce",
+            "shard-00001.tfrecord": "d3b22eeb817a8e84b0ea42797a3c2b1afb8fc571f3b03d45ac318e2a1c8b9f23",
         },
-        "index": "ef35a92a686379ed41df3532afa835be4dd4c342c11de5b593bf958b022015b7",
+        "index": "11c737cb0497a7682343dbb84857ad16a62a63368f2cd570a6ca958bd141fb5a",
         "reads": {
             "docs": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
             "scan": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
@@ -303,9 +313,10 @@ _PINS: dict[str, dict] = {
     },
     "tfrecord_embeddings": {
         "files": {
-            "shard-00001.tfrecord": "8fd43a1492380f250387c891c30a9cf6d057b8bd07d68325a8cf81376dc0e85b",
+            "shard-00000.tfrecord": "b90e0fb2b5ba66f013bfec47d965e57fd8e904842c780e0af7d46a876f57a0e9",
+            "shard-00001.tfrecord": "0427da272c000ee5d7db9a10a976518ad84a87c056a77b33cd74845b26ef04cc",
         },
-        "index": "4fb1cf01e00c2faf50ec894a6d359aa6c84e5f22714a840b6cea9595b662ef44",
+        "index": "d3e8c871390ddeb937741c57556c52a8779f28d166c71366d45874a0e07d8232",
         "reads": {
             "docs": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
             "scan": "f601f3116f9941f2b690fd7ad5e82e6f77ea4eab13da6b6165d8dadc59a9673e",
@@ -314,9 +325,10 @@ _PINS: dict[str, dict] = {
     },
     "tfrecord_gzip": {
         "files": {
-            "shard-00001.tfrecord.gz": "f1fbab48b6982897366f35ba9d4d5050c14d4c2950929b51335c49734afdb742",
+            "shard-00000.tfrecord.gz": "d52fdf3cc3a442856d9a2d19319c109f8f11fe04b188d896f8e15ec56354578d",
+            "shard-00001.tfrecord.gz": "b833dec81a73b3e6096f080ac5eaeec6f202f06960f147b84b619a7f5d798bbb",
         },
-        "index": "410971a02cb51c0d41002e147d0034b695c5ac08a896d66d2a910c81244caf2e",
+        "index": "5cf0348ed421b56d4128459a701196b832db3d4761adb9fa8da39066ef33ba72",
         "reads": {
             "docs": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
             "scan": "caf5203c270e8de94dcce0a0bac9cd7f7d069e345c09511f1ce2c93a0f226650",
@@ -341,7 +353,12 @@ _PINS: dict[str, dict] = {
 
 @pytest.mark.parametrize("name", sorted(_WRITERS))
 def test_shard_layout_is_pinned(spark, tmp_path, name):
-    assert shard_digests(spark, name, str(tmp_path / name)) == _PINS[name]
+    got = shard_digests(spark, name, str(tmp_path / name))
+    if not name.endswith("_ordered"):
+        # the pinned frames hold ids of both parities, so hash placement
+        # at n_shards=2 must write both shard files
+        assert len(got["files"]) == 2, sorted(got["files"])
+    assert got == _PINS[name]
 
 
 def test_bz2_lookup_keeps_unicode_line_separators(spark, tmp_path):
@@ -371,12 +388,13 @@ def _attribute_counts(tree: ast.AST) -> dict[str, int]:
 
 
 def test_corpus_io_has_one_shard_skeleton():
-    """Drift guard: placement, publish, task identity and the shard-file
-    listing each appear once in corpus_io.py (in _write_shards,
-    _fetch_shards and _scan_shards), not once per format."""
+    """Drift guard: placement, publish and the shard-file listing each
+    appear once in corpus_io.py (in _write_shards, _fetch_shards and
+    _scan_shards), not once per format; no writer names a shard file by
+    its task id."""
     with open(ci.__file__, encoding="utf-8") as fh:
         counts = _attribute_counts(ast.parse(fh.read()))
     assert {
         k: counts.get(k, 0)
         for k in ("mapInPandas", "os.replace", "TaskContext.get", "createDataFrame")
-    } == {"mapInPandas": 3, "os.replace": 1, "TaskContext.get": 1, "createDataFrame": 1}
+    } == {"mapInPandas": 3, "os.replace": 1, "TaskContext.get": 0, "createDataFrame": 1}

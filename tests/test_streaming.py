@@ -163,10 +163,10 @@ def test_stream_dedupe_removes_cross_batch_replays(spark, tmp_path):
 def test_stream_static_enrich_matches_batch(spark):
     """st6: the stream-static broadcast join + windowed rollup must be
     identical through readStream and the batch loader."""
-    from pipeline_mf_etl_spark.queries.backtest import _state_map_df
+    from pipeline_mf_etl_spark.operators.backtest import state_map_frame
     from pipeline_mf_etl_spark.streaming import enriched_side_rollup
 
-    dim = _state_map_df(spark)
+    dim = state_map_frame(spark)
     streamed = sorted(
         map(tuple, _run_stream(spark, lambda ev: enriched_side_rollup(ev, dim)).collect())
     )

@@ -13,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import statistics
 import time
 
 from pyspark.sql import functions as F
@@ -21,7 +20,9 @@ from pyspark.sql import functions as F
 from pipeline_mf_etl_spark.queries import all_queries
 from pipeline_mf_etl_spark.session import get_spark
 
-# One headline query per operator family (SURVEY.md §2 groups).
+# One headline query per operator family (SURVEY.md §2 groups). The
+# first 14 are the original set: ``comparable_14_total`` sums them, so
+# the number stays comparable as the tuple grows.
 HEADLINE = (
     "a1_grouped_stats",       # grouped aggregation core
     "j6_overlay_coverage",    # join + coverage rollup
@@ -34,34 +35,26 @@ HEADLINE = (
     "d2_minhash_lsh",         # MinHash+LSH near-dup
     "t2_quality_score",       # text quality scoring
     "e1_ann_bruteforce",      # brute-force cosine top-k
-    "w3_ewm_wilder",          # applyInPandas EWM island
+    "w3_ewm_wilder",          # pandas EWM island
     "b6_trade_sim",           # sequential per-series simulation
     "st1_tumbling_daily",     # event-time tumbling windows
-    # added round 4 (totals before r4 cover the first 14 only)
     "v1_tmf_tti_panel",       # viewer panel: 4 RMAs in one island pass
-    # added round 5 (r4-comparable subtotal = first 15)
     "e6_ann_ivfpq",           # production ANN: IVF-PQ encode+ADC search
     "d7_curation_waterfall",  # end-to-end 5-stage corpus curation
     "t9_trigram_lm",          # corpus-trained trigram LM quality score
     "v4_hmm_ribbon",          # HMM decode ribbon (persisted-fit family)
-    # added late round 5 (r5-comparable subtotal = first 19)
     "r1_bm25_topk",           # BM25: inverted postings + broadcast scoring
     "t12_bpe_tokenize",       # BPE train (word-count reduce) + encode
     "g1_pagerank_neardup",    # PageRank rounds over the pair graph
-    # added round 8 (r7-comparable subtotal = first 22)
     "mm13_jpeg_decode",       # baseline JPEG entropy decode + IDCT pass
     "d10_record_linkage",     # masked-position blocked entity resolution
-    # added round 9 (r8-comparable subtotal = first 24)
     "mm13b_jpeg_color",       # 4:2:0 interleaved color JPEG decode
     "mm15_mjpeg_decode",      # MP4 demux composed with per-frame JPEG decode
-    # added round 10 (r9-comparable subtotal = first 26)
     "mm12b_png_color",        # color/palette/Adam7 PNG decode
     "mm21_h264_probe",        # H.264 NAL walk + SPS parse routing probe
     "mm22_avc1_route",        # avc1-in-MP4 demux + avcC/stss routing
     "mm23_aac_route",         # mp4a/AAC-in-MP4 esds audio routing
     "mm24_hevc_route",        # hvc1/HEVC-in-MP4 hvcC routing
-    # added round 11 (r10-comparable subtotal = first 31): the corpus-
-    # ingestion + codec family registered this round
     "c1_warc_extract",        # WARC gzip-member split + HTTP/HTML extract
     "c2_zip_extract",         # ZIP central-directory walk + DEFLATE
     "c3_pdf_extract",         # PDF xref/object walk + content-stream text
@@ -79,13 +72,10 @@ HEADLINE = (
     "d12_url_domain_rollup",  # per-domain canonical-URL dedup rollup
     "c5_lz4_extract",         # LZ4 frame decode + xxh32 verification
     "c6_snappy_extract",      # framed Snappy decode + CRC-32C verification
-    # added round 12 (r11-comparable subtotal = first 48)
     "c7_zstd_extract",        # zstd FSE+Huffman frame decode + xxh64
     "c8_seekable_extract",    # seekable-zstd range reads (partial decode)
-    # added round 13 (r12-comparable subtotal = first 50)
     "c9_bzip2_extract",       # multistream bzip2 decode + CRC verification
     "c11_xz_extract",         # xz/LZMA2 range-coder decode (liblzma synth)
-    # added round 14 (r13-comparable subtotal = first 52)
     "c12_bz2_dump_lookup",    # bzip2 dump-index write + per-stream lookups
     "c13_tfrecord_lookup",    # TFRecord shard write + per-record lookups
     "c14_arrow_lookup",       # Arrow IPC shard write + footer block lookups
@@ -94,12 +84,12 @@ HEADLINE = (
 )
 
 # Codec queries conflate SYNTHESIS (encoding the test payload) with the
-# phase a production corpus actually pays — DECODE (r9 verdict task 2).
-# For each, bench the two phases separately: encode = forcing the
-# synthesis plan alone; decode = forcing the feature pass over payloads
-# PERSISTED once under .artifacts/bench_payloads (so the decode number
-# contains zero synthesis). The headline rows keep the combined time
-# for round-over-round comparability; "codec_phases" carries the split.
+# phase a production corpus actually pays — DECODE. For each, bench the
+# two phases separately: encode = forcing the synthesis plan alone;
+# decode = forcing the feature pass over payloads PERSISTED once under
+# .artifacts/bench_payloads (so the decode number contains zero
+# synthesis). The headline rows keep the combined time so totals stay
+# comparable across runs; "codec_phases" carries the split.
 CODEC_PHASES = (
     "mm13_jpeg_decode",
     "mm13b_jpeg_color",
@@ -210,18 +200,13 @@ def main() -> None:
     # JIT surface — warm it so e1 measures the scoring plan, not codegen
     _force(specs["e1_ann_bruteforce"].spark(spark, "/root/testdata/sf0.001"))
 
-    # Pair-export cost visibility (r14 verdict task 2): the MinHash
-    # verified-pair export is computed at most once per (process, sf)
-    # and consumed by d7/g1 (HEADLINE) plus d6/d9/o11/g2/g3 — inside the
-    # timed loop, run 1 of the FIRST consumer paid the whole chain +
-    # parquet round-trip and min-of-3 then structurally excluded the
-    # most expensive subplan in the repo from every published number.
-    # Build it once HERE, timed, and publish the cost as its own field
-    # ("export_build_sec" in the final JSON): every d7/g1 sample now
-    # times the consumer's own plan (as min-of-3 already effectively
-    # did), and the chain's real cost is visible instead of buried in a
-    # discarded max. The export is still computed fresh from the
-    # parquet inputs by THIS process — nothing crosses invocations.
+    # The MinHash verified-pair export is computed at most once per
+    # (process, sf) and consumed by d7/g1 (HEADLINE) plus d6/d9/o11/g2/g3.
+    # Inside the timed loop, min-of-N would drop the run that paid for
+    # it, so it is built once HERE, timed, and published as its own
+    # field ("export_build_sec"); every d7/g1 sample times the
+    # consumer's own plan. The export is computed fresh from the parquet
+    # inputs by THIS process — nothing crosses invocations.
     from pipeline_mf_etl_spark.queries.dedup import verified_pairs_export
 
     t0 = time.perf_counter()
@@ -234,42 +219,6 @@ def main() -> None:
     # Disclosed in the output ("runs"/"agg") so rounds are compared
     # knowingly.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-
-    # Host-speed calibration: two fixed data-independent JVM jobs.
-    # (1) codegen sum over a generated range — pure whole-stage-codegen
-    # arithmetic; (2) a shuffle+window job (r6 verdict task 7) that
-    # exercises a real exchange, a per-key ordered window and its sort,
-    # the machinery shuffle/window-shaped queries actually spend time
-    # in. Rounds run on a shared virtualized box whose effective speed
-    # shifts between boots AND within a session (the r12 bench ran next
-    # to a test suite and printed a phantom +9.6%), so the probes are
-    # INTERLEAVED with the headline loop — one sample of each before
-    # the loop, between every full round, and after — and the MEDIAN is
-    # published: a contended stretch mid-run then moves the calibrator
-    # with the queries it poisoned instead of being missed entirely
-    # (r12 verdict task 2).
-    def _calib_range_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(1_000_000_000).selectExpr("sum(id * 2)").collect()
-        return time.perf_counter() - t0
-
-    def _calib_sw_once() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.range(20_000_000)
-            .selectExpr("id % 100000 AS k", "id % 977 AS v")
-            .selectExpr(
-                "k",
-                "SUM(v) OVER (PARTITION BY k ORDER BY v "
-                "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s",
-            )
-            .selectExpr("COUNT(*)", "SUM(s)")
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    calib_samples: list[float] = [_calib_range_once()]
-    calib_sw_samples: list[float] = [_calib_sw_once()]
 
     # INTERLEAVED rounds (all queries once per round, then repeat):
     # back-to-back repetitions of one query sit inside the same
@@ -286,40 +235,15 @@ def main() -> None:
             _force(spec.spark(spark, sf_dir))
             dt = time.perf_counter() - t0
             best[name] = min(best.get(name, dt), dt)
-        calib_samples.append(_calib_range_once())
-        calib_sw_samples.append(_calib_sw_once())
-    # MIN is the cross-round calibrator (all prior rounds published
-    # min-of-3, and min isolates the host's clean speed); the MEDIAN of
-    # the interleaved samples is published alongside as the contention
-    # signal — a median far above min means the run was contended and
-    # the raw totals should be read accordingly.
-    calib = min(calib_samples)
-    calib_sw = min(calib_sw_samples)
-    calib_median = statistics.median(calib_samples)
-    calib_sw_median = statistics.median(calib_sw_samples)
     total = 0.0
     for name in HEADLINE:
         if name in best:
             timings[name] = round(best[name], 3)
             total += best[name]
 
-    # Calibration-normalized timings (r7 verdict task 8): each query's
-    # min-sec divided by the calibrator matching its plan shape, so
-    # round-over-round deltas separate host drift from code changes
-    # without judge-side arithmetic. Scan/arithmetic-bound queries
-    # (pushdown scan, map-only text scoring, broadcast HOF cosine)
-    # normalize by the codegen range-sum; everything else — shuffles,
-    # windows, joins, pandas islands — by the shuffle+window job, which
-    # exercises the exchange/sort/GC machinery those plans live in.
-    scan_shaped = {"s3_pushdown_scan", "t2_quality_score", "e1_ann_bruteforce"}
-    normalized = {
-        name: round(sec / (calib if name in scan_shaped else calib_sw), 3)
-        for name, sec in timings.items()
-    }
-
-    # Codec encode/decode phase split (r9 verdict task 2): persist each
-    # codec query's payloads once, then time decode ALONE — the number
-    # a production corpus (which arrives already encoded) actually pays.
+    # Codec encode/decode phase split: persist each codec query's
+    # payloads once, then time decode ALONE — the number a production
+    # corpus (which arrives already encoded) actually pays.
     # The mm16 header probe runs on mm13b's persisted payloads too, so
     # "probe is near-free vs decode" becomes a same-payload measurement.
     from pipeline_mf_etl_spark.sources.readers import fan_out as _fo
@@ -369,19 +293,8 @@ def main() -> None:
         best_p = dt if best_p is None else min(best_p, dt)
     codec_phases["mm16_probe_on_mm13b_payloads"] = {"decode_sec": round(best_p, 3)}
 
-    # Round-comparability anchors (r9 verdict task 8): the headline set
-    # grew 14 -> 48 across rounds; these fields make the 2x-of-baseline
-    # check and the round-over-round delta each ONE number.
     comparable_14 = [n for n in HEADLINE[:14] if n in timings]
     comparable_14_total = round(sum(timings[n] for n in comparable_14), 3)
-    comparable_31 = [n for n in HEADLINE[:31] if n in timings]
-    comparable_31_total = round(sum(timings[n] for n in comparable_31), 3)
-    # pins the r11 48-query headline so the r12+ delta is one line
-    comparable_48 = [n for n in HEADLINE[:48] if n in timings]
-    comparable_48_total = round(sum(timings[n] for n in comparable_48), 3)
-    # pins the r12 50-query headline (adds c7/c8) for the r13+ delta
-    comparable_50 = [n for n in HEADLINE[:50] if n in timings]
-    comparable_50_total = round(sum(timings[n] for n in comparable_50), 3)
     shared_prev = None
     import glob
 
@@ -389,10 +302,8 @@ def main() -> None:
         glob.glob("BENCH_r*.json"),
         key=lambda p: int(re.search(r"r(\d+)", p).group(1)),
     )
-    # Walk back to the newest round whose bench output the driver
-    # actually parsed (r10's final line outgrew the driver's tail
-    # window, leaving "parsed": null — the reason the detail sections
-    # now live in .artifacts/bench_detail.json, not the final line).
+    # Compare against the newest BENCH_r*.json that holds parsed
+    # per-query timings (a file whose "parsed" is null is skipped).
     for prev_path in reversed(prev_files):
         with open(prev_path, encoding="utf-8") as fh:
             prev = json.load(fh)
@@ -406,43 +317,12 @@ def main() -> None:
             "this_total": round(sum(timings[n] for n in inter), 3),
             "prev_total": round(sum(prev["queries"][n] for n in inter), 3),
         }
-        # Calibration-normalized pair (r12 verdict task 2): divide each
-        # query by the shape-matched calibrator of ITS OWN round, so a
-        # session-speed shift moves both sides together and the ratio
-        # isolates code changes. Only possible when the prev round
-        # published both calibrators.
-        pc, pcsw = prev.get("calib_range_sum_sec"), prev.get(
-            "calib_shuffle_window_sec"
-        )
-        if pc and pcsw:
-            shared_prev["this_total_normalized"] = round(
-                sum(
-                    timings[n] / (calib if n in scan_shaped else calib_sw)
-                    for n in inter
-                ),
-                3,
-            )
-            shared_prev["prev_total_normalized"] = round(
-                sum(
-                    prev["queries"][n] / (pc if n in scan_shaped else pcsw)
-                    for n in inter
-                ),
-                3,
-            )
         break
 
-    # Bulky diagnostic sections (normalized timings, codec phase split)
-    # go to a detail file + an EARLIER stdout line; the FINAL line stays
-    # compact so the driver's tail-capture window always parses it
-    # (r10 verdict nit #1: the r10 final line outgrew that window).
-    detail = {
-        "normalized_queries": normalized,
-        "normalized_by": {
-            "calib_range_sum_sec": sorted(scan_shaped),
-            "calib_shuffle_window_sec": "all others",
-        },
-        "codec_phases": codec_phases,
-    }
+    # The codec phase split goes to a detail file + an EARLIER stdout
+    # line; the FINAL line stays compact so a reader that keeps only
+    # the tail of the output still parses it.
+    detail = {"codec_phases": codec_phases}
     os.makedirs(".artifacts", exist_ok=True)
     with open(".artifacts/bench_detail.json", "w", encoding="utf-8") as fh:
         json.dump(detail, fh)
@@ -456,17 +336,10 @@ def main() -> None:
         "sf": sf,
         "runs": runs,
         "agg": "min",
-        "calib_range_sum_sec": round(calib, 3),
-        "calib_shuffle_window_sec": round(calib_sw, 3),
-        "calib_range_sum_median_sec": round(calib_median, 3),
-        "calib_shuffle_window_median_sec": round(calib_sw_median, 3),
         # once-per-(process, sf) MinHash pair-export chain, built before
         # the timed loop — the cost d7/g1's min-of-3 amortizes away
         "export_build_sec": export_build_sec,
         "comparable_14_total": comparable_14_total,
-        "comparable_31_total": comparable_31_total,
-        "comparable_48_total": comparable_48_total,
-        "comparable_50_total": comparable_50_total,
         "shared_prev_round_total": shared_prev,
     }))
 

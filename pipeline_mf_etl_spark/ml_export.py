@@ -31,6 +31,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipeline_mf_etl_spark.operators.windows import SERIES_KEY, sort_series
 from pipeline_mf_etl_spark.sources.readers import load_table
 from pipeline_mf_etl_spark.sources.writers import write_json_artifact
 
@@ -142,8 +143,7 @@ def export_ml_dataset(
     )
     dataset_path = f"{output}/ml_dataset.parquet"
     (
-        ds.repartition("user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
+        sort_series(ds.repartition(SERIES_KEY))
         .write.mode("overwrite")
         .option("compression", "zstd")
         .parquet(dataset_path)

@@ -13,13 +13,16 @@ fixed horizon with a last-bar END_OF_DATA fallback, MFE/MAE tracked
 while holding, and symmetric two-sided costs.
 
 Spark-first shape: the loop is unavoidable WITHIN a series, so it runs
-as ``groupBy(series).applyInPandas`` — one Arrow batch per series,
-NumPy arrays inside, parallel across series. At 100 TB the series count
-is the scaling axis (millions of keys shuffle-partitioned once); the
-per-series loop stays O(series length) and never touches the driver.
+in a ``series_island`` (operators/windows.py): one pandas frame per
+island partition holding whole series in series order, NumPy slices
+per series inside, parallel across partitions. At 100 TB the series
+count is the scaling axis (millions of keys shuffle-partitioned once);
+the per-series loop stays O(series length) and never touches the
+driver.
 
 Simulation contract (deterministic, documented for the oracle/tests):
-- bars are ordered by (ts, event_id); bar index i is 0-based.
+- bars are in series order ((ts, event_id), NULL ts last); bar index i
+  is 0-based.
 - a signal at bar s (while flat) fills at bar e = s+1 at ``value[e]``;
   a signal on the last bar is dropped (no next open).
 - exit fills at bar x = e + hold_bars (reason HORIZON); if that runs
@@ -47,7 +50,11 @@ from pyspark.sql.types import (
 )
 
 from pipeline_mf_etl_spark.config import Settings
-from pipeline_mf_etl_spark.operators.windows import rolling_min_samples, series_window
+from pipeline_mf_etl_spark.operators.windows import (
+    rolling_min_samples,
+    series_island,
+    series_window,
+)
 
 # B2 state mapping (reference backtest/state_mapping.py:54-118): event
 # type -> (trade side, signal eligibility); unmapped types are side 0
@@ -204,22 +211,12 @@ def simulate_trades(
             )
             i = x  # flat again on the exit bar: its signal may re-enter
 
-    def sim(batches):
-        # one Arrow exchange per PARTITION, not per series: concat the
-        # partition's batches, then run the per-series loop over NumPy
-        # slices at group boundaries — building a pandas sub-frame per
-        # series costs more than the whole sim loop when groups are many
-        # and short (same many-small-groups optimization as
-        # operators/ewm.py).
+    def sim(pdf):
+        # run the per-series loop over NumPy slices at group boundaries:
+        # building a pandas sub-frame per series costs more than the
+        # whole sim loop when groups are many and short
         import numpy as np
 
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values(["user_id", "ts", "event_id"], kind="mergesort")
         uids = pdf["user_id"].to_numpy()
         vals = pdf["value"].to_numpy(dtype=float)
         sigs = pdf["signal"].fillna(False).to_numpy(dtype=bool)
@@ -231,12 +228,6 @@ def simulate_trades(
             sim_series(
                 int(uids[lo]), vals[lo:hi], sigs[lo:hi], sides[lo:hi], eids[lo:hi], out
             )
-        yield pd.DataFrame(out, columns=[f.name for f in TRADE_SCHEMA.fields])
+        return pd.DataFrame(out, columns=[f.name for f in TRADE_SCHEMA.fields])
 
-    from pipeline_mf_etl_spark.functions.core import island_repartition
-
-    return (
-        island_repartition(bars, "user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(sim, TRADE_SCHEMA)
-    )
+    return series_island(bars, sim, TRADE_SCHEMA)

@@ -34,8 +34,8 @@ block it heads, never a whole partition.
 Scale shape (same as the reference's design, SURVEY.md §7.4): the model
 is tiny (K states × D features); FIT runs on a driver-collected, capped
 sample of sequences (the reference caps everything the same way);
-DECODE runs per partition in mapInPandas with the parameters in the
-closure.
+DECODE runs per partition in a ``series_island`` (operators/windows.py)
+with the parameters in the closure.
 
 Sequence contract (research_hmm/sequence_builder.py:25-108): one series
 per key, time-ordered, sequences shorter than ``min_len`` dropped,
@@ -45,10 +45,11 @@ per key, time-ordered, sequences shorter than ``min_len`` dropped,
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from pipeline_mf_etl_spark.operators.windows import series_island
 
 _LOG2PI = float(np.log(2.0 * np.pi))
 # Padded bars per kernel block. A block holds a few float arrays of K
@@ -249,18 +250,14 @@ def decode_distributed(
     min_len: int = 20,
 ) -> DataFrame:
     """Viterbi + posterior decode of every series with the model's
-    parameters in the closure: one mapInPandas pass, each partition's
+    parameters in the closure: one ``series_island`` pass, each partition's
     series decoded in length-ordered kernel blocks (reference
     research_hmm/decode.py:57-157, distributed). Rows with a non-finite
     feature are dropped before series lengths are counted; every
     decoded row keeps all columns of ``bars``, then ``DECODE_FIELDS``."""
 
-    def run(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        # rows arrive in (user_id, ts, event_id) order: one series per run of user_id
-        pdf = pd.concat(pdfs, ignore_index=True)
+    def run(pdf):
+        # one series per run of user_id, rows in series order
         x = pdf[feature_cols].to_numpy(dtype="float64")
         rows = np.flatnonzero(np.isfinite(x).all(axis=1))
         uid = pdf["user_id"].to_numpy()[rows]
@@ -269,7 +266,7 @@ def decode_distributed(
         keep = lengths >= min_len
         rows, lengths = rows[np.repeat(keep, lengths)], lengths[keep]
         if not len(rows):
-            return  # sequence_builder drops short sequences
+            return None  # sequence_builder drops short sequences
         seqs = np.split(x[rows], np.cumsum(lengths)[:-1])
         paths, posts = DiagGaussianHMM.from_params(params).decode(seqs)
         post = np.concatenate(posts)
@@ -278,16 +275,10 @@ def decode_distributed(
         plogp = np.zeros_like(post)
         nz = post > 1e-12
         plogp[nz] = post[nz] * np.log(post[nz])
-        yield pdf.take(rows).assign(
+        return pdf.take(rows).assign(
             hmm_state=np.concatenate(paths),
             state_prob_max=post.max(axis=1),
             state_entropy=-plogp.sum(axis=1),
         )
 
-    from pipeline_mf_etl_spark.functions.core import island_repartition
-
-    return (
-        island_repartition(bars, "user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(run, StructType(bars.schema.fields + DECODE_FIELDS))
-    )
+    return series_island(bars, run, StructType(bars.schema.fields + DECODE_FIELDS))

@@ -2,9 +2,16 @@
 
 The reference runs every sequential computation as a per-ticker Python
 loop over one file per symbol; here each is a single window expression
-over one partitioned DataFrame — `Window.partitionBy(series_key)
-.orderBy(time_key, tiebreak)` — so Spark parallelizes across series and
-AQE handles skewed keys. No Python in the hot path.
+over one partitioned DataFrame (``series_window``), so Spark
+parallelizes across series and AQE handles skewed keys. No Python in
+the hot path.
+
+Series order. A series is the rows of one ``user_id``, ordered by
+``(ts, event_id)`` ascending with NULLs last. This module is its one
+home: ``series_window`` (Spark windows), ``SERIES_WINDOW_SQL`` (the
+oracles' window text; DuckDB orders NULLs last by default, so the bare
+text is the same order) and ``series_island`` (the pandas islands,
+which see each series' rows contiguous and in that order).
 
 Key semantic carried over from the reference (Polars `min_samples`):
 rolling statistics are NULL until the window holds n observations —
@@ -14,15 +21,77 @@ silver/features_base.py:172-198).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import TYPE_CHECKING
+
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from pipeline_mf_etl_spark.functions.core import island_repartition
+
+if TYPE_CHECKING:
+    import pandas as pd
+
+SERIES_KEY = "user_id"
+SERIES_ORDER = ("ts", "event_id")
+SERIES_WINDOW_SQL = f"PARTITION BY {SERIES_KEY} ORDER BY {', '.join(SERIES_ORDER)}"
 
 
-def series_window(series_col: str = "user_id", *order_cols: str) -> WindowSpec:
-    """Base ordered window for one series: partition by series key, order
-    by event time with a deterministic tiebreak."""
-    order = list(order_cols) or ["ts", "event_id"]
-    return Window.partitionBy(series_col).orderBy(*order)
+def series_order() -> list[Column]:
+    """The within-series order: ``(ts, event_id)`` ascending, NULLs last."""
+    return [F.col(c).asc_nulls_last() for c in SERIES_ORDER]
+
+
+def series_window(*within: str | Column) -> WindowSpec:
+    """Window over one series in series order; ``within`` adds partition
+    keys that split a series into sub-series (runs, segments, days)."""
+    return Window.partitionBy(SERIES_KEY, *within).orderBy(*series_order())
+
+
+def sort_series(df: DataFrame) -> DataFrame:
+    """Sort each partition by series key, then series order: the order a
+    ``series_window`` stage leaves its rows in, so a sort after one is
+    free."""
+    return df.sortWithinPartitions(SERIES_KEY, *series_order())
+
+
+def series_island(
+    df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame | None], schema: StructType
+) -> DataFrame:
+    """Run ``fn`` once per island partition on a pandas frame holding
+    whole series, each contiguous, keys ascending, rows in series order.
+
+    One Arrow exchange per partition, not per series: with millions of
+    short series, per-group ``applyInPandas`` pays one per series. ``fn``
+    returns the partition's output frame (``schema``) or None; empty
+    partitions never reach it."""
+
+    def run(batches):
+        import pandas as pd
+
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        if pdf.empty:
+            return
+        out = fn(pdf)
+        if out is not None:
+            yield out
+
+    return sort_series(island_repartition(df, SERIES_KEY)).mapInPandas(run, schema)
+
+
+def shares_ts(w: WindowSpec) -> Column:
+    """True when another row of the series has this row's ``ts`` (NULL
+    ``ts`` rows match each other), over ``w = series_window()``. Equal
+    ``ts`` rows are adjacent in series order, so comparing neighbours
+    equals counting a ``(user_id, ts)`` partition, without a second
+    shuffle or sort. The struct makes a missing neighbour (NULL) differ
+    from a neighbour with NULL ``ts``."""
+    ts = F.struct(SERIES_ORDER[0])
+    return F.lag(ts).over(w).eqNullSafe(ts) | F.lead(ts).over(w).eqNullSafe(ts)
 
 
 def rolling(agg: Column, w: WindowSpec, n: int) -> WindowSpec | Column:

@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.config import Settings, load_settings
@@ -31,7 +31,7 @@ from pipeline_mf_etl_spark.operators.backtest import (
     with_state_map,
 )
 from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
-from pipeline_mf_etl_spark.operators.windows import flow_state, series_window
+from pipeline_mf_etl_spark.operators.windows import flow_state, series_window, shares_ts
 from pipeline_mf_etl_spark.sources.readers import load_table
 from pipeline_mf_etl_spark.sources.writers import (
     write_csv_twin,
@@ -57,14 +57,13 @@ def bronze_layer(ev: DataFrame) -> DataFrame:
 
 def silver_layer(bronze: DataFrame, gap_days: int = 7) -> DataFrame:
     """P2/P3 quality flags + error counts + valid marker."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    dup_w = Window.partitionBy("user_id", "ts")
+    w = series_window()
     flags = {
         "q_missing_field": F.col("value").isNull()
         | F.col("event_type").isNull()
         | (F.trim("event_type") == ""),
         "q_nonpositive_value": F.coalesce(F.col("value") <= 0, F.lit(False)),
-        "q_duplicate": F.count("*").over(dup_w) > 1,
+        "q_duplicate": shares_ts(w),
     }
     warns = {
         "q_gap_in_series": F.coalesce(
@@ -92,14 +91,7 @@ def gold_layer(silver: DataFrame, s: Settings) -> DataFrame:
     valid = silver.filter("is_valid_row").drop(
         *[c for c in silver.columns if c.startswith("q_")]
     )
-    df = ewm_smooth(
-        valid,
-        series_cols=["user_id"],
-        order_cols=["ts", "event_id"],
-        value_col="value",
-        n=s.indicators.ewm_span,
-        out_col="ewm",
-    )
+    df = ewm_smooth(valid, "value", s.indicators.ewm_span, "ewm")
     w = series_window()
     df = df.withColumn("flow_state_code", flow_state("ewm", w)[1])
     # bronze upper-cases event types

@@ -4,8 +4,8 @@ The reference chains adapter → state mapping → execution realism →
 signals → trade simulation → metrics → equity curve
 (backtest/pipeline.py:165-860). Stages B1-B5/B7/B8 are pure column/join
 algebra (Catalyst-friendly, broadcast joins for the tiny mapping
-tables); only the trade loop B6 is sequential per series and runs as
-``applyInPandas`` (operators/backtest.py).
+tables); only the trade loop B6 is sequential per series and runs in
+a ``series_island`` (operators/backtest.py).
 
 events → bars mapping: user_id = ticker, value = price, props.$.k =
 volume proxy, event_type = state label (purchase→long, error→short).
@@ -25,11 +25,11 @@ from pipeline_mf_etl_spark.operators.backtest import (
     simulate_trades,
     with_state_map,
 )
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
 from pipeline_mf_etl_spark.operators.windows import series_window
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
-_W = "PARTITION BY user_id ORDER BY ts, event_id"
 
 # Knobs come from the settings layer (config.py); defaults reproduce the
 # reference's semantics. b4/b14 are full builders — pass a custom
@@ -199,7 +199,7 @@ def b5_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# B6: next-open non-overlapping trade simulation (applyInPandas island).
+# B6: next-open non-overlapping trade simulation (a series_island pass).
 # The greedy non-overlap loop IS oracle-expressible as a recursive CTE:
 # `next_sig(idx)` = first eligible signal at-or-after each bar (a reverse
 # running-min window, computed ONCE, non-recursively), which turns the
@@ -1138,7 +1138,7 @@ def b1_input_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date").alias("bar_day"),
         state.alias("state_id"),
     )
-    wd = Window.partitionBy("user_id", "bar_day").orderBy("ts", "event_id")
+    wd = series_window("bar_day")
     deduped = mapped.withColumn("rn", F.row_number().over(wd)).filter(F.col("rn") == 1)
     return deduped.select(
         F.concat_ws("|", F.col("user_id"), F.col("event_id")).alias("row_id"),

@@ -8,8 +8,9 @@ semantics run over the ``events`` series (user_id = series key,
 value = measure).
 
 The EWM recursion is the single primitive with no native Spark
-expression: the Spark side runs it as an Arrow-batched
-``applyInPandas`` per series (operators/ewm.py); the DuckDB oracle uses
+expression: the Spark side runs it in one ``series_island`` pass
+(operators/ewm.py), one pandas frame per island partition holding
+whole series in series order; the DuckDB oracle uses
 a BLOCK-RESCALED exact expansion of the same recursion (see _EWM_CTE) —
 the naive closed form ``y_t = a·B^t·Σ x_i·B^{-i} + B^t·x_1`` overflows
 double once a series exceeds ~7000 bars, so exponents are kept within
@@ -20,15 +21,15 @@ beyond the 6-dp rounding used in the comparison.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.functions.core import safe_div
 from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
 from pipeline_mf_etl_spark.operators.windows import bars_since, flow_state, series_window
 from pipeline_mf_etl_spark.queries.registry import query
 
-_W = "PARTITION BY user_id ORDER BY ts, event_id"
 
 # Wilder span from settings (default 10: short enough that every sf has
 # post-warm-up rows; reference settings.yaml `indicators`).
@@ -97,14 +98,7 @@ def _ewm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_mf_etl_spark.sources.readers import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    return ewm_smooth(
-        ev,
-        series_cols=["user_id"],
-        order_cols=["ts", "event_id"],
-        value_col="value",
-        n=_N,
-        out_col="ewm_10",
-    )
+    return ewm_smooth(ev, "value", _N, "ewm_10")
 
 
 # ---------------------------------------------------------------------------

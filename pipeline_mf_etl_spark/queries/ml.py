@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipeline_mf_etl_spark.functions.core import safe_div
+from pipeline_mf_etl_spark.operators.windows import series_window, sort_series
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
@@ -478,6 +480,27 @@ def m6_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HMM_EXPORT_CACHE: dict[tuple[str, str], str] = {}
 
 
+def _hmm_bars(ev: DataFrame) -> DataFrame:
+    """Per-bar HMM features: the 1-bar return and its magnitude."""
+    ret = safe_div(F.col("value"), F.lag("value").over(series_window())) - 1
+    return ev.select(
+        "user_id", "ts", "event_id", "value", ret.alias("ret_1"), F.abs(ret).alias("abs_ret_1")
+    )
+
+
+def _hmm_training_bars(ev: DataFrame) -> DataFrame:
+    """The fit's capped sample: the bars of the 60 smallest user ids,
+    deterministic, in series order. The model is K×D-tiny, so the
+    sample bound is what matters at scale (the reference caps its
+    training matrices the same way). The users are kept before the
+    bars are built, so only their series are windowed; each series'
+    window stage leaves it in one partition in series order, so the
+    sort costs nothing."""
+    keys = ev.select("user_id").distinct().orderBy("user_id").limit(60)
+    sample = _hmm_bars(ev.join(keys, "user_id", "left_semi"))
+    return sort_series(sample).select("user_id", "ret_1", "abs_ret_1")
+
+
 def hmm_decoded_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fit the HMM, decode every series, persist the per-bar decoded
     frame (``m10_decoded``), return the read-back frame. Shared by the
@@ -494,40 +517,23 @@ def hmm_decoded_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _HMM_EXPORT_CACHE.get(key) == sf_dir:
         return read_export(spark, sf_dir, "m10_decoded")
     import numpy as np
-    from pyspark.sql import Window
 
-    from pipeline_mf_etl_spark.functions.core import safe_div
     from pipeline_mf_etl_spark.operators.hmm import DiagGaussianHMM, decode_distributed
 
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ret = safe_div(F.col("value"), F.lag("value").over(w)) - 1
-    bars = ev.select(
-        "user_id", "ts", "event_id", "value", ret.alias("ret_1"), F.abs(ret).alias("abs_ret_1")
-    )
-
-    # FIT: capped driver sample — the 60 smallest user ids,
-    # deterministic, taken in one action; the model is K×D-tiny so the
-    # sample bound is what matters at scale (the reference caps its
-    # training matrices the same way). Each user's bars sit in one
-    # partition in (ts, event_id) order, so no global sort is needed;
-    # the series go to the fit in user_id order.
-    keys = ev.select("user_id").distinct().orderBy("user_id").limit(60)
-    train = (
-        bars.join(keys, "user_id", "left_semi")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .select("user_id", "ret_1", "abs_ret_1")
-        .collect()
-    )
+    # FIT on the driver-collected sample, taken in one action; the
+    # series go to the fit in user_id order.
     seqs: dict[int, list] = {}
-    for r in train:
+    for r in _hmm_training_bars(ev).collect():
         if r["ret_1"] is not None:
             seqs.setdefault(r["user_id"], []).append((r["ret_1"], r["abs_ret_1"]))
     model = DiagGaussianHMM(n_states=3, n_iter=30).fit(
         [np.array(seqs[u]) for u in sorted(seqs)], min_len=20
     )
 
-    decoded = decode_distributed(bars, model.to_params(), ["ret_1", "abs_ret_1"], min_len=20)
+    decoded = decode_distributed(
+        _hmm_bars(ev), model.to_params(), ["ret_1", "abs_ret_1"], min_len=20
+    )
     out = _export(
         decoded.select(
             "event_id",

@@ -8,15 +8,18 @@ gaps — and the valid/reject split is two filters off one flagged frame.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.functions.core import sum_horizontal
-from pipeline_mf_etl_spark.operators.windows import dedupe_keep_first
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
+from pipeline_mf_etl_spark.operators.windows import (
+    dedupe_keep_first,
+    series_window,
+    shares_ts,
+)
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
-
-_W = "PARTITION BY user_id ORDER BY ts, event_id"
 
 
 def _r(col, n=6):
@@ -94,14 +97,13 @@ def p1_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p2_p3_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row quality flags (P2) + horizontal counts and valid split (P3/A4)."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    dup_w = Window.partitionBy("user_id", "ts")
+    w = series_window()
     flags = {
         "q_missing_field": F.col("value").isNull()
         | F.col("event_type").isNull()
         | (F.trim("event_type") == ""),
         "q_nonpositive_value": F.coalesce(F.col("value") <= 0, F.lit(False)),
-        "q_duplicate": F.count("*").over(dup_w) > 1,
+        "q_duplicate": shares_ts(w),
         "q_gap_in_series": F.coalesce(
             F.datediff(F.col("ts").cast("date"), F.lag(F.col("ts").cast("date")).over(w)) > 7,
             F.lit(False),

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _WEV
+from pipeline_mf_etl_spark.operators.windows import series_window
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import fan_out, load_table
 
@@ -427,8 +429,6 @@ def s3_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from pyspark.sql import Window  # noqa: E402  (used by the coverage additions below)
 
-_WEV = "PARTITION BY user_id ORDER BY ts, event_id"
-
 
 # ---------------------------------------------------------------------------
 # A4 horizontal (row-wise) aggregates: greatest/least + any/all boolean chains
@@ -615,7 +615,7 @@ def i2_manifest_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j7_j10_profile_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join of grouped profile, forward-outcome, and rolling-mean aggregates (J7/J10)."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     prev = F.lag("value").over(w)
     ret1 = F.when(F.abs(prev) > 1e-12, F.col("value") / prev - 1)
     w5 = w.rowsBetween(-4, 0)

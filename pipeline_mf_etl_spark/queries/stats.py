@@ -17,12 +17,12 @@ from pipeline_mf_etl_spark.operators.stats import (
     fit_global_scaler,
     fit_robust_scaler_per_group,
 )
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
 from pipeline_mf_etl_spark.operators.windows import run_group, series_window
 from pipeline_mf_etl_spark.queries.export import export_frame, export_glob
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
-_W = "PARTITION BY user_id ORDER BY ts, event_id"
 
 _BOOT = load_settings().bootstrap
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 from pipeline_mf_etl_spark.streaming import daily_rollup, session_rollup, sliding_rollup
@@ -58,14 +59,14 @@ def st2_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "st3_session_windows",
-    oracle="""
+    oracle=f"""
     WITH flagged AS (
         SELECT user_id, ts, value,
                CASE WHEN LAG(ts) OVER w IS NULL
                          OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
                     THEN 1 ELSE 0 END AS new_session
         FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        WINDOW w AS ({SERIES_WINDOW_SQL})
     ), numbered AS (
         SELECT *, SUM(new_session) OVER (
             PARTITION BY user_id ORDER BY ts

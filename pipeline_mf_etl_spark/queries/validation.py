@@ -18,12 +18,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.functions.core import safe_div
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
 from pipeline_mf_etl_spark.operators.windows import series_window
 from pipeline_mf_etl_spark.pin import pin
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
-_W = "PARTITION BY user_id ORDER BY ts, event_id"
 
 _REL_LO, _REL_HI = -5, 10
 

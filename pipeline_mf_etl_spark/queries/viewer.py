@@ -22,14 +22,13 @@ collapse: trh/trl use prev-close only and the first bar defines
 row — documented proxy deviation, applied identically on both engines.
 
 Spark-first shape: the four RMAs AND every per-series sequential
-column are ONE mapInPandas island (``_panel_frame``) over
-series-partitioned data — a widened inline variant of the
-``ewm_smooth_many`` library operator (tests assert the two stay
-bit-identical on the smoothing step); everything downstream is
-window/CASE algebra that Catalyst pipelines into the same single
-shuffle. The DuckDB oracles reuse the block-rescaled exact EWM
-expansion from ``queries/flow.py`` (naive closed forms overflow double
-past ~7000 bars), generated per smoothed column by ``_ewm_chain``.
+column are ONE ``series_island`` pass (``_panel_frame``) running the
+same pandas ``GroupBy.ewm`` recursion as ``operators/ewm.py``;
+everything downstream is window/CASE algebra that Catalyst pipelines
+into the same single shuffle. The DuckDB oracles reuse the
+block-rescaled exact EWM expansion from ``queries/flow.py`` (naive
+closed forms overflow double past ~7000 bars), generated per smoothed
+column by ``_ewm_chain``.
 Every float the comparison hashes is rounded to 6 dp on both sides,
 and every boolean/label is computed FROM rounded values so
 accumulation-order ulps cannot flip the hash.
@@ -42,10 +41,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from pipeline_mf_etl_spark.functions.core import exact_ratio_round6_sql
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
+from pipeline_mf_etl_spark.operators.windows import series_island, series_window
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
-
-_W = "PARTITION BY user_id ORDER BY ts, event_id"
 
 # TwiggsParams defaults (reference indicators_twiggs.py:17-24)
 _N = 21
@@ -155,35 +154,32 @@ _PANEL_CTE = f"""
 
 
 def _panel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of the ``panel`` CTE, computed in ONE mapInPandas
-    island: bars → Twiggs terms → four RMAs → rounded tmf_raw/tti_raw →
+    """Spark twin of the ``panel`` CTE, computed in ONE ``series_island``
+    pass: bars → Twiggs terms → four RMAs → rounded tmf_raw/tti_raw →
     every per-series sequential column the viewer panel needs (crosses,
     returns, slopes, 20-bar rolling dollar-volume median).
 
-    The post-island columns used to be JVM window expressions, but
-    mapInPandas re-keys attribute ids, so Catalyst cannot prove the
-    island output is still hash-partitioned by user_id and inserts a
-    SECOND full shuffle before the window stage. Folding those columns
-    into the island (all vectorized pandas groupby ops) keeps the plan
-    at exactly one exchange — at 100 TB that halves the shuffled bytes
-    of the heaviest viewer query. NaN round-trips as Double.NaN, not
-    SQL NULL; v1's final projection normalizes.
+    The per-series columns are computed inside the island, not as JVM
+    windows after it: mapInPandas re-keys attribute ids, so Catalyst
+    cannot prove the island output is still hash-partitioned by user_id
+    and would insert a SECOND full shuffle before a window stage.
+    Folding them into the island (all vectorized pandas groupby ops)
+    keeps the plan at exactly one exchange — at 100 TB that halves the
+    shuffled bytes of the heaviest viewer query. NaN round-trips as
+    Double.NaN, not SQL NULL; v1's final projection normalizes.
 
     tmf_raw/tti_raw are rounded to 6 dp INSIDE the island (``+ 0.0``
     clears IEEE -0.0) because every downstream flag/slope derives from
     the rounded values on both engines (reference indicators_twiggs.py:
     31-81 via compute_ticker.py:197-242).
 
-    EXACTNESS (r14, superseding the r13 "documented tolerance"): the
-    r13 10x sweep's 2-in-100k v1 divergence was NOT RMA accumulation —
-    it was ret_1/ret_5/range_pct, ratios of 2-dp prices landing exactly
-    on the 7th-decimal .5 tie, which different ROUND implementations
-    break apart. Those columns are now computed in exact integer cents
-    on both engines (functions/core.exact_ratio_round6 and its numpy
-    twin inside the island), and v1 is hash-exact at sf0.1. The RMA
-    chains themselves never tie at 6 dp (k*10^-6 midpoints are not
-    exactly representable, per the np.round note above), so no
-    tolerance remains."""
+    Exactness: ret_1/ret_5/range_pct are ratios of 2-dp prices that can
+    land exactly on a 7th-decimal .5 tie, which different ROUND
+    implementations break apart; both engines compute them in exact
+    integer cents (functions/core.exact_ratio_round6 and its numpy
+    twin inside the island). The RMA chains never tie at 6 dp
+    (k*10^-6 midpoints are not exactly representable, per the np.round
+    note below), so v1 is hash-exact with no tolerance."""
     ev = load_table(spark, sf_dir, "events")
     bars = ev.select(
         "event_id",
@@ -221,19 +217,9 @@ def _panel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     alpha, n = _A, _N
 
-    def panel(batches):
+    def panel(pdf):
         import numpy as np
-        import pandas as pd
 
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values(["user_id", "ts", "event_id"], kind="mergesort").reset_index(
-            drop=True
-        )
         g = pdf.groupby(["user_id"], sort=True)
         close, vol = pdf["close"], pdf["volume"]
         prev_raw = g["close"].shift(1)
@@ -275,12 +261,11 @@ def _panel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf["tmf_zero_cross"] = cross(pdf["tmf_raw"], lag1_t)
         pdf["tti_zero_cross"] = cross(pdf["tti_raw"], lag1_u)
         # 1/5-bar returns and true-range pct in EXACT integer cents
-        # (r14, functions/core.exact_ratio_round6's numpy twin): these
-        # ratios of 2-dp prices land exactly on 7th-digit .5 ties,
-        # where numpy/Spark/DuckDB round the nearest double apart —
-        # the 2-in-100k v1 divergence of the r13 10x sweep. Values are
-        # emitted ALREADY rounded; the final projection's 6-dp round
-        # is an idempotent no-op for them.
+        # (functions/core.exact_ratio_round6's numpy twin): these
+        # ratios of 2-dp prices can land exactly on 7th-digit .5 ties,
+        # where numpy/Spark/DuckDB round the nearest double apart.
+        # Values are emitted ALREADY rounded; the final projection's
+        # 6-dp round is an idempotent no-op for them.
         def _ratio6(numc, denc):
             out = np.full(numc.shape, np.nan)
             ok = (~np.isnan(numc)) & (~np.isnan(denc)) & (denc > 0)
@@ -308,13 +293,9 @@ def _panel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .median()
             .to_numpy()
         )
-        yield pdf[[f.name for f in schema.fields]]
+        return pdf[[f.name for f in schema.fields]]
 
-    from pipeline_mf_etl_spark.functions.core import island_repartition
-
-    return island_repartition(bars, "user_id").sortWithinPartitions(
-        "user_id", "ts", "event_id"
-    ).mapInPandas(panel, schema)
+    return series_island(bars, panel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -481,7 +462,6 @@ def v2_viewer_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
         entry_signal,
         with_state_map,
     )
-    from pipeline_mf_etl_spark.operators.windows import series_window
     from pipeline_mf_etl_spark.queries.backtest import _S
 
     ev = load_table(spark, sf_dir, "events")
@@ -612,7 +592,7 @@ def v3_reading_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with the oracle's NULL semantics
         F.when(~F.isnan("tti_raw"), F.col("tti_raw")).alias("v"),
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     w5 = w.rowsBetween(-2, 2)
     wprev = w.rowsBetween(Window.unboundedPreceding, -1)
     wall = Window.partitionBy("user_id")
@@ -684,7 +664,7 @@ def v3_reading_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _v4_oracle() -> str:
     from pipeline_mf_etl_spark.queries.export import export_glob
 
-    wseq = "PARTITION BY user_id ORDER BY ts, event_id"
+    wseq = _W
     return f"""
     WITH d AS (SELECT * FROM read_parquet('{export_glob("m10_decoded")}')),
     rib AS (
@@ -729,7 +709,7 @@ def v4_hmm_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_mf_etl_spark.queries.ml import hmm_decoded_export
 
     d = hmm_decoded_export(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
     prev = F.lag("hmm_state").over(w)
     rib = d.withColumns(

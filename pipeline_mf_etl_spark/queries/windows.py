@@ -3,8 +3,9 @@
 `events` plays the role of the reference's per-ticker daily bars:
 user_id = series key (ticker), ts = trade time, value = price-like
 measure. Every query is a single pass of window expressions — the
-reference's per-file Python loops collapse into
-`Window.partitionBy("user_id").orderBy("ts", "event_id")`.
+reference's per-file Python loops collapse into one ``series_window()``
+(operators/windows.py), whose order the oracles read as
+``SERIES_WINDOW_SQL``.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from pipeline_mf_etl_spark.functions.core import (
     exact_ratio_round6_sql,
     safe_div,
 )
+from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
 from pipeline_mf_etl_spark.operators.windows import (
     bars_since,
     dedupe_keep_first,
@@ -29,8 +31,6 @@ from pipeline_mf_etl_spark.operators.windows import (
 from pipeline_mf_etl_spark.pin import pin
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
-
-_W = "PARTITION BY user_id ORDER BY ts, event_id"
 
 
 def _r(col, n=6):
@@ -211,7 +211,7 @@ def w6_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         grp.alias("state_group"),
         F.when(changed & prev.isNotNull(), F.concat_ws(">", prev, state)).alias("transition"),
     )
-    w2 = Window.partitionBy("user_id", "state_group").orderBy("ts", "event_id")
+    w2 = series_window("state_group")
     return df.select(
         "event_id",
         "user_id",
@@ -268,7 +268,7 @@ def w8_w10_event_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         cross_down.alias("cross_down"),
         pos.alias("pos"),
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     hold = w.rowsBetween(-2, 0)
     look = w.rowsBetween(-10, -1)
     return df.select(
@@ -316,7 +316,7 @@ def w14_forward_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = series_window()
     ret1 = safe_div(F.col("value"), F.lag("value").over(w)) - 1
     df = ev.select("event_id", "user_id", "ts", "value", ret1.alias("ret_1"))
-    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w2 = series_window()
     fw = w2.rowsBetween(1, 10)
     return df.select(
         "event_id",
@@ -487,7 +487,7 @@ def w11_w13_burst_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = F.col("value") - F.lag("value", 3).over(w)
     burst = F.coalesce((F.col("value") > 11.0) & (slope > 0.5), F.lit(False))
     df = ev.select("event_id", "user_id", "ts", burst.alias("burst"))
-    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w2 = series_window()
     bi = F.col("burst").cast("int")
     act5 = F.sum(bi).over(w2.rowsBetween(-4, 0)).cast("long")
     act20 = F.sum(bi).over(w2.rowsBetween(-19, 0)).cast("long")
@@ -621,7 +621,7 @@ _W20_N = 20
         SELECT user_id, event_id, ts, value AS x,
                LAG(value) OVER w AS y
         FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        WINDOW w AS ({_W})
     ), sums AS (
         SELECT user_id, event_id,
                COUNT(y) OVER r AS n,
@@ -631,7 +631,7 @@ _W20_N = 20
                SUM(CASE WHEN y IS NOT NULL THEN x * x END) OVER r AS sxx,
                SUM(y * y) OVER r AS syy
         FROM lagged
-        WINDOW r AS (PARTITION BY user_id ORDER BY ts, event_id
+        WINDOW r AS ({_W}
                      ROWS BETWEEN {_W20_N - 1} PRECEDING AND CURRENT ROW)
     )
     SELECT user_id, event_id,
@@ -649,7 +649,7 @@ def w20_rolling_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums (W20, engine addition); NULL below 3 pairs or on zero-variance
     windows."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     r = w.rowsBetween(-(_W20_N - 1), 0)
     lagged = ev.select(
         "user_id",
@@ -688,17 +688,17 @@ def w20_rolling_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Shared by the registered window form AND its segmented skew variant —
 # identical output contract, so one oracle certifies both.
-_W21_ORACLE = """
+_W21_ORACLE = f"""
     WITH flagged AS (
         SELECT user_id, event_type, ts, event_id,
                CASE WHEN LAG(event_type) OVER w IS NULL
                          OR event_type <> LAG(event_type) OVER w
                     THEN 1 ELSE 0 END AS changed
         FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        WINDOW w AS ({_W})
     ), runs AS (
         SELECT *, SUM(changed) OVER (
-            PARTITION BY user_id ORDER BY ts, event_id
+            {_W}
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
         FROM flagged
     ), intervals AS (
@@ -724,7 +724,7 @@ def w21_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     events becomes one validity interval [valid_from, valid_to) with
     the run's event count; the open interval is flagged is_current."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     changed = (
         F.lag("event_type").over(w).isNull()
@@ -773,7 +773,7 @@ def w21_scd2_intervals_segmented(
     ev = load_table(spark, sf_dir, "events").withColumn(
         "seg", F.date_trunc(segment, F.col("ts"))
     )
-    w = Window.partitionBy("user_id", "seg").orderBy("ts", "event_id")
+    w = series_window("seg")
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     changed = (
         F.lag("event_type").over(w).isNull()
@@ -1091,17 +1091,17 @@ def w23_ohlc_resample_minby(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "j13_interval_lookup",
-    oracle="""
+    oracle=f"""
     WITH flagged AS (
         SELECT user_id, event_type, ts, event_id,
                CASE WHEN LAG(event_type) OVER w IS NULL
                          OR event_type <> LAG(event_type) OVER w
                     THEN 1 ELSE 0 END AS changed
         FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        WINDOW w AS ({_W})
     ), runs AS (
         SELECT *, SUM(changed) OVER (
-            PARTITION BY user_id ORDER BY ts, event_id
+            {_W}
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
         FROM flagged
     ), intervals AS (
@@ -1133,7 +1133,7 @@ def j13_interval_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_mf_etl_spark.operators.asof import asof_join
 
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     changed = (
         F.lag("event_type").over(w).isNull()

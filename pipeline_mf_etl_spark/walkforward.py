@@ -26,10 +26,11 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.functions.core import safe_div
+from pipeline_mf_etl_spark.operators.windows import series_window
 from pipeline_mf_etl_spark.sources.readers import load_table
 from pipeline_mf_etl_spark.sources.writers import write_json_artifact
 
@@ -49,7 +50,7 @@ def _split_stats(spark: SparkSession, sf_dir: str, train_end: str) -> DataFrame:
     single cut date (kept aligned so the batch query's DuckDB oracle
     indirectly certifies this per-split path too)."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = series_window()
     labeled = ev.select(
         "event_type",
         F.col("ts").cast("date").alias("d"),

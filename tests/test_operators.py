@@ -294,38 +294,6 @@ def test_lsh_high_threshold_prunes_candidates(spark):
     )
 
 
-def test_ewm_smooth_many_matches_single(spark):
-    """The multi-column island must produce bit-identical output to the
-    single-column operator for each column (same pandas recursion, same
-    NaN->NULL normalization) — guards the two implementations against
-    drifting until they are unified."""
-    import pyspark.sql.functions as F
-
-    from pipeline_mf_etl_spark.operators.ewm import ewm_smooth, ewm_smooth_many
-    from pipeline_mf_etl_spark.sources.readers import load_table
-    from tests.conftest import SF_ORACLE
-
-    ev = load_table(spark, SF_ORACLE, "events").select(
-        "user_id", "ts", "event_id", "value", (F.col("value") * 2).alias("v2")
-    )
-    many = ewm_smooth_many(
-        ev, ["user_id"], ["ts", "event_id"], {"a": "value", "b": "v2"}, n=10
-    ).select("event_id", "a", "b")
-    one_a = ewm_smooth(ev, ["user_id"], ["ts", "event_id"], "value", 10, "a").select(
-        "event_id", "a"
-    )
-    one_b = ewm_smooth(ev, ["user_id"], ["ts", "event_id"], "v2", 10, "b").select(
-        "event_id", "b"
-    )
-    joined = many.join(one_a.withColumnRenamed("a", "a1"), "event_id").join(
-        one_b.withColumnRenamed("b", "b1"), "event_id"
-    )
-    bad = joined.filter(
-        (~(F.col("a").eqNullSafe(F.col("a1")))) | (~(F.col("b").eqNullSafe(F.col("b1"))))
-    )
-    assert bad.count() == 0
-
-
 def test_ewm_smooth_matches_per_series_pandas(spark):
     """Interleaved series spread over several island partitions, a ``ts``
     tie broken by ``event_id`` and a NULL ``ts`` match pandas run one
@@ -351,7 +319,7 @@ def test_ewm_smooth_matches_per_series_pandas(spark):
     ).repartition(3)
     got = {
         r["event_id"]: r["ewm"]
-        for r in ewm_smooth(df, ["user_id"], ["ts", "event_id"], "value", 3, "ewm").collect()
+        for r in ewm_smooth(df, "value", 3, "ewm").collect()
     }
     pdf = pd.DataFrame(rows, columns=["event_id", "user_id", "ts", "value"])
     want = {}

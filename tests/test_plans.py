@@ -268,6 +268,22 @@ def test_viewer_panel_one_island_pass(spark):
     assert "Window" not in plan, plan
 
 
+def test_hmm_training_sample_semi_joins_before_window(spark):
+    """The HMM fit's sample keeps its 60 users before the return window
+    runs, so the window stage reads only their series, not every
+    user's; the series sort after the window is free."""
+    from pipeline_mf_etl_spark.queries.ml import _hmm_training_bars
+    from pipeline_mf_etl_spark.sources.readers import load_table
+
+    train = _hmm_training_bars(load_table(spark, SF_ORACLE, "events"))
+    plan = train._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    window = next(i for i, line in enumerate(lines) if "+- Window [" in line)
+    semi = next(i for i, line in enumerate(lines) if "LeftSemi" in line)
+    assert window < semi, plan
+    assert plan.count("Sort [") == 1, plan
+
+
 def test_viewer_markers_broadcasts_dims(spark):
     """v2 joins the per-bar fact to the overlay classification and the
     realism gates; the overlay dim must broadcast — shuffling the fact

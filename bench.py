@@ -18,7 +18,7 @@ import time
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.queries import all_queries
-from pipeline_mf_etl_spark.session import get_spark
+from pipeline_mf_etl_spark.session import default_parallelism, get_spark
 
 # One headline query per operator family (SURVEY.md §2 groups). The
 # first 14 are the original set: ``comparable_14_total`` sums them, so
@@ -298,17 +298,21 @@ def main() -> None:
     shared_prev = None
     import glob
 
+    # Compare against the newest BENCH_r*.json recorded at this run's sf
+    # and core count that holds parsed per-query timings; with none, the
+    # field is null. Files of one round (BENCH_rNN.json, BENCH_rNN_c8.json)
+    # order by name.
+    cpus = default_parallelism()
     prev_files = sorted(
         glob.glob("BENCH_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p).group(1)),
+        key=lambda p: (int(re.search(r"r(\d+)", p).group(1)), p),
     )
-    # Compare against the newest BENCH_r*.json that holds parsed
-    # per-query timings (a file whose "parsed" is null is skipped).
     for prev_path in reversed(prev_files):
         with open(prev_path, encoding="utf-8") as fh:
-            prev = json.load(fh)
-        prev = prev.get("parsed", prev) or {}
-        if not prev.get("queries"):
+            record = json.load(fh)
+        prev = record.get("parsed", record) or {}
+        same_setup = record.get("sf") == sf and record.get("cpus") == cpus
+        if not same_setup or not prev.get("queries"):
             continue
         inter = [n for n in timings if n in prev["queries"]]
         shared_prev = {

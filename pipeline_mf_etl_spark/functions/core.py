@@ -25,7 +25,9 @@ from pyspark.sql import types as T
 
 
 def safe_div(num: Column, den: Column, eps: float = 1e-12) -> Column:
-    """num/den guarded by |den| > eps, else NULL."""
+    """num/den guarded by |den| > eps, else NULL. ``den`` appears twice in
+    the CASE, so pass a projected column, not a window expression: a
+    window inside is evaluated once per appearance."""
     return F.when(F.abs(den) > F.lit(eps), num / den).otherwise(F.lit(None))
 
 
@@ -38,7 +40,7 @@ def island_repartition(df: DataFrame, *keys) -> DataFrame:
     AQE sizes post-shuffle partitions by BYTES against the advisory
     partition size, which is the right model for JVM operators but wrong
     by orders of magnitude for Python islands, whose per-row cost dwarfs
-    their byte size. Measured at bench scale (sf0.1, local[32], r14):
+    their byte size. Measured at bench scale (sf0.1, local[32]):
     every pandas island ran on 1-3 of 32 cores — the wd1 shard build put
     all 313 tar groups on ONE task, b6's whole trade sim ran on 2.
     Passing the count explicitly (REPARTITION_BY_NUM) opts this one
@@ -63,7 +65,7 @@ def cents(col: Column) -> Column:
 def exact_ratio_round6(num_cents: Column, den_cents: Column) -> Column:
     """HALF-AWAY-FROM-ZERO 6-dp rounding of num/den computed in EXACT
     integer arithmetic — the engine-independent form of
-    ``ROUND(num/den, 6)`` for fixed-point inputs (r14).
+    ``ROUND(num/den, 6)`` for fixed-point inputs.
 
     Why: ratios of 2-dp prices are rationals that can terminate ON the
     7th-decimal .5 tie (e.g. value/lag(value)-1 = 8.0046875), where

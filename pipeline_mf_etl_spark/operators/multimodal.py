@@ -107,10 +107,57 @@ def decode_media(payload_bytes: bytes, mime: str):
 
 
 # ---------------------------------------------------------------------------
+# RIFF container, shared by WAV (PCM16 and IMA-ADPCM) and WebP: 'RIFF'
+# <u32le size> <form fourcc>, then chunks of <fourcc> <u32le size> <body>,
+# each odd-sized body followed by one pad byte. ``riff_chunks`` is the one
+# reader and ``riff`` the one writer (operators/vp8l.py imports both).
+# ---------------------------------------------------------------------------
+
+
+def riff_chunks(payload: bytes, form: bytes) -> list[tuple[bytes, bytes]]:
+    """The ``(fourcc, body)`` chunks of a RIFF file of the given form, in
+    file order; the pad byte after an odd-sized body is skipped (the last
+    chunk may omit it, as many writers do). Raises ``ValueError`` unless
+    the 'RIFF'/form signature is present, the declared RIFF size plus 8
+    equals ``len(payload)`` and no chunk header or body is cut short."""
+    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != form:
+        raise ValueError(f"not a RIFF/{form.decode('latin-1')} payload")
+    declared = int.from_bytes(payload[4:8], "little")
+    if declared + 8 != len(payload):
+        raise ValueError(
+            f"truncated or padded RIFF: size {declared} disagrees with "
+            f"file size {len(payload) - 8}"
+        )
+    chunks = []
+    pos = 12
+    while pos < len(payload):
+        if pos + 8 > len(payload):
+            raise ValueError(f"truncated chunk header at byte {pos}")
+        fourcc = payload[pos : pos + 4]
+        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
+        body = payload[pos + 8 : pos + 8 + size]
+        if len(body) != size:
+            raise ValueError(f"chunk {fourcc!r} truncated ({len(body)}/{size})")
+        chunks.append((fourcc, body))
+        pos += 8 + size + (size & 1)
+    return chunks
+
+
+def riff(form: bytes, chunks: list[tuple[bytes, bytes]]) -> bytes:
+    """A RIFF file of the given form holding ``(fourcc, body)`` chunks in
+    order, each odd-sized body padded with one zero byte."""
+    body = form + b"".join(
+        fourcc + len(data).to_bytes(4, "little") + data + b"\x00" * (len(data) & 1)
+        for fourcc, data in chunks
+    )
+    return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+
+# ---------------------------------------------------------------------------
 # WAV PCM16 — dependency-free encoder (test/synthesis side) + decoder
-# (the real codec path). RIFF layout: 'RIFF' <size> 'WAVE', then chunks;
-# 'fmt ' carries (audio_format=1 PCM, channels, sample_rate, byte_rate,
-# block_align, bits) and 'data' carries the little-endian PCM samples.
+# (the real codec path). RIFF form 'WAVE': 'fmt ' carries (audio_format=1
+# PCM, channels, sample_rate, byte_rate, block_align, bits) and 'data'
+# carries the little-endian PCM samples.
 # ---------------------------------------------------------------------------
 WAV_SAMPLE_RATE = 8000
 
@@ -120,54 +167,36 @@ def encode_wav_pcm16(samples: np.ndarray, sample_rate: int = WAV_SAMPLE_RATE) ->
     import struct
 
     pcm = np.asarray(samples, dtype="<i2").tobytes()
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF",
-        36 + len(pcm),
-        b"WAVE",
-        b"fmt ",
-        16,
+    fmt = struct.pack(
+        "<HHIIHH",
         1,  # PCM
         1,  # mono
         sample_rate,
         sample_rate * 2,  # byte rate = rate * block_align
         2,  # block align (mono int16)
         16,  # bits per sample
-        b"data",
-        len(pcm),
     )
-    return hdr + pcm
+    return riff(b"WAVE", [(b"fmt ", fmt), (b"data", pcm)])
 
 
 def parse_wav(payload: bytes) -> dict:
-    """REAL minimal WAV decoder: validate the RIFF/WAVE magic, walk the
-    chunk list to 'fmt ' and 'data', check PCM16, and return the decoded
-    header fields plus the sample array. Fails loudly on malformed or
-    non-PCM16 input — never guesses."""
+    """REAL minimal WAV decoder: validate the RIFF framing, take the 'fmt '
+    and 'data' chunks, check PCM16, and return the decoded header fields
+    plus the sample array. Fails loudly on malformed or non-PCM16 input —
+    never guesses."""
     import struct
 
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid, size = struct.unpack_from("<4sI", payload, pos)
-        if pos + 8 + size > len(payload):
-            raise ValueError(
-                f"truncated WAV: chunk {cid!r} declares {size} bytes but only "
-                f"{len(payload) - pos - 8} remain"
-            )
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
+    chunks = dict(riff_chunks(payload, b"WAVE"))
+    if b"fmt " not in chunks or b"data" not in chunks:
         raise ValueError("missing fmt/data chunk")
-    audio_format, channels, rate, _byte_rate, _block, bits = fmt
+    if len(chunks[b"fmt "]) < 16:
+        raise ValueError("truncated WAV fmt chunk (under 16 bytes)")
+    audio_format, channels, rate, _byte_rate, _block, bits = struct.unpack_from(
+        "<HHIIHH", chunks[b"fmt "]
+    )
     if audio_format != 1 or bits != 16:
         raise ValueError(f"unsupported WAV encoding: format={audio_format} bits={bits}")
-    samples = np.frombuffer(data, dtype="<i2")
+    samples = np.frombuffer(chunks[b"data"], dtype="<i2")
     return {
         "sample_rate": int(rate),
         "n_channels": int(channels),
@@ -253,13 +282,7 @@ def _wav_adpcm_container(
         block_align, 4, 2, spb,
     )
     fact = struct.pack("<I", n_samples)
-    riff = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    return riff(b"WAVE", [(b"fmt ", fmt), (b"fact", fact), (b"data", data)])
 
 
 def _ima_encode_block(blk: np.ndarray, idx: int) -> tuple[bytes, bytes, int]:
@@ -395,27 +418,14 @@ def parse_wav_adpcm(payload: bytes) -> dict:
     of range — never guesses."""
     import struct
 
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = None
-    n_samples = None
-    data = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if len(body) != clen:
-            raise ValueError(f"truncated {cid!r} chunk")
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"fact":
-            (n_samples,) = struct.unpack("<I", body[:4])
-        elif cid == b"data":
-            data = body
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
+    chunks = dict(riff_chunks(payload, b"WAVE"))
+    fmt, data = chunks.get(b"fmt "), chunks.get(b"data")
     if fmt is None or data is None:
         raise ValueError("WAV carries no fmt/data chunk")
+    fact = chunks.get(b"fact")
+    if len(fmt) < 16 or (fact is not None and len(fact) < 4):
+        raise ValueError("truncated WAV fmt or fact chunk")
+    n_samples = None if fact is None else struct.unpack_from("<I", fact)[0]
     tag, channels, rate, _, block_align, bits = struct.unpack("<HHIIHH", fmt[:16])
     if tag != 0x0011:
         raise ValueError(f"not IMA-ADPCM (wFormatTag 0x{tag:04X})")
@@ -2084,7 +2094,10 @@ def decode_png_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFram
 # ---------------------------------------------------------------------------
 # JPEG — dependency-free codec (the format a real multimodal corpus is
 # actually made of). JFIF: SOI, APP0, DQT, SOF0/SOF2, DHT, DRI, SOS +
-# entropy-coded data (byte-stuffed), EOI. The ENCODERS run the real
+# entropy-coded data (byte-stuffed), EOI. Marker segments have one
+# writer, ``_jpeg_file`` (every encoder's segments and closing EOI),
+# and one reader, ``_jpeg_segments`` (the marker walk under both the
+# decoder and the header probe). The ENCODERS run the real
 # forward pipeline (level shift, 8x8 float DCT, quantize, zigzag,
 # DC-difference + AC run-length canonical-Huffman entropy coding); the
 # DECODER is fully general for the declared subset: marker walk,
@@ -2188,6 +2201,46 @@ def _jpeg_marker(marker: int, data: bytes) -> bytes:
     return struct.pack(">HH", marker, len(data) + 2) + data
 
 
+def _jpeg_file(
+    sof: int,
+    width: int,
+    height: int,
+    comps: bytes,
+    quant: list[np.ndarray],
+    huffman: list[tuple[int, list[int], list[int]]],
+    scans: list[tuple[bytes, bytes]],
+    restart_interval: int = 0,
+) -> bytes:
+    """A JFIF stream in the one segment order every encoder here writes:
+    SOI, APP0 (JFIF 1.1, no thumbnail), DQT (8-bit table i = ``quant[i]``),
+    SOFn (8-bit, ``comps`` holds 3 bytes per component), DHT (one
+    ``(class << 4 | id, bits, values)`` table per entry), DRI when
+    ``restart_interval`` is set, then each ``(sos_header, entropy_bytes)``
+    scan, then EOI."""
+    import struct
+
+    dqt = b"".join(bytes([i]) + bytes(q.astype(np.uint8)) for i, q in enumerate(quant))
+    dht = b"".join(bytes([t]) + bytes(bits) + bytes(vals) for t, bits, vals in huffman)
+
+    dri = (
+        _jpeg_marker(0xFFDD, struct.pack(">H", restart_interval))
+        if restart_interval
+        else b""
+    )
+    return (
+        b"\xff\xd8"  # SOI
+        + _jpeg_marker(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+        + _jpeg_marker(0xFFDB, dqt)
+        + _jpeg_marker(
+            sof, struct.pack(">BHHB", 8, height, width, len(comps) // 3) + comps
+        )
+        + _jpeg_marker(0xFFC4, dht)
+        + dri
+        + b"".join(_jpeg_marker(0xFFDA, header) + body for header, body in scans)
+        + b"\xff\xd9"  # EOI
+    )
+
+
 def _jpeg_forward_zigzag(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Shared forward path for ALL JPEG encoders: edge-replicate pad to
     whole blocks, vectorized 8x8 DCT (broadcast matmul), quantize,
@@ -2252,8 +2305,6 @@ def encode_jpeg_gray(
     emits a DRI marker and an RSTn (cycling 0..7) every R MCUs (=
     blocks for single-component), resetting byte alignment and the DC
     predictor — how real encoders bound error propagation."""
-    import struct
-
     if len(gray) != width * height:
         raise ValueError(
             f"payload is {len(gray)} bytes, geometry {width}x{height} "
@@ -2352,28 +2403,13 @@ def encode_jpeg_gray(
         append(byte)
         if byte == 0xFF:
             append(0x00)
-    scan_body = bytes(out)
-    dht = (
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALUES)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALUES)
-    )
-    dri = (
-        _jpeg_marker(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        b"\xff\xd8"  # SOI
-        + _jpeg_marker(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-        + _jpeg_marker(0xFFDB, bytes([0x00]) + bytes(q.astype(np.uint8)))
-        + _jpeg_marker(
-            0xFFC0, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0])
-        )
-        + _jpeg_marker(0xFFC4, dht)
-        + dri
-        + _jpeg_marker(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        + scan_body
-        + b"\xff\xd9"  # EOI
+    return _jpeg_file(
+        0xFFC0, width, height, bytes([1, 0x11, 0]), [q],
+        [
+            (0x00, _JPEG_DC_BITS, _JPEG_DC_VALUES),
+            (0x10, _JPEG_AC_BITS, _JPEG_AC_VALUES),
+        ],
+        [(bytes([1, 1, 0x00, 0, 63, 0]), bytes(out))], restart_interval,
     )
 
 
@@ -2472,8 +2508,6 @@ def encode_jpeg_progressive_gray(
       4. DC  Ss=0  Se=0  Ah=1 Al=0   (one raw bit per block)
       5. AC  Ss=1  Se=63 Ah=1 Al=0   (correction bits + newly-significant)
     """
-    import struct
-
     if len(gray) != width * height:
         raise ValueError(
             f"payload is {len(gray)} bytes, geometry {width}x{height} "
@@ -2626,32 +2660,22 @@ def encode_jpeg_progressive_gray(
         flush_eob()
         return _jpeg_scan_bytes(w)
 
-    dht_dc = bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALUES)
-    dht_ac = (
-        bytes([0x10]) + bytes(_JPEG_PROG_AC_BITS)
-        + bytes(_JPEG_PROG_AC_VALUES)
-    )
+    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
+        return bytes([1, 1, 0x00, ss, se, (ah << 4) | al])
 
-    def sos(ss: int, se: int, ah: int, al: int, body: bytes) -> bytes:
-        return (
-            _jpeg_marker(0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-            + body
-        )
-
-    return (
-        b"\xff\xd8"
-        + _jpeg_marker(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-        + _jpeg_marker(0xFFDB, bytes([0x00]) + bytes(q.astype(np.uint8)))
-        + _jpeg_marker(
-            0xFFC2, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0])
-        )
-        + _jpeg_marker(0xFFC4, dht_dc + dht_ac)
-        + sos(0, 0, 0, 1, dc_first(1))
-        + sos(1, 5, 0, 1, ac_first(1, 5, 1))
-        + sos(6, 63, 0, 1, ac_first(6, 63, 1))
-        + sos(0, 0, 1, 0, dc_refine(0))
-        + sos(1, 63, 1, 0, ac_refine(1, 63, 1, 0))
-        + b"\xff\xd9"
+    return _jpeg_file(
+        0xFFC2, width, height, bytes([1, 0x11, 0]), [q],
+        [
+            (0x00, _JPEG_DC_BITS, _JPEG_DC_VALUES),
+            (0x10, _JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALUES),
+        ],
+        [
+            (sos(0, 0, 0, 1), dc_first(1)),
+            (sos(1, 5, 0, 1), ac_first(1, 5, 1)),
+            (sos(6, 63, 0, 1), ac_first(6, 63, 1)),
+            (sos(0, 0, 1, 0), dc_refine(0)),
+            (sos(1, 63, 1, 0), ac_refine(1, 63, 1, 0)),
+        ],
     )
 
 
@@ -2674,8 +2698,6 @@ def encode_jpeg_ycbcr420(
     must be a multiple of 16 (whole MCUs; the synthesis side guarantees
     it, and a general edge-replicating color encoder is out of scope —
     fails loudly instead of padding wrong)."""
-    import struct
-
     if width % 16 or height % 16 or width == 0 or height == 0:
         raise ValueError(
             f"4:2:0 geometry must be positive multiples of 16, got {width}x{height}"
@@ -2801,37 +2823,13 @@ def encode_jpeg_ycbcr420(
         append(byte)
         if byte == 0xFF:
             append(0x00)
-    scan_body = bytes(out)
-    huff_blob = bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALUES)
-    huff_ac_blob = bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALUES)
-    dht = (
-        bytes([0x00]) + huff_blob          # DC id 0 (luma)
-        + bytes([0x10]) + huff_ac_blob     # AC id 0 (luma)
-        + bytes([0x01]) + huff_blob        # DC id 1 (chroma)
-        + bytes([0x11]) + huff_ac_blob     # AC id 1 (chroma)
-    )
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        [1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    dri = (
-        _jpeg_marker(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        b"\xff\xd8"  # SOI
-        + _jpeg_marker(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-        + _jpeg_marker(
-            0xFFDB,
-            bytes([0x00]) + bytes(ql.astype(np.uint8))
-            + bytes([0x01]) + bytes(qc.astype(np.uint8)),
-        )
-        + _jpeg_marker(0xFFC0, sof)
-        + _jpeg_marker(0xFFC4, dht)
-        + dri
-        + _jpeg_marker(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-        + scan_body
-        + b"\xff\xd9"  # EOI
+    dc, ac = (_JPEG_DC_BITS, _JPEG_DC_VALUES), (_JPEG_AC_BITS, _JPEG_AC_VALUES)
+    return _jpeg_file(
+        0xFFC0, width, height, bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]), [ql, qc],
+        # DC/AC table id 0 for luma, id 1 for chroma
+        [(0x00, *dc), (0x10, *ac), (0x01, *dc), (0x11, *ac)],
+        [(bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]), bytes(out))],
+        restart_interval,
     )
 
 
@@ -2861,9 +2859,7 @@ def jpeg_rgb_to_ycbcr420(rgb: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.nd
 def _jpeg_scan_end(buf: bytes) -> int:
     """Offset of the first REAL marker after entropy-coded data: 0xFF
     followed by anything but 0x00 stuffing or an RSTn restart code.
-    Vectorized (only 0xFF positions inspected) and shared by the
-    decoder and the header probe so scan-termination semantics can
-    never diverge between them."""
+    Vectorized (only 0xFF positions inspected)."""
     arr = np.frombuffer(buf, dtype=np.uint8)
     for i in np.flatnonzero(arr == 0xFF):
         if i + 1 >= len(buf):
@@ -2873,6 +2869,49 @@ def _jpeg_scan_end(buf: bytes) -> int:
             continue
         return int(i)
     return len(buf)
+
+
+def _jpeg_segments(payload: bytes):
+    """The one JPEG marker walk (T.81 B.1), shared by the decoder and the
+    header probe so framing semantics cannot diverge between them. Yields
+    ``(marker, seg, scan)`` per length-carrying segment: ``seg`` is the
+    body after the 2-byte length, ``scan`` the raw entropy-coded bytes
+    after an SOS (stuffing and RSTn markers still in place) and ``None``
+    after any other segment. Fill bytes and the bare TEM/RSTn markers are
+    skipped; the walk ends at EOI or when fewer than 2 bytes remain. A
+    missing SOI or a cut-short segment raises ``ValueError``."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (no SOI marker)")
+    pos = 2
+    while pos + 2 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError(f"expected JPEG marker at offset {pos}")
+        # T.81 B.1.1.2: any marker may be preceded by fill bytes
+        # (repeated 0xFF) — skip them so the next byte is the marker
+        # code, not another 0xFF misread as code 0xFF
+        while pos + 1 < len(payload) and payload[pos + 1] == 0xFF:
+            pos += 1
+        if pos + 2 > len(payload):
+            raise ValueError("JPEG payload ends in fill bytes with no marker")
+        marker = payload[pos + 1]
+        pos += 2
+        if marker == 0xD9:  # EOI
+            return
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / RSTn: bare
+            continue
+        if pos + 2 > len(payload):
+            raise ValueError("truncated JPEG segment header")
+        seglen = int.from_bytes(payload[pos : pos + 2], "big")
+        seg = payload[pos + 2 : pos + seglen]
+        if len(seg) != seglen - 2:
+            raise ValueError("truncated JPEG segment body")
+        pos += seglen
+        scan = None
+        if marker == 0xDA:  # SOS: entropy data runs to the next real marker
+            buf = payload[pos:]
+            scan = buf[: _jpeg_scan_end(buf)]
+            pos += len(scan)
+        yield marker, seg, scan
 
 
 def _jpeg_split_segments(scan_data: bytes, dri: int, n_units: int) -> list[bytes]:
@@ -3237,9 +3276,6 @@ def parse_jpeg(payload: bytes) -> dict:
     guesses."""
     import struct
 
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (no SOI marker)")
-    pos = 2
     quant: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], tuple[dict[tuple[int, int], int], bytes]] = {}
     width = height = None
@@ -3247,29 +3283,7 @@ def parse_jpeg(payload: bytes) -> dict:
     scans: list[dict] = []
     progressive = False
     restart_interval = 0
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected JPEG marker at offset {pos}")
-        # T.81 B.1.1.2: any marker may be preceded by fill bytes
-        # (repeated 0xFF) — skip them so the next byte is the marker
-        # code, not another 0xFF misread as code 0xFF
-        while pos + 1 < len(payload) and payload[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 2 > len(payload):
-            raise ValueError("JPEG payload ends in fill bytes with no marker")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / RSTn: bare
-            continue
-        if pos + 2 > len(payload):
-            raise ValueError("truncated JPEG segment header")
-        (seglen,) = struct.unpack(">H", payload[pos : pos + 2])
-        seg = payload[pos + 2 : pos + seglen]
-        if len(seg) != seglen - 2:
-            raise ValueError("truncated JPEG segment body")
-        pos += seglen
+    for marker, seg, scan in _jpeg_segments(payload):
         if marker == 0xDB:  # DQT
             off = 0
             while off < len(seg):
@@ -3356,12 +3370,6 @@ def parse_jpeg(payload: bytes) -> dict:
                 scan_tabs.append((tabs >> 4, tabs & 0x0F))
             ss_, se_ = seg[1 + 2 * ns], seg[2 + 2 * ns]
             ahal = seg[3 + 2 * ns]
-            # entropy data runs to the next real marker — shared
-            # detector (_jpeg_scan_end); unstuffing happens per restart
-            # segment later
-            buf = payload[pos:]
-            end = _jpeg_scan_end(buf)
-            pos += end
             scans.append(
                 {
                     "comps": scan_comps,
@@ -3370,7 +3378,7 @@ def parse_jpeg(payload: bytes) -> dict:
                     "se": se_,
                     "ah": ahal >> 4,
                     "al": ahal & 0x0F,
-                    "data": buf[:end],  # raw: RSTs split + unstuff later
+                    "data": scan,  # raw: RSTs split + unstuff later
                     "dri": restart_interval,
                     # tables resolve at SOS time — later DHT segments may
                     # REDEFINE ids for later scans (legal, common in
@@ -4085,6 +4093,15 @@ def _encode_mp4_container(
     return ftyp + mdat + moov
 
 
+def _length_prefixed(sample_nals: list[list[bytes]]) -> list[bytes]:
+    """One MP4 sample per NAL list, each NAL preceded by its 4-byte
+    big-endian length (the avcC/hvcC records both declare 4-byte
+    lengths); ``_sample_nals`` reads them back."""
+    return [
+        b"".join(len(nal).to_bytes(4, "big") + nal for nal in nals) for nals in sample_nals
+    ]
+
+
 def encode_mp4_avc1(
     sample_nals: list[list[bytes]],
     sps_args: dict,
@@ -4131,14 +4148,8 @@ def encode_mp4_avc1(
         + pps_nal
     )
     v = parse_h264_sps(sps_rbsp)
-    samples = []
-    for nals in sample_nals:
-        sample = bytearray()
-        for nal in nals:
-            sample += _struct.pack(">I", len(nal)) + nal
-        samples.append(bytes(sample))
     return _encode_mp4_container(
-        samples,
+        _length_prefixed(sample_nals),
         v["width"],
         v["height"],
         fmt=b"avc1",
@@ -4733,42 +4744,18 @@ def probe_jpeg_header(payload: bytes) -> dict:
     Fails loudly on non-JPEG payloads and truncated segment headers."""
     import struct
 
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (no SOI marker)")
-    pos = 2
     width = height = ncomp = None
     progressive = False
     restart_interval = 0
     scan_bytes = 0
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected JPEG marker at offset {pos}")
-        while pos + 1 < len(payload) and payload[pos + 1] == 0xFF:
-            pos += 1  # fill bytes
-        if pos + 2 > len(payload):
-            raise ValueError("JPEG payload ends in fill bytes with no marker")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue
-        if pos + 2 > len(payload):
-            raise ValueError("truncated JPEG segment header")
-        (seglen,) = struct.unpack(">H", payload[pos : pos + 2])
-        seg = payload[pos + 2 : pos + seglen]
-        if len(seg) != seglen - 2:
-            raise ValueError("truncated JPEG segment body")
-        pos += seglen
+    for marker, seg, scan in _jpeg_segments(payload):
         if marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2: geometry probe-able
             _, height, width, ncomp = struct.unpack(">BHHB", seg[:6])
             progressive = marker == 0xC2
         elif marker == 0xDD:
             restart_interval = int.from_bytes(seg[:2], "big")
-        elif marker == 0xDA:  # SOS: skip entropy bytes without decoding
-            end = _jpeg_scan_end(payload[pos:])
-            scan_bytes += end
-            pos += end
+        elif marker == 0xDA:  # SOS: count entropy bytes without decoding
+            scan_bytes += len(scan)
     if width is None:
         raise ValueError("JPEG carries no SOF frame header")
     return {
@@ -5285,6 +5272,9 @@ def probe_h264_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # difference that breaks naive demuxers). parse_mp4 demuxes + routes
 # these (avcC parse, SPS geometry cross-checked against the sample
 # entry, stss sync table); slice PIXEL decode still gates loudly.
+# _length_prefixed writes a sample's length-prefixed NALs and
+# _sample_nals is the one walker over them, for avc1 (1-byte NAL
+# header) and hvc1 (2-byte header) alike.
 # ===========================================================================
 
 AVC1_FEATURE_SCHEMA = StructType(
@@ -5340,6 +5330,33 @@ def with_avc1_mp4_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _sample_nals(
+    sample: bytes, si: int, length_size: int, header_size: int, nal_type
+) -> list[tuple[int, bytes]]:
+    """``(nal_type(first header byte), unescaped payload)`` for each NAL
+    unit of one MP4 sample, where every NAL is preceded by a
+    ``length_size``-byte big-endian length (ISO 14496-15) and carries a
+    ``header_size``-byte NAL header (1 for H.264, 2 for HEVC). A length
+    that overruns the sample, a NAL shorter than its header and a set
+    forbidden_zero_bit raise ``ValueError`` naming sample ``si``."""
+    nals = []
+    pos = 0
+    while pos < len(sample):
+        ln = int.from_bytes(sample[pos : pos + length_size], "big")
+        nal = sample[pos + length_size : pos + length_size + ln]
+        if len(nal) != ln:
+            raise ValueError(f"sample {si}: NAL length {ln} overruns the sample")
+        if ln < header_size:
+            raise ValueError(
+                f"sample {si}: {ln}-byte NAL has no {header_size}-byte header"
+            )
+        if nal[0] & 0x80:
+            raise ValueError(f"forbidden_zero_bit in sample {si} NAL")
+        nals.append((nal_type(nal[0]), _h264_unescape(nal[header_size:])))
+        pos += length_size + ln
+    return nals
+
+
 def probe_avc1_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Route each avc1-in-MP4 payload through the real demux (box tree,
     sample table, avcC/SPS parse, stss) plus a per-sample
@@ -5360,24 +5377,11 @@ def probe_avc1_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         payload_sum = 0
         idr_samples = []
         for si, sample in enumerate(v["samples"]):
-            pos = 0
-            while pos < len(sample):
-                ln = int.from_bytes(sample[pos : pos + ls], "big")
-                nal = sample[pos + ls : pos + ls + ln]
-                if len(nal) != ln:
-                    raise ValueError(
-                        f"sample {si}: NAL length {ln} overruns the sample"
-                    )
-                if nal[0] & 0x80:
-                    raise ValueError(
-                        f"forbidden_zero_bit in sample {si} NAL"
-                    )
-                ntype = nal[0] & 0x1F
+            for ntype, body in _sample_nals(sample, si, ls, 1, lambda b: b & 0x1F):
                 if ntype not in (1, 5):
                     raise ValueError(
                         f"unexpected NAL type {ntype} in an avc1 sample"
                     )
-                body = _h264_unescape(nal[1:])
                 if not body.startswith(_H264_SLICE_MARKER):
                     raise ValueError(
                         "slice body lost its marker — escape round "
@@ -5386,7 +5390,6 @@ def probe_avc1_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 payload_sum += sum(body)
                 if ntype == 5:
                     idr_samples.append(si + 1)
-                pos += ls + ln
         sync = v["sync_samples"] or list(range(1, v["n_samples"] + 1))
         if idr_samples != sync:
             raise ValueError(
@@ -5675,14 +5678,8 @@ def encode_mp4_hevc(
         + _struct.pack(">HH", 1, len(pps_nal))
         + pps_nal
     )
-    samples = []
-    for nals in sample_nals:
-        sample = bytearray()
-        for nal in nals:
-            sample += _struct.pack(">I", len(nal)) + nal
-        samples.append(bytes(sample))
     return _encode_mp4_container(
-        samples,
+        _length_prefixed(sample_nals),
         v["width"],
         v["height"],
         fmt=b"hvc1",
@@ -5821,24 +5818,12 @@ def probe_hevc_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         payload_sum = 0
         irap_samples = []
         for si, sample in enumerate(v["samples"]):
-            pos = 0
-            while pos < len(sample):
-                ln = int.from_bytes(sample[pos : pos + ls], "big")
-                nal = sample[pos + ls : pos + ls + ln]
-                if len(nal) != ln:
-                    raise ValueError(
-                        f"sample {si}: NAL length {ln} overruns the sample"
-                    )
-                if nal[0] & 0x80:
-                    raise ValueError(
-                        f"forbidden_zero_bit in sample {si} NAL"
-                    )
-                ntype = (nal[0] >> 1) & 0x3F
+            nals = _sample_nals(sample, si, ls, 2, lambda b: (b >> 1) & 0x3F)
+            for ntype, body in nals:
                 if ntype not in (HEVC_NAL_TRAIL_R, HEVC_NAL_IDR_W_RADL):
                     raise ValueError(
                         f"unexpected NAL type {ntype} in an hvc1 sample"
                     )
-                body = _h264_unescape(nal[2:])
                 if not body.startswith(_H264_SLICE_MARKER):
                     raise ValueError(
                         "slice body lost its marker — escape round "
@@ -5847,7 +5832,6 @@ def probe_hevc_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 payload_sum += sum(body)
                 if ntype == HEVC_NAL_IDR_W_RADL:
                     irap_samples.append(si + 1)
-                pos += ls + ln
         sync = v["sync_samples"] or list(range(1, v["n_samples"] + 1))
         if irap_samples != sync:
             raise ValueError(
@@ -6674,7 +6658,8 @@ def decode_tiff_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # WebP ROUTING probe — the #1 modern web image format after JPEG, with
-# THREE genuinely different header forms inside one RIFF container:
+# THREE genuinely different header forms inside one RIFF container
+# (form 'WEBP', framed by riff/riff_chunks above):
 # 'VP8 ' (lossy: frame tag + 0x9D012A start code + 14-bit geometry),
 # 'VP8L' (lossless: 0x2F + LSB-packed 14-bit fields + alpha bit), and
 # 'VP8X' (extended: feature flags + 24-bit canvas). A curation pass
@@ -6694,11 +6679,6 @@ def encode_webp(doc_id: int, text: str) -> bytes:
     height = 1 + (n // 11) % 2000
     form = doc_id % 3
     fill = (text.encode("utf-8") or b"p") * 2
-
-    def chunk(fourcc: bytes, payload: bytes) -> bytes:
-        pad = b"\x00" if len(payload) % 2 else b""
-        return fourcc + struct.pack("<I", len(payload)) + payload + pad
-
     if form == 0:  # VP8 lossy key frame
         # frame tag: keyframe(0) | version<<1 | show<<4 | partsize<<5
         part_size = 1 + n % 512
@@ -6706,13 +6686,13 @@ def encode_webp(doc_id: int, text: str) -> bytes:
         body = struct.pack("<I", tag)[:3] + b"\x9d\x01\x2a"
         body += struct.pack("<HH", width & 0x3FFF, height & 0x3FFF)
         body += fill[: 1 + n % 40]
-        chunks = chunk(b"VP8 ", body)
+        chunks = [(b"VP8 ", body)]
     elif form == 1:  # VP8L lossless
         has_alpha = doc_id % 2
         bits = (width - 1) | ((height - 1) << 14) | (has_alpha << 28)  # +3-bit ver 0
         body = b"\x2f" + struct.pack("<I", bits)
         body += fill[: 1 + n % 40]
-        chunks = chunk(b"VP8L", body)
+        chunks = [(b"VP8L", body)]
     else:  # VP8X extended: flags + canvas, then an inner VP8 chunk
         flags = 0
         if doc_id % 2:
@@ -6724,46 +6704,26 @@ def encode_webp(doc_id: int, text: str) -> bytes:
         inner_tag = ((1 + n % 512) << 5) | (1 << 4)
         inner = struct.pack("<I", inner_tag)[:3] + b"\x9d\x01\x2a"
         inner += struct.pack("<HH", width & 0x3FFF, height & 0x3FFF)
-        chunks = chunk(b"VP8X", body) + chunk(b"VP8 ", inner + fill[: 1 + n % 16])
+        chunks = [(b"VP8X", body), (b"VP8 ", inner + fill[: 1 + n % 16])]
         if doc_id % 4 == 3:
-            chunks += chunk(b"EXIF", encode_tiff_exif(doc_id, text))
-    riff_body = b"WEBP" + chunks
-    return b"RIFF" + len(riff_body).to_bytes(4, "little") + riff_body
+            chunks.append((b"EXIF", encode_tiff_exif(doc_id, text)))
+    return riff(b"WEBP", chunks)
 
 
 def parse_webp(payload: bytes) -> dict:
-    """REAL WebP routing walk: RIFF framing (sizes + odd-size padding),
-    chunk iteration, and per-form header parse — VP8 frame tag +
+    """REAL WebP routing walk: RIFF framing (``riff_chunks``: sizes +
+    odd-size padding), then per-form header parse — VP8 frame tag +
     start-code + geometry, VP8L LSB-packed fields + version check,
     VP8X flags + 24-bit canvas cross-checked against the inner VP8
     geometry when both carry one. Unknown forms and framing lies fail
     loudly; entropy decode is out of scope by design."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
-        raise ValueError("not a WebP (bad RIFF/WEBP signature)")
-    declared = int.from_bytes(payload[4:8], "little")
-    if declared + 8 != len(payload):
-        raise ValueError(
-            f"RIFF size {declared} disagrees with file size {len(payload) - 8}"
-        )
-    pos = 12
-    chunks: list[tuple[str, bytes]] = []
-    while pos < len(payload):
-        if pos + 8 > len(payload):
-            raise ValueError(f"truncated chunk header at byte {pos}")
-        fourcc = payload[pos : pos + 4].decode("latin-1")
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) != size:
-            raise ValueError(f"chunk {fourcc!r} truncated ({len(body)}/{size})")
-        chunks.append((fourcc, body))
-        pos += 8 + size + (size % 2)  # odd sizes pad one byte
-
+    chunks = riff_chunks(payload, b"WEBP")
+    if not chunks:
+        raise ValueError("WebP holds no chunk")
     kinds = [c[0] for c in chunks]
     width = height = None
     has_alpha = False
-    if kinds[0] == "VP8X":
+    if kinds[0] == b"VP8X":
         body = chunks[0][1]
         if len(body) != 10:
             raise ValueError(f"VP8X chunk must be 10 bytes, got {len(body)}")
@@ -6774,7 +6734,7 @@ def parse_webp(payload: bytes) -> dict:
         width = int.from_bytes(body[4:7], "little") + 1
         height = int.from_bytes(body[7:10], "little") + 1
         form = "extended"
-        inner = next((b for f, b in chunks if f == "VP8 "), None)
+        inner = next((b for f, b in chunks if f == b"VP8 "), None)
         if inner is not None:
             iw, ih = _parse_vp8_geometry(inner)
             if (iw, ih) != (width, height):
@@ -6782,10 +6742,10 @@ def parse_webp(payload: bytes) -> dict:
                     f"VP8X canvas {width}x{height} disagrees with the inner "
                     f"VP8 frame {iw}x{ih}"
                 )
-    elif kinds[0] == "VP8 ":
+    elif kinds[0] == b"VP8 ":
         form = "lossy"
         width, height = _parse_vp8_geometry(chunks[0][1])
-    elif kinds[0] == "VP8L":
+    elif kinds[0] == b"VP8L":
         form = "lossless"
         body = chunks[0][1]
         if body[:1] != b"\x2f":
@@ -6805,7 +6765,7 @@ def parse_webp(payload: bytes) -> dict:
         "height": height,
         "has_alpha": has_alpha,
         "n_chunks": len(chunks),
-        "has_exif": "EXIF" in kinds,
+        "has_exif": b"EXIF" in kinds,
     }
 
 

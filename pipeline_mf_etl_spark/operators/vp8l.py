@@ -30,6 +30,7 @@ import numpy as np
 
 from pipeline_mf_etl_spark import bitio
 from pipeline_mf_etl_spark.bitio import LsbReader, LsbWriter
+from pipeline_mf_etl_spark.operators.multimodal import riff, riff_chunks
 
 
 # ---------------------------------------------------------------------------
@@ -667,7 +668,7 @@ def _inv_palette(pixels: list[int], w_full: int, h: int,
 
 
 # ---------------------------------------------------------------------------
-# top level: VP8L payload + RIFF container
+# top level: VP8L payload + RIFF container (multimodal.riff/riff_chunks)
 # ---------------------------------------------------------------------------
 
 
@@ -739,37 +740,19 @@ def decode_vp8l(data: bytes) -> dict:
     }
 
 
-def _le32(v: int) -> bytes:
-    return v.to_bytes(4, "little")
-
-
-def _riff_chunk(tag: bytes, body: bytes) -> bytes:
-    return tag + _le32(len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-
 def wrap_webp(vp8l_payload: bytes) -> bytes:
-    body = b"WEBP" + _riff_chunk(b"VP8L", vp8l_payload)
-    return b"RIFF" + _le32(len(body)) + body
+    return riff(b"WEBP", [(b"VP8L", vp8l_payload)])
 
 
 def unwrap_webp(payload: bytes) -> bytes:
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
-        raise ValueError("not a WebP (bad RIFF/WEBP signature)")
-    pos = 12
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) != size:
-            raise ValueError(f"chunk {tag!r} overruns the file")
-        if tag == b"VP8L":
+    for fourcc, body in riff_chunks(payload, b"WEBP"):
+        if fourcc == b"VP8L":
             return body
-        if tag == b"VP8 ":
+        if fourcc == b"VP8 ":
             raise NotImplementedError(
                 "lossy VP8 pixel decode not supported (boolean arithmetic "
                 "coder out of dependency-free scope; probe_webp routes it)"
             )
-        pos += 8 + size + (size & 1)
     raise ValueError("no VP8L chunk in WebP container")
 
 

@@ -94,6 +94,30 @@ def shares_ts(w: WindowSpec) -> Column:
     return F.lag(ts).over(w).eqNullSafe(ts) | F.lead(ts).over(w).eqNullSafe(ts)
 
 
+def quality_flags(
+    w: WindowSpec, gap_days: int
+) -> tuple[dict[str, Column], dict[str, Column]]:
+    """The P2 row quality flags over ``w = series_window()``, by column
+    name: the hard flags (a row raising any is invalid) and the warnings.
+    A gap is more than ``gap_days`` calendar days since the previous row
+    of the series."""
+    hard = {
+        "q_missing_field": F.col("value").isNull()
+        | F.col("event_type").isNull()
+        | (F.trim("event_type") == ""),
+        "q_nonpositive_value": F.coalesce(F.col("value") <= 0, F.lit(False)),
+        "q_duplicate": shares_ts(w),
+    }
+    day = F.col("ts").cast("date")
+    warn = {
+        "q_gap_in_series": F.coalesce(
+            F.datediff(day, F.lag(day).over(w)) > gap_days, F.lit(False)
+        ),
+        "q_suspicious_bar": F.coalesce(F.col("value") > 50, F.lit(False)),
+    }
+    return hard, warn
+
+
 def rolling(agg: Column, w: WindowSpec, n: int) -> WindowSpec | Column:
     """Aggregate over the trailing n rows (current row inclusive)."""
     return agg.over(w.rowsBetween(-(n - 1), 0))

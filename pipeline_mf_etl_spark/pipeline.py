@@ -31,7 +31,11 @@ from pipeline_mf_etl_spark.operators.backtest import (
     with_state_map,
 )
 from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
-from pipeline_mf_etl_spark.operators.windows import flow_state, series_window, shares_ts
+from pipeline_mf_etl_spark.operators.windows import (
+    flow_state,
+    quality_flags,
+    series_window,
+)
 from pipeline_mf_etl_spark.sources.readers import load_table
 from pipeline_mf_etl_spark.sources.writers import (
     write_csv_twin,
@@ -57,25 +61,8 @@ def bronze_layer(ev: DataFrame) -> DataFrame:
 
 def silver_layer(bronze: DataFrame, gap_days: int = 7) -> DataFrame:
     """P2/P3 quality flags + error counts + valid marker."""
-    w = series_window()
-    flags = {
-        "q_missing_field": F.col("value").isNull()
-        | F.col("event_type").isNull()
-        | (F.trim("event_type") == ""),
-        "q_nonpositive_value": F.coalesce(F.col("value") <= 0, F.lit(False)),
-        "q_duplicate": shares_ts(w),
-    }
-    warns = {
-        "q_gap_in_series": F.coalesce(
-            F.datediff(F.col("ts").cast("date"), F.lag(F.col("ts").cast("date")).over(w))
-            > gap_days,
-            F.lit(False),
-        ),
-        "q_suspicious_bar": F.coalesce(F.col("value") > 50, F.lit(False)),
-    }
-    out = bronze
-    for name, expr in {**flags, **warns}.items():
-        out = out.withColumn(name, expr)
+    flags, warns = quality_flags(series_window(), gap_days)
+    out = bronze.withColumns({**flags, **warns})
     err = sum(F.col(n).cast("int") for n in flags)
     warn = sum(F.col(n).cast("int") for n in warns)
     return (

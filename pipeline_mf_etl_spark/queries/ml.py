@@ -337,7 +337,7 @@ def m20_ari_vs_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # M6: HDBSCAN — optional in the reference (research/clustering.py:184-203
-# falls back when the package is missing). Since r8 the engine needs no
+# falls back when the package is missing). The engine needs no
 # package at all: operators/density.hdbscan_labels is a complete exact
 # HDBSCAN (mutual-reachability MST -> condensed tree -> excess-of-mass
 # selection, Campello/Moulavi/Sander 2013) in pure NumPy, deterministic
@@ -482,10 +482,10 @@ _HMM_EXPORT_CACHE: dict[tuple[str, str], str] = {}
 
 def _hmm_bars(ev: DataFrame) -> DataFrame:
     """Per-bar HMM features: the 1-bar return and its magnitude."""
-    ret = safe_div(F.col("value"), F.lag("value").over(series_window())) - 1
-    return ev.select(
-        "user_id", "ts", "event_id", "value", ret.alias("ret_1"), F.abs(ret).alias("abs_ret_1")
-    )
+    cols = ["user_id", "ts", "event_id", "value"]
+    prev = ev.select(*cols, F.lag("value").over(series_window()).alias("prev_value"))
+    ret = safe_div(F.col("value"), F.col("prev_value")) - 1
+    return prev.select(*cols, ret.alias("ret_1"), F.abs(ret).alias("abs_ret_1"))
 
 
 def _hmm_training_bars(ev: DataFrame) -> DataFrame:

@@ -15,8 +15,8 @@ from pipeline_mf_etl_spark.functions.core import sum_horizontal
 from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
 from pipeline_mf_etl_spark.operators.windows import (
     dedupe_keep_first,
+    quality_flags,
     series_window,
-    shares_ts,
 )
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
@@ -97,22 +97,8 @@ def p1_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p2_p3_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row quality flags (P2) + horizontal counts and valid split (P3/A4)."""
     ev = load_table(spark, sf_dir, "events")
-    w = series_window()
-    flags = {
-        "q_missing_field": F.col("value").isNull()
-        | F.col("event_type").isNull()
-        | (F.trim("event_type") == ""),
-        "q_nonpositive_value": F.coalesce(F.col("value") <= 0, F.lit(False)),
-        "q_duplicate": shares_ts(w),
-        "q_gap_in_series": F.coalesce(
-            F.datediff(F.col("ts").cast("date"), F.lag(F.col("ts").cast("date")).over(w)) > 7,
-            F.lit(False),
-        ),
-        "q_suspicious_bar": F.coalesce(F.col("value") > 50, F.lit(False)),
-    }
-    hard = ["q_missing_field", "q_nonpositive_value", "q_duplicate"]
-    warn = ["q_gap_in_series", "q_suspicious_bar"]
-    flagged = ev.withColumns(flags).withColumns(
+    hard, warn = quality_flags(series_window(), gap_days=7)
+    flagged = ev.withColumns({**hard, **warn}).withColumns(
         {
             "quality_error_count": sum_horizontal([F.col(c) for c in hard]),
             "quality_warn_count": sum_horizontal([F.col(c) for c in warn]),
@@ -122,7 +108,7 @@ def p2_p3_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_rows"),
         *[
             F.sum(F.col(c).cast("long")).alias(f"n{c[1:]}")
-            for c in hard + warn
+            for c in [*hard, *warn]
         ],
         F.sum("quality_error_count").cast("long").alias("total_errors"),
         F.sum("quality_warn_count").cast("long").alias("total_warns"),
@@ -232,7 +218,7 @@ def p4_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_stats.py), so AVG's rational mean terminates — at the
     power-of-two group sizes the test corpus produces it lands EXACTLY
     on the 7th-digit .5 tie (3 of 150 groups at sf0.01), where double
-    AVG accumulation order decides the rounded digit (mm5's r14 class).
+    AVG accumulation order decides the rounded digit (as in mm5).
     Integer floor-division makes the tie engine- and partitioning-
     independent; the oracle computes the identical BIGINT formula."""
     ev = load_table(spark, sf_dir, "events")

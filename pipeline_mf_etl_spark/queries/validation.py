@@ -65,16 +65,16 @@ def m16_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the bar table — the scale-safe form of a range self-join."""
     ev = load_table(spark, sf_dir, "events")
     w = series_window()
-    prev_v = F.lag("value").over(w)
     bars = ev.select(
         "user_id",
         "event_id",
         "ts",
         "event_type",
+        "value",
         F.row_number().over(w).alias("rn"),
-        (safe_div(F.col("value"), prev_v) - 1).alias("ret_1"),
+        F.lag("value").over(w).alias("prev_value"),
         F.lag("event_type").over(w).alias("prev_state"),
-    )
+    ).withColumn("ret_1", safe_div(F.col("value"), F.col("prev_value")) - 1)
     events = bars.filter(
         F.col("prev_state").isNotNull() & (F.col("event_type") != F.col("prev_state"))
     ).select(

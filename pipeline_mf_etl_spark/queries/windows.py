@@ -57,18 +57,26 @@ def _r(col, n=6):
 def w1_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag/lead shifts (W1) with epsilon-guarded return computation.
 
-    ret_1 is the exact integer-cents HALF-AWAY 6-dp round (r14:
-    functions/core.exact_ratio_round6) — the double form flipped a
-    7th-digit-.5 tie row at sf0.1."""
+    ret_1 is the exact integer-cents HALF-AWAY 6-dp round
+    (functions/core.exact_ratio_round6) — the double form flips
+    7th-digit-.5 tie rows (one at sf0.1)."""
     ev = load_table(spark, sf_dir, "events")
     w = series_window()
-    prev = F.lag("value").over(w)
-    return ev.select(
+    # projected once: exact_ratio_round6 repeats its denominator
+    shifted = ev.select(
+        "event_id",
+        "user_id",
+        "value",
+        F.lag("value").over(w).alias("prev_value"),
+        F.lead("value").over(w).alias("next_value"),
+    )
+    prev = F.col("prev_value")
+    return shifted.select(
         "event_id",
         "user_id",
         _r(F.col("value")).alias("value"),
         _r(prev).alias("prev_value"),
-        _r(F.lead("value").over(w)).alias("next_value"),
+        _r(F.col("next_value")).alias("next_value"),
         exact_ratio_round6(
             cents(F.col("value")) - cents(prev), cents(prev)
         ).alias("ret_1"),
@@ -314,8 +322,9 @@ def w14_forward_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward k-bar return + forward-vol proxy as pure windows (W14)."""
     ev = load_table(spark, sf_dir, "events")
     w = series_window()
-    ret1 = safe_div(F.col("value"), F.lag("value").over(w)) - 1
-    df = ev.select("event_id", "user_id", "ts", "value", ret1.alias("ret_1"))
+    df = ev.select(
+        "event_id", "user_id", "ts", "value", F.lag("value").over(w).alias("prev_value")
+    ).withColumn("ret_1", safe_div(F.col("value"), F.col("prev_value")) - 1)
     w2 = series_window()
     fw = w2.rowsBetween(1, 10)
     return df.select(
@@ -754,12 +763,11 @@ def w21_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w21_scd2_intervals_segmented(
     spark: SparkSession, sf_dir: str, segment: str = "month"
 ) -> DataFrame:
-    """Skew-mitigated W21 — REGISTERED since r10 (r9 verdict task 5)
-    under the parent's oracle (identical output contract, so the oracle
-    is shared): this is the production escape hatch for the documented
-    SCD2 hot-user skew limit, and it carries a driver hash now, not
-    just a local equivalence test. Design (r8 note -> r9 code): split
-    each user's timeline into time
+    """Skew-mitigated W21, registered under the parent's oracle
+    (identical output contract, so the oracle is shared): this is the
+    production escape hatch for the documented SCD2 hot-user skew
+    limit, and it carries a driver hash, not just a local equivalence
+    test. Design: split each user's timeline into time
     segments, run-length WITHIN (user, segment) — the big window's
     partitions are now (user, segment), so a hot user's events spread
     across segments instead of pinning one task — then stitch runs that
@@ -863,7 +871,7 @@ def w22_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the deepest stage reached (click must not precede the first
     view; purchase must not precede that click).
 
-    Plan shape (SKEW-IMMUNE, the r9 default): each stage is a per-user
+    Plan shape (SKEW-IMMUNE, the default): each stage is a per-user
     MIN, so the whole funnel is groupBy aggregations chained by joins
     against one-row-per-user stage tables — every aggregate gets a
     map-side partial combine (a 50%-hot user collapses to ONE partial
@@ -925,7 +933,7 @@ def w22_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def w22_funnel_steps_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r9 window formulation of W22, kept UNREGISTERED as the
+    """The window formulation of W22, kept UNREGISTERED as the
     measured skew contrast for scripts/scale_probe.py: three stacked
     unbounded windows over one partitionBy(user_id) exchange — minimal
     shuffle count, but the hot-key straggler is unsplittable (windows
@@ -998,7 +1006,7 @@ def w23_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic open/close via (ts, event_id) ranks, exact high/low,
     bar count and volume proxy.
 
-    Plan-shape note (r9, MEASURED): a min_by/max_by groupBy rewrite
+    Plan-shape note (MEASURED, SCALE.md): a min_by/max_by groupBy rewrite
     (``w23_ohlc_resample_minby``, kept as the variant) removes the
     Window operator entirely — but under the 50%-hot 64× probe it ran
     2.4× SLOWER than this rank-window form (15.6 s vs 6.6 s; SCALE.md),
@@ -1045,12 +1053,11 @@ def w23_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("w23_ohlc_resample_minby", oracle=_W23_ORACLE)
 def w23_ohlc_resample_minby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-free W23 via min_by/max_by over the unique (ts, event_id)
-    struct — ONE groupBy with partial combine, REGISTERED since r10
-    (r9 verdict task 5) under the parent's oracle as the measured
-    alternative: strictly skew-immune on the bar key, but 2.4×
-    slower than the rank-window default under the 50%-hot 64× probe
-    (per-row struct construction + sort-based partial aggregation;
-    SCALE.md r9). Use when the bar key itself is skewed. Semantically
+    struct — ONE groupBy with partial combine, registered under the
+    parent's oracle as the measured alternative: strictly skew-immune
+    on the bar key, but 2.4× slower than the rank-window default under
+    the 50%-hot 64× probe (per-row struct construction + sort-based
+    partial aggregation; SCALE.md). Use when the bar key itself is skewed. Semantically
     identical to ``w23_ohlc_resample`` (equivalence-tested, including
     duplicate-timestamp tie-breaks)."""
     ev = load_table(spark, sf_dir, "events").select(

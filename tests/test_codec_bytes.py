@@ -6,11 +6,15 @@ output on small deterministic inputs, so a change to the bit writers
 fails here instead of only in a round trip. ``test_corrupt_input_raises
 _value_error`` pins the decoders' failure contract: malformed input
 raises ``ValueError``, never an ``IndexError`` from an unchecked index.
+``test_container_framing_has_one_home`` keeps the RIFF, JPEG-segment and
+length-prefixed NAL framings at one reader and one writer each.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -100,10 +104,28 @@ _ENCODERS = {
         dict(profile_idc=1, tier=0, level_idc=93, pic_width=64, pic_height=64),
         [1, 9],
     ),
+    "wav_pcm16": lambda: mm.encode_wav_pcm16(_pcm(999, 10), sample_rate=11025),
+    "wav_adpcm_mono": lambda: mm.encode_wav_adpcm(_pcm(500, 11)),
+    "wav_adpcm_stereo": lambda: mm.encode_wav_adpcm(
+        np.stack([_pcm(400, 12), _pcm(400, 13)]), sample_rate=16000
+    ),
+    "wav_adpcm_codes": lambda: mm.encode_wav_adpcm_codes(
+        [(-300, 5), (1200, 40), (0, 0), (32767, 88)],
+        [(7 * i) % 16 for i in range(32)],
+        channels=2,
+    ),
+    # encode_webp's form is doc_id % 3 (lossy, lossless, extended); the
+    # extended form carries an EXIF chunk when doc_id % 4 == 3
+    "webp_lossy": lambda: mm.encode_webp(0, _TEXT[:124]),
+    "webp_lossless_header": lambda: mm.encode_webp(1, _TEXT[:89]),
+    "webp_extended": lambda: mm.encode_webp(2, _TEXT[:201]),
+    "webp_extended_exif": lambda: mm.encode_webp(11, _TEXT[:77]),
 }
 
-# sha256 of each encoder's output, recorded before the codecs' private
-# bit writers were merged into pipeline_mf_etl_spark/bitio.py
+# sha256 of each encoder's output. The wav_* pins and the four
+# encode_webp pins were recorded before the RIFF writers were merged
+# into multimodal.riff; the others before the codecs' private bit
+# writers were merged into pipeline_mf_etl_spark/bitio.py.
 _GOLDEN = {
     "bzip2_multistream": "f3a29986ce0371379ae4d67eed23a594ec68eb1132ba987147dc44ee0ec6b1d9",
     "flac_mono": "137df14ac1b8b612d160a8b07bb32726f5793f5bf35071380e0d4d5e44118bb9",
@@ -116,7 +138,15 @@ _GOLDEN = {
     "jpeg_ycbcr420": "752ef918dfa02f7a8b897a6da0cf11e0cba289644068e11102b6cb092fa78036",
     "mp4_avc1": "45bdadef0ef0118a519584997b9633067c38a48e9488b8f07c91a07c41ed0fe3",
     "mp4_hevc": "c0de836425dc5abcf0770bf70cb72ae17a73e808cfec62cb4a3aa5a4b3faf3a7",
+    "wav_adpcm_codes": "7078fb2d136e14e45f464f4964dc5f04f45e3bfc4c1088029fec7ee5334527ae",
+    "wav_adpcm_mono": "51287f3149af25ce3edba150815829bd72df1d9df35daff21ec7f503ff365cd8",
+    "wav_adpcm_stereo": "5d8ec8ba29649f4f27fbf387cfbab398d4b2670977aacd6dee2e62a7f701cf0d",
+    "wav_pcm16": "b4aa4af34da3a14facc089b2f385e95187397fe01c486e1390ab1aa09923f92f",
+    "webp_extended": "d88e28c67e7c54d4dd1fafff297c514176c4aa59d81cf816790c1cc1c8cba78e",
+    "webp_extended_exif": "af6f3c95967c6e46f92ff05811bdaecd725618b572684173fc33eb313f31ed9e",
     "webp_lossless": "512a4a18f1d4554f5f2f5aed305d22aecfca24cd22b620c7a3fb8a14728ff0e6",
+    "webp_lossless_header": "ca5c93a75221b45d2319d2b52f434a9f352710525c0664f1c352eb61f0b332c2",
+    "webp_lossy": "5be6958ac368dafd9ea000a551a81474abab5df677b27a959942b807f974833a",
     "zstd_frame": "36407fd0f23b0b1c369383f963641b0a2bbc7b7e18a7d0d5de45b576d56a375b",
 }
 
@@ -156,6 +186,22 @@ def _decode_zstd_block(body: bytes) -> dict:
     )
 
 
+def _adpcm_riff_size_off_by_two() -> bytes:
+    """An IMA-ADPCM WAV whose RIFF size field claims two bytes more than
+    the file holds."""
+    blob = bytearray(mm.encode_wav_adpcm(_pcm(90, 14)))
+    blob[4:8] = (len(blob) - 8 + 2).to_bytes(4, "little")
+    return bytes(blob)
+
+
+def _webp_lossless_trailing_partial_chunk() -> bytes:
+    """A lossless WebP followed by a JUNK chunk that declares 16 bytes but
+    carries 2; the RIFF size covers the bytes present, so only the chunk
+    itself is cut short."""
+    blob = vp8l.encode_webp_lossless(3, _TEXT[:150]) + b"JUNK" + (16).to_bytes(4, "little") + b"ab"
+    return b"RIFF" + (len(blob) - 8).to_bytes(4, "little") + blob[8:]
+
+
 _CORRUPT = {
     "bzip2_header_without_level": lambda: bzip2.decode_bzip2_stream(b"BZh"),
     "zstd_magic_without_header": lambda: zstdframe.decode_zstd_stream(
@@ -171,6 +217,24 @@ _CORRUPT = {
     "bzip2_oversubscribed_huffman_lengths": lambda: bzip2._huff_decode_table(
         [1, 1, 1]
     ),
+    "wav_trailing_bytes": lambda: mm.parse_wav(
+        mm.encode_wav_pcm16(_pcm(64, 15)) + b"\x00\x00\x00"
+    ),
+    "wav_adpcm_riff_size_altered": lambda: mm.parse_wav_adpcm(
+        _adpcm_riff_size_off_by_two()
+    ),
+    "webp_lossless_trailing_partial_chunk": lambda: vp8l.parse_webp_lossless(
+        _webp_lossless_trailing_partial_chunk()
+    ),
+    "wav_short_fmt_chunk": lambda: mm.parse_wav(
+        mm.riff(b"WAVE", [(b"fmt ", b"\x01\x00"), (b"data", b"")])
+    ),
+    "wav_adpcm_short_fact_chunk": lambda: mm.parse_wav_adpcm(
+        mm.riff(b"WAVE", [(b"fmt ", bytes(20)), (b"fact", b"\x01"), (b"data", b"")])
+    ),
+    "webp_without_chunks": lambda: mm.parse_webp(mm.riff(b"WEBP", [])),
+    # an MP4 sample holding one zero-length NAL (no header byte to classify)
+    "nal_sample_empty_nal": lambda: mm._sample_nals(bytes(4), 0, 4, 1, lambda b: b),
 }
 
 
@@ -178,3 +242,90 @@ _CORRUPT = {
 def test_corrupt_input_raises_value_error(name):
     with pytest.raises(ValueError):
         _CORRUPT[name]()
+
+
+def _is_le32_length(node: ast.AST) -> bool:
+    """``struct.pack("<I", len(x))``, ``len(x).to_bytes(4, "little")`` or
+    ``_le32(len(x))``: a little-endian 32-bit length field."""
+    if not isinstance(node, ast.Call):
+        return False
+    func = node.func
+    if isinstance(func, ast.Attribute) and func.attr == "to_bytes":
+        return (
+            isinstance(func.value, ast.Call)
+            and getattr(func.value.func, "id", None) == "len"
+            and [getattr(a, "value", None) for a in node.args] == [4, "little"]
+        )
+    name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
+    has_len = any(
+        isinstance(a, ast.Call) and getattr(a.func, "id", None) == "len" for a in node.args
+    )
+    if name == "pack":
+        return has_len and getattr(node.args[0], "value", None) == "<I"
+    return name == "_le32" and has_len
+
+
+def _is_chunk_header(node: ast.AST) -> bool:
+    """A four-character code followed by a little-endian 32-bit length:
+    ``tag + <le32 len>`` with ``tag`` a 4-byte literal or a name, or one
+    ``struct.pack`` whose little-endian format holds ``4sI``."""
+    if isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add):
+        tag = node.left
+        is_tag = isinstance(tag, (ast.Name, ast.Attribute)) or (
+            isinstance(tag, ast.Constant) and isinstance(tag.value, bytes) and len(tag.value) == 4
+        )
+        return is_tag and _is_le32_length(node.right)
+    if isinstance(node, ast.Call) and node.args:
+        fmt = getattr(node.args[0], "value", None)
+        name = getattr(node.func, "attr", getattr(node.func, "id", None))
+        return name == "pack" and isinstance(fmt, str) and fmt.startswith("<") and "4sI" in fmt
+    return False
+
+
+def _engine_nodes():
+    """(module path, qualified name of the innermost enclosing function,
+    node) for every AST node of the engine package."""
+    import pipeline_mf_etl_spark
+
+    root = Path(pipeline_mf_etl_spark.__file__).parent
+
+    def visit(node, rel, qual):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from visit(child, rel, f"{qual}.{child.name}" if qual else child.name)
+                continue
+            yield rel, qual, child
+            yield from visit(child, rel, qual)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        yield from visit(ast.parse(path.read_text(), filename=str(path)), rel, "")
+
+
+def test_container_framing_has_one_home():
+    """Drift guard: RIFF is read by ``riff_chunks`` and written by
+    ``riff``; JPEG marker segments are walked by ``_jpeg_segments`` (the
+    only caller of ``_jpeg_scan_end``); length-prefixed NAL units are cut
+    out of an MP4 sample by ``_sample_nals`` alone."""
+    riff_magic, scan_end_calls, nal_slices, chunk_headers = set(), set(), set(), set()
+    for rel, qual, node in _engine_nodes():
+        where = (rel, qual)
+        if isinstance(node, ast.Constant) and node.value == b"RIFF":
+            riff_magic.add(where)
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_jpeg_scan_end":
+            scan_end_calls.add(where)
+        if (
+            isinstance(node, ast.Subscript)
+            and getattr(node.value, "id", None) == "sample"
+            and isinstance(node.slice, ast.Slice)
+            and isinstance(node.slice.upper, ast.BinOp)
+            and ast.dump(node.slice.upper.left) == ast.dump(node.slice.lower)
+        ):
+            nal_slices.add(where)
+        if _is_chunk_header(node):
+            chunk_headers.add(where)
+    mm_ = "operators/multimodal.py"
+    assert riff_magic == {(mm_, "riff_chunks"), (mm_, "riff")}
+    assert scan_end_calls == {(mm_, "_jpeg_segments")}
+    assert nal_slices == {(mm_, "_sample_nals")}
+    assert chunk_headers == {(mm_, "riff")}

@@ -345,6 +345,10 @@ def _rules_defined(tree) -> set[str]:
     for node in ast.walk(tree):
         if isinstance(node, ast.Tuple) and [const(e) for e in node.elts] == ["purchase", 1, True]:
             found.add("state_map")
+        elif isinstance(node, ast.Dict) and {"q_nonpositive_value", "q_gap_in_series"} & {
+            const(k) for k in node.keys
+        }:
+            found.add("quality_flags")
         elif isinstance(node, ast.BinOp) and isinstance(node.op, ast.BitAnd):
             for side in (node.left, node.right):
                 if (
@@ -374,9 +378,9 @@ def _rules_defined(tree) -> set[str]:
 
 def test_medallion_rules_have_one_home():
     """Drift guard: the S0-S4 flow-state chain, the B5 entry signal,
-    the B4 gate chain and the B2 state-map tuple are each defined in
-    one operators module, which both the ``run`` pipeline and the
-    oracle-certified queries call; ``pipeline.py`` imports no query
+    the B4 gate chain, the B2 state-map tuple and the P2 event quality
+    flags are each defined in one operators module, which both the
+    ``run`` pipeline and the oracle-certified queries call; ``pipeline.py`` imports no query
     module (importing one registers queries and loads settings)."""
     import ast
     from pathlib import Path
@@ -391,6 +395,7 @@ def test_medallion_rules_have_one_home():
     assert homes == {
         "entry_signal": ["operators/backtest.py"],
         "flow_states": ["operators/windows.py"],
+        "quality_flags": ["operators/windows.py"],
         "realism_gates": ["operators/backtest.py"],
         "state_map": ["operators/backtest.py"],
     }

@@ -284,6 +284,25 @@ def test_hmm_training_sample_semi_joins_before_window(spark):
     assert plan.count("Sort [") == 1, plan
 
 
+@pytest.mark.parametrize(
+    "name", ["_hmm_bars", "w1_lag_lead", "w14_forward_labels", "m16_event_study"]
+)
+def test_return_window_evaluates_lag_once(spark, name):
+    """A 1-bar return divides by the previous value. The lag is projected
+    once and the division reads it: ``safe_div`` repeats its
+    denominator, so a lag inside it would be evaluated once per use."""
+    if name == "_hmm_bars":
+        from pipeline_mf_etl_spark.queries.ml import _hmm_bars
+        from pipeline_mf_etl_spark.sources.readers import load_table
+
+        df = _hmm_bars(load_table(spark, SF_ORACLE, "events"))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    else:
+        plan = _plan(spark, name)
+    windows = [line for line in plan.splitlines() if "Window [" in line]
+    assert sum(line.count("lag(value") for line in windows) == 1, plan
+
+
 def test_viewer_markers_broadcasts_dims(spark):
     """v2 joins the per-bar fact to the overlay classification and the
     realism gates; the overlay dim must broadcast — shuffling the fact

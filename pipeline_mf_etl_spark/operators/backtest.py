@@ -13,12 +13,13 @@ fixed horizon with a last-bar END_OF_DATA fallback, MFE/MAE tracked
 while holding, and symmetric two-sided costs.
 
 Spark-first shape: the loop is unavoidable WITHIN a series, so it runs
-in a ``series_island`` (operators/windows.py): one pandas frame per
-island partition holding whole series in series order, NumPy slices
-per series inside, parallel across partitions. At 100 TB the series
-count is the scaling axis (millions of keys shuffle-partitioned once);
-the per-series loop stays O(series length) and never touches the
-driver.
+as a ``series_fold`` (operators/windows.py), inside the plan: an
+``aggregate`` over each series' bar indices replays the reference's
+``while`` loop (the per-series NumPy loop this engine ran before, kept
+in tests/test_series_fold.py as the reference it must match bit for
+bit), and a ``transform`` prices the trades it opened. Parallel across
+series; at 100 TB the series count is the scaling axis (millions of
+keys shuffle-partitioned once), and nothing touches the driver.
 
 Simulation contract (deterministic, documented for the oracle/tests):
 - bars are in series order ((ts, event_id), NULL ts last); bar index i
@@ -32,11 +33,12 @@ Simulation contract (deterministic, documented for the oracle/tests):
   are ignored.
 - gross = side * (exit/entry - 1); net = gross - 2*(fee+slip)/1e4;
   MFE/MAE = max/min of side*(value/entry - 1) over bars e..x.
+- ``entry == 0``: gross, net, MFE and MAE are NULL. A NULL value prices
+  as NaN (and a NaN anywhere in e..x makes MFE and MAE NaN); a NULL
+  signal is no signal.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -52,7 +54,7 @@ from pyspark.sql.types import (
 from pipeline_mf_etl_spark.config import Settings
 from pipeline_mf_etl_spark.operators.windows import (
     rolling_min_samples,
-    series_island,
+    series_fold,
     series_window,
 )
 
@@ -168,66 +170,68 @@ def simulate_trades(
 
     ``bars`` needs columns: user_id, ts, event_id, value, signal (bool),
     side (int, +1/-1). Returns one row per closed trade (TRADE_SCHEMA).
-    """
+
+    One ``series_fold``: an ``aggregate`` over bar indices 0..n-1
+    carries the next bar at which the series is flat and the signal
+    bars that opened a trade; a ``transform`` over those prices each
+    trade, with MFE/MAE from ``array_max``/``array_min`` over the held
+    bars' ``slice``. As in the reference loop, a NULL value prices as
+    NaN and a NULL signal is no signal."""
     cost = 2.0 * (fee_bps + slippage_bps) / 1e4
 
-    def sim_series(uid, vals, sigs, sides, eids, out: list) -> None:
-        n = len(vals)
-        i = 0
-        pos = 0
-        while i < n - 1:  # a signal on the last bar has no next open
-            if not sigs[i]:
-                i += 1
-                continue
-            e = i + 1
-            side = int(sides[i])
-            entry = float(vals[e])
-            x = e + hold_bars
-            reason = "HORIZON"
-            if x > n - 1:
-                x = n - 1
-                reason = "END_OF_DATA"
-            exit_v = float(vals[x])
-            window = vals[e : x + 1]
-            exc = side * (window / entry - 1.0)
-            gross = side * (exit_v / entry - 1.0) if entry != 0 else None
-            pos += 1
-            out.append(
-                (
-                    uid,
-                    pos,
-                    side,
-                    int(eids[e]),
-                    int(eids[x]),
-                    entry,
-                    exit_v,
-                    int(x - e),
-                    gross,
-                    (gross - cost) if gross is not None else None,
-                    float(exc.max()) if entry != 0 else None,
-                    float(exc.min()) if entry != 0 else None,
-                    reason,
-                )
+    def trades(rows: Column) -> Column:
+        last = F.size(rows) - 1
+
+        def take(acc: Column, i: Column) -> Column:
+            opens = (i < last) & (i >= acc["free"]) & rows[i]["signal"]
+            return F.when(
+                opens,
+                F.struct(
+                    F.least(i + 1 + hold_bars, last).alias("free"),
+                    F.concat(acc["starts"], F.array(i)).alias("starts"),
+                ),
+            ).otherwise(acc)
+
+        zero = F.struct(F.lit(0).alias("free"), F.array().cast("array<int>").alias("starts"))
+        starts = F.aggregate(F.sequence(F.lit(0), last), zero, take, lambda acc: acc["starts"])
+
+        def trade(s: Column, k: Column) -> Column:
+            e = s + 1
+            x = F.least(e + hold_bars, last)
+            side = rows[s]["side"]
+            entry = rows[e]["value"]
+            exit_v = rows[x]["value"]
+            priced = entry != 0
+            gross = F.when(priced, side * (exit_v / entry - 1.0))
+            held = F.transform(F.slice(rows, e + 1, x - e + 1), lambda r: side * (r["value"] / entry - 1.0))
+            # array_max ranks NaN highest, so a NaN excursion shows here;
+            # numpy's min would return it too, array_min skips it
+            mfe = F.array_max(held)
+            mae = F.when(F.isnan(mfe), mfe).otherwise(F.array_min(held))
+            return F.struct(
+                (k + 1).alias("position_id"),
+                side.alias("side"),
+                rows[e]["event_id"].alias("entry_event_id"),
+                rows[x]["event_id"].alias("exit_event_id"),
+                entry.alias("entry_value"),
+                exit_v.alias("exit_value"),
+                (x - e).alias("bars_held"),
+                gross.alias("gross_return"),
+                (gross - cost).alias("net_return"),
+                F.when(priced, mfe).alias("mfe"),
+                F.when(priced, mae).alias("mae"),
+                F.when(e + hold_bars > last, "END_OF_DATA").otherwise("HORIZON").alias("exit_reason"),
             )
-            i = x  # flat again on the exit bar: its signal may re-enter
 
-    def sim(pdf):
-        # run the per-series loop over NumPy slices at group boundaries:
-        # building a pandas sub-frame per series costs more than the
-        # whole sim loop when groups are many and short
-        import numpy as np
+        return F.transform(starts, trade)
 
-        uids = pdf["user_id"].to_numpy()
-        vals = pdf["value"].to_numpy(dtype=float)
-        sigs = pdf["signal"].fillna(False).to_numpy(dtype=bool)
-        sides = pdf["side"].to_numpy()
-        eids = pdf["event_id"].to_numpy()
-        cuts = np.flatnonzero(np.r_[True, uids[1:] != uids[:-1], True])
-        out: list = []
-        for lo, hi in zip(cuts[:-1], cuts[1:]):
-            sim_series(
-                int(uids[lo]), vals[lo:hi], sigs[lo:hi], sides[lo:hi], eids[lo:hi], out
-            )
-        return pd.DataFrame(out, columns=[f.name for f in TRADE_SCHEMA.fields])
-
-    return series_island(bars, sim, TRADE_SCHEMA)
+    bars = bars.select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.coalesce(F.col("value").cast("double"), F.lit(float("nan"))).alias("value"),
+        F.coalesce("signal", F.lit(False)).alias("signal"),
+        "side",
+    )
+    out = series_fold(bars, trades, TRADE_SCHEMA.fieldNames())
+    return out.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in TRADE_SCHEMA.fields])

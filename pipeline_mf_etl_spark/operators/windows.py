@@ -3,15 +3,17 @@
 The reference runs every sequential computation as a per-ticker Python
 loop over one file per symbol; here each is a single window expression
 over one partitioned DataFrame (``series_window``), so Spark
-parallelizes across series and AQE handles skewed keys. No Python in
-the hot path.
+parallelizes across series and AQE handles skewed keys. A recursion no
+window expresses runs as a ``series_fold`` over the series' rows, still
+inside the plan. No Python in the hot path.
 
 Series order. A series is the rows of one ``user_id``, ordered by
 ``(ts, event_id)`` ascending with NULLs last. This module is its one
 home: ``series_window`` (Spark windows), ``SERIES_WINDOW_SQL`` (the
 oracles' window text; DuckDB orders NULLs last by default, so the bare
-text is the same order) and ``series_island`` (the pandas islands,
-which see each series' rows contiguous and in that order).
+text is the same order), ``series_fold`` (the in-plan folds, which see
+each series as one sorted array) and ``series_island`` (the pandas
+islands, which see each series' rows contiguous and in that order).
 
 Key semantic carried over from the reference (Polars `min_samples`):
 rolling statistics are NULL until the window holds n observations —
@@ -21,7 +23,7 @@ silver/features_base.py:172-198).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
@@ -81,6 +83,36 @@ def series_island(
             yield out
 
     return sort_series(island_repartition(df, SERIES_KEY)).mapInPandas(run, schema)
+
+
+def series_fold(
+    df: DataFrame, fold: Callable[[Column], Column], columns: Sequence[str]
+) -> DataFrame:
+    """Run a sequential per-series kernel inside the plan, with no Python
+    worker: one row per series holding its rows as an array, ``fold``
+    over that array, then the output array back to rows.
+
+    ``fold`` receives the series' rows as structs in series order. Each
+    struct holds every column of ``df`` but the series key; each
+    ``SERIES_ORDER`` column is preceded by its NULL flag
+    (``__<name>_null``), so the plain struct sort puts NULLs last.
+    ``fold`` returns an array of output structs; their fields, plus the
+    series key, are projected to ``columns`` in that order (the schema
+    and any digest of the output depend on it).
+
+    The series key of the output is the grouping key itself, so a series
+    window after the fold reuses the fold's exchange. Memory grows with
+    the longest series, not with the partition. Every column must be
+    orderable (no maps), since whole structs are compared on ties."""
+    order = [c for k in SERIES_ORDER for c in (F.col(k).isNull().alias(f"__{k}_null"), k)]
+    rest = [c for c in df.columns if c != SERIES_KEY and c not in SERIES_ORDER]
+    rows = F.array_sort(F.collect_list(F.struct(*order, *rest)))
+    return (
+        df.groupBy(SERIES_KEY)
+        .agg(rows.alias("rows"))
+        .select(SERIES_KEY, F.inline(fold(F.col("rows"))))
+        .select(*columns)
+    )
 
 
 def shares_ts(w: WindowSpec) -> Column:
@@ -166,13 +198,18 @@ def bars_since(flag: Column, w: WindowSpec) -> Column:
     return rn - last_idx
 
 
-def run_group(state: Column, w: WindowSpec) -> Column:
-    """Monotone group id incremented whenever ``state`` changes within the
-    series (run-length-encoding groups; reference gold/features_v1.py:290-313)."""
-    changed = (
-        (F.lag(state).over(w).isNull()) | (state != F.lag(state).over(w))
-    ).cast("int")
-    return F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
+def with_run_group(
+    df: DataFrame, state: str, w: WindowSpec, group: str, prev: str = "__prev"
+) -> DataFrame:
+    """Append ``group``, a monotone id incremented whenever ``state``
+    changes along ``w`` (run-length-encoding groups; reference
+    gold/features_v1.py:290-313). The previous row's state is projected
+    once, as ``prev``, and kept for callers that label transitions: a
+    ``lag`` written into each comparison is evaluated once per use."""
+    changed = F.col(prev).isNull() | (F.col(state) != F.col(prev))
+    return df.withColumn(prev, F.lag(state).over(w)).withColumn(
+        group, F.sum(changed.cast("int")).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
 
 
 def dedupe_keep_first(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:

@@ -4,8 +4,8 @@ The reference chains adapter → state mapping → execution realism →
 signals → trade simulation → metrics → equity curve
 (backtest/pipeline.py:165-860). Stages B1-B5/B7/B8 are pure column/join
 algebra (Catalyst-friendly, broadcast joins for the tiny mapping
-tables); only the trade loop B6 is sequential per series and runs in
-a ``series_island`` (operators/backtest.py).
+tables); only the trade loop B6 is sequential per series and runs as
+a ``series_fold`` (operators/backtest.py).
 
 events → bars mapping: user_id = ticker, value = price, props.$.k =
 volume proxy, event_type = state label (purchase→long, error→short).
@@ -199,7 +199,7 @@ def b5_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# B6: next-open non-overlapping trade simulation (a series_island pass).
+# B6: next-open non-overlapping trade simulation (a series_fold).
 # The greedy non-overlap loop IS oracle-expressible as a recursive CTE:
 # `next_sig(idx)` = first eligible signal at-or-after each bar (a reverse
 # running-min window, computed ONCE, non-recursively), which turns the

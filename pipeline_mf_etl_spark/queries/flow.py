@@ -8,9 +8,9 @@ semantics run over the ``events`` series (user_id = series key,
 value = measure).
 
 The EWM recursion is the single primitive with no native Spark
-expression: the Spark side runs it in one ``series_island`` pass
-(operators/ewm.py), one pandas frame per island partition holding
-whole series in series order; the DuckDB oracle uses
+expression: the Spark side runs it as one ``series_fold``
+(operators/ewm.py), an in-plan fold over each series' rows in series
+order; the DuckDB oracle uses
 a BLOCK-RESCALED exact expansion of the same recursion (see _EWM_CTE) —
 the naive closed form ``y_t = a·B^t·Σ x_i·B^{-i} + B^t·x_1`` overflows
 double once a series exceeds ~7000 bars, so exponents are kept within

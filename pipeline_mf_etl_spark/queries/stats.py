@@ -18,7 +18,7 @@ from pipeline_mf_etl_spark.operators.stats import (
     fit_robust_scaler_per_group,
 )
 from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
-from pipeline_mf_etl_spark.operators.windows import run_group, series_window
+from pipeline_mf_etl_spark.operators.windows import series_window, with_run_group
 from pipeline_mf_etl_spark.queries.export import export_frame, export_glob
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
@@ -199,10 +199,8 @@ def j8_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m12_dwell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dwell statistics (M12): run-group lengths aggregated per state."""
     ev = load_table(spark, sf_dir, "events")
-    w = series_window()
-    grp = run_group(F.col("event_type"), w)
     runs = (
-        ev.select("user_id", "event_type", grp.alias("grp"))
+        with_run_group(ev, "event_type", series_window(), "grp")
         .groupBy("user_id", "grp", "event_type")
         .agg(F.count("*").alias("dwell"))
     )

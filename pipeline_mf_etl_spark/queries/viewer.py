@@ -22,8 +22,8 @@ collapse: trh/trl use prev-close only and the first bar defines
 row — documented proxy deviation, applied identically on both engines.
 
 Spark-first shape: the four RMAs AND every per-series sequential
-column are ONE ``series_island`` pass (``_panel_frame``) running the
-same pandas ``GroupBy.ewm`` recursion as ``operators/ewm.py``;
+column are ONE ``series_island`` pass (``_panel_frame``) running
+pandas' ``GroupBy.ewm``, the loop ``operators/ewm.py``'s fold replays;
 everything downstream is window/CASE algebra that Catalyst pipelines
 into the same single shuffle. The DuckDB oracles reuse the
 block-rescaled exact EWM expansion from ``queries/flow.py`` (naive

@@ -25,8 +25,8 @@ from pipeline_mf_etl_spark.operators.windows import (
     dedupe_keep_first,
     latest_per_group,
     rolling_min_samples,
-    run_group,
     series_window,
+    with_run_group,
 )
 from pipeline_mf_etl_spark.pin import pin
 from pipeline_mf_etl_spark.queries.registry import query
@@ -206,19 +206,8 @@ def w5_bars_since_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w6_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State run-length + transition labels via the two-window idiom (W6)."""
     ev = load_table(spark, sf_dir, "events")
-    w = series_window()
-    state = F.col("event_type")
-    prev = F.lag("event_type").over(w)
-    changed = prev.isNull() | (state != prev)
-    grp = run_group(state, w)
-    df = ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        grp.alias("state_group"),
-        F.when(changed & prev.isNotNull(), F.concat_ws(">", prev, state)).alias("transition"),
-    )
+    df = with_run_group(ev, "event_type", series_window(), "state_group", "prev_state")
+    state, prev = F.col("event_type"), F.col("prev_state")
     w2 = series_window("state_group")
     return df.select(
         "event_id",
@@ -226,7 +215,8 @@ def w6_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("state_group").cast("long").alias("state_group"),
         F.row_number().over(w2).alias("state_run_length"),
-        "transition",
+        # a NULL on either side is no transition, as in the oracle
+        F.when(prev != state, F.concat_ws(">", prev, state)).alias("transition"),
     )
 
 
@@ -733,15 +723,7 @@ def w21_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     events becomes one validity interval [valid_from, valid_to) with
     the run's event count; the open interval is flagged is_current."""
     ev = load_table(spark, sf_dir, "events")
-    w = series_window()
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    changed = (
-        F.lag("event_type").over(w).isNull()
-        | (F.col("event_type") != F.lag("event_type").over(w))
-    ).cast("int")
-    runs = ev.select(
-        "user_id", "event_type", "ts", F.sum(changed).over(cum).alias("run_id")
-    )
+    runs = with_run_group(ev, "event_type", series_window(), "run_id")
     intervals = runs.groupBy("user_id", "run_id").agg(
         F.first("event_type").alias("state"),
         F.min("ts").alias("valid_from"),
@@ -781,17 +763,8 @@ def w21_scd2_intervals_segmented(
     ev = load_table(spark, sf_dir, "events").withColumn(
         "seg", F.date_trunc(segment, F.col("ts"))
     )
-    w = series_window("seg")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    changed = (
-        F.lag("event_type").over(w).isNull()
-        | (F.col("event_type") != F.lag("event_type").over(w))
-    ).cast("int")
     seg_runs = (
-        ev.select(
-            "user_id", "seg", "event_type", "ts",
-            F.sum(changed).over(cum).alias("seg_run"),
-        )
+        with_run_group(ev, "event_type", series_window("seg"), "seg_run")
         .groupBy("user_id", "seg", "seg_run")
         .agg(
             F.first("event_type").alias("state"),  # constant within the run
@@ -804,13 +777,8 @@ def w21_scd2_intervals_segmented(
     # valid_from can only occur within one segment (segments partition
     # time), where seg_run preserves the exact (ts, event_id) order.
     w2 = Window.partitionBy("user_id").orderBy("valid_from", "seg_run")
-    cum2 = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    changed2 = (
-        F.lag("state").over(w2).isNull()
-        | (F.col("state") != F.lag("state").over(w2))
-    ).cast("int")
     intervals = (
-        seg_runs.withColumn("run_id", F.sum(changed2).over(cum2))
+        with_run_group(seg_runs, "state", w2, "run_id")
         .groupBy("user_id", "run_id")
         .agg(
             F.first("state").alias("state"),  # constant within the merge
@@ -1140,17 +1108,9 @@ def j13_interval_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_mf_etl_spark.operators.asof import asof_join
 
     ev = load_table(spark, sf_dir, "events")
-    w = series_window()
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    changed = (
-        F.lag("event_type").over(w).isNull()
-        | (F.col("event_type") != F.lag("event_type").over(w))
-    ).cast("int")
-    runs = ev.select(
-        "user_id", "event_type", "ts", F.sum(changed).over(cum).alias("run_id")
-    )
     intervals = (
-        runs.groupBy("user_id", "run_id")
+        with_run_group(ev, "event_type", series_window(), "run_id")
+        .groupBy("user_id", "run_id")
         .agg(
             F.first("event_type").alias("state"),
             F.min("ts").alias("valid_from"),

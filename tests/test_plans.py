@@ -58,16 +58,52 @@ def test_state_map_is_a_local_relation(spark, name):
     assert "LocalTableScan" in plan, plan
 
 
-def test_gold_layer_state_map_is_a_local_relation(spark):
+@pytest.fixture(scope="module")
+def medallion_plans(spark):
+    """The physical plan of every ``run`` layer, chained in memory."""
     from pipeline_mf_etl_spark.config import load_settings
-    from pipeline_mf_etl_spark.pipeline import bronze_layer, gold_layer, silver_layer
+    from pipeline_mf_etl_spark.pipeline import (
+        backtest_layer,
+        bronze_layer,
+        gold_layer,
+        research_layer,
+        silver_layer,
+    )
     from pipeline_mf_etl_spark.sources.readers import load_table
     from tests.conftest import SF_SMOKE
 
-    silver = silver_layer(bronze_layer(load_table(spark, SF_SMOKE, "events")))
-    plan = gold_layer(silver, load_settings())._jdf.queryExecution().executedPlan().toString()
+    s = load_settings()
+    bronze = bronze_layer(load_table(spark, SF_SMOKE, "events"))
+    silver = silver_layer(bronze)
+    gold = gold_layer(silver, s)
+    trades, suppression = backtest_layer(gold, s)
+    layers = {
+        "bronze": bronze,
+        "silver": silver,
+        "gold": gold,
+        "research": research_layer(gold),
+        "trades": trades,
+        "suppression": suppression,
+    }
+    return {k: df._jdf.queryExecution().executedPlan().toString() for k, df in layers.items()}
+
+
+def test_gold_layer_state_map_is_a_local_relation(medallion_plans):
+    plan = medallion_plans["gold"]
     assert "ExistingRDD" not in plan, plan
     assert "LocalTableScan" in plan, plan
+
+
+def test_medallion_layers_start_no_python_worker(medallion_plans):
+    """EWM smoothing and the trade simulation are in-plan series folds:
+    no ``run`` layer holds a Python operator. Gold's fold groups on the
+    series key and its series windows reuse that exchange."""
+    python_ops = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython")
+    for layer, plan in medallion_plans.items():
+        assert [op for op in python_ops if op in plan] == [], (layer, plan)
+    gold = medallion_plans["gold"]
+    assert gold.count("Exchange hashpartitioning") == 1, gold
+    assert gold.count("Exchange hashpartitioning(user_id") == 1, gold
 
 
 def test_window_stack_single_shuffle(spark):
@@ -301,6 +337,27 @@ def test_return_window_evaluates_lag_once(spark, name):
         plan = _plan(spark, name)
     windows = [line for line in plan.splitlines() if "Window [" in line]
     assert sum(line.count("lag(value") for line in windows) == 1, plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "w6_run_length",
+        "w21_scd2_intervals",
+        "w21_scd2_intervals_segmented",
+        "j13_interval_lookup",
+        "m12_dwell_stats",
+    ],
+)
+def test_run_length_evaluates_lag_once(spark, name):
+    """A run-length group compares each row's state with the previous
+    one. ``with_run_group`` projects that lag once, and the comparison
+    and w6's transition label both read it; the segmented w21 builds
+    two run levels, one lag each."""
+    plan = _plan(spark, name)
+    lags = [line.count("lag(") for line in plan.splitlines() if "Window [" in line]
+    assert max(lags) == 1, plan
+    assert sum(lags) == (2 if name.endswith("_segmented") else 1), plan
 
 
 def test_viewer_markers_broadcasts_dims(spark):

@@ -189,8 +189,6 @@ def test_decode_puts_null_ts_last(spark, three_partitions):
 _ROOT = Path(pipeline_mf_etl_spark.__file__).parent
 _ORACLE_WINDOW = "PARTITION BY user_id ORDER BY ts, event_id"
 _ISLAND_MODULES = (
-    "operators/ewm.py",
-    "operators/backtest.py",
     "operators/hmm.py",
     "queries/viewer.py",
 )
@@ -229,9 +227,9 @@ def test_series_order_has_one_home():
     """Outside ``operators/windows.py`` nothing restates the series
     order: no hand-built ``Window.partitionBy("user_id")...orderBy("ts",
     ...)``, no ``sortWithinPartitions("user_id", ...)``, no string
-    holding the oracle window text. The per-series pandas islands reach
-    ``mapInPandas`` only through ``series_island`` and never re-sort in
-    pandas."""
+    holding the oracle window text. Only the HMM decode and the viewer
+    panel run per-series pandas islands; they reach ``mapInPandas`` only
+    through ``series_island`` and never re-sort in pandas."""
     found = []
     for rel, tree in _trees():
         found += [
@@ -254,6 +252,13 @@ def test_series_order_has_one_home():
         if rel in _ISLAND_MODULES:
             for name in ("sort_values", "mapInPandas", "applyInPandas"):
                 found += [(rel, c.lineno, name) for c in _method_calls(tree, name)]
+        else:
+            found += [
+                (rel, n.lineno, "series_island")
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and "series_island" in (getattr(n.func, "id", None), getattr(n.func, "attr", None))
+            ]
     assert found == []
 
 

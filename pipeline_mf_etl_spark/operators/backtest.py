@@ -15,11 +15,11 @@ while holding, and symmetric two-sided costs.
 Spark-first shape: the loop is unavoidable WITHIN a series, so it runs
 as a ``series_fold`` (operators/windows.py), inside the plan: an
 ``aggregate`` over each series' bar indices replays the reference's
-``while`` loop (the per-series NumPy loop this engine ran before, kept
-in tests/test_series_fold.py as the reference it must match bit for
-bit), and a ``transform`` prices the trades it opened. Parallel across
-series; at 100 TB the series count is the scaling axis (millions of
-keys shuffle-partitioned once), and nothing touches the driver.
+``while`` loop, and a ``transform`` prices the trades it opened;
+tests/test_series_fold.py holds that loop in NumPy as the reference the
+fold must match bit for bit. Parallel across series; at 100 TB the
+series count is the scaling axis (millions of keys shuffle-partitioned
+once), and nothing touches the driver.
 
 Simulation contract (deterministic, documented for the oracle/tests):
 - bars are in series order ((ts, event_id), NULL ts last); bar index i
@@ -203,11 +203,14 @@ def simulate_trades(
             exit_v = rows[x]["value"]
             priced = entry != 0
             gross = F.when(priced, side * (exit_v / entry - 1.0))
-            held = F.transform(F.slice(rows, e + 1, x - e + 1), lambda r: side * (r["value"] / entry - 1.0))
+            held = F.transform(
+                F.slice(rows, e + 1, x - e + 1), lambda r: side * (r["value"] / entry - 1.0)
+            )
             # array_max ranks NaN highest, so a NaN excursion shows here;
             # numpy's min would return it too, array_min skips it
             mfe = F.array_max(held)
             mae = F.when(F.isnan(mfe), mfe).otherwise(F.array_min(held))
+            reason = F.when(e + hold_bars > last, "END_OF_DATA").otherwise("HORIZON")
             return F.struct(
                 (k + 1).alias("position_id"),
                 side.alias("side"),
@@ -220,7 +223,7 @@ def simulate_trades(
                 (gross - cost).alias("net_return"),
                 F.when(priced, mfe).alias("mfe"),
                 F.when(priced, mae).alias("mae"),
-                F.when(e + hold_bars > last, "END_OF_DATA").otherwise("HORIZON").alias("exit_reason"),
+                reason.alias("exit_reason"),
             )
 
         return F.transform(starts, trade)

@@ -139,7 +139,9 @@ _CASES = {
     "constant": _series(1, [5.0] * 6 + [6.0, 5.0, 5.0], [True] * 9),
     "nan_prefix": _series(1, [NAN, None, NAN, 3.0, 4.0, 5.0, 6.0]),
     "shorter_than_min_periods": _series(1, [4.0, 5.0]) + _series(2, [1.0, None, 2.0], first_id=10),
-    "entry_zero": _series(1, [3.0, 0.0, 4.0, 5.0, 0.0, 1.0, 2.0], [True, False, False, True, False, True, False]),
+    "entry_zero": _series(
+        1, [3.0, 0.0, 4.0, 5.0, 0.0, 1.0, 2.0], [True, False, False, True, False, True, False]
+    ),
     "signal_on_last_bar": _series(1, [4.0, 5.0, 6.0, 7.0], [False, False, False, True]),
     "hold_past_end": _series(1, [4.0, 5.0, 6.0, 7.0], [False, True, False, False]),
     "one_row": _series(1, [4.0], [True]),
@@ -147,12 +149,8 @@ _CASES = {
 }
 
 
-@pytest.fixture(scope="module")
-def frames(spark):
-    def build(rows):
-        return spark.createDataFrame(rows, _SCHEMA).repartition(2)
-
-    return build
+def _frame(spark, rows):
+    return spark.createDataFrame(rows, _SCHEMA).repartition(2)
 
 
 def _hex(v):
@@ -185,15 +183,15 @@ def _check_trades(df, rows):
 
 
 @pytest.mark.parametrize("case", sorted(_CASES))
-def test_ewm_fold_matches_pandas(frames, case):
+def test_ewm_fold_matches_pandas(spark, case):
     rows = _CASES[case]
-    _check_ewm(frames(rows), rows)
+    _check_ewm(_frame(spark, rows), rows)
 
 
 @pytest.mark.parametrize("case", sorted(_CASES))
-def test_trade_fold_matches_pandas(frames, case):
+def test_trade_fold_matches_pandas(spark, case):
     rows = _CASES[case]
-    _check_trades(frames(rows), rows)
+    _check_trades(_frame(spark, rows), rows)
 
 
 def test_cases_reach_their_branches():
@@ -208,10 +206,10 @@ def test_cases_reach_their_branches():
     assert means[5] == 5.0 and means[8] != 5.0
 
 
-def test_folds_match_pandas_on_a_long_series(frames):
+def test_folds_match_pandas_on_a_long_series(spark):
     """One ~2000-bar series with NULL and NaN values: the folds' O(L²)
     array accumulation stays exact over long series."""
     rows = _long_series(2000)
-    df = frames(rows)
+    df = _frame(spark, rows)
     _check_ewm(df, rows)
     assert len(_check_trades(df, rows)) > 100

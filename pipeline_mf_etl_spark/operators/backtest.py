@@ -92,12 +92,19 @@ def with_state_map(df: DataFrame, upper: bool = False) -> DataFrame:
     )
 
 
-def entry_signal(w: WindowSpec) -> Column:
+def with_entry_signal(df: DataFrame, w: WindowSpec) -> DataFrame:
     """B5 state_transition_entry (reference backtest/signals.py:20-242):
-    an eligible bar whose ``event_type`` differs from the previous bar's
-    in window ``w`` (or that opens its series) raises an entry signal."""
-    prev = F.lag("event_type").over(w)
-    return F.col("eligible") & (prev.isNull() | (F.col("event_type") != prev))
+    append ``signal``, true on an eligible bar whose ``event_type``
+    differs from the previous bar's in window ``w`` (or that opens its
+    series). The previous event type is projected once and read by both
+    comparisons."""
+    prev = F.col("__prev_event_type")
+    signal = F.col("eligible") & (prev.isNull() | (F.col("event_type") != prev))
+    return (
+        df.withColumn("__prev_event_type", F.lag("event_type").over(w))
+        .withColumn("signal", signal)
+        .drop("__prev_event_type")
+    )
 
 
 def b4_gate_columns(df: DataFrame, s: Settings) -> DataFrame:

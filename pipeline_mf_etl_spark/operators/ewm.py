@@ -27,48 +27,62 @@ def ewm_smooth(df: DataFrame, value_col: str, n: int, out_col: str) -> DataFrame
     min_periods=n) of ``value_col`` per series, after ``df``'s columns.
 
     The fold carries pandas' loop state: the running mean ``w`` (NaN
-    until the first observation), the decayed weight ``old`` of ``w``
-    and the observation count. Per row, NULL and NaN are
-    non-observations; while ``w`` exists every row decays ``old`` by
-    ``1 - a``; an observation ``x`` sets ``w = (old·w + a·x)/(old + a)``
-    unless ``w == x`` (pandas' guard for constant series, which leaves
-    ``w`` exact) and resets ``old`` to 1. Rows with fewer than n
-    observations so far, or a NaN mean, come back as NULL, matching
-    Polars ``min_samples`` (reference silver/indicators_twiggs.py:41-44)."""
+    until the first observation), the weight ``old`` that ``w`` will
+    carry into the next row (pandas' ``old_wt`` after its decay) and the
+    observation count. Per row, NULL and NaN are non-observations; an
+    observation ``x`` sets ``w = (old·w + a·x)/(old + a)`` unless
+    ``w == x`` (pandas' guard for constant series, which leaves ``w``
+    exact), or ``w = x`` while ``w`` is NaN; the next row's ``old`` is
+    ``1 - a`` after an observation, or while ``w`` is NaN, and ``old``
+    times ``1 - a`` otherwise, the same products pandas forms. Rows
+    with fewer than n observations so far, or a NaN mean, come back as
+    NULL, matching Polars ``min_samples`` (reference
+    silver/indicators_twiggs.py:41-44).
+
+    Each step builds every state field once: the observation
+    ``coalesce(value, NaN)`` is a row field, and a row's output is
+    appended one step behind, from the state it left."""
     # pandas converts alpha to a center of mass and back; replay it so
     # the weights carry the same bits
     com = (1 - 1.0 / n) / (1.0 / n)
     alpha = 1.0 / (1.0 + com)
     decay = 1.0 - alpha
     nan = F.lit(float("nan"))
+    obs_col = f"__{out_col}_x"
 
-    def step(acc: Column, r: Column) -> Column:
-        x = F.coalesce(r[value_col].cast("double"), nan)
+    def advance(acc: Column, r: Column) -> list[Column]:
+        x = r[obs_col]
         obs = ~F.isnan(x)
         has = ~F.isnan(acc["w"])
-        old = F.when(has, acc["old"] * decay).otherwise(acc["old"])
+        mixed = (acc["old"] * acc["w"] + alpha * x) / (acc["old"] + alpha)
         w = (
-            F.when(has & obs & (acc["w"] != x), (old * acc["w"] + alpha * x) / (old + alpha))
+            F.when(has & obs & (acc["w"] != x), mixed)
             .when(~has & obs, x)
             .otherwise(acc["w"])
         )
-        nobs = acc["nobs"] + obs.cast("int")
-        out = F.when((nobs >= n) & ~F.isnan(w), w)
-        return F.struct(
-            w.alias("w"),
-            F.when(has & obs, F.lit(1.0)).otherwise(old).alias("old"),
-            nobs.alias("nobs"),
-            F.concat(acc["out"], F.array(out)).alias("out"),
-        )
+        old = F.when(has & ~obs, acc["old"] * decay).otherwise(decay)
+        return [w.alias("w"), old.alias("old"), (acc["nobs"] + obs.cast("int")).alias("nobs")]
+
+    def mean(acc: Column) -> Column:
+        return F.when((acc["nobs"] >= n) & ~F.isnan(acc["w"]), acc["w"])
 
     def smooth(rows: Column) -> Column:
         zero = F.struct(
             nan.alias("w"),
-            F.lit(1.0).alias("old"),
+            F.lit(decay).alias("old"),
             F.lit(0).alias("nobs"),
             F.array().cast("array<double>").alias("out"),
         )
-        means = F.aggregate(rows, zero, step, lambda acc: acc["out"])
+        means = F.aggregate(
+            rows,
+            zero,
+            lambda acc, r: F.struct(
+                *advance(acc, r), F.concat(acc["out"], F.array(mean(acc))).alias("out")
+            ),
+            # the first mean appended is the zero state's
+            lambda acc: F.slice(F.concat(acc["out"], F.array(mean(acc))), 2, F.size(rows)),
+        )
         return F.zip_with(rows, means, lambda r, v: r.withField(out_col, v))
 
-    return series_fold(df, smooth, [*df.columns, out_col])
+    x = F.coalesce(F.col(value_col).cast("double"), nan)
+    return series_fold(df.withColumn(obs_col, x), smooth, [*df.columns, out_col])

@@ -1,5 +1,5 @@
-"""Gaussian HMM: driver-side EM fit and a distributed decode over one
-batched kernel (SURVEY.md §2.8 M9-M11).
+"""Gaussian HMM: a driver-side EM fit over one batched NumPy kernel and
+an in-plan decode (SURVEY.md §2.8 M9-M11).
 
 The reference fits hmmlearn's GaussianHMM on a stacked matrix of
 per-ticker sequences (research_hmm/hmm_model.py:29-98) and decodes each
@@ -10,46 +10,49 @@ no RNG in the loop).
 
 Kernel. Series are padded into a ``[series, time, state]`` block and
 every step of a recursion runs over all series of the block at once;
-time is the only Python loop. It has three parts: ``_log_b`` (emission
-log-probabilities), ``_forward_backward`` (log α, log β and the
-log-likelihood of each series) and ``_viterbi``. The EM fit and the
-decode both go through them; there is no per-series recursion.
+time is the only Python loop. It has two parts: ``_log_b`` (emission
+log-probabilities) and ``_forward_backward`` (log α, log β and the
+log-likelihood of each series). The EM fit goes through them; there is
+no per-series recursion.
 
 Padding and mask invariant. A block holds its series longest first, so
 the series still running at step ``t`` are a prefix of the block
 (``_live``) and each recursion step reads and writes only that prefix.
 Past a series' end its emission log-probabilities and log α are -inf
 and its log β is 0, so its state posteriors, transition posteriors and
-(zero-padded) features contribute exactly 0 to every EM statistic, and
-its Viterbi path and posteriors are cut at its length. Per series, each
-value is the same sequence of float operations as a one-series
-recursion, so a series decodes identically whichever series share its
-block.
+(zero-padded) features contribute exactly 0 to every EM statistic.
+Per series, each value is the same sequence of float operations as a
+one-series recursion, whichever series share its block.
 
 Chunking. ``_blocks`` pads series in length order and starts a new
 block when the next one would exceed ``_BLOCK_CELLS`` padded bars
 (series × the block's longest length), so one long series pads only the
-block it heads, never a whole partition.
+block it heads, never the whole sample.
 
 Scale shape (same as the reference's design, SURVEY.md §7.4): the model
 is tiny (K states × D features); FIT runs on a driver-collected, capped
 sample of sequences (the reference caps everything the same way);
-DECODE runs per partition in a ``series_island`` (operators/windows.py)
-with the parameters in the closure.
+DECODE is one ``series_fold`` (operators/windows.py) with the parameters
+inlined as literals: parallel across series, sequential within one,
+memory bounded by the longest series, and no Python worker.
 
 Sequence contract (research_hmm/sequence_builder.py:25-108): one series
-per key, time-ordered, sequences shorter than ``min_len`` dropped,
-Σ lengths == decoded rows.
+per key in series order, rows with a non-finite feature dropped,
+sequences shorter than ``min_len`` dropped, Σ lengths == decoded rows.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import numpy as np
 
-from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField
 
-from pipeline_mf_etl_spark.operators.windows import series_island
+from pipeline_mf_etl_spark.operators.windows import FOLD_ROWS, SERIES_KEY, series_fold
 
 _LOG2PI = float(np.log(2.0 * np.pi))
 # Padded bars per kernel block. A block holds a few float arrays of K
@@ -70,8 +73,8 @@ def _live(lengths: np.ndarray, t_len: int) -> np.ndarray:
 
 def _blocks(sequences: list[np.ndarray]):
     """Pad non-empty ``[T_i, D]`` series into longest-first blocks.
-    Yields ``(idx, x, lengths)``: the input positions of the block's
-    series, the zero-padded ``[n, T, D]`` block and the series lengths."""
+    Yields ``(x, lengths)``: the zero-padded ``[n, T, D]`` block and the
+    lengths of its series."""
     lengths = np.array([len(s) for s in sequences], dtype=np.int64)
     order = np.argsort(-lengths, kind="stable")
     i = 0
@@ -82,7 +85,7 @@ def _blocks(sequences: list[np.ndarray]):
         x = np.zeros((len(idx), lens[0], sequences[idx[0]].shape[1]))
         for j, s in enumerate(idx):
             x[j, : lens[j]] = sequences[s]
-        yield idx, x, lens
+        yield x, lens
 
 
 class DiagGaussianHMM:
@@ -124,23 +127,6 @@ class DiagGaussianHMM:
         ll = _lse(la[np.arange(n), lengths - 1], axis=1)
         return la, lb, ll
 
-    def _viterbi(self, logb: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-        n, t_len, k = logb.shape
-        live = _live(lengths, t_len)
-        delta = self.log_pi + logb[:, 0]
-        back = np.zeros((n, t_len, k), dtype="int32")
-        for t in range(1, t_len):
-            m = live[t]
-            cand = delta[:m, :, None] + self.log_a
-            back[:m, t] = cand.argmax(axis=1)
-            delta[:m] = cand.max(axis=1) + logb[:m, t]
-        path = np.zeros((n, t_len), dtype="int32")
-        path[np.arange(n), lengths - 1] = delta.argmax(axis=1)
-        for t in range(t_len - 2, -1, -1):
-            m = live[t + 1]
-            path[:m, t] = back[np.arange(m), t + 1, path[:m, t + 1]]
-        return path
-
     # -- EM ---------------------------------------------------------------
     def fit(self, sequences: list[np.ndarray], min_len: int = 1) -> "DiagGaussianHMM":
         """Baum-Welch on the series of at least ``min_len`` bars."""
@@ -167,7 +153,7 @@ class DiagGaussianHMM:
         np.fill_diagonal(a0, 0.9)
         self.log_a = np.log(a0)
 
-        blocks = [(x, lens) for _, x, lens in _blocks(sequences)]
+        blocks = list(_blocks(sequences))
         prev_ll = -np.inf
         for _ in range(self.n_iter):
             ll_total = 0.0
@@ -202,21 +188,6 @@ class DiagGaussianHMM:
             prev_ll = ll_total
         return self
 
-    # -- decode ------------------------------------------------------------
-    def decode(self, sequences: list[np.ndarray]) -> tuple[list[np.ndarray], list[np.ndarray]]:
-        """Viterbi path ``[T_i]`` and state posteriors ``[T_i, K]`` of
-        each non-empty series, in input order."""
-        paths: list = [None] * len(sequences)
-        posts: list = [None] * len(sequences)
-        for idx, x, lens in _blocks(sequences):
-            logb = self._log_b(x, lens)
-            la, lb, ll = self._forward_backward(logb, lens)
-            post = np.exp(la + lb - ll[:, None, None])
-            path = self._viterbi(logb, lens)
-            for j, i in enumerate(idx):
-                paths[i], posts[i] = path[j, : lens[j]], post[j, : lens[j]]
-        return paths, posts
-
     def to_params(self) -> dict:
         return {
             "log_pi": self.log_pi.tolist(),
@@ -243,42 +214,140 @@ DECODE_FIELDS = [
 ]
 
 
+def _num(v: float) -> str:
+    """A SQL double literal that parses back to ``v`` bit for bit."""
+    return f"({float(v)!r}D)"
+
+
+def _arr(items) -> str:
+    return f"array({', '.join(items)})"
+
+
+def _let(value: str, var: str, body: str) -> str:
+    """``body`` with ``var`` bound to ``value``, evaluated once.
+    Higher-order functions run interpreted, and an interpreted expression
+    evaluates a subexpression once per use; a lambda variable binds it."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+def _lse_sql(terms: list[str]) -> str:
+    """log Σ exp(terms), shifted by their max as NumPy's ``_lse`` is."""
+    exps = " + ".join(f"exp(({x}) - lse_m)" for x in terms)
+    return _let(f"greatest({', '.join(terms)})", "lse_m", f"lse_m + ln({exps})")
+
+
+def _argmax_sql(terms: list[str]) -> str:
+    """First index of the largest term, as ``np.argmax``."""
+    return _let(_arr(terms), "am", "CAST(array_position(am, array_max(am)) - 1 AS INT)")
+
+
 def decode_distributed(
     bars: DataFrame,
     params: dict,
     feature_cols: list[str],
     min_len: int = 20,
 ) -> DataFrame:
-    """Viterbi + posterior decode of every series with the model's
-    parameters in the closure: one ``series_island`` pass, each partition's
-    series decoded in length-ordered kernel blocks (reference
-    research_hmm/decode.py:57-157, distributed). Rows with a non-finite
-    feature are dropped before series lengths are counted; every
-    decoded row keeps all columns of ``bars``, then ``DECODE_FIELDS``."""
+    """Viterbi path and state posteriors of every series of ``bars``
+    under the model ``params`` (reference research_hmm/decode.py:57-157),
+    as one ``series_fold``: no Python worker, the parameters inlined as
+    double literals. Rows with a non-finite (NULL, NaN, ±inf) feature are
+    dropped before series lengths are counted, and series shorter than
+    ``min_len`` bars are dropped. Every decoded row keeps the columns of
+    ``bars``, then ``DECODE_FIELDS``.
 
-    def run(pdf):
-        # one series per run of user_id, rows in series order
-        x = pdf[feature_cols].to_numpy(dtype="float64")
-        rows = np.flatnonzero(np.isfinite(x).all(axis=1))
-        uid = pdf["user_id"].to_numpy()[rows]
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        lengths = np.diff(np.r_[starts, len(uid)])
-        keep = lengths >= min_len
-        rows, lengths = rows[np.repeat(keep, lengths)], lengths[keep]
-        if not len(rows):
-            return None  # sequence_builder drops short sequences
-        seqs = np.split(x[rows], np.cumsum(lengths)[:-1])
-        paths, posts = DiagGaussianHMM.from_params(params).decode(seqs)
-        post = np.concatenate(posts)
-        # log only where post > eps — np.where alone still evaluates
-        # log(0) on the masked-out entries and spews RuntimeWarnings
-        plogp = np.zeros_like(post)
-        nz = post > 1e-12
-        plogp[nz] = post[nz] * np.log(post[nz])
-        return pdf.take(rows).assign(
-            hmm_state=np.concatenate(paths),
-            state_prob_max=post.max(axis=1),
-            state_entropy=-plogp.sum(axis=1),
-        )
+    Exactness. Each row's K emission log-probabilities are one
+    projection, built in ``_log_b``'s float-op order (the D-term sum left
+    to right, as NumPy sums fewer than 8 terms). The Viterbi recursion
+    then takes only ``+``, max and first-index argmax, so the path is
+    bit-identical to the NumPy recursion's. Log α and log β take the
+    NumPy recursion's float ops in its order, but ``exp``/``log`` are
+    StrictMath here, so a posterior can differ in its last bits.
 
-    return series_island(bars, run, StructType(bars.schema.fields + DECODE_FIELDS))
+    The fold over a series' rows: a forward ``aggregate`` appends each
+    row's log α and Viterbi δ to two flat arrays (K values per row); its
+    finish runs a backward ``aggregate`` over the row indices, last to
+    first, that prepends log β and the path, each step taking the
+    back-pointer of the state it came from (the argmax over the previous
+    δ, as the forward pass would have stored it); its finish maps each
+    row to its state, max posterior and entropy. ``aggregate`` copies its
+    accumulator every step, so the histories are flat arrays of numbers;
+    appending keeps a fold O(L²) per series. The fold is SQL text, so the
+    driver builds it in one call instead of one per expression node.
+    """
+    m = DiagGaussianHMM.from_params(params)
+    k = m.k
+    states = range(k)
+    log_var = np.log(m.vars).sum(-1)
+    norm = len(feature_cols) * _LOG2PI
+
+    # -- per row: finite features, emission log-probabilities ----------
+    x = [F.col(c).cast("double") for c in feature_cols]
+    finite = [v.isNotNull() & ~F.isnan(v) & (F.abs(v) != float("inf")) for v in x]
+
+    def log_b(j: int) -> Column:
+        dist = None
+        for d, v in enumerate(x):
+            diff = v - float(m.means[j, d])
+            term = diff * diff / float(m.vars[j, d])
+            dist = term if dist is None else dist + term
+        return F.lit(-0.5) * (dist + float(log_var[j]) + norm)
+
+    rows_in = bars.filter(reduce(operator.and_, finite)).withColumn(
+        "__log_b", F.array(*[log_b(j) for j in states])
+    )
+
+    # -- per series: the fold, as SQL over the series' rows --------------
+    rows, n = FOLD_ROWS, f"size({FOLD_ROWS})"
+    log_a = [[_num(v) for v in row] for row in m.log_a]
+    log_a_lit = _arr(_arr(row) for row in log_a)  # indexed by a path state
+
+    first = _arr(f"{_num(m.log_pi[j])} + {rows}[0].__log_b[{j}]" for j in states)
+    alpha = [
+        f"r.__log_b[{j}] + "
+        + _lse_sql([f"element_at(acc.alpha, {i - k}) + {log_a[i][j]}" for i in states])
+        for j in states
+    ]
+    delta = [
+        "greatest("
+        + ", ".join(f"element_at(acc.delta, {i - k}) + {log_a[i][j]}" for i in states)
+        + f") + r.__log_b[{j}]"
+        for j in states
+    ]
+    forward = f"""(acc, r) -> named_struct(
+        'alpha', concat(acc.alpha, {_arr(alpha)}),
+        'delta', concat(acc.delta, {_arr(delta)}))"""
+
+    # emission + log β of the row after t
+    after = _arr(f"{rows}[t + 1].__log_b[{j}] + acc.beta[{j}]" for j in states)
+    beta = _let(
+        after, "g", _arr(_lse_sql([f"{log_a[i][j]} + g[{j}]" for j in states]) for i in states)
+    )
+    came_from = [f"fw.delta[t * {k} + {i}] + {log_a_lit}[{i}][acc.path[0]]" for i in states]
+    step = f"""(acc, t) -> named_struct(
+        'll', acc.ll,
+        'beta', concat({beta}, acc.beta),
+        'path', concat(array({_argmax_sql(came_from)}), acc.path))"""
+    end = f"""named_struct(
+        'll', {_lse_sql([f"element_at(fw.alpha, {i - k})" for i in states])},
+        'beta', {_arr(["0D"] * k)},
+        'path', array({_argmax_sql([f"element_at(fw.delta, {i - k})" for i in states])}))"""
+
+    post = _arr(f"exp(fw.alpha[t * {k} + {j}] + acc.beta[t * {k} + {j}] - acc.ll)" for j in states)
+    keep = ", ".join(f"'{c}', r.`{c}`" for c in bars.columns if c != SERIES_KEY)
+    decoded_row = f"""named_struct({keep},
+        'hmm_state', acc.path[t],
+        'state_prob_max', array_max(p),
+        'state_entropy', -aggregate(p, 0D, (h, q) -> h + IF(q > 1e-12D, q * ln(q), 0D)))"""
+    label = f"acc -> transform({rows}, (r, t) -> {_let(post, 'p', decoded_row)})"
+
+    backward = f"""fw -> aggregate(
+        slice(sequence({n} - 1, 0, -1), 2, {n} - 1), {end}, {step}, {label})"""
+    decode = f"""IF({n} >= {max(min_len, 1)},
+        aggregate(slice({rows}, 2, {n} - 1),
+                  named_struct('alpha', {first}, 'delta', {first}),
+                  {forward},
+                  {backward}),
+        NULL)"""
+    return series_fold(
+        rows_in, lambda _: F.expr(decode), [*bars.columns, *(f.name for f in DECODE_FIELDS)]
+    )

@@ -11,9 +11,10 @@ Series order. A series is the rows of one ``user_id``, ordered by
 ``(ts, event_id)`` ascending with NULLs last. This module is its one
 home: ``series_window`` (Spark windows), ``SERIES_WINDOW_SQL`` (the
 oracles' window text; DuckDB orders NULLs last by default, so the bare
-text is the same order), ``series_fold`` (the in-plan folds, which see
-each series as one sorted array) and ``series_island`` (the pandas
-islands, which see each series' rows contiguous and in that order).
+text is the same order), ``series_fold`` (the in-plan folds — EWM, the
+trade simulation and the HMM decode — which see each series as one
+sorted array) and ``series_island`` (the viewer panel's pandas island,
+which sees each series' rows contiguous and in that order).
 
 Key semantic carried over from the reference (Polars `min_samples`):
 rolling statistics are NULL until the window holds n observations —
@@ -38,6 +39,9 @@ if TYPE_CHECKING:
 SERIES_KEY = "user_id"
 SERIES_ORDER = ("ts", "event_id")
 SERIES_WINDOW_SQL = f"PARTITION BY {SERIES_KEY} ORDER BY {', '.join(SERIES_ORDER)}"
+# the column holding a series' rows inside ``series_fold``, for folds
+# written as SQL text
+FOLD_ROWS = "rows"
 
 
 def series_order() -> list[Column]:
@@ -109,8 +113,8 @@ def series_fold(
     rows = F.array_sort(F.collect_list(F.struct(*order, *rest)))
     return (
         df.groupBy(SERIES_KEY)
-        .agg(rows.alias("rows"))
-        .select(SERIES_KEY, F.inline(fold(F.col("rows"))))
+        .agg(rows.alias(FOLD_ROWS))
+        .select(SERIES_KEY, F.inline(fold(F.col(FOLD_ROWS))))
         .select(*columns)
     )
 
@@ -162,26 +166,33 @@ def rolling_min_samples(agg: Column, count_col: Column, w: WindowSpec, n: int) -
     return F.when(F.count(count_col).over(frame) >= n, agg.over(frame))
 
 
-def flow_state(ewm_col: str, w: WindowSpec) -> tuple[Column, Column]:
+def with_flow_state(
+    df: DataFrame, ewm_col: str, w: WindowSpec, code: str, flow: str | None = None
+) -> DataFrame:
     """S0-S4 flow-state grammar (reference gold/event_grammar_v1.py:
-    360-404) over a smoothed column: returns ``(flow, code)`` with
-    ``flow = ewm - 10`` and the tinyint ``code`` of its quadrant — 0
-    warm-up (NULL flow), 1 positive and rising, 2 positive and falling,
-    3 non-positive and falling, 4 non-positive and rising. The slope
+    360-404) over a smoothed column: append ``code``, the tinyint
+    quadrant of ``flow = ewm - 10`` — 0 warm-up (NULL flow), 1 positive
+    and rising, 2 positive and falling, 3 non-positive and falling, 4
+    non-positive and rising — and ``flow`` itself when named. The slope
     is against the previous bar in ``w``; the first bar counts as
-    rising."""
-    flow = F.col(ewm_col) - 10.0
+    rising. The previous smoothed value is projected once, as
+    ``with_run_group`` projects its state."""
+    prev = f"__prev_{ewm_col}"
+    level = F.col(ewm_col) - 10.0
     # slope vs the previous smoothed value (the constant cancels)
-    slope = flow - (F.lag(ewm_col).over(w) - 10.0)
+    slope = level - (F.col(prev) - 10.0)
     rising = F.coalesce(slope >= 0, F.lit(True))
-    code = (
-        F.when(flow.isNull(), 0)
-        .when((flow > 0) & rising, 1)
-        .when(flow > 0, 2)
+    quadrant = (
+        F.when(level.isNull(), 0)
+        .when((level > 0) & rising, 1)
+        .when(level > 0, 2)
         .when(rising, 4)
         .otherwise(3)
     )
-    return flow, code.cast("tinyint")
+    out = df.withColumn(prev, F.lag(ewm_col).over(w)).withColumn(code, quadrant.cast("tinyint"))
+    if flow is not None:
+        out = out.withColumn(flow, level)
+    return out.drop(prev)
 
 
 def bars_since(flag: Column, w: WindowSpec) -> Column:

@@ -26,15 +26,15 @@ from pyspark.sql import functions as F
 from pipeline_mf_etl_spark.config import Settings, load_settings
 from pipeline_mf_etl_spark.operators.backtest import (
     b4_gate_columns,
-    entry_signal,
     simulate_trades,
+    with_entry_signal,
     with_state_map,
 )
 from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
 from pipeline_mf_etl_spark.operators.windows import (
-    flow_state,
     quality_flags,
     series_window,
+    with_flow_state,
 )
 from pipeline_mf_etl_spark.sources.readers import load_table
 from pipeline_mf_etl_spark.sources.writers import (
@@ -80,9 +80,9 @@ def gold_layer(silver: DataFrame, s: Settings) -> DataFrame:
     )
     df = ewm_smooth(valid, "value", s.indicators.ewm_span, "ewm")
     w = series_window()
-    df = df.withColumn("flow_state_code", flow_state("ewm", w)[1])
+    df = with_flow_state(df, "ewm", w, "flow_state_code")
     # bronze upper-cases event types
-    return with_state_map(df, upper=True).withColumn("signal", entry_signal(w))
+    return with_entry_signal(with_state_map(df, upper=True), w)
 
 
 def research_layer(gold: DataFrame) -> DataFrame:

@@ -21,8 +21,8 @@ from pipeline_mf_etl_spark.functions.core import safe_div
 from pipeline_mf_etl_spark.operators.backtest import (
     STATE_MAP_SQL,
     b4_gate_columns,
-    entry_signal,
     simulate_trades,
+    with_entry_signal,
     with_state_map,
 )
 from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
@@ -49,7 +49,7 @@ def _mapped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _with_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B5 state_transition_entry signals over the mapped bars."""
-    return _mapped(spark, sf_dir).withColumn("signal", entry_signal(series_window()))
+    return with_entry_signal(_mapped(spark, sf_dir), series_window())
 
 
 # SQL twin of _with_signals, shared by the b5/b7/b8 oracles.

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pipeline_mf_etl_spark.functions.core import safe_div
 from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
 from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
-from pipeline_mf_etl_spark.operators.windows import bars_since, flow_state, series_window
+from pipeline_mf_etl_spark.operators.windows import bars_since, series_window, with_flow_state
 from pipeline_mf_etl_spark.queries.registry import query
 
 
@@ -144,12 +144,11 @@ def w3_ewm_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f1_flow_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S0-S4 flow-state coding: warmup / rising-positive / falling-positive /
     falling-negative / rising-negative quadrants of the smoothed measure."""
-    flow, code = flow_state("ewm_10", series_window())
-    return _ewm(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        F.round(flow, 6).alias("flow"),
-        code.alias("flow_state_code"),
+    states = with_flow_state(
+        _ewm(spark, sf_dir), "ewm_10", series_window(), "flow_state_code", "flow"
+    )
+    return states.select(
+        "event_id", "user_id", F.round("flow", 6).alias("flow"), "flow_state_code"
     )
 
 

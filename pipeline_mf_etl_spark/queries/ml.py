@@ -463,20 +463,17 @@ def m6_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M9-M11: Gaussian HMM — driver fit on capped sequence sample, broadcast
-# distributed Viterbi/posterior decode (reference research_hmm/
-# sequence_builder.py:25-108, hmm_model.py:29-98, decode.py:57-157).
+# M9-M11: Gaussian HMM — driver fit on a capped sequence sample, then an
+# in-plan Viterbi/posterior decode fold with the parameters as literals
+# (reference research_hmm/sequence_builder.py:25-108, hmm_model.py:29-98,
+# decode.py:57-157).
 # ---------------------------------------------------------------------------
-# Memo of (applicationId, export tag) -> (producing sf_dir, path). The
-# value holds the PATH, not the DataFrame: a cached frame pins the file
-# listing it was created with, so any rewrite of the export (e.g.
-# another harness process) would break collects with FILE_NOT_EXIST;
-# re-reading on every hit stays robust while still skipping the
-# expensive fit + decode + write. Keyed by the export module's _tag
-# (basename + path hash — the SAME tag the on-disk path uses; a bare
-# basename key once aliased to a directory that never existed and
-# broke the v4 cache-hit read), so a hit always points at the
-# directory export_frame actually wrote.
+# Memo of (applicationId, export tag) -> the sf_dir that was exported.
+# A hit re-reads the export rather than holding a DataFrame: a cached
+# frame pins the file listing it was created with, so a rewrite of the
+# export by another process would break its collects with
+# FILE_NOT_EXIST. The key is the export module's _tag, the same tag the
+# on-disk path uses, so a hit reads the directory export_frame wrote.
 _HMM_EXPORT_CACHE: dict[tuple[str, str], str] = {}
 
 

@@ -459,7 +459,7 @@ def v2_viewer_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice at scale."""
     from pipeline_mf_etl_spark.operators.backtest import (
         b4_gate_columns,
-        entry_signal,
+        with_entry_signal,
         with_state_map,
     )
     from pipeline_mf_etl_spark.queries.backtest import _S
@@ -477,7 +477,7 @@ def v2_viewer_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dollar_vol"
         ),
     )
-    sig = base.withColumn("signal", entry_signal(series_window()))
+    sig = with_entry_signal(base, series_window())
     gated = b4_gate_columns(sig, _S)
     overlay = (
         ev.select("user_id")

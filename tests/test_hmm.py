@@ -1,12 +1,14 @@
 """HMM core invariants (SURVEY.md §5): EM log-likelihood monotonicity,
-posterior normalization, sequence alignment, determinism, and the
-batched kernel pinned against a per-series reference recursion."""
+posterior normalization, sequence alignment, determinism, the batched
+fit kernel and the in-plan decode fold pinned against a per-series
+reference recursion."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.operators import hmm
 from pipeline_mf_etl_spark.operators.hmm import DiagGaussianHMM, decode_distributed
@@ -39,6 +41,17 @@ def ragged():
             s.append(s[-1] if rng.random() < 0.9 else int(rng.integers(0, 3)))
         seqs.append(mu[s] + rng.normal(0, 0.4, (n, 2)))
     return seqs
+
+
+_BARS = "user_id long, event_id long, ts long, value double, f0 double, f1 double"
+
+
+def _series_rows(seqs):
+    """``_BARS`` rows of one user per ``[T, 2]`` series, in time order."""
+    rows = []
+    for u, x in enumerate(seqs):
+        rows += [(u, 1000 * u + t, t, 0.0, *x[t].tolist()) for t in range(len(x))]
+    return rows
 
 
 # -- per-series reference: one recursion per series, one step at a time --
@@ -137,14 +150,21 @@ def test_loglik_monotone(toy):
     assert all(b >= a - 1e-6 for a, b in zip(ll, ll[1:])), ll
 
 
-def test_posteriors_normalized_and_aligned(toy):
+def test_posteriors_normalized_and_aligned(spark, toy):
+    """Every bar decodes once, to a state of the model; the largest
+    posterior and the entropy are those of a distribution over K
+    states."""
     m = DiagGaussianHMM(n_states=3, n_iter=15).fit(toy)
-    paths, posts = m.decode(toy[:3])
-    for x, path, post in zip(toy, paths, posts):
-        assert post.shape == (len(x), 3)
-        np.testing.assert_allclose(post.sum(axis=1), 1.0, atol=1e-9)
-        assert path.shape == (len(x),)
-        assert set(path) <= {0, 1, 2}
+    rows = _series_rows(toy[:3])
+    got = decode_distributed(
+        spark.createDataFrame(rows, _BARS), m.to_params(), ["f0", "f1"]
+    ).toPandas()
+    assert sorted(got["event_id"]) == sorted(r[1] for r in rows)
+    assert set(got["hmm_state"]) <= {0, 1, 2}
+    assert (got["state_prob_max"] >= 1 / 3 - 1e-12).all()
+    assert (got["state_prob_max"] <= 1 + 1e-12).all()
+    assert (got["state_entropy"] >= -1e-12).all()
+    assert (got["state_entropy"] <= np.log(3) + 1e-12).all()
 
 
 def test_deterministic(toy):
@@ -161,20 +181,18 @@ def test_recovers_separated_states(toy):
     assert mu0[0] < -0.5 and abs(mu0[1]) < 0.5 and mu0[2] > 1.0
 
 
-@pytest.mark.parametrize("block_cells", [hmm._BLOCK_CELLS, 160])
-def test_batched_decode_matches_reference(ragged, monkeypatch, block_cells):
-    """Ragged lengths in one block, and (160 cells) split over several
-    blocks: Viterbi paths equal, posteriors within 1e-12 of the
-    per-series recursion."""
-    monkeypatch.setattr(hmm, "_BLOCK_CELLS", block_cells)
+def test_batched_decode_matches_reference(spark, ragged):
+    """Series of 1, 2, 20 and 150 bars through the decode fold: Viterbi
+    paths equal, posteriors within 1e-12 of the per-series recursion."""
     m = DiagGaussianHMM(n_states=3, n_iter=10).fit(ragged)
-    paths, posts = m.decode(ragged)
-    for x, path, post in zip(ragged, paths, posts):
-        np.testing.assert_array_equal(path, _ref_viterbi(m, x))
-        np.testing.assert_allclose(post, _ref_posteriors(m, x), rtol=0, atol=1e-12)
+    _decode_matches_reference(spark, m, _series_rows(ragged), min_len=1)
 
 
-def test_batched_fit_matches_reference(ragged):
+@pytest.mark.parametrize("block_cells", [hmm._BLOCK_CELLS, 160])
+def test_batched_fit_matches_reference(ragged, monkeypatch, block_cells):
+    """Ragged lengths in one block, and (160 cells) split over several
+    blocks: the fit equals the per-series E-step's."""
+    monkeypatch.setattr(hmm, "_BLOCK_CELLS", block_cells)
     m = DiagGaussianHMM(n_states=3, n_iter=25).fit(ragged)
     ref = _ref_fit(ragged, n_iter=25)
     assert len(m.loglik_path) == len(ref.loglik_path)
@@ -192,34 +210,28 @@ def test_fit_rejects_empty_sample():
         DiagGaussianHMM().fit(short, min_len=20)
 
 
-def test_decode_distributed_matches_per_user_reference(spark, ragged):
-    """Several users per partition, users below min_len, NaN features in
-    the middle of a series; every kept row keeps its columns and decodes
-    as its user's per-series reference."""
-    m = DiagGaussianHMM(n_states=3, n_iter=10).fit(ragged)
-    rng = np.random.default_rng(3)
-    rows = []
-    for uid, n in enumerate([30, 4, 60, 25, 3, 45, 21, 80, 20], start=1):
-        x = rng.normal(0, 1, (n, 2))
-        if n >= 20 and n != 30:
-            x[n // 2, 0] = np.nan  # a gap inside the series: 21 keeps 20 bars, 20 drops
-        rows += [(uid, 1000 * uid + t, t, float(t), *x[t]) for t in range(n)]
-    pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "value", "f0", "f1"])
-    bars = spark.createDataFrame(pdf.sample(frac=1, random_state=0)).repartition(3)
+def _decode_matches_reference(spark, m, rows, min_len):
+    """Decode ``rows`` (``_BARS``) shuffled over three partitions into
+    two series partitions; every kept row keeps its columns and decodes
+    as its user's per-series reference over the user's finite rows in
+    series order. Returns the decoded frame."""
+    pdf = pd.DataFrame(rows, columns=[f.split()[0] for f in _BARS.split(", ")])
+    bars = spark.createDataFrame(rows, _BARS).orderBy(F.rand(0)).repartition(3)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        got = (
-            decode_distributed(bars, m.to_params(), ["f0", "f1"], min_len=20)
-            .toPandas()
-            .set_index("event_id")
-        )
+        decoded = decode_distributed(bars, m.to_params(), ["f0", "f1"], min_len=min_len)
+        got = decoded.toPandas().set_index("event_id")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert [(f.name, f.dataType) for f in decoded.schema] == [
+        (f.name, f.dataType) for f in [*bars.schema, *hmm.DECODE_FIELDS]
+    ]
     expect_ids = []
     for uid, g in pdf.groupby("user_id"):
+        g = g.sort_values(["ts", "event_id"], na_position="last")
         g = g[np.isfinite(g[["f0", "f1"]].to_numpy()).all(axis=1)]
-        if len(g) < 20:
+        if len(g) < min_len:
             assert not got.index.isin(g["event_id"]).any()
             continue
         x = g[["f0", "f1"]].to_numpy()
@@ -227,9 +239,44 @@ def test_decode_distributed_matches_per_user_reference(spark, ragged):
         r = got.loc[g["event_id"]]
         assert (r["user_id"] == uid).all()
         np.testing.assert_array_equal(r["value"], g["value"])
+        np.testing.assert_array_equal(r["ts"].isna(), g["ts"].isna())
         np.testing.assert_array_equal(r["hmm_state"], _ref_viterbi(m, x))
         np.testing.assert_allclose(r["state_prob_max"], post.max(axis=1), rtol=0, atol=1e-12)
         plogp = np.where(post > 1e-12, post * np.log(np.maximum(post, 1e-300)), 0.0)
         np.testing.assert_allclose(r["state_entropy"], -plogp.sum(axis=1), rtol=0, atol=1e-12)
         expect_ids += list(g["event_id"])
     assert sorted(got.index) == sorted(expect_ids)
+    return got
+
+
+def test_decode_distributed_matches_per_user_reference(spark, ragged):
+    """Several users per partition, users below min_len, NaN features in
+    the middle of a series; ±inf and NULL features, a NULL-ts bar, series
+    of exactly min_len and min_len - 1 bars, one 2,000-bar series (the
+    fold appends per row, O(L²)); and an input whose every series is
+    dropped."""
+    m = DiagGaussianHMM(n_states=3, n_iter=10).fit(ragged)
+    rng = np.random.default_rng(3)
+    rows = []
+    for uid, n in enumerate([30, 4, 60, 25, 3, 45, 21, 80, 20], start=1):
+        x = rng.normal(0, 1, (n, 2))
+        if n >= 20 and n != 30:
+            x[n // 2, 0] = np.nan  # a gap inside the series: 21 keeps 20 bars, 20 drops
+        rows += [(uid, 1000 * uid + t, t, float(t), *x[t].tolist()) for t in range(n)]
+
+    def series(uid, n):
+        x = rng.normal(0, 1, (n, 2))
+        return [[uid, 1000 * uid + t, t, float(t), *x[t].tolist()] for t in range(n)]
+
+    legs = {10: series(10, 30), 11: series(11, 30), 12: series(12, 26), 13: series(13, 20)}
+    legs[10][5][4], legs[10][9][5] = float("inf"), float("-inf")  # ±inf: 28 bars
+    legs[11][7][5] = None  # a NULL feature: 29 bars
+    legs[12][3][2] = None  # a NULL ts: the bar decodes last of its series
+    legs[14] = series(14, 19)  # min_len - 1 bars
+    legs[15] = series(15, 2000)
+    rows += [tuple(r) for leg in legs.values() for r in leg]
+    got = _decode_matches_reference(spark, m, rows, min_len=20)
+    assert np.isnan(got.loc[12003, "ts"])  # decoded, as its series' last bar
+
+    short = [r for r in rows if r[0] in (2, 5, 14)]
+    assert _decode_matches_reference(spark, m, short, min_len=20).empty

@@ -106,6 +106,38 @@ def test_medallion_layers_start_no_python_worker(medallion_plans):
     assert gold.count("Exchange hashpartitioning(user_id") == 1, gold
 
 
+def test_gold_layer_evaluates_each_lag_once(medallion_plans):
+    """The flow-state slope reads the previous smoothed value and the
+    entry signal the previous event type. Each lag is projected once and
+    read from there: a ``lag`` written into each comparison is evaluated
+    once per use."""
+    windows = [line for line in medallion_plans["gold"].splitlines() if "Window [" in line]
+    for lag in ("lag(ewm", "lag(event_type"):
+        assert max(line.count(lag) for line in windows) == 1, (lag, windows)
+
+
+def test_hmm_decode_starts_no_python_worker(spark):
+    """The HMM decode is an in-plan series fold: its plan holds no
+    Python operator."""
+    from pipeline_mf_etl_spark.operators.hmm import decode_distributed
+    from pipeline_mf_etl_spark.queries.ml import _hmm_bars
+    from pipeline_mf_etl_spark.sources.readers import load_table
+    from tests.conftest import SF_SMOKE
+
+    params = {
+        "k": 2,
+        "log_pi": [-0.7, -0.7],
+        "log_a": [[-0.1, -2.3], [-2.3, -0.1]],
+        "means": [[0.0, 0.0], [0.1, 0.1]],
+        "vars": [[1.0, 1.0], [2.0, 2.0]],
+    }
+    bars = _hmm_bars(load_table(spark, SF_SMOKE, "events"))
+    decoded = decode_distributed(bars, params, ["ret_1", "abs_ret_1"])
+    plan = decoded._jdf.queryExecution().executedPlan().toString()
+    python_ops = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython")
+    assert [op for op in python_ops if op in plan] == [], plan
+
+
 def test_window_stack_single_shuffle(spark):
     """All rolling stats over one series key share a single hash
     exchange — each extra exchange is a full re-shuffle of the fact

@@ -4,9 +4,8 @@ Each case stages seeded row permutations of an sf0.1 table under
 ``tmp_path`` (split into several files, so the scan also runs as
 several tasks), runs the query on every copy at 1 and at 4 shuffle
 partitions, and asserts the collected rows are identical, unrounded.
-For v4 the partitioning also decides which users share an HMM decode
-block, so this is the check that the batched kernel decodes a series
-independently of its block.
+For v4 this checks that the HMM decode fold sees each series' rows in
+series order whatever order they arrive in.
 sf0.1 rather than sf0.01: with 10x the rows per group, a task-order
 double sum drifts far enough to cross a 2-dp rounding boundary (a1's
 ``sum_disc_price`` did), where at sf0.01 the rounding still hides it.

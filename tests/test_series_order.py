@@ -3,7 +3,7 @@ ascending with NULLs last, defined once in ``operators/windows.py``.
 
 One frame drives every check: interleaved series spread over several
 partitions, a ``ts`` tie broken by ``event_id`` and a NULL ``ts``. The
-Spark windows, the DuckDB oracle text, the pandas islands, the trade
+Spark windows, the DuckDB oracle text, the pandas island, the trade
 simulator, the viewer panel and the HMM decode must all see the NULL
 ``ts`` bar last in its series. A drift guard keeps new copies of the
 order out of the engine.
@@ -155,9 +155,10 @@ def test_viewer_panel_is_pinned(spark, events, tmp_path):
 
 def test_decode_puts_null_ts_last(spark, three_partitions):
     """(d) ``decode_distributed`` decodes the NULL-ts bar as the last bar
-    of its series: the series decodes as the one-series kernel does
-    over its rows in series order."""
+    of its series: the series decodes as the per-series reference
+    recursion does over its rows in series order."""
     from pipeline_mf_etl_spark.operators.hmm import DiagGaussianHMM, decode_distributed
+    from tests.test_hmm import _ref_posteriors, _ref_viterbi
 
     rng = np.random.default_rng(11)
     t0 = dt.datetime(2024, 1, 1)
@@ -178,9 +179,11 @@ def test_decode_puts_null_ts_last(spark, three_partitions):
     assert series["event_id"].iloc[-1] == null_id
     ordered = pdf[pdf["user_id"] == 2].sort_values(["ts", "event_id"], na_position="last")
     assert list(series["event_id"]) == list(ordered["event_id"])
-    paths, posts = model.decode([ordered[["f0", "f1"]].to_numpy()])
-    np.testing.assert_array_equal(series["hmm_state"], paths[0])
-    np.testing.assert_allclose(series["state_prob_max"], posts[0].max(axis=1), rtol=0, atol=1e-12)
+    x = ordered[["f0", "f1"]].to_numpy()
+    np.testing.assert_array_equal(series["hmm_state"], _ref_viterbi(model, x))
+    np.testing.assert_allclose(
+        series["state_prob_max"], _ref_posteriors(model, x).max(axis=1), rtol=0, atol=1e-12
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -188,10 +191,7 @@ def test_decode_puts_null_ts_last(spark, three_partitions):
 # ---------------------------------------------------------------------------
 _ROOT = Path(pipeline_mf_etl_spark.__file__).parent
 _ORACLE_WINDOW = "PARTITION BY user_id ORDER BY ts, event_id"
-_ISLAND_MODULES = (
-    "operators/hmm.py",
-    "queries/viewer.py",
-)
+_ISLAND_MODULES = ("queries/viewer.py",)
 
 
 def _trees():
@@ -227,9 +227,9 @@ def test_series_order_has_one_home():
     """Outside ``operators/windows.py`` nothing restates the series
     order: no hand-built ``Window.partitionBy("user_id")...orderBy("ts",
     ...)``, no ``sortWithinPartitions("user_id", ...)``, no string
-    holding the oracle window text. Only the HMM decode and the viewer
-    panel run per-series pandas islands; they reach ``mapInPandas`` only
-    through ``series_island`` and never re-sort in pandas."""
+    holding the oracle window text. Only the viewer panel runs a
+    per-series pandas island; it reaches ``mapInPandas`` only through
+    ``series_island`` and never re-sorts in pandas."""
     found = []
     for rel, tree in _trees():
         found += [

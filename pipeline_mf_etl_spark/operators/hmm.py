@@ -208,9 +208,9 @@ class DiagGaussianHMM:
 
 
 DECODE_FIELDS = [
-    StructField("hmm_state", IntegerType(), False),
-    StructField("state_prob_max", DoubleType(), False),
-    StructField("state_entropy", DoubleType(), False),
+    StructField("hmm_state", IntegerType()),
+    StructField("state_prob_max", DoubleType()),
+    StructField("state_entropy", DoubleType()),
 ]
 
 

@@ -227,6 +227,7 @@ def _decode_matches_reference(spark, m, rows, min_len):
     assert [(f.name, f.dataType) for f in decoded.schema] == [
         (f.name, f.dataType) for f in [*bars.schema, *hmm.DECODE_FIELDS]
     ]
+    assert got[[f.name for f in hmm.DECODE_FIELDS]].notna().all().all()
     expect_ids = []
     for uid, g in pdf.groupby("user_id"):
         g = g.sort_values(["ts", "event_id"], na_position="last")

@@ -181,9 +181,13 @@ def test_recovers_separated_states(toy):
     assert mu0[0] < -0.5 and abs(mu0[1]) < 0.5 and mu0[2] > 1.0
 
 
-def test_batched_decode_matches_reference(spark, ragged):
-    """Series of 1, 2, 20 and 150 bars through the decode fold: Viterbi
-    paths equal, posteriors within 1e-12 of the per-series recursion."""
+@pytest.mark.parametrize("block_cells", [hmm._BLOCK_CELLS, 160])
+def test_batched_decode_matches_reference(spark, ragged, monkeypatch, block_cells):
+    """Series of 1, 2, 20 and 150 bars through the decode fold, for a
+    model fitted with the series in one block and (160 cells) split over
+    several: Viterbi paths equal, posteriors within 1e-12 of the
+    per-series recursion."""
+    monkeypatch.setattr(hmm, "_BLOCK_CELLS", block_cells)
     m = DiagGaussianHMM(n_states=3, n_iter=10).fit(ragged)
     _decode_matches_reference(spark, m, _series_rows(ragged), min_len=1)
 

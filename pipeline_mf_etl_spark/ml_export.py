@@ -7,7 +7,7 @@ globally, and writes one dataset file. At 100 TB none of that survives:
 here the same dataset is ONE distributed composition —
 
 * feature families come from the already-certified query surface
-  (viewer panel island, flow states, flow activity, run lengths) and
+  (viewer panel, flow states, flow activity, run lengths) and
   are stacked with equi-joins on the (event_id, user_id) key, so every
   join is a co-partitioned hash join, never a cross product;
 * date filters push down to the scan where the column allows it;
@@ -66,10 +66,6 @@ def build_ml_dataset(
     from pipeline_mf_etl_spark.queries.viewer import _panel_frame
     from pipeline_mf_etl_spark.queries.windows import w6_run_length
 
-    def _nn(name: str):
-        c = F.col(name)
-        return F.when(~F.isnan(c), c)
-
     key = ["event_id", "user_id"]
     pan = _panel_frame(spark, sf_dir).select(
         "event_id",
@@ -77,17 +73,22 @@ def build_ml_dataset(
         "ts",
         "close",
         "volume",
-        _nn("tmf_raw").alias("tmf_raw"),
-        _nn("tti_raw").alias("tti_raw"),
-        F.round(_nn("tmf_slope_1"), 6).alias("tmf_slope_1"),
-        F.round(_nn("tmf_slope_5"), 6).alias("tmf_slope_5"),
-        F.round(_nn("tti_slope_1"), 6).alias("tti_slope_1"),
-        F.round(_nn("tti_slope_5"), 6).alias("tti_slope_5"),
-        F.round(_nn("ret_1"), 6).alias("ret_1"),
-        F.round(_nn("ret_5"), 6).alias("ret_5"),
-        F.round(_nn("range_pct"), 6).alias("range_pct"),
-        F.round(_nn("dollar_vol"), 6).alias("dollar_vol"),
-        F.round(_nn("dv20"), 6).alias("dollar_vol_20"),
+        "tmf_raw",
+        "tti_raw",
+        *[
+            F.round(c, 6).alias(c)
+            for c in (
+                "tmf_slope_1",
+                "tmf_slope_5",
+                "tti_slope_1",
+                "tti_slope_5",
+                "ret_1",
+                "ret_5",
+                "range_pct",
+                "dollar_vol",
+            )
+        ],
+        F.round("dv20", 6).alias("dollar_vol_20"),
     )
     flow = f1_flow_states(spark, sf_dir).select(*key, "flow", "flow_state_code")
     act = f2_flow_activity(spark, sf_dir).select(

@@ -11,10 +11,9 @@ Series order. A series is the rows of one ``user_id``, ordered by
 ``(ts, event_id)`` ascending with NULLs last. This module is its one
 home: ``series_window`` (Spark windows), ``SERIES_WINDOW_SQL`` (the
 oracles' window text; DuckDB orders NULLs last by default, so the bare
-text is the same order), ``series_fold`` (the in-plan folds — EWM, the
-trade simulation and the HMM decode — which see each series as one
-sorted array) and ``series_island`` (the viewer panel's pandas island,
-which sees each series' rows contiguous and in that order).
+text is the same order) and ``series_fold`` (the in-plan folds — EWM,
+the trade simulation and the HMM decode — which see each series as one
+sorted array).
 
 Key semantic carried over from the reference (Polars `min_samples`):
 rolling statistics are NULL until the window holds n observations —
@@ -25,16 +24,9 @@ silver/features_base.py:172-198).
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
-from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-from pipeline_mf_etl_spark.functions.core import island_repartition
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 SERIES_KEY = "user_id"
 SERIES_ORDER = ("ts", "event_id")
@@ -62,33 +54,6 @@ def sort_series(df: DataFrame) -> DataFrame:
     return df.sortWithinPartitions(SERIES_KEY, *series_order())
 
 
-def series_island(
-    df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame | None], schema: StructType
-) -> DataFrame:
-    """Run ``fn`` once per island partition on a pandas frame holding
-    whole series, each contiguous, keys ascending, rows in series order.
-
-    One Arrow exchange per partition, not per series: with millions of
-    short series, per-group ``applyInPandas`` pays one per series. ``fn``
-    returns the partition's output frame (``schema``) or None; empty
-    partitions never reach it."""
-
-    def run(batches):
-        import pandas as pd
-
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        if pdf.empty:
-            return
-        out = fn(pdf)
-        if out is not None:
-            yield out
-
-    return sort_series(island_repartition(df, SERIES_KEY)).mapInPandas(run, schema)
-
-
 def series_fold(
     df: DataFrame, fold: Callable[[Column], Column], columns: Sequence[str]
 ) -> DataFrame:
@@ -99,7 +64,10 @@ def series_fold(
     ``fold`` receives the series' rows as structs in series order. Each
     struct holds every column of ``df`` but the series key; each
     ``SERIES_ORDER`` column is preceded by its NULL flag
-    (``__<name>_null``), so the plain struct sort puts NULLs last.
+    (``__<name>_null``), so the plain struct sort puts NULLs last. The
+    sort is ``sort_array``, the struct type's own ordering:
+    ``array_sort`` gives the same order through an interpreted
+    comparator lambda.
     ``fold`` returns an array of output structs; their fields, plus the
     series key, are projected to ``columns`` in that order (the schema
     and any digest of the output depend on it).
@@ -110,7 +78,7 @@ def series_fold(
     orderable (no maps), since whole structs are compared on ties."""
     order = [c for k in SERIES_ORDER for c in (F.col(k).isNull().alias(f"__{k}_null"), k)]
     rest = [c for c in df.columns if c != SERIES_KEY and c not in SERIES_ORDER]
-    rows = F.array_sort(F.collect_list(F.struct(*order, *rest)))
+    rows = F.sort_array(F.collect_list(F.struct(*order, *rest)))
     return (
         df.groupBy(SERIES_KEY)
         .agg(rows.alias(FOLD_ROWS))

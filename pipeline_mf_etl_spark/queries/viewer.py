@@ -21,11 +21,10 @@ collapse: trh/trl use prev-close only and the first bar defines
 ``prev_close = close`` (tr = 0) instead of the reference's leading-NaN
 row — documented proxy deviation, applied identically on both engines.
 
-Spark-first shape: the four RMAs AND every per-series sequential
-column are ONE ``series_island`` pass (``_panel_frame``) running
-pandas' ``GroupBy.ewm``, the loop ``operators/ewm.py``'s fold replays;
-everything downstream is window/CASE algebra that Catalyst pipelines
-into the same single shuffle. The DuckDB oracles reuse the
+Spark-first shape: the four RMAs are ``ewm_smooth`` series folds and
+every other per-series column is a JVM window (``_panel_frame``), all
+on one series shuffle; everything downstream is window/CASE algebra
+that Catalyst pipelines into the same shuffle. The DuckDB oracles reuse the
 block-rescaled exact EWM expansion from ``queries/flow.py`` (naive
 closed forms overflow double past ~7000 bars), generated per smoothed
 column by ``_ewm_chain``.
@@ -38,11 +37,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
-from pipeline_mf_etl_spark.functions.core import exact_ratio_round6_sql
+from pipeline_mf_etl_spark.functions.core import (
+    cents,
+    exact_ratio_round6,
+    exact_ratio_round6_sql,
+)
+from pipeline_mf_etl_spark.operators.ewm import ewm_smooth
 from pipeline_mf_etl_spark.operators.windows import SERIES_WINDOW_SQL as _W
-from pipeline_mf_etl_spark.operators.windows import series_island, series_window
+from pipeline_mf_etl_spark.operators.windows import rolling_min_samples, series_window
 from pipeline_mf_etl_spark.queries.registry import query
 from pipeline_mf_etl_spark.sources.readers import load_table
 
@@ -154,148 +157,97 @@ _PANEL_CTE = f"""
 
 
 def _panel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of the ``panel`` CTE, computed in ONE ``series_island``
-    pass: bars → Twiggs terms → four RMAs → rounded tmf_raw/tti_raw →
-    every per-series sequential column the viewer panel needs (crosses,
-    returns, slopes, 20-bar rolling dollar-volume median).
+    """Spark twin of the ``panel`` CTE plus every per-series column the
+    viewer needs: bars → Twiggs terms → four RMAs → rounded
+    tmf_raw/tti_raw → crosses, returns, slopes and the 20-bar rolling
+    dollar-volume median. Missing values are SQL NULL.
 
-    The per-series columns are computed inside the island, not as JVM
-    windows after it: mapInPandas re-keys attribute ids, so Catalyst
-    cannot prove the island output is still hash-partitioned by user_id
-    and would insert a SECOND full shuffle before a window stage.
-    Folding them into the island (all vectorized pandas groupby ops)
-    keeps the plan at exactly one exchange — at 100 TB that halves the
-    shuffled bytes of the heaviest viewer query. NaN round-trips as
-    Double.NaN, not SQL NULL; v1's final projection normalizes.
+    One series shuffle: a window stage for ``prev_close``, the four RMAs
+    as ``ewm_smooth`` folds (pandas' ``ewm(alpha=1/21, adjust=False,
+    min_periods=21)`` loop, replayed step for step), then one window
+    stage for the lags and the rolling median. The folds group on the
+    series key, so neither they nor the second stage shuffle again.
+    GREATEST/LEAST skip NULL as DuckDB's do, so a NULL-valued bar yields
+    tr = 0 on both engines.
 
-    tmf_raw/tti_raw are rounded to 6 dp INSIDE the island (``+ 0.0``
-    clears IEEE -0.0) because every downstream flag/slope derives from
-    the rounded values on both engines (reference indicators_twiggs.py:
-    31-81 via compute_ticker.py:197-242).
+    tmf_raw/tti_raw are rounded to 6 dp here (``+ 0.0`` clears IEEE
+    -0.0) because every downstream flag/slope derives from the rounded
+    values on both engines (reference indicators_twiggs.py:31-81 via
+    compute_ticker.py:197-242). The RMA ratios carry full double
+    precision, so none sits on a 6-dp tie that the engines' ROUNDs
+    could break apart.
 
-    Exactness: ret_1/ret_5/range_pct are ratios of 2-dp prices that can
-    land exactly on a 7th-decimal .5 tie, which different ROUND
+    ret_1/ret_5/range_pct are ratios of 2-dp prices that can land
+    exactly on a 7th-decimal .5 tie, which different ROUND
     implementations break apart; both engines compute them in exact
-    integer cents (functions/core.exact_ratio_round6 and its numpy
-    twin inside the island). The RMA chains never tie at 6 dp
-    (k*10^-6 midpoints are not exactly representable, per the np.round
-    note below), so v1 is hash-exact with no tolerance."""
-    ev = load_table(spark, sf_dir, "events")
-    bars = ev.select(
+    integer cents (functions/core.exact_ratio_round6), so v1 is
+    hash-exact with no tolerance."""
+    w = series_window()
+    close, prev_raw, tr = F.col("close"), F.col("__prev"), F.col("tr")
+    # a NaN close is missing, as a NULL one is
+    value = F.nanvl("value", F.lit(None).cast("double"))
+    bars = load_table(spark, sf_dir, "events").select(
         "event_id",
         "ts",
         "user_id",
-        F.col("value").alias("close"),
+        value.alias("close"),
         F.coalesce(F.get_json_object("props", "$.k").cast("double"), F.lit(0.0)).alias(
             "volume"
         ),
+        F.lag(value).over(w).alias("__prev"),
     )
-    out_doubles = (
+    prev = F.coalesce(prev_raw, close)
+    hi, lo = F.greatest(close, prev), F.least(close, prev)
+    core = (2.0 * close - hi - lo) / F.greatest(tr, F.lit(_EPS))
+    df = bars.withColumns({"prev_close": prev, "tr": hi - lo}).withColumns(
+        {"adv": core * F.col("volume"), "advv": core * tr}
+    )
+    rmas = {"tmf_num": "adv", "tmf_den": "volume", "tti_num": "advv", "tti_den": "tr"}
+    for out, value in rmas.items():
+        df = ewm_smooth(df, value, _N, out)
+    ratio = {
+        f"{p}_raw": F.col(f"{p}_num") / F.greatest(f"{p}_den", F.lit(_EPS))
+        for p in ("tmf", "tti")
+    }
+    df = df.withColumns({c: F.round(r, 6) + 0.0 for c, r in ratio.items()})
+    # each lag projected once: the slopes, crosses and exact ratios
+    # below read them more than once
+    lags = {"__close_5": F.lag("close", 5).over(w)}
+    for p in ("tmf", "tti"):
+        lags |= {f"__{p}_{k}": F.lag(f"{p}_raw", k).over(w) for k in (1, 5)}
+    df = df.withColumns(lags).withColumn("dollar_vol", close * F.col("volume"))
+    prev_5 = F.col("__close_5")
+    return df.select(
+        "event_id",
+        "ts",
+        "user_id",
+        "close",
+        "volume",
         "prev_close",
         "tr",
         "adv",
         "advv",
         "tmf_raw",
         "tti_raw",
-        "ret_1",
-        "ret_5",
-        "tmf_slope_1",
-        "tmf_slope_5",
-        "tti_slope_1",
-        "tti_slope_5",
-        "range_pct",
+        exact_ratio_round6(cents(close) - cents(prev_raw), cents(prev_raw)).alias("ret_1"),
+        exact_ratio_round6(cents(close) - cents(prev_5), cents(prev_5)).alias("ret_5"),
+        *[
+            (F.col(f"{p}_raw") - F.col(f"__{p}_{k}")).alias(f"{p}_slope_{k}")
+            for p in ("tmf", "tti")
+            for k in (1, 5)
+        ],
+        exact_ratio_round6(cents(tr), cents(close)).alias("range_pct"),
         "dollar_vol",
-        "dv20",
-    )
-    schema = StructType(
-        list(bars.schema.fields)
-        + [StructField(c, DoubleType(), True) for c in out_doubles]
-        + [
-            StructField("tmf_zero_cross", BooleanType(), False),
-            StructField("tti_zero_cross", BooleanType(), False),
-        ]
-    )
-    alpha, n = _A, _N
-
-    def panel(pdf):
-        import numpy as np
-
-        g = pdf.groupby(["user_id"], sort=True)
-        close, vol = pdf["close"], pdf["volume"]
-        prev_raw = g["close"].shift(1)
-        prev = prev_raw.fillna(close)
-        # fmax/fmin ignore NaN exactly as DuckDB GREATEST/LEAST ignore
-        # NULL, so a NULL-valued bar yields tr = 0 on both engines
-        # (np.maximum would propagate NaN -> SQL NULL and hash-diverge)
-        hi, lo = np.fmax(close, prev), np.fmin(close, prev)
-        tr = hi - lo
-        core = (2.0 * close - hi - lo) / np.fmax(tr, _EPS)
-        pdf["prev_close"] = prev
-        pdf["tr"] = tr
-        pdf["adv"] = core * vol
-        pdf["advv"] = core * tr
-        g = pdf.groupby(["user_id"], sort=True)
-        sm = {
-            out: g[val].ewm(alpha=alpha, adjust=False, min_periods=n).mean().to_numpy()
-            for out, val in (
-                ("num_t", "adv"),
-                ("den_t", "volume"),
-                ("num_u", "advv"),
-                ("den_u", "tr"),
+        rolling_min_samples(
+            F.percentile("dollar_vol", 0.5), F.col("dollar_vol"), w, _DV_WIN
+        ).alias("dv20"),
+        *[
+            F.coalesce(F.signum(f"{p}_raw") != F.signum(f"__{p}_1"), F.lit(False)).alias(
+                f"{p}_zero_cross"
             )
-        }
-        # np.round on the binary double == Spark HALF_UP / DuckDB ROUND
-        # here: k·10⁻⁶ midpoints are never exactly representable, so the
-        # half-even tiebreak can't fire; + 0.0 clears -0.0.
-        pdf["tmf_raw"] = np.round(sm["num_t"] / np.fmax(sm["den_t"], _EPS), 6) + 0.0
-        pdf["tti_raw"] = np.round(sm["num_u"] / np.fmax(sm["den_u"], _EPS), 6) + 0.0
-        g = pdf.groupby(["user_id"], sort=True)
-        lag1_t, lag5_t = g["tmf_raw"].shift(1), g["tmf_raw"].shift(5)
-        lag1_u, lag5_u = g["tti_raw"].shift(1), g["tti_raw"].shift(5)
-        lag5_c = g["close"].shift(5)
-
-        def cross(cur, prv):
-            sv, sp = np.sign(cur.to_numpy()), np.sign(prv.to_numpy())
-            return (~np.isnan(sv)) & (~np.isnan(sp)) & (sv != sp)
-
-        pdf["tmf_zero_cross"] = cross(pdf["tmf_raw"], lag1_t)
-        pdf["tti_zero_cross"] = cross(pdf["tti_raw"], lag1_u)
-        # 1/5-bar returns and true-range pct in EXACT integer cents
-        # (functions/core.exact_ratio_round6's numpy twin): these
-        # ratios of 2-dp prices can land exactly on 7th-digit .5 ties,
-        # where numpy/Spark/DuckDB round the nearest double apart.
-        # Values are emitted ALREADY rounded; the final projection's
-        # 6-dp round is an idempotent no-op for them.
-        def _ratio6(numc, denc):
-            out = np.full(numc.shape, np.nan)
-            ok = (~np.isnan(numc)) & (~np.isnan(denc)) & (denc > 0)
-            n = numc[ok].astype(np.int64)
-            d = denc[ok].astype(np.int64)
-            q = (2_000_000 * np.abs(n) + d) // (2 * d)
-            out[ok] = np.where(n < 0, -q, q) / 1e6
-            return out
-
-        cc = np.round(close.to_numpy() * 100)
-        pc = np.round(prev_raw.to_numpy() * 100)
-        p5 = np.round(lag5_c.to_numpy() * 100)
-        tc = np.round(tr * 100)
-        pdf["ret_1"] = _ratio6(cc - pc, pc)
-        pdf["ret_5"] = _ratio6(cc - p5, p5)
-        pdf["tmf_slope_1"] = pdf["tmf_raw"] - lag1_t
-        pdf["tmf_slope_5"] = pdf["tmf_raw"] - lag5_t
-        pdf["tti_slope_1"] = pdf["tti_raw"] - lag1_u
-        pdf["tti_slope_5"] = pdf["tti_raw"] - lag5_u
-        pdf["range_pct"] = _ratio6(tc, cc)
-        pdf["dollar_vol"] = close * vol
-        pdf["dv20"] = (
-            pdf.groupby(["user_id"], sort=True)["dollar_vol"]
-            .rolling(_DV_WIN, min_periods=_DV_WIN)
-            .median()
-            .to_numpy()
-        )
-        return pdf[[f.name for f in schema.fields]]
-
-    return series_island(bars, panel, schema)
+            for p in ("tmf", "tti")
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -354,35 +306,31 @@ def v1_tmf_tti_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticker (compute_ticker.py:197-242). Slopes and crosses derive from
     the 6-dp-rounded RMA ratios so both engines agree exactly.
 
-    All sequential columns come out of the one-exchange panel island
-    (``_panel_frame``); this is a pure projection that rounds and
-    normalizes pandas NaN to SQL NULL."""
-
-    def _nn(name: str):
-        c = F.col(name)
-        return F.when(~F.isnan(c), c)
-
+    All sequential columns come out of ``_panel_frame``; this is a
+    projection that rounds them to 6 dp."""
     pan = _panel_frame(spark, sf_dir)
-    dv20_r = F.round(_nn("dv20"), 6)
+    dv20_r = F.round("dv20", 6)
     return pan.select(
         "event_id",
         "user_id",
-        F.round(_nn("prev_close"), 6).alias("prev_close"),
-        F.round(_nn("tr"), 6).alias("tr"),
-        F.round(_nn("adv"), 6).alias("adv"),
-        F.round(_nn("advv"), 6).alias("advv"),
-        _nn("tmf_raw").alias("tmf_raw"),
-        _nn("tti_raw").alias("tti_raw"),
+        *[F.round(c, 6).alias(c) for c in ("prev_close", "tr", "adv", "advv")],
+        "tmf_raw",
+        "tti_raw",
         "tmf_zero_cross",
         "tti_zero_cross",
-        F.round(_nn("ret_1"), 6).alias("ret_1"),
-        F.round(_nn("ret_5"), 6).alias("ret_5"),
-        F.round(_nn("tmf_slope_1"), 6).alias("tmf_slope_1"),
-        F.round(_nn("tmf_slope_5"), 6).alias("tmf_slope_5"),
-        F.round(_nn("tti_slope_1"), 6).alias("tti_slope_1"),
-        F.round(_nn("tti_slope_5"), 6).alias("tti_slope_5"),
-        F.round(_nn("range_pct"), 6).alias("range_pct"),
-        F.round(_nn("dollar_vol"), 6).alias("dollar_vol"),
+        *[
+            F.round(c, 6).alias(c)
+            for c in (
+                "ret_1",
+                "ret_5",
+                "tmf_slope_1",
+                "tmf_slope_5",
+                "tti_slope_1",
+                "tti_slope_5",
+                "range_pct",
+                "dollar_vol",
+            )
+        ],
         dv20_r.alias("dollar_vol_20"),
         F.round(F.log1p(F.greatest(dv20_r, F.lit(0.0))), 6).alias("dollar_vol_20_log"),
     )
@@ -579,18 +527,12 @@ def v3_reading_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars.
 
     Plan shape: a self-union of filtered branches would re-execute the
-    whole EWM-island lineage once per side (measured: 2 MapInPandas +
-    4 exchanges); instead the previous pivot value per side comes from
-    ``last(when(is_pivot, v))`` over rows-before-current (no filtered
-    subsequence needed) and the two sides explode out of ONE pass —
-    one island, one series shuffle."""
+    whole panel lineage once per side; instead the previous pivot value
+    per side comes from ``last(when(is_pivot, v))`` over
+    rows-before-current (no filtered subsequence needed) and the two
+    sides explode out of ONE pass — one panel, one series shuffle."""
     pan = _panel_frame(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        "ts",
-        # island NaN (EWM warm-up) -> SQL NULL so isNotNull/min/max agree
-        # with the oracle's NULL semantics
-        F.when(~F.isnan("tti_raw"), F.col("tti_raw")).alias("v"),
+        "event_id", "user_id", "ts", F.col("tti_raw").alias("v")
     )
     w = series_window()
     w5 = w.rowsBetween(-2, 2)
@@ -711,15 +653,17 @@ def v4_hmm_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = hmm_decoded_export(spark, sf_dir)
     w = series_window()
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
-    prev = F.lag("hmm_state").over(w)
     rib = d.withColumns(
         {
             "rn": F.row_number().over(w),
-            "prev_state": prev,
+            "prev_state": F.lag("hmm_state").over(w),
             "fwd_value": F.lead("value", 10).over(w),
-            "chg": (prev.isNull() | (F.col("hmm_state") != prev)).cast("int"),
         }
     )
+    # the change flag reads the projected previous state, as
+    # with_run_group does: a lag written into it is evaluated per use
+    prev = F.col("prev_state")
+    rib = rib.withColumn("chg", (prev.isNull() | (F.col("hmm_state") != prev)).cast("int"))
     # run length without a second (user_id, group) shuffle: distance to
     # the last change row, all on the one series partitioning
     last_chg = F.max(F.when(F.col("chg") == 1, F.col("rn"))).over(wc)

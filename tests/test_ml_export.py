@@ -5,6 +5,7 @@ sidecar."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
@@ -15,7 +16,7 @@ from pipeline_mf_etl_spark.ml_export import (
     build_ml_dataset,
     export_ml_dataset,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_export_writes_dataset_and_metadata(spark, tmp_path):
@@ -71,3 +72,20 @@ def test_export_join_plan_has_no_cartesian(spark):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+# recorded while the viewer panel ran as a pandas island
+_DATASET_PIN = {
+    "dtypes": "0e63643c1fb40b72f5cbb45cee360bccc7dad8f89760de9f066afb0201b6f61b",
+    "count": 7000,
+    "xor": 7957236176012560160,
+}
+
+
+def test_ml_dataset_is_pinned(spark):
+    """The stacked dataset at sf0.01: column names and types, the row
+    count and ``bit_xor`` of ``xxhash64`` over every column."""
+    ds = build_ml_dataset(spark, SF_ORACLE)
+    n, h = ds.agg(F.count("*"), F.bit_xor(F.xxhash64(*ds.columns))).first()
+    dtypes = hashlib.sha256(repr(ds.dtypes).encode()).hexdigest()
+    assert {"dtypes": dtypes, "count": n, "xor": h} == _DATASET_PIN

@@ -16,11 +16,20 @@ from pipeline_mf_etl_spark.queries import all_queries
 from tests.conftest import SF_ORACLE
 
 _QUERIES = all_queries()
+# the physical operators that start a Python worker
+_PYTHON_OPS = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _plan(spark, name: str) -> str:
-    df = _QUERIES[name].spark(spark, SF_ORACLE)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return _executed(_QUERIES[name].spark(spark, SF_ORACLE))
+
+
+def _python_ops(plan: str) -> list[str]:
+    return [op for op in _PYTHON_OPS if op in plan]
 
 
 def test_s3_scan_pushdown_and_pruning(spark):
@@ -59,8 +68,8 @@ def test_state_map_is_a_local_relation(spark, name):
 
 
 @pytest.fixture(scope="module")
-def medallion_plans(spark):
-    """The physical plan of every ``run`` layer, chained in memory."""
+def medallion_layers(spark):
+    """Every ``run`` layer, chained in memory."""
     from pipeline_mf_etl_spark.config import load_settings
     from pipeline_mf_etl_spark.pipeline import (
         backtest_layer,
@@ -77,7 +86,7 @@ def medallion_plans(spark):
     silver = silver_layer(bronze)
     gold = gold_layer(silver, s)
     trades, suppression = backtest_layer(gold, s)
-    layers = {
+    return {
         "bronze": bronze,
         "silver": silver,
         "gold": gold,
@@ -85,7 +94,12 @@ def medallion_plans(spark):
         "trades": trades,
         "suppression": suppression,
     }
-    return {k: df._jdf.queryExecution().executedPlan().toString() for k, df in layers.items()}
+
+
+@pytest.fixture(scope="module")
+def medallion_plans(medallion_layers):
+    """The physical plan of every ``run`` layer."""
+    return {k: _executed(df) for k, df in medallion_layers.items()}
 
 
 def test_gold_layer_state_map_is_a_local_relation(medallion_plans):
@@ -98,9 +112,8 @@ def test_medallion_layers_start_no_python_worker(medallion_plans):
     """EWM smoothing and the trade simulation are in-plan series folds:
     no ``run`` layer holds a Python operator. Gold's fold groups on the
     series key and its series windows reuse that exchange."""
-    python_ops = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython")
     for layer, plan in medallion_plans.items():
-        assert [op for op in python_ops if op in plan] == [], (layer, plan)
+        assert _python_ops(plan) == [], (layer, plan)
     gold = medallion_plans["gold"]
     assert gold.count("Exchange hashpartitioning") == 1, gold
     assert gold.count("Exchange hashpartitioning(user_id") == 1, gold
@@ -133,9 +146,22 @@ def test_hmm_decode_starts_no_python_worker(spark):
     }
     bars = _hmm_bars(load_table(spark, SF_SMOKE, "events"))
     decoded = decode_distributed(bars, params, ["ret_1", "abs_ret_1"])
-    plan = decoded._jdf.queryExecution().executedPlan().toString()
-    python_ops = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython")
-    assert [op for op in python_ops if op in plan] == [], plan
+    plan = _executed(decoded)
+    assert _python_ops(plan) == [], plan
+
+
+def test_series_folds_sort_without_a_comparator(spark, medallion_layers):
+    """A series fold sorts each series with ``sort_array``, the type's
+    own ordering: ``array_sort`` gives the same order through an
+    interpreted comparator lambda. The sort shows in the optimized plan
+    (gold's EWM fold, the trade fold behind it, v1's four RMA folds)."""
+    v1 = _QUERIES["v1_tmf_tti_panel"].spark(spark, SF_ORACLE)
+    for df, folds in ((medallion_layers["gold"], 1), (medallion_layers["trades"], 2), (v1, 4)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        sorts = [line for line in plan.splitlines() if "collect_list(" in line]
+        assert len(sorts) == folds, plan
+        assert all("sort_array(collect_list(" in line for line in sorts), sorts
+        assert "array_sort(" not in plan, plan
 
 
 def test_window_stack_single_shuffle(spark):
@@ -323,17 +349,14 @@ def test_heavy_hitter_candidates_no_full_aggregation(spark):
     assert plan.rindex("HashAggregate") < plan.index("MapInPandas"), plan
 
 
-def test_viewer_panel_one_island_pass(spark):
-    """The v1 panel computes four RMAs plus every sequential column in
-    exactly ONE mapInPandas island behind exactly ONE exchange. A
-    JVM window stage after the island would force a SECOND full
-    shuffle (mapInPandas re-keys attribute ids, so Catalyst cannot
-    reuse the island's hash partitioning) — the regression this test
-    pins out."""
+def test_viewer_panel_starts_no_python_worker(spark):
+    """The v1 panel's four RMAs are series folds and its sequential
+    columns JVM windows: no Python operator, and one series shuffle
+    that the folds and both window stages share."""
     plan = _plan(spark, "v1_tmf_tti_panel")
-    assert plan.count("MapInPandas") == 1, plan
+    assert _python_ops(plan) == [], plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "Window" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
 
 
 def test_hmm_training_sample_semi_joins_before_window(spark):
@@ -379,13 +402,15 @@ def test_return_window_evaluates_lag_once(spark, name):
         "w21_scd2_intervals_segmented",
         "j13_interval_lookup",
         "m12_dwell_stats",
+        "v4_hmm_ribbon",
     ],
 )
 def test_run_length_evaluates_lag_once(spark, name):
     """A run-length group compares each row's state with the previous
     one. ``with_run_group`` projects that lag once, and the comparison
     and w6's transition label both read it; the segmented w21 builds
-    two run levels, one lag each."""
+    two run levels, one lag each. v4's ribbon projects the previous
+    decoded state once and derives its change flag from it."""
     plan = _plan(spark, name)
     lags = [line.count("lag(") for line in plan.splitlines() if "Window [" in line]
     assert max(lags) == 1, plan
@@ -401,12 +426,13 @@ def test_viewer_markers_broadcasts_dims(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_reading_labels_single_island(spark):
-    """v3 must NOT re-execute the EWM-island lineage per label side — a
-    filtered self-union would show two MapInPandas; the explode-of-sides
-    form pays one island and one series shuffle chain."""
+def test_reading_labels_one_panel_pass(spark):
+    """v3 must NOT re-execute the panel lineage per label side — a
+    filtered self-union would show its four RMA folds twice; the
+    explode-of-sides form runs the panel once on one series shuffle."""
     plan = _plan(spark, "v3_reading_labels")
-    assert plan.count("MapInPandas") == 1, plan
+    assert _python_ops(plan) == [], plan
+    assert plan.count("functions=[collect_list(") == 4, plan
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 

@@ -3,10 +3,10 @@ ascending with NULLs last, defined once in ``operators/windows.py``.
 
 One frame drives every check: interleaved series spread over several
 partitions, a ``ts`` tie broken by ``event_id`` and a NULL ``ts``. The
-Spark windows, the DuckDB oracle text, the pandas island, the trade
-simulator, the viewer panel and the HMM decode must all see the NULL
-``ts`` bar last in its series. A drift guard keeps new copies of the
-order out of the engine.
+Spark windows, the DuckDB oracle text, the trade simulator, the viewer
+queries and the HMM decode must all see the NULL ``ts`` bar last in
+its series. A drift guard keeps new copies of the order, and pandas
+islands, out of the per-series kernels.
 """
 
 from __future__ import annotations
@@ -81,49 +81,13 @@ def test_spark_window_matches_oracle_window(events):
     assert got[_NULL_TS_ID] is not None
 
 
-def test_series_island_hands_each_series_in_series_order(events):
-    """(b) ``series_island`` gives ``fn`` whole series, each contiguous
-    and in ``row_number().over(series_window())`` order."""
-    from pyspark.sql.types import BooleanType, LongType, StructField, StructType
-
-    from pipeline_mf_etl_spark.operators.windows import series_island, series_window
-
-    numbered = events.withColumn("rn", F.row_number().over(series_window()))
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("rn", LongType()),
-            StructField("pos", LongType()),
-            StructField("contiguous", BooleanType()),
-        ]
-    )
-
-    def positions(pdf):
-        uid = pdf["user_id"].to_numpy()
-        runs = 1 + int((uid[1:] != uid[:-1]).sum())
-        return pd.DataFrame(
-            {
-                "event_id": pdf["event_id"],
-                "rn": pdf["rn"],
-                "pos": pdf.groupby("user_id").cumcount() + 1,
-                "contiguous": runs == pdf["user_id"].nunique(),
-            }
-        )
-
-    got = series_island(numbered, positions, schema).toPandas()
-    assert len(got) == len(_rows())
-    assert got["contiguous"].all()
-    assert (got["pos"] == got["rn"]).all()
-
-
-# recorded before the islands moved onto series_island: the pandas
-# re-sort they carried already put the NULL-ts bar last
+# recorded while the trade simulation ran as a pandas island: the
+# pandas re-sort it carried already put the NULL-ts bar last
 _TRADES_DIGEST = "80282f40edb79e7c910a7a72c5d534531882b49b730b33b9aede00eda7a3ef69"
-_PANEL_DIGEST = "569b0e19d8f4c7d78a72b6740a7167bb71b864fdfa4a6fa4a0928c513118b72d"
 
 
 def test_trade_simulation_is_pinned(events):
-    """(c) The trade simulator's output over the NULL-ts frame. The
+    """(b) The trade simulator's output over the NULL-ts frame. The
     NULL-ts bar is series 3's last bar, so its signal has no next open."""
     from pipeline_mf_etl_spark.operators.backtest import simulate_trades
 
@@ -141,20 +105,65 @@ def test_trade_simulation_is_pinned(events):
     assert _digest(rows, trades.columns) == _TRADES_DIGEST
 
 
-def test_viewer_panel_is_pinned(spark, events, tmp_path):
-    """(c) The viewer panel island over a staged ``events.parquet``
-    holding the NULL-ts frame."""
-    from pipeline_mf_etl_spark.queries.viewer import _panel_frame
+def _viewer_rows(missing: float | None) -> list[tuple]:
+    """Three series long enough to leave the 21-bar RMA warm-up, with a
+    ``ts`` tie, a NULL-``ts`` bar and ``missing`` values: one in the
+    warm-up, one after it, two in a row, and the NULL-``ts`` bar's."""
+    t0 = dt.datetime(2024, 1, 1)
+    rng = np.random.default_rng(5)
+    rows, eid = [], 0
+    for uid in (1, 2, 3):
+        close = 10.0 * uid
+        for t in range(30 + 8 * uid):
+            close = round(max(close + float(rng.normal(0, 0.4)), 0.5), 2)
+            ts = t0 + dt.timedelta(minutes=t - (t == 12))  # bars 11 and 12 tie
+            rows.append((eid, uid, ts, close, json.dumps({"k": int(rng.integers(1, 9))})))
+            eid += 1
+    rows.append((eid, 2, None, None, '{"k": 4}'))
+    rows.append((eid + 1, 2, None, 21.5, '{"k": 2}'))
+    nulls = {3, 63, 124, 125, eid}  # series 1 bar 3, series 2 bar 25, series 3 bars 40-41
+    return [(e, u, ts, missing if e in nulls else v, k) for e, u, ts, v, k in rows]
 
-    events.write.parquet(str(tmp_path / "events.parquet"))
-    panel = _panel_frame(spark, str(tmp_path))
-    rows = [tuple(r) for r in panel.collect()]
-    assert len(rows) == len(_rows())
-    assert _digest(rows, panel.columns) == _PANEL_DIGEST
+
+# recorded while the panel ran as a pandas island, before it moved onto
+# the EWM fold and JVM windows: the viewer queries' outputs (dtypes and
+# rows) over the NULL-ts frame and over a frame with NULL values; a NaN
+# value is missing as NULL is, so the same frame with NaN gives the same
+_VIEWER_DIGESTS = {
+    ("null_ts", "v1_tmf_tti_panel"):
+        "97d846eb1e1100c103cc69d9ab0ed1e34fdd67dd855459c5a3a28c361ecf47e5",
+    ("null_ts", "v3_reading_labels"):
+        "7579ac2ff2e8437b4937a522b1e25b9d978dc702e9a07245d5dd08fd174734d8",
+    ("null_value", "v1_tmf_tti_panel"):
+        "3eb489c9217f58b9409af47568036b3ef02c79c9df67a72755112c7975697aa3",
+    ("null_value", "v3_reading_labels"):
+        "6832d42f3798aea1f210abcab65aaf6602597d6fa1c606ea564bc485443cb33d",
+}
+
+
+@pytest.mark.parametrize("leg", ["null_ts", "null_value", "nan_value"])
+@pytest.mark.parametrize("name", ["v1_tmf_tti_panel", "v3_reading_labels"])
+def test_viewer_queries_are_pinned(spark, three_partitions, tmp_path, leg, name):
+    """(b) v1 and v3 over a staged ``events.parquet``: the NULL-ts frame,
+    and longer series holding NULL or NaN values. NaN is a missing value
+    as NULL is."""
+    from pipeline_mf_etl_spark.queries import viewer
+
+    missing = {"null_value": None, "nan_value": float("nan")}
+    rows = _rows() if leg == "null_ts" else _viewer_rows(missing[leg])
+    spark.createDataFrame(rows, _SCHEMA).repartition(3).write.parquet(
+        str(tmp_path / "events.parquet")
+    )
+    df = getattr(viewer, name)(spark, str(tmp_path))
+    got = [tuple(r) for r in df.collect()]
+    digest = hashlib.sha256(
+        repr((df.dtypes, canonical_rows(got, df.columns))).encode()
+    ).hexdigest()
+    assert digest == _VIEWER_DIGESTS[leg.replace("nan", "null"), name]
 
 
 def test_decode_puts_null_ts_last(spark, three_partitions):
-    """(d) ``decode_distributed`` decodes the NULL-ts bar as the last bar
+    """(c) ``decode_distributed`` decodes the NULL-ts bar as the last bar
     of its series: the series decodes as the per-series reference
     recursion does over its rows in series order."""
     from pipeline_mf_etl_spark.operators.hmm import DiagGaussianHMM, decode_distributed
@@ -191,8 +200,14 @@ def test_decode_puts_null_ts_last(spark, three_partitions):
 # ---------------------------------------------------------------------------
 _ROOT = Path(pipeline_mf_etl_spark.__file__).parent
 _ORACLE_WINDOW = "PARTITION BY user_id ORDER BY ts, event_id"
-_ISLAND_MODULES = ("queries/viewer.py",)
-
+# the per-series kernels run in the plan: no pandas island here
+_FOLD_MODULES = (
+    "queries/viewer.py",
+    "operators/ewm.py",
+    "operators/backtest.py",
+    "operators/hmm.py",
+)
+_ISLAND_CALLS = ("series_island", "mapInPandas", "applyInPandas", "sort_values")
 
 def _trees():
     for path in sorted(_ROOT.rglob("*.py")):
@@ -227,9 +242,9 @@ def test_series_order_has_one_home():
     """Outside ``operators/windows.py`` nothing restates the series
     order: no hand-built ``Window.partitionBy("user_id")...orderBy("ts",
     ...)``, no ``sortWithinPartitions("user_id", ...)``, no string
-    holding the oracle window text. Only the viewer panel runs a
-    per-series pandas island; it reaches ``mapInPandas`` only through
-    ``series_island`` and never re-sorts in pandas."""
+    holding the oracle window text. The viewer panel, EWM, the trade
+    simulation and the HMM decode call no pandas island and never
+    re-sort in pandas; the viewer imports neither pandas nor NumPy."""
     found = []
     for rel, tree in _trees():
         found += [
@@ -249,15 +264,21 @@ def test_series_order_has_one_home():
             and isinstance(n.value, str)
             and _ORACLE_WINDOW in n.value
         ]
-        if rel in _ISLAND_MODULES:
-            for name in ("sort_values", "mapInPandas", "applyInPandas"):
-                found += [(rel, c.lineno, name) for c in _method_calls(tree, name)]
-        else:
+        if rel in _FOLD_MODULES:
             found += [
-                (rel, n.lineno, "series_island")
+                (rel, n.lineno, name)
                 for n in ast.walk(tree)
                 if isinstance(n, ast.Call)
-                and "series_island" in (getattr(n.func, "id", None), getattr(n.func, "attr", None))
+                for name in _ISLAND_CALLS
+                if name in (getattr(n.func, "id", None), getattr(n.func, "attr", None))
+            ]
+        if rel == "queries/viewer.py":
+            found += [
+                (rel, n.lineno, "import")
+                for n in ast.walk(tree)
+                if isinstance(n, (ast.Import, ast.ImportFrom))
+                for name in [getattr(n, "module", None)] + [a.name for a in n.names]
+                if (name or "").split(".")[0] in ("pandas", "numpy")
             ]
     assert found == []
 

@@ -203,8 +203,8 @@ def _panel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"adv": core * F.col("volume"), "advv": core * tr}
     )
     rmas = {"tmf_num": "adv", "tmf_den": "volume", "tti_num": "advv", "tti_den": "tr"}
-    for out, value in rmas.items():
-        df = ewm_smooth(df, value, _N, out)
+    for out, src in rmas.items():
+        df = ewm_smooth(df, src, _N, out)
     ratio = {
         f"{p}_raw": F.col(f"{p}_num") / F.greatest(f"{p}_den", F.lit(_EPS))
         for p in ("tmf", "tti")

@@ -2157,6 +2157,20 @@ def _jpeg_dct_matrix() -> np.ndarray:
 _JPEG_D = _jpeg_dct_matrix()
 
 
+def _matmul8(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b`` over trailing 8x8 matrices (broadcast leading axes) as
+    eight elementwise multiplies summed in a fixed k = 0..7 order. A BLAS
+    matmul picks its kernel by CPU, and an FMA kernel rounds differently
+    from a plain one; a coefficient near a quantizer's half step then
+    rounds the other way and the encoded bytes change with the machine.
+    Separate correctly-rounded multiplies and adds give the same bits
+    on every CPU."""
+    acc = a[..., :, 0:1] * b[..., 0:1, :]
+    for k in range(1, 8):
+        acc += a[..., :, k : k + 1] * b[..., k : k + 1, :]
+    return acc
+
+
 def _dht_pairs(bits: list[int], values: list[int]):
     """(symbol, length) pairs of a JPEG DHT in table order: bits[i]
     symbols of length i+1, taken from ``values`` in sequence. Table
@@ -2243,7 +2257,7 @@ def _jpeg_file(
 
 def _jpeg_forward_zigzag(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Shared forward path for ALL JPEG encoders: edge-replicate pad to
-    whole blocks, vectorized 8x8 DCT (broadcast matmul), quantize,
+    whole blocks, vectorized 8x8 DCT (_matmul8), quantize,
     zigzag. One implementation so the byte-exact oracle arguments
     (which assume the baseline / progressive / color encoders quantize
     identically) can never desynchronize. Returns (n_blocks, 64) int64
@@ -2256,7 +2270,7 @@ def _jpeg_forward_zigzag(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
         .astype(np.float64)
         - 128.0
     )
-    coef = _JPEG_D @ blocks @ _JPEG_D.T
+    coef = _matmul8(_matmul8(_JPEG_D, blocks), _JPEG_D.T)
     qz = q[np.argsort(_JPEG_ZIGZAG)]
     qc = np.rint(coef.reshape(-1, 64) / qz).astype(np.int64)
     return qc[:, _JPEG_ZIGZAG]
@@ -2968,7 +2982,7 @@ def _jpeg_idct_planes(
         n_blocks = gw * gh
         coef = np.zeros((n_blocks, 64), dtype=np.float64)
         coef[:, _JPEG_ZIGZAG] = (zz_by_comp[ci] * quant[c["tq"]]).astype(np.float64)
-        blocks = _JPEG_D.T @ coef.reshape(-1, 8, 8) @ _JPEG_D  # broadcast matmul
+        blocks = _matmul8(_matmul8(_JPEG_D.T, coef.reshape(-1, 8, 8)), _JPEG_D)
         px_blocks = np.clip(np.rint(blocks) + 128, 0, 255).astype(np.uint8)
         plane = (
             px_blocks.reshape(gh, gw, 8, 8).transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8)
